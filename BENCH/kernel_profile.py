@@ -57,8 +57,10 @@ def load_pxs(n: int):
 def build_stages(rows, pxs):
     """(name, fn, n_rows) list.  Each fn runs ONE stage over the same
     shape-grouped stacks the production batch path builds, using the
-    production kernels.  Stages receive precomputed inputs so each
-    timing isolates one kernel family's memory traffic."""
+    production kernels on the production mask form (0/1 uint8, as
+    `_cropped_group_features` and `_roi_crop_b` build them).  Stages
+    receive precomputed inputs so each timing isolates one kernel
+    family's memory traffic."""
     import numpy as np
 
     from qfilter import batch_image as B
@@ -96,6 +98,10 @@ def build_stages(rows, pxs):
             except Exception:  # noqa: BLE001
                 pass
 
+    def open_lines(thr):
+        # one threshold mask, opened along both axes (production order)
+        return B._open01(thr, 1, 40), B._open01(thr, 40, 1)
+
     def per_group(stacks, fn):
         def run():
             for b in stacks:
@@ -110,15 +116,14 @@ def build_stages(rows, pxs):
         ("phash", per_group(grays, B.average_hash_b), nrow),
         ("blur5", per_group(grays, B.binomial5_blur_b), nrow),
         ("otsu+cc(roi)", per_group(blurs, lambda bl: B._cc_stats_batch(
-            ((bl > B.otsu_threshold_b(bl)[:, None, None]) * 255).astype(np.uint8))), nrow),
+            (bl > B.otsu_threshold_b(bl)[:, None, None]).view(np.uint8))), nrow),
         ("median3", per_group(cropped_stacks, B.median3_b), nrow),
         ("boxsums35+41", per_group(meds, lambda m: B.box_sums_shared_b(m, (35, 41))), nrow),
-        ("adapt35+open3", per_group(meds, lambda m: B.morph_open_b(
+        ("adapt35+open3", per_group(meds, lambda m: B._open01(
             B.adaptive_threshold_inv_b(m, 35, 15), 3, 3)), nrow),
-        ("adapt31+open40", per_group(cropped_stacks, lambda c: (
-            B.morph_open_b(B.adaptive_threshold_inv_b(c, 31, 10), 1, 40),
-            B.morph_open_b(B.adaptive_threshold_inv_b(c, 31, 10), 40, 1))), nrow),
-        ("adapt41+close15", per_group(meds, lambda m: B.morph_close_b(
+        ("adapt31+open40", per_group(cropped_stacks, lambda c: open_lines(
+            B.adaptive_threshold_inv_b(c, 31, 10))), nrow),
+        ("adapt41+close15", per_group(meds, lambda m: B._close01(
             B.adaptive_threshold_inv_b(m, 41, 15), 15, 15)), nrow),
         ("laplacian", per_group(cropped_stacks, B.laplacian_variance_b), nrow),
     ]

@@ -1,21 +1,22 @@
 """Row-level oracle: full per-row assessment without Spark.
 
 `assess_row` mirrors the Spark pipeline end-to-end for one image row:
-decode bytes -> image features -> caption-engine features -> extended
-cascade -> keep, plus dark flag, langid, perplexity, scrub.  Mirrors
-the reference's `assess_pdf` error path (zero-filled features + error
-string -> trash, `classificator_extended_paddleocr.py:485-512`).
+decode bytes -> image features -> caption OCR-analogue features ->
+extended cascade -> keep, plus dark flag, langid, perplexity, scrub
+(the per-row twins in `oracle/features.py`).  Mirrors the reference's
+`assess_pdf` error path (zero-filled features + error string -> trash,
+`classificator_extended_paddleocr.py:485-512`).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from qfilter import codecs, imageops
-from qfilter.engine import ocr_features
+from qfilter import codecs
 from qfilter.textops import TextBundle, default_bundle
 
 from .cascades import categorize_extended, is_dark_document, keep
+from .features import IMAGE_FEATURE_NAMES, image_features, ocr_features
 
 __all__ = ["assess_row", "label_rows"]
 
@@ -31,11 +32,11 @@ def assess_row(row: dict, bundle: TextBundle | None = None) -> dict:
     out: dict = {"image_id": row["image_id"]}
 
     error = None
-    feats: dict = dict.fromkeys(imageops.IMAGE_FEATURE_NAMES, 0.0)
+    feats: dict = dict.fromkeys(IMAGE_FEATURE_NAMES, 0.0)
     feats["is_table_like"] = False
     try:
         px = codecs.decode(row["bytes"], row["fmt"], row["w"], row["h"])
-        feats = imageops.image_features(px)
+        feats = image_features(px)
     except Exception as exc:  # noqa: BLE001 — mirror reference error channel
         error = f"{type(exc).__name__}: {exc}"
 

@@ -11,10 +11,12 @@ pipeline over a columnar table of image+caption rows:
 Modules
 -------
 codecs     : raw/bmp/png/qjpg image encode+decode (numpy + zlib)
-imageops   : numpy pixel kernels (blur score, ROI, density, skew, ...)
+imageops   : shared numpy pixel primitives (filters, thresholds,
+             morphology, connected components)
+batch_image: shape-batched image features (blur, ROI, density, skew, ...)
+batch_text : batched caption OCR-analogue features
 phash      : 64-bit average hash
 textops    : tokenizer, heuristics, langid, n-gram LM, PII/tox scrub
-engine     : deterministic caption-path OCR-analogue feature engine
 cascade    : the reference decision cascades as pure Column expressions
 features   : Arrow-batched UDF stages (mapInArrow / pandas_udf)
 dedup      : salted two-phase pHash dedup

@@ -1,25 +1,24 @@
 """Shape-batched image feature kernels — the e2e hot path.
 
-`imageops.image_features` + `phash.average_hash` cost ~5 ms/image
-run one image at a time; an Arrow batch of 64 fixture images spans
-only a handful of distinct (h, w) shapes, so this module groups a
-batch by shape, stacks each group into one ``(n, h, w)`` ndarray, and
-runs every kernel ONCE per shape-group.  Per-image Python/numpy
-dispatch overhead (dozens of tiny ufunc calls per image) collapses
-into a few large array ops.
+This is the only image-feature implementation in `qfilter/`.  The
+per-image scalar recipe (`oracle/features.image_features` +
+`phash.average_hash`) costs ~5 ms/image run one image at a time; an
+Arrow batch of 64 fixture images spans only a handful of distinct
+(h, w) shapes, so this module groups a batch by shape, stacks each
+group into one ``(n, h, w)`` ndarray, and runs every kernel ONCE per
+shape-group.  Per-image Python/numpy dispatch overhead (dozens of
+tiny ufunc calls per image) collapses into a few large array ops.
 
-Bit-identity contract: every value equals the scalar path
-(`imageops` / `phash`) EXACTLY — same integer arithmetic, same
-reduction orders.  The batched forms reuse the scalar code's exact
-expressions over a leading batch axis; the only reductions that feed
-float rounding (var/std/mean) are evaluated per-image on the
-contiguous ``stack[i]`` slice, which holds the same values in the
-same memory order as the scalar call, so numpy's pairwise summation
-blocks identically.  Connected-components (data-dependent run lists)
-stays per-image — it is irreducibly per-image and not the dominant
-cost.  Parity is enforced by tests/test_batch_image.py over every
-fixture image, and the scalar path remains the independently-coded
-oracle twin (the `batch_text` vs `engine` pattern).
+Bit-identity contract: every value equals the scalar twin EXACTLY —
+same integer arithmetic, same reduction orders.  The batched forms
+reuse the scalar code's exact expressions over a leading batch axis;
+the only reductions that feed float rounding (var/std/mean) are
+evaluated per-image on the contiguous ``stack[i]`` slice, which holds
+the same values in the same memory order as the scalar call, so
+numpy's pairwise summation blocks identically.  Connected-components
+(data-dependent run lists) runs once per stack over a banded plane.
+Parity against the twin is enforced by tests/test_batch_image.py over
+every fixture image and by tests/test_properties.py on random mixes.
 
 Reference: the per-page metric loop in
 `classificator_extended_paddleocr.py:368-512` (what to compute);
@@ -30,7 +29,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import imageops
 from .imageops import connected_component_stats
 
 __all__ = ["image_features_batch"]
@@ -62,9 +60,10 @@ def grayscale_b(px: np.ndarray) -> np.ndarray:
     expression must stay L2-resident — one full-group temporary would
     stream tens of MB through DRAM per op and run slower than the
     scalar loop (measured 17x).  Integer-only variants of the weights
-    ((299r+587g+114b)/1000) are NOT used: exhaustive check over all
-    16.7M RGB triples shows 1807 rounding mismatches vs the float
-    accumulation order."""
+    ((299r+587g+114b)/1000, rounded half to even) are NOT used: over
+    all 16.7M RGB triples they give 1807 rounding mismatches vs the
+    float accumulation order (both checked exhaustively in
+    tests/test_batch_image.py)."""
     if px.ndim == 3:  # already gray (n, h, w)
         return px.astype(np.uint8)
     n, h, w, _ = px.shape
@@ -97,7 +96,7 @@ def _hist256_b(gray: np.ndarray) -> np.ndarray:
 
 
 def brightness_stats_b(gray: np.ndarray):
-    """Batched `imageops.brightness_stats`: (mean, median, contrast,
+    """Batched `oracle.features.brightness_stats`: (mean, median, contrast,
     %<100, %<50) arrays.  Histogram stats are exact integer math;
     std runs per-image on the contiguous slice (same reduction order
     as the scalar call)."""
@@ -121,7 +120,7 @@ def brightness_stats_b(gray: np.ndarray):
 
 
 def binomial5_blur_b(gray: np.ndarray) -> np.ndarray:
-    """Batched `imageops.binomial5_blur` (identical integer conv).
+    """Batched `oracle.features.binomial5_blur` (identical integer conv).
 
     uint16 throughout (r5): the vertical pass peaks at 16*255 = 4080
     and the horizontal at 16*4080 = 65280 < 2^16, so every
@@ -242,7 +241,7 @@ def _eprefix_rows(p: np.ndarray, dtype) -> np.ndarray:
 
 def box_sums_shared_b(gray: np.ndarray, blocks: tuple[int, ...]) -> dict:
     """Batched integer window SUMS for several odd block sizes
-    (`imageops._box_means_shared` without the float division — the
+    (`oracle.features._box_means_shared` without the float division — the
     adaptive-threshold consumer compares in integer space, so the
     float64 means array never needs to exist).
 
@@ -264,6 +263,10 @@ def box_sums_shared_b(gray: np.ndarray, blocks: tuple[int, ...]) -> dict:
         ev = _eprefix_rows(p, np.uint16)
         vs = ev[:, b : b + h] - ev[:, 0:h]          # (n, h, Wp) uint16
         vt = np.ascontiguousarray(vs.transpose(0, 2, 1))
+        # the int32 prefix of column sums (each <= b*255) wraps once
+        # Wp > 2^31 / (b*255) (~271k px at b = 31), but each window is a
+        # difference of two prefixes and <= b*b*255 < 2^31, so the
+        # wrapped subtraction is still exact (tested)
         eh = _eprefix_rows(vt, np.int32)
         hs = eh[:, b : b + w] - eh[:, 0:w]          # (n, w, h) int32
         return {b: np.ascontiguousarray(hs.transpose(0, 2, 1))}
@@ -282,14 +285,9 @@ def box_sums_shared_b(gray: np.ndarray, blocks: tuple[int, ...]) -> dict:
 
 
 def adaptive_threshold_inv_b(
-    gray: np.ndarray,
-    block: int,
-    c: float,
-    _sums: np.ndarray | None = None,
-    consume: bool = False,
-    binary01: bool = False,
+    gray: np.ndarray, block: int, c: float, _sums: np.ndarray | None = None
 ) -> np.ndarray:
-    """BINARY_INV adaptive threshold, integer form.
+    """BINARY_INV adaptive threshold, integer form, as a 0/1 mask.
 
     Scalar form: 255 where px <= window_sum/b^2 - c.  With integer
     window sums s and integer c*b^2 this is equivalent to
@@ -300,8 +298,8 @@ def adaptive_threshold_inv_b(
     reachable window sum at each call-site (block, c) pair in
     tests/test_batch_image.py.
 
-    With ``consume`` (or when the sums are computed here), the sums
-    buffer is transformed IN PLACE into the per-pixel threshold
+    The sums buffer (``_sums``, else computed here) is consumed:
+    transformed IN PLACE into the per-pixel threshold
     t = floor((s - c*b^2) / b^2) — for integers, px*b^2 <= s - c*b^2
     iff px <= t (floor division by the positive b^2) — and the final
     compare runs uint8-vs-int32 through numpy's buffered casting: no
@@ -310,141 +308,19 @@ def adaptive_threshold_inv_b(
     (npyv divisor), so the floordiv costs what the multiply did."""
     cb2 = c * block * block
     assert cb2 == int(cb2), "integer-form adaptive threshold needs integral c*b^2"
-    if _sums is None:
-        s = box_sums_shared_b(gray, (block,))[block]
-        consume = True
-    else:
-        s = _sums
-    if consume:
-        np.subtract(s, int(cb2), out=s)
-        np.floor_divide(s, block * block, out=s)
-        if binary01:
-            return (gray <= s).view(np.uint8)
-        return (gray <= s).view(np.uint8) * np.uint8(255)
-    lhs = gray.astype(s.dtype) * (block * block)
-    if binary01:
-        return (lhs <= s - int(cb2)).view(np.uint8)
-    return ((lhs <= s - int(cb2)) * 255).astype(np.uint8)
-
-
-def _axis_count_u8(b: np.ndarray, k: int, axis: int, vmax: int = 255) -> np.ndarray:
-    """Centered k-window sums of a uint8 stack along one image axis,
-    edge-padded; the window sum fits uint8 at every call site
-    (k * vmax <= 255, asserted by the caller's kh*kw <= 255 gate).
-
-    Two regimes (r5, the 8->32 scaling ask):
-    * k <= 15: k shifted adds — the group stacks are L2/L3-resident
-      at Arrow-batch sizes, so contiguous uint8 adds are faster than
-      a strided cumsum up to k ~ 15 (measured: the cumsum loses 3x
-      at k=15 and only wins from k ~ 40).
-    * k > 15: one cumsum along the axis + a shifted-view subtract —
-      O(1) bytes/px instead of O(k); the 1x40 / 40x1 line kernels
-      were paying 39 full-plane adds (measured 1.3x).
-      The cumsum dtype is the smallest that holds the FULL-axis
-      prefix sum (plen * vmax — `vmax` is the caller's bound on the
-      input values: 1 for the first 0/1 pass, kh for the second pass
-      over first-pass counts), so small images stay uint8/uint16.
-      Window count = cs[i+k] - cs[i] is exact integer math (the
-      prefix sums are monotone, so even the narrow dtypes never
-      wrap) — bit-identical to the add chain."""
-    def _cum_dtype(plen: int):
-        peak = plen * vmax
-        if peak <= 255:
-            return np.uint8
-        if peak <= 65535:
-            return np.uint16
-        return np.int64
-    if axis == 1:
-        ph = k // 2
-        p = _pad_edge_b(b, ph, k - 1 - ph, 0, 0)
-        h = b.shape[1]
-        if k <= 15:
-            out = p[:, :h].copy()
-            for d in range(1, k):
-                out += p[:, d : d + h]
-            return out
-        plen = p.shape[1]
-        dt = _cum_dtype(plen)
-        cs = np.zeros((p.shape[0], plen + 1, p.shape[2]), dtype=dt)
-        np.cumsum(p, axis=1, dtype=dt, out=cs[:, 1:])
-        return (cs[:, k : k + h] - cs[:, :h]).astype(np.uint8, copy=False)
-    pw = k // 2
-    p = _pad_edge_b(b, 0, 0, pw, k - 1 - pw)
-    w = b.shape[2]
-    if k <= 15:
-        out = p[:, :, :w].copy()
-        for d in range(1, k):
-            out += p[:, :, d : d + w]
-        return out
-    plen = p.shape[2]
-    dt = _cum_dtype(plen)
-    cs = np.zeros((p.shape[0], p.shape[1], plen + 1), dtype=dt)
-    np.cumsum(p, axis=2, dtype=dt, out=cs[:, :, 1:])
-    return (cs[:, :, k : k + w] - cs[:, :, :w]).astype(np.uint8, copy=False)
-
-
-def _window_count_b(
-    binary: np.ndarray, kh: int, kw: int, is01: bool = False
-) -> np.ndarray:
-    """Batched `imageops._window_count` — exact integer counts via
-    separable uint8 passes (window count = vertical count then
-    horizontal sum of counts; kh*kw <= 255 at every call site, checked,
-    so both passes stay uint8).  Larger kernels fall back to the int32
-    integral pair.
-
-    ``is01``: the caller guarantees a uint8 0/1 plane (the internal
-    morphology pipeline), skipping the ``!= 0`` normalization pass —
-    window counts over 0/1 equal counts over the 0/255 form exactly."""
-    b = binary if is01 else (binary != 0).view(np.uint8)
-    if kh * kw <= 255:
-        out = b
-        if kh > 1:
-            out = _axis_count_u8(out, kh, 1, vmax=1)
-        if kw > 1:
-            out = _axis_count_u8(out, kw, 2, vmax=kh)
-        return out
-    n, h, w = binary.shape
-    ph, pw = kh // 2, kw // 2
-    p = _pad_edge_b(b, ph, kh - 1 - ph, pw, kw - 1 - pw)
-    ii = _double_cumsum_b(p, np.int32)
-    s = (
-        ii[:, kh:, kw:]
-        - ii[:, :-kh, kw:]
-        - ii[:, kh:, :-kw]
-        + ii[:, :-kh, :-kw]
-    )
-    return s[:, :h, :w]
-
-
-def erode_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    if kh <= 1 and kw <= 1:
-        return binary
-    return (_window_count_b(binary, kh, kw) == kh * kw) * np.uint8(255)
-
-
-def dilate_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    if kh <= 1 and kw <= 1:
-        return binary
-    return (_window_count_b(binary, kh, kw) > 0) * np.uint8(255)
-
-
-def morph_open_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    return dilate_b(erode_b(binary, kh, kw), kh, kw)
-
-
-def morph_close_b(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
-    return erode_b(dilate_b(binary, kh, kw), kh, kw)
+    s = box_sums_shared_b(gray, (block,))[block] if _sums is None else _sums
+    np.subtract(s, int(cb2), out=s)
+    np.floor_divide(s, block * block, out=s)
+    return (gray <= s).view(np.uint8)
 
 
 # 0/1-plane morphology (r6): the feature pipeline only ever consumes
 # masks through `count_nonzero` or connected components (`!= 0`), so
-# the 0/255 convention of the public kernels above is wasted work
-# internally — each erode/dilate paid a `* 255` materialization and
-# the next `_window_count_b` paid a `!= 0` to undo it.  These internal
-# forms keep everything uint8 0/1 end to end: identical nonzero
-# patterns (a window count over 0/1 equals the count over 0/255), so
-# every downstream value is bit-identical — asserted against the
-# scalar `imageops` path by tests/test_batch_image.py.
+# the 0/255 convention of the scalar `imageops` morphology is wasted
+# work here — these forms keep everything uint8 0/1 end to end:
+# identical nonzero patterns, so every downstream value is
+# bit-identical — asserted against the scalar twin by
+# tests/test_batch_image.py.
 
 def _axis_win01(p: np.ndarray, k: int, axis: int, op) -> np.ndarray:
     """Sliding-window OR/AND of length k along one axis of a
@@ -602,7 +478,7 @@ def _cc_stats_batch(masks: np.ndarray) -> list:
 # --------------------------------------------- per-shape-group driver
 
 def _roi_crop_b(gray: np.ndarray):
-    """Batched `imageops.crop_roi`: blur/Otsu/threshold batched, the
+    """Batched `oracle.features.crop_roi`: blur/Otsu/threshold batched, the
     component scan per image (data-dependent).  Returns
     (list_of_cropped_arrays, roi_frac array)."""
     n, h, w = gray.shape
@@ -639,7 +515,7 @@ def _roi_crop_b(gray: np.ndarray):
 
 def _cropped_group_features(c3: np.ndarray) -> dict:
     """All cropped-plane features for one same-shape stack; returns
-    dict of per-image arrays, mirroring `imageops.image_features`'s
+    dict of per-image arrays, mirroring `oracle.features.image_features`'s
     cropped-path calls exactly."""
     n, h, w = c3.shape
     out = {}
@@ -651,16 +527,14 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
     # text_density: adaptive INV (35, 15) -> open 3x3 -> ink fraction
     # (each sums entry is single-use -> consume in place; 0/1 masks
     # throughout — count_nonzero and CC see identical patterns)
-    thr = adaptive_threshold_inv_b(
-        med, 35, 15, _sums=sums.pop(35), consume=True, binary01=True
-    )
+    thr = adaptive_threshold_inv_b(med, 35, 15, _sums=sums.pop(35))
     thr = _open01(thr, 3, 3)
     out["text_density"] = (
         np.count_nonzero(thr.reshape(n, -1), axis=1) / float(h * w)
     )
 
     # is_table_like: adaptive INV (31, 10) -> open 1x40 / 40x1
-    thr_t = adaptive_threshold_inv_b(c3, 31, 10, binary01=True)
+    thr_t = adaptive_threshold_inv_b(c3, 31, 10)
     h_lines = _open01(thr_t, 1, 40)
     v_lines = _open01(thr_t, 40, 1)
     frac = (
@@ -673,9 +547,7 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
     # adaptive INV (31, 11), dilate (3, kw), per-image components
     m = int(min(h, w) * 0.06)
     roi = c3[:, m : h - m, m : w - m] if min(h, w) - 2 * m > 4 else c3
-    thr_s = adaptive_threshold_inv_b(
-        np.ascontiguousarray(roi), 31, 11, binary01=True
-    )
+    thr_s = adaptive_threshold_inv_b(np.ascontiguousarray(roi), 31, 11)
     kw = max(20, roi.shape[2] // 50)
     lines = _dilate01(thr_s, 3, kw)
     area_min = roi.shape[1] * roi.shape[2] * 3e-4
@@ -708,9 +580,7 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
 
     # core_content_fraction: adaptive INV (41, 15) -> close 15x15 ->
     # largest component area fraction (single close: idempotent)
-    thr_c = adaptive_threshold_inv_b(
-        med, 41, 15, _sums=sums.pop(41), consume=True, binary01=True
-    )
+    thr_c = adaptive_threshold_inv_b(med, 41, 15, _sums=sums.pop(41))
     merged = _close01(thr_c, 15, 15)
     core = np.empty(n)
     merged_stats = _cc_stats_batch(merged)
@@ -726,9 +596,9 @@ def _cropped_group_features(c3: np.ndarray) -> dict:
 def image_features_batch(pxs: list) -> list[dict]:
     """Features + phash for a list of decoded images (any mix of
     shapes, RGB or gray).  Returns one dict per input, in input order,
-    with the keys of `imageops.IMAGE_FEATURE_NAMES` + ``phash64``.
+    with the keys of `oracle.features.IMAGE_FEATURE_NAMES` + ``phash64``.
 
-    Bit-identical to `imageops.image_features(px)` +
+    Bit-identical to `oracle.features.image_features(px)` +
     `phash.average_hash(px)` per image (tests/test_batch_image.py).
     """
     n = len(pxs)

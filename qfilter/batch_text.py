@@ -1,16 +1,36 @@
 """Batch-vectorized caption featurizer for the Arrow UDF hot path.
 
-`qfilter.engine.ocr_features` + `textops` compute per-row features with
-per-token Python dict lookups (NgramLM.step_logprob) and re-tokenize
-each caption up to five times (token_confidences x2, perplexity,
-heuristics, langid).  That per-row path stays as-is — it is the
-single-node oracle's code path (`oracle/rows.py`) — and this module is
-the independent, batch-vectorized re-implementation used by the Spark
-UDF (`qfilter.features`).  The two are verified bit-identical by
-`tests/test_batch_text.py`, and every driver parity run compares them
-end-to-end (Spark batched vs DuckDB-over-oracle-sidecar per-row), so
-the redundancy *strengthens* the correctness gate rather than
-duplicating it.
+The reference's cascade consumes OCR-engine outputs (conf median/mean,
+pct>=80, IQR, word count, bbox/line geometry) produced by one of three
+interchangeable engines sharing a single contract (PaddleOCR
+`classificator_paddleocr.py:190-241`, EasyOCR
+`classificator_easyocr.py:208-254`, pytesseract `classificator.py:176-196`).
+No OCR model runs here, and the north rule names fastText/KenLM/
+heuristics — not OCR — so this module plugs a fourth engine into the
+same contract (SURVEY.md §7.4):
+
+* ``words``       = caption whitespace-token count (non-blank filter as
+  `classificator_extended_paddleocr.py:249-254`).
+* ``conf`` family = monotone map of per-token n-gram-LM log-probs into
+  [0, 100]:  ``conf = 100 * sigmoid(W_WORD*word_lp + W_CHAR*char_lp +
+  CONF_BIAS)``.
+* bbox/line geometry = taken from an optional ``blocks`` sidecar column
+  (array of (top, left, width, height) structs) that the fixture
+  generator steers across the thresholds; absent blocks => zeros, same
+  as the reference's empty-OCR result path
+  (`classificator_extended_paddleocr.py:256-263`).
+
+Token-level statistics mirror `classificator_extended_paddleocr.py:286-316`:
+median/mean conf, pct80 = frac(conf >= 80), IQR = p75 - p25, line
+heights/spacings variance (spacing from ``top``-sorted blocks, positive
+only — the reference's W1 window op at `:300-308`).
+
+This is the only caption-feature implementation in `qfilter/`.  The
+per-row reference twin (`oracle/features.ocr_features` + `textops`)
+scores one caption at a time, re-tokenizing it up to five times with
+per-token dict lookups (`NgramLM.step_logprob`); it labels the oracle
+rows (`oracle/rows.py`), and `tests/test_batch_text.py` asserts the two
+are bit-identical.
 
 Vectorization strategy (one Arrow batch = hundreds/thousands of rows):
 
@@ -26,10 +46,10 @@ Vectorization strategy (one Arrow batch = hundreds/thousands of rows):
 4. token confidences, perplexities, and conf aggregates are sliced per
    row from the flat arrays — the per-row numpy calls (median,
    percentile) are kept deliberately so results stay bit-identical to
-   the scalar path (same summation orders).
+   the scalar twin (same summation orders).
 
 Bit-identity notes: every elementwise formula is the same IEEE-754
-double op as the scalar path (numpy scalar math == 0-d ufunc), the
+double op as the scalar twin (numpy scalar math == 0-d ufunc), the
 `n_ctx == 0` backoff branches become `np.where` on exact-zero counts,
 and reductions (`mean`, `median`, `percentile`) run on the same
 per-row value sequences.
@@ -40,10 +60,20 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .engine import CONF_BIAS, W_CHAR, W_WORD, block_geometry
 from .textops import NgramLM, TextBundle, text_heuristics, tokenize_words
 
-__all__ = ["caption_features_frame", "batch_token_stats"]
+__all__ = ["caption_features_frame", "batch_token_stats", "block_geometry"]
+
+# conf = 100 * sigmoid(W_WORD*word_lp + W_CHAR*char_lp + CONF_BIAS):
+# word_lp = interpolated 3-gram word-LM logprob, char_lp = best-language
+# mean character-trigram logprob of the token (the langid profiles).
+# Calibrated anchors on the default bundle: in-corpus phrase ~95,
+# in-vocab word salad ~80, lightly-mangled word ~64, heavily-mangled
+# ~32, gibberish ~10 — so every cascade conf threshold
+# (25/50/55/65/70/90) and pct80 band is reachable by token mixing.
+W_WORD = 0.08
+W_CHAR = 1.2
+CONF_BIAS = 11.38
 
 # process-level word caches (vocabulary is tiny vs token volume)
 _WORD_CACHE_MAX = 1_000_000
@@ -101,7 +131,7 @@ class _LMTables:
     ) -> np.ndarray:
         """log P(w | prev2, prev1) for a flat token stream.
 
-        Identical math to ``NgramLM.step_logprob`` (engine oracle path):
+        Identical math to ``NgramLM.step_logprob`` (the oracle twin's path):
         add-k 3/2/1-gram with exact-zero-context backoff, interpolated
         0.6/0.3/0.1 in probability space.
         """
@@ -199,6 +229,41 @@ def batch_token_stats(bundle: TextBundle, captions: list[str]):
     z = W_WORD * word_lps + W_CHAR * char_lps + CONF_BIAS
     confs = 100.0 / (1.0 + np.exp(-z))
     return starts, word_lps, confs
+
+
+def block_geometry(blocks, page_w: int, page_h: int) -> tuple:
+    """Bbox/line geometry stats for one row's ``blocks`` sidecar.
+
+    Returns (n_blocks, bbox_area_text_frac, line_height_med,
+    line_height_var, line_spacing_med, line_spacing_var,
+    avg_block_width, avg_block_height).  Shared by
+    `caption_features_frame` and the per-row oracle twin
+    (`oracle/features.ocr_features`) so geometry semantics cannot
+    diverge.
+    """
+    blocks = list(blocks) if blocks is not None else []
+    nb = len(blocks)
+    if nb:
+        arr = np.asarray(
+            [[float(b[0]), float(b[1]), float(b[2]), float(b[3])] for b in blocks],
+            dtype=np.float64,
+        )  # columns: top, left, width, height
+        tops, widths, heights = arr[:, 0], arr[:, 2], arr[:, 3]
+        page_area = float(page_w) * float(page_h)
+        bbox_frac = float((widths * heights).sum() / page_area) if page_area else 0.0
+        lh_med = float(np.median(heights))
+        lh_var = float(np.var(heights))
+        order = np.argsort(tops, kind="stable")
+        st, sh = tops[order], heights[order]
+        spacings = st[1:] - (st[:-1] + sh[:-1])
+        spacings = spacings[spacings > 0]
+        ls_med = float(np.median(spacings)) if spacings.size else 0.0
+        ls_var = float(np.var(spacings)) if spacings.size else 0.0
+        avg_w = float(widths.mean())
+        avg_h = float(heights.mean())
+    else:
+        bbox_frac = lh_med = lh_var = ls_med = ls_var = avg_w = avg_h = 0.0
+    return nb, bbox_frac, lh_med, lh_var, ls_med, ls_var, avg_w, avg_h
 
 
 # NOTE on tokenize_words(caption.lower()) vs [w.lower() for w in

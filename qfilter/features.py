@@ -10,8 +10,12 @@ column transforms:
 2. ``with_caption_and_scrub`` — OCR-analogue conf/geometry features,
    langid, perplexity, Gopher/C4 heuristics AND the compiled-regex
    PII/toxicity scrub FUSED into one Arrow pass (the e2e path);
-   `with_caption_features` / `with_scrubbed_caption` remain as
-   separate stages for single-purpose callers.
+   `with_scrubbed_caption` remains as the scrub-only stage.
+
+Each stage runs its batch kernels only (`batch_image`, `batch_text`,
+`ScrubBundle.scrub_series`); the per-row scalar forms
+(`oracle/features.py`, `ScrubBundle.scrub`) are reference twins, not
+a pipeline execution mode.
 
 Scale notes (100 TB design):
 * No per-row Python at the Spark level — every UDF is a pandas UDF
@@ -38,10 +42,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import codecs, imageops
+from . import codecs
 from .batch_image import image_features_batch
 from .batch_text import caption_features_frame
-from .phash import average_hash
 from .textops import default_bundle
 
 __all__ = [
@@ -49,7 +52,7 @@ __all__ = [
     "CAPTION_FEATURES_SCHEMA",
     "SCRUB_SCHEMA",
     "with_image_features",
-    "with_caption_features",
+    "with_caption_and_scrub",
     "with_scrubbed_caption",
     "with_all_features",
 ]
@@ -80,26 +83,20 @@ _ZERO_IMAGE_FEATURES = {
 }
 
 
-def _image_features_rows(data, fmt, w, h) -> pd.DataFrame:
-    """Per-row scalar path — the independently-coded oracle twin of the
-    shape-batched hot path below (`batch_text` vs `engine` pattern;
-    bit-identity asserted in tests/test_batch_image.py) and the
-    fallback that preserves per-row error-channel semantics if a batch
-    kernel ever throws mid-stack."""
-    rows = []
-    for b, f, ww, hh in zip(data, fmt, w, h):
-        try:
-            px = codecs.decode(b, f, int(ww), int(hh))
-            gray = imageops.grayscale(px)  # shared by features + phash
-            feats = imageops.image_features(px, _gray=gray)
-            feats["phash64"] = average_hash(px, _gray=gray)
-            feats["error"] = None
-        except Exception as exc:  # noqa: BLE001 — reference error channel
-            feats = dict(_ZERO_IMAGE_FEATURES)
-            feats["phash64"] = 0
-            feats["error"] = f"{type(exc).__name__}: {exc}"
-        rows.append(feats)
-    return pd.DataFrame(rows)
+def _error_features(exc: Exception) -> dict:
+    """Zero-filled error-channel row (the reference's zero-result
+    path, `classificator_extended_paddleocr.py:485-512`)."""
+    feats = dict(_ZERO_IMAGE_FEATURES)
+    feats["phash64"] = 0
+    feats["error"] = f"{type(exc).__name__}: {exc}"
+    return feats
+
+
+def _one_image_features(px) -> dict:
+    try:
+        return image_features_batch([px])[0]
+    except Exception as exc:  # noqa: BLE001 — reference error channel
+        return _error_features(exc)
 
 
 @F.pandas_udf(IMAGE_FEATURES_SCHEMA)
@@ -109,26 +106,22 @@ def _image_features_udf(
     # decode per-row (variable-length bytes; the reference error
     # channel lives here), then run all pixel kernels ONCE per
     # (h, w) shape-group of the Arrow batch — see qfilter/batch_image.
-    n = len(data)
-    pxs, ok_idx, err_rows = [], [], {}
+    rows: list = [None] * len(data)
+    pxs, ok_idx = [], []
     for i, (b, f, ww, hh) in enumerate(zip(data, fmt, w, h)):
         try:
             pxs.append(codecs.decode(b, f, int(ww), int(hh)))
             ok_idx.append(i)
         except Exception as exc:  # noqa: BLE001 — reference error channel
-            feats = dict(_ZERO_IMAGE_FEATURES)
-            feats["phash64"] = 0
-            feats["error"] = f"{type(exc).__name__}: {exc}"
-            err_rows[i] = feats
+            rows[i] = _error_features(exc)
     try:
         ok_feats = image_features_batch(pxs)
     except Exception:  # noqa: BLE001 — keep per-row error granularity
-        return _image_features_rows(data, fmt, w, h)
-    rows: list = [None] * n
+        # rerun the same kernels one already-decoded image at a time,
+        # so only the offending row lands in the error channel
+        ok_feats = [_one_image_features(px) for px in pxs]
     for i, feats in zip(ok_idx, ok_feats):
-        feats["error"] = None
-        rows[i] = feats
-    for i, feats in err_rows.items():
+        feats.setdefault("error", None)
         rows[i] = feats
     # fix the column order to the schema: the batch dicts insert keys
     # in stage order, not schema order, and Spark maps struct fields
@@ -187,24 +180,6 @@ def _blocks_to_tuples(blocks) -> list | None:
     return out
 
 
-@F.pandas_udf(CAPTION_FEATURES_SCHEMA)
-def _caption_features_udf(
-    caption: pd.Series, blocks: pd.Series, w: pd.Series, h: pd.Series
-) -> pd.DataFrame:
-    # batch-vectorized path (single tokenization, searchsorted LM
-    # lookups, per-unique-word caching) — bit-identical to the per-row
-    # oracle path (`engine.ocr_features`), proven by
-    # tests/test_batch_text.py and every driver parity run
-    return caption_features_frame(
-        default_bundle(),
-        list(caption),
-        [_blocks_to_tuples(b) for b in blocks],
-        w.to_numpy(),
-        h.to_numpy(),
-        _HEUR_KEEP,
-    )
-
-
 SCRUB_SCHEMA = T.StructType(
     [
         T.StructField("caption_scrubbed", T.StringType()),
@@ -226,27 +201,14 @@ def _scrub_udf(caption: pd.Series) -> pd.DataFrame:
 
 # ------------------------------------------------------------ stage API
 
-def with_image_features(df: DataFrame, drop_bytes: bool = True) -> DataFrame:
-    """Decode + pixel metrics.  Drops ``bytes`` afterwards by default so
+def with_image_features(df: DataFrame) -> DataFrame:
+    """Decode + pixel metrics.  Drops ``bytes`` afterwards so
     downstream shuffles never move pixels."""
     out = df.withColumn(
         "_imgf", _image_features_udf(F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h"))
     )
-    cols = [c for c in df.columns if not (drop_bytes and c == "bytes")]
+    cols = [c for c in df.columns if c != "bytes"]
     return out.select(*cols, "_imgf.*")
-
-
-def with_caption_features(df: DataFrame) -> DataFrame:
-    blocks_col = (
-        F.col("blocks") if "blocks" in df.columns
-        else F.lit(None).cast(
-            "array<struct<top:double,left:double,width:double,height:double>>"
-        )
-    )
-    out = df.withColumn(
-        "_capf", _caption_features_udf(F.col("caption"), blocks_col, F.col("w"), F.col("h"))
-    )
-    return out.select(*df.columns, "_capf.*")
 
 
 def with_scrubbed_caption(df: DataFrame) -> DataFrame:
@@ -264,9 +226,7 @@ def _caption_scrub_udf(
     caption: pd.Series, blocks: pd.Series, w: pd.Series, h: pd.Series
 ) -> pd.DataFrame:
     # fused caption-features + scrub: ONE Arrow round trip and one
-    # Python-worker pass over the caption column instead of two; the
-    # interiors are the exact batched functions of the separate
-    # stages, so every value is bit-identical to running them apart
+    # Python-worker pass over the caption column instead of two
     capf = caption_features_frame(
         default_bundle(),
         list(caption),
@@ -283,9 +243,8 @@ def _caption_scrub_udf(
 
 
 def with_caption_and_scrub(df: DataFrame) -> DataFrame:
-    """Fused caption-features + scrub stage (the e2e hot path; the
-    separate `with_caption_features` / `with_scrubbed_caption` stages
-    remain for callers that need only one side)."""
+    """Fused caption-features + scrub stage (the e2e hot path;
+    `with_scrubbed_caption` remains for scrub-only callers)."""
     blocks_col = (
         F.col("blocks") if "blocks" in df.columns
         else F.lit(None).cast(
@@ -298,6 +257,6 @@ def with_caption_and_scrub(df: DataFrame) -> DataFrame:
     return out.select(*df.columns, "_cs.*")
 
 
-def with_all_features(df: DataFrame, drop_bytes: bool = True) -> DataFrame:
+def with_all_features(df: DataFrame) -> DataFrame:
     """images table -> full feature table (no labels yet)."""
-    return with_caption_and_scrub(with_image_features(df, drop_bytes=drop_bytes))
+    return with_caption_and_scrub(with_image_features(df))

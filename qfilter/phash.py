@@ -16,16 +16,16 @@ from .imageops import grayscale
 __all__ = ["average_hash", "hamming64"]
 
 
-def average_hash(px: np.ndarray, _gray: np.ndarray | None = None) -> int:
+def average_hash(px: np.ndarray) -> int:
     """Average hash of an RGB (or gray) image -> signed int64.
 
-    ``_gray`` lets the feature UDF reuse its already-computed grayscale
-    plane.  Cell means come from one int64 integral image — exact
-    integer window sums, so the quotients are bit-identical to the
-    previous per-cell ``slice.mean()`` (uint8 sums are exact in either
-    accumulator).
+    Cell means come from one int64 integral image — exact integer
+    window sums, so the quotients are bit-identical to the previous
+    per-cell ``slice.mean()`` (uint8 sums are exact in either
+    accumulator).  The pipeline computes the same hash batched
+    (`batch_image.average_hash_b`).
     """
-    gray = grayscale(px) if _gray is None else _gray
+    gray = grayscale(px)
     h, w = gray.shape
     ii = np.zeros((h + 1, w + 1), dtype=np.int64)
     np.cumsum(np.cumsum(gray, axis=0, dtype=np.int64), axis=1, out=ii[1:, 1:])

@@ -14,7 +14,7 @@ caption-path stack the north rule names:
   class, replacement tokens ``<PII>`` / ``<TOX>``.
 
 The reference's OCR-confidence features are re-derived from the LM in
-`qfilter.engine` (SURVEY.md §7.4); the reference's token filter
+`qfilter.batch_text` (SURVEY.md §7.4); the reference's token filter
 (conf > 0, non-blank — `classificator_extended_paddleocr.py:249-254`)
 maps to the tokenizer's non-blank rule here.
 
@@ -280,7 +280,7 @@ class NgramLM:
     Vocabulary + hashed context tables stored as numpy arrays.  Scores
     are deterministic; OOV words get the unigram floor.  Used both for
     caption perplexity and for the OCR-confidence analogue
-    (`qfilter.engine`, SURVEY.md §7.4).
+    (`qfilter.batch_text`, SURVEY.md §7.4).
     """
 
     K = 0.1
@@ -411,8 +411,9 @@ class ScrubBundle:
 
         Scalar path — kept as the independently-coded oracle twin of
         :meth:`scrub_series` (the batched hot path), mirroring the
-        ``engine.ocr_features`` vs ``batch_text`` dual-implementation
-        pattern; parity is asserted in tests/test_batch_text.py."""
+        ``oracle.features.ocr_features`` vs ``batch_text``
+        dual-implementation pattern; parity is asserted in
+        tests/test_batch_text.py."""
         if not text:
             return text, 0, 0
         out, n_pii = self._pii.subn(self.PII_TOKEN, text)

@@ -1,13 +1,14 @@
-"""Bit-identity of the shape-batched image kernels vs the scalar path.
+"""Bit-identity of the shape-batched image kernels vs the oracle twin.
 
 `qfilter.batch_image.image_features_batch` (the image-UDF interior)
-must produce EXACTLY the values of the scalar path
-(`imageops.image_features` + `phash.average_hash`) — exact float
-equality: the driver's parity gate hashes values, so one ULP of drift
-is a red row.  Also proves, exhaustively over their full input
-domains, the two integer-form shortcuts the batch path relies on
+must produce EXACTLY the values of the per-row twin
+(`oracle.features.image_features` + `phash.average_hash`) — exact
+float equality: the oracle parity gate hashes values, so one ULP of
+drift is a red row.  Also proves, exhaustively over their full input
+domains, the integer-form shortcuts the batch path relies on
 (banker's-rounded /256 in the blur; integer-space adaptive-threshold
-comparison).
+comparison; the unclipped luma), and covers the UDF's per-row
+fallback when a batch call raises.
 """
 
 from __future__ import annotations
@@ -15,15 +16,15 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from oracle.features import image_features
 from qfilter import codecs, imageops
-from qfilter.batch_image import image_features_batch
+from qfilter.batch_image import box_sums_shared_b, grayscale_b, image_features_batch
 from qfilter.phash import average_hash
 
 
 def _scalar_feats(px):
-    gray = imageops.grayscale(px)
-    d = imageops.image_features(px, _gray=gray)
-    d["phash64"] = average_hash(px, _gray=gray)
+    d = image_features(px)
+    d["phash64"] = average_hash(px)
     return d
 
 
@@ -163,3 +164,109 @@ def test_error_rows_interleaved_with_batch(spark, smoke_dir):
             assert r.phash64 == 0
         else:
             assert isinstance(r.phash64, int)
+
+
+def test_grayscale_b_exhaustive_luma():
+    """All 2^24 RGB triples, laid out as 256 images of 256x256:
+    `grayscale_b` equals the scalar `imageops.grayscale`, which clips —
+    so the clip the batch form drops never fires.  The integer-weight
+    variant (299r+587g+114b)/1000, rounded half to even, differs on
+    exactly 1807 triples, which is why it is not used."""
+    v = np.arange(1 << 24, dtype=np.uint32).reshape(256, 256, 256)
+    px = np.empty((256, 256, 256, 3), dtype=np.uint8)
+    px[..., 0] = v >> 16
+    px[..., 1] = (v >> 8) & 255
+    px[..., 2] = v & 255
+    got = grayscale_b(px)
+    mismatches = 0
+    for i in range(256):
+        ref = imageops.grayscale(px[i])
+        assert np.array_equal(got[i], ref), i
+        x = px[i].astype(np.int32) @ np.array([299, 587, 114], dtype=np.int32)
+        q, r = np.divmod(x, 1000)
+        alt = q + ((r > 500) | ((r == 500) & (q % 2 == 1)))
+        mismatches += int(np.count_nonzero(alt != ref))
+    assert mismatches == 1807
+
+
+@pytest.mark.parametrize("h", [1, 3])
+def test_single_block_box_sums_exact_past_int32_prefix_wrap(h):
+    """At block 31 the single-block path's int32 horizontal prefix wraps
+    once the padded width passes ~271k px; each window sum is a
+    difference of two prefixes and < 2^31, so the wrap cancels.  Both
+    box-sum paths must equal an int64 sliding-window sum."""
+    rng = np.random.default_rng(12)
+    g = rng.integers(250, 256, (1, h, 280_000), dtype=np.uint8)
+    r = 15
+    p = np.pad(g[0].astype(np.int64), r, mode="edge")
+    ii = np.zeros((p.shape[0] + 1, p.shape[1] + 1), dtype=np.int64)
+    np.cumsum(np.cumsum(p, axis=0), axis=1, out=ii[1:, 1:])
+    ref = ii[31:, 31:] - ii[:-31, 31:] - ii[31:, :-31] + ii[:-31, :-31]
+    # the int32 prefix really wraps: a full row of vertical window sums
+    # exceeds int32 for some output row
+    assert max(int(p[y : y + 31].sum()) for y in range(h)) > 2**31 - 1
+    single = box_sums_shared_b(g, (31,))[31]
+    multi = box_sums_shared_b(g, (31, 35))[31]
+    assert np.array_equal(single[0], ref)
+    assert np.array_equal(multi[0], ref)
+
+
+def test_udf_fallback_keeps_per_row_error_channel(smoke_dir, monkeypatch):
+    """When the batch call raises, the image UDF reruns the single
+    implementation one decoded image at a time: only the image that
+    still fails becomes an error row; decode errors and every other
+    row are unchanged, and columns stay in schema order."""
+    import os
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from qfilter import features
+
+    t = pq.read_table(
+        os.path.join(smoke_dir, "images.parquet"), columns=["bytes", "fmt", "w", "h"]
+    ).to_pandas()
+
+    def decodes(r):
+        try:
+            codecs.decode(r.bytes, r.fmt, int(r.w), int(r.h))
+            return True
+        except Exception:  # noqa: BLE001
+            return False
+
+    ok = [i for i, r in enumerate(t.itertuples()) if decodes(r)]
+    bad = sorted(set(range(len(t))) - set(ok))
+    assert bad, "smoke fixtures plant decode-error rows"
+    b = t.iloc[ok[:12] + [bad[0]] + ok[12:24]].reset_index(drop=True)
+    err_row = 12
+    # the 17th decoded image (call 16) sits after the decode-error row
+    planted_row, planted_call = 17, 16
+    udf = features._image_features_udf.func
+    cols = [f.name for f in features.IMAGE_FEATURES_SCHEMA]
+
+    ref = udf(b["bytes"], b["fmt"], b["w"], b["h"])
+    assert list(ref.columns) == cols
+    assert ref["error"].notna().tolist() == [i == err_row for i in range(len(b))]
+
+    real = features.image_features_batch
+    calls = []
+
+    def flaky(pxs):
+        if len(pxs) > 1:
+            raise MemoryError("whole batch")
+        calls.append(1)
+        if len(calls) - 1 == planted_call:
+            raise RuntimeError("planted")
+        return real(pxs)
+
+    monkeypatch.setattr(features, "image_features_batch", flaky)
+    got = udf(b["bytes"], b["fmt"], b["w"], b["h"])
+
+    assert list(got.columns) == cols
+    assert len(calls) == len(b) - 1  # one call per decoded row, no re-decode
+    row = got.iloc[planted_row]
+    assert row["error"] == "RuntimeError: planted"
+    assert row["phash64"] == 0
+    assert all(row[c] == 0 for c in cols[:-2])
+    assert got.iloc[err_row].equals(ref.iloc[err_row])
+    assert got.drop(index=planted_row).equals(ref.drop(index=planted_row))

@@ -1,11 +1,11 @@
 """Bit-identity of the batched caption featurizer vs the per-row
-oracle path.
+oracle twin.
 
 `qfilter.batch_text.caption_features_frame` (the Spark UDF interior)
-must produce EXACTLY the values of the scalar path
-(`engine.ocr_features` + `textops`, used by `oracle/rows.py`) — exact
-float equality, not allclose: the driver's parity gate hashes values,
-so one ULP of drift is a red row.
+must produce EXACTLY the values of the scalar twin
+(`oracle.features.ocr_features` + `textops`, used by `oracle/rows.py`)
+— exact float equality, not allclose: the oracle parity gate hashes
+values, so one ULP of drift is a red row.
 """
 
 from __future__ import annotations
@@ -14,8 +14,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from oracle.features import ocr_features
 from qfilter.batch_text import caption_features_frame
-from qfilter.engine import ocr_features
 from qfilter.features import _HEUR_KEEP, _blocks_to_tuples
 from qfilter.textops import _WORD_RE, default_bundle, text_heuristics, tokenize_words
 

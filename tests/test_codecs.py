@@ -156,13 +156,13 @@ def test_zlib_bomb_bounded():
 
 
 def test_budget_violation_routes_to_error_channel():
-    """The feature UDF's scalar twin turns a budget violation into an
-    error row with zeroed features, not an exception."""
+    """The feature UDF turns a budget violation into an error row with
+    zeroed features, not an exception."""
     import pandas as pd
 
-    from qfilter.features import _image_features_rows
+    from qfilter.features import _image_features_udf
 
-    out = _image_features_rows(
+    out = _image_features_udf.func(
         pd.Series([b"\x00" * 12]), pd.Series(["raw"]),
         pd.Series([100_000]), pd.Series([100_000]),
     )

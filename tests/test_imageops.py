@@ -1,7 +1,9 @@
-"""Unit tests for the numpy pixel kernels (no Spark)."""
+"""Unit tests for the numpy pixel primitives and the per-row feature
+twins built on them (no Spark)."""
 
 import numpy as np
 
+from oracle import features as twin
 from qfilter import imageops as ops
 from qfilter.phash import average_hash, hamming64
 
@@ -21,11 +23,11 @@ def test_grayscale_weights():
 
 def test_laplacian_variance_known():
     # uniform image -> zero variance
-    assert ops.laplacian_variance(np.full((16, 16), 100, dtype=np.uint8)) == 0.0
+    assert twin.laplacian_variance(np.full((16, 16), 100, dtype=np.uint8)) == 0.0
     # single center impulse on zeros: interior laplacian values known
     g = np.zeros((5, 5), dtype=np.uint8)
     g[2, 2] = 100
-    lap = ops.laplacian_variance(g)
+    lap = twin.laplacian_variance(g)
     # manual: lap = neighbors_sum - 4*center
     p = np.pad(g.astype(float), 1, mode="edge")
     man = p[:-2, 1:-1] + p[2:, 1:-1] + p[1:-1, :-2] + p[1:-1, 2:] - 4.0 * g.astype(float)
@@ -37,7 +39,7 @@ def test_sharp_vs_blurred_ordering():
     rng = np.random.default_rng(0)
     sharp = (rng.integers(0, 2, size=(64, 64)) * 255).astype(np.uint8)
     soft = ops.box_filter(sharp, 5)
-    assert ops.laplacian_variance(sharp) > ops.laplacian_variance(soft) * 2
+    assert twin.laplacian_variance(sharp) > twin.laplacian_variance(soft) * 2
 
 
 def test_otsu_bimodal():
@@ -87,7 +89,7 @@ def test_brightness_stats():
     g = np.zeros((10, 10), dtype=np.uint8)
     g[:5] = 40   # 50% at 40 (<50 and <100)
     g[5:] = 200
-    mean_b, med, contrast, dark, very_dark = ops.brightness_stats(g)
+    mean_b, med, contrast, dark, very_dark = twin.brightness_stats(g)
     assert abs(mean_b - 120.0) < 1e-9
     assert dark == 50.0 and very_dark == 50.0
     assert contrast == 80.0
@@ -97,12 +99,12 @@ def test_roi_fraction_small_doc_vs_full_page():
     # small bright document on a dark scanner bed -> roi_frac < 0.45
     small = np.full((64, 64), 30, dtype=np.uint8)
     small[10:40, 10:40] = 230  # 30x30 patch = ~22% of frame
-    _, frac_small = ops.roi_fraction(small)
+    _, frac_small = twin.roi_fraction(small)
     assert frac_small < 0.45
     # full bright page with dark text -> roi_frac ~ 1
     page = np.full((64, 64), 250, dtype=np.uint8)
     page[20:24, 12:52] = 10
-    _, frac_page = ops.roi_fraction(page)
+    _, frac_page = twin.roi_fraction(page)
     assert frac_page > 0.9
 
 
@@ -112,7 +114,7 @@ def test_text_density_orders_pages():
         dense[y : y + 3, 8:88] = 15
     sparse = np.full((96, 96), 230, dtype=np.uint8)
     sparse[40:43, 20:60] = 15
-    assert ops.text_density(dense) > ops.text_density(sparse) * 2
+    assert twin.text_density(dense) > twin.text_density(sparse) * 2
 
 
 def test_table_like_detects_grid():
@@ -121,17 +123,17 @@ def test_table_like_detects_grid():
         grid[y, 5:123] = 10
     for x in range(10, 120, 20):
         grid[5:123, x] = 10
-    assert ops.is_table_like(grid)
+    assert twin.is_table_like(grid)
     text = np.full((128, 128), 235, dtype=np.uint8)
     text[60:63, 40:80] = 10
-    assert not ops.is_table_like(text)
+    assert not twin.is_table_like(text)
 
 
 def test_skew_zero_for_straight_lines():
     page = np.full((160, 160), 240, dtype=np.uint8)
     for y in range(30, 130, 18):
         page[y : y + 4, 15:145] = 10
-    assert ops.estimate_skew_deg(page) < 3.0
+    assert twin.estimate_skew_deg(page) < 3.0
 
 
 def test_skew_detects_rotation():
@@ -144,7 +146,7 @@ def test_skew_detects_rotation():
     ry = -(xx - cx) * np.sin(theta) + (yy - cy) * np.cos(theta)
     for band in range(-60, 80, 24):
         page[(ry >= band) & (ry < band + 5)] = 10
-    skew = ops.estimate_skew_deg(page)
+    skew = twin.estimate_skew_deg(page)
     assert 8.0 < skew < 25.0
 
 
@@ -154,15 +156,15 @@ def test_core_fraction_miniature_vs_full():
     full = np.full((128, 128), 240, dtype=np.uint8)
     for y in range(12, 116, 10):
         full[y : y + 4, 10:118] = 10
-    assert ops.core_content_fraction(mini) < 0.12
-    assert ops.core_content_fraction(full) > 0.3
+    assert twin.core_content_fraction(mini) < 0.12
+    assert twin.core_content_fraction(full) > 0.3
 
 
 def test_image_features_keys():
     rng = np.random.default_rng(2)
     px = rng.integers(0, 256, (64, 64, 3), dtype=np.uint8)
-    feats = ops.image_features(px)
-    assert set(feats) == set(ops.IMAGE_FEATURE_NAMES)
+    feats = twin.image_features(px)
+    assert set(feats) == set(twin.IMAGE_FEATURE_NAMES)
     for v in feats.values():
         assert v is not None
 
@@ -209,7 +211,7 @@ def test_box_means_shared_matches_integral_means():
     for _ in range(20):
         h, w = int(rng.integers(1, 120)), int(rng.integers(1, 120))
         g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        shared = ops._box_means_shared(g, (35, 41, 3))
+        shared = twin._box_means_shared(g, (35, 41, 3))
         for b in (35, 41, 3):
             ref = ops._integral_means(g, b)
             assert (shared[b] == ref).all(), b
@@ -220,7 +222,7 @@ def test_brightness_stats_matches_direct_forms():
     for _ in range(30):
         h, w = int(rng.integers(1, 100)), int(rng.integers(1, 100))
         g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        mean_b, median_b, contrast, dark, very_dark = ops.brightness_stats(g)
+        mean_b, median_b, contrast, dark, very_dark = twin.brightness_stats(g)
         assert mean_b == float(g.mean())
         assert median_b == float(np.median(g))
         assert contrast == float(g.std())
@@ -236,4 +238,4 @@ def test_laplacian_variance_matches_float64_form():
         gf = g.astype(np.float64)
         p = ops._pad_edge(gf, 1, 1, 1, 1)
         lap = p[:-2, 1:-1] + p[2:, 1:-1] + p[1:-1, :-2] + p[1:-1, 2:] - 4.0 * gf
-        assert ops.laplacian_variance(g) == float(lap.var())
+        assert twin.laplacian_variance(g) == float(lap.var())

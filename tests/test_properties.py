@@ -13,6 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
+from oracle.features import image_features
 from qfilter import codecs, imageops
 from qfilter.batch_image import image_features_batch
 from qfilter.phash import average_hash
@@ -80,9 +81,8 @@ def test_component_stats_match_bfs_flood_fill(mask):
 def test_batched_image_features_match_scalar_any_mix(pxs):
     got = image_features_batch(pxs)
     for px, g in zip(pxs, got):
-        gray = imageops.grayscale(px)
-        ref = imageops.image_features(px, _gray=gray)
-        ref["phash64"] = average_hash(px, _gray=gray)
+        ref = image_features(px)
+        ref["phash64"] = average_hash(px)
         for k, v in ref.items():
             if isinstance(v, float):
                 assert v == g[k] or (np.isnan(v) and np.isnan(g[k])), (k, v, g[k])
