@@ -1,10 +1,10 @@
 """Per-kernel bandwidth profile of the e2e hot path (no Spark).
 
-`hw_ceiling.py` shows WHERE the box stops scaling (per-process
-throughput drops past 16 procs); this probe shows WHICH kernels pay
-for it.  It runs each stage of `batch_image.image_features_batch`
-separately — decode, grayscale, brightness/phash, ROI crop (blur +
-Otsu + components), and every cropped-plane kernel (median3, box
+Per-process throughput of the raw kernels drops past 16 procs on a
+32-core box; this probe shows WHICH kernels pay for it.  It runs each
+stage of `batch_image.image_features_batch` separately — decode,
+grayscale, brightness/phash, ROI crop (blur + Otsu + components), and
+every cropped-plane kernel (median3, box
 sums, the four adaptive thresholds, morphology, Laplacian, skew /
 core components) — over the same Arrow-sized shape groups the
 production UDF sees, in P pinned processes, and reports per-kernel

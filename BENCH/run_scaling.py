@@ -112,7 +112,7 @@ def main() -> None:
         "--pairs", default="4:16,8:32",
         help="comma-separated low:high core pairs; the FIRST pair is the "
         "gate pair (must lie inside the box's linear-scaling range, see "
-        "BENCH/hw_ceiling.py)")
+        "BENCH/kernel_profile.py)")
     args = ap.parse_args()
 
     pairs = [tuple(int(x) for x in p.split(":")) for p in args.pairs.split(",")]
@@ -162,12 +162,6 @@ def main() -> None:
         pair_medians[f"{lo_c}->{hi_c}"] = (
             round(statistics.median(effs), 3), len(effs))
 
-    ceiling = None
-    cpath = os.path.join(REPO, "BENCH", "hw_ceiling.json")
-    if os.path.exists(cpath):
-        with open(cpath) as f:
-            ceiling = json.load(f)
-
     out = {
         "pairs": results,
         "gate_pair": gate_pair_name,
@@ -176,7 +170,6 @@ def main() -> None:
         "sessions": same_pair,
         "pair_medians": pair_medians,
         "gate": gate_eff >= 0.8,
-        "hw_ceiling_efficiency_4x": (ceiling or {}).get("efficiency_4x"),
     }
     print(json.dumps(out))
 
@@ -197,36 +190,6 @@ def main() -> None:
  efficiency **{r['scaling_efficiency']:.3f}**
 * all timed walls, N: {[round(w, 2) for w in r['low']['all_walls']]};\
  4N: {[round(w, 2) for w in r['high']['all_walls']]}
-"""
-
-    ceiling_md = ""
-    if ceiling:
-        rows_md = "\n".join(
-            f"| {n} | {t:.0f} | {t / int(n):.0f} |"
-            for n, t in sorted(ceiling["rows_per_sec"].items(), key=lambda kv: int(kv[0]))
-        )
-        effs = ", ".join(f"{k}: {v}" for k, v in ceiling["efficiency_4x"].items())
-        gate_lo, gate_hi = pairs[0]
-        ceiling_md = f"""
-## Hardware scaling ceiling (why the gate pair is {gate_lo} -> {gate_hi})
-
-`BENCH/hw_ceiling.py` runs the e2e hot-path kernels (decode -> pixel
-metrics -> pHash, pure numpy, NO Spark) in P pinned processes:
-
-| procs | rows/sec | per-proc |
-|---|---|---|
-{rows_md}
-
-4x-step efficiencies of the RAW KERNELS: {effs}.
-
-Where per-process throughput stops being flat, the box's shared
-memory bandwidth — not the Spark plan — is the bottleneck, for ANY
-embarrassingly parallel workload.  A real 4N-executor cluster adds
-memory bandwidth with every node, so the single-box stand-in is only
-cluster-faithful while the box still scales linearly.  The gate pair
-(local[{gate_lo}] -> local[{gate_hi}]) must sit inside that linear
-range (per the probe table above); other pairs are reported alongside
-for transparency and are bounded above by the kernel ceiling.
 """
 
     kp_md = ""
@@ -277,12 +240,12 @@ gate statistic is the median across recorded sessions —
 {tables}
 * config: spark.sql.shuffle.partitions = 2x cores,
   spark.sql.execution.arrow.maxRecordsPerBatch = 64, AQE on, zstd parquet.
-{ceiling_md}{kp_md}"""
+{kp_md}"""
     # preserve the manually-run appendix (data-volume scaling, owned by
     # BENCH/run_volume.py) across re-runs; everything above it —
-    # including the hardware-ceiling section — is regenerated here, so
-    # splitting at the first "## " would re-append a stale copy of the
-    # ceiling section on every run
+    # including the kernel-profile section — is regenerated here, so
+    # splitting at the first "## " would re-append a stale copy of that
+    # section on every run
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     appendix = ""
     if os.path.exists(path):

@@ -17,7 +17,18 @@ Appends are atomic-by-manifest: data is written to the new snapshot
 dir first, the manifest JSON (renamed into place) commits it; readers
 only ever see dirs listed by a committed manifest, so a killed writer
 leaves garbage data but no torn table — the resume path
-(`qfilter.pipeline`) relies on this.
+(`qfilter.pipeline`) relies on this.  ``append(table, df,
+partition_by=None, txn_id=None)`` rebases and retries on a lost commit
+race; with a ``txn_id`` a second call for the same id is a no-op that
+returns the first call's snapshot (the streaming sink's exactly-once
+contract).
+
+Every commit goes through one manifest builder (``_next_manifest``),
+which also decides the schema policy once: an append (plain, txn-keyed
+or a published WAP stage) widens the table schema by the frame's new
+columns and never narrows it; a rewrite (``compact``, copy-on-write
+``merge``/``delete_where``) takes the rewritten frame's schema; a
+``rollback`` restores the target snapshot's.
 """
 
 from __future__ import annotations
@@ -81,6 +92,96 @@ def _keep_file(stats: dict | None, col: str, op: str, val) -> bool:
 # can never collide with user data columns
 _FILE_COL = "__qf_file"
 _POS_COL = "__qf_pos"
+
+
+def _parquet_files(d: str) -> list[str]:
+    """Every parquet file under data dir ``d`` (hive subdirs included)."""
+    return [
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(d)
+        for n in sorted(names)
+        if n.endswith(".parquet")
+    ]
+
+
+def _merge_schema(base: dict | None, extra: dict | None) -> dict | None:
+    """Union of two schema JSONs by field name, base order first —
+    add-column evolution: an append widens the table schema by the
+    frame's new columns and never drops one the table already has."""
+    if not base:
+        return extra
+    if not extra:
+        return base
+    names = {f["name"] for f in base["fields"]}
+    return {
+        **base,
+        "fields": base["fields"]
+        + [f for f in extra["fields"] if f["name"] not in names],
+    }
+
+
+def _table_state(snap: dict | None) -> dict:
+    """The table-state fields of a snapshot, normalized (legacy
+    manifests predate stats and merge-on-read bookkeeping; absent reads
+    as empty, which every reader already treats as "unknown")."""
+    s = snap or {}
+    return {
+        "dirs": s.get("dirs", []),
+        "partition_by": s.get("partition_by") or [],
+        # schema travels in the manifest so empty tables (zero
+        # rows/files) still read back with the right columns
+        "schema": s.get("schema"),
+        # per-file column bounds of every dir, for scan planning
+        "stats": s.get("stats") or {},
+        # merge-on-read: pending delete specs, and the snapshot that
+        # added each dir so a delete never masks data committed after it
+        "delete_specs": s.get("delete_specs") or [],
+        "dir_added": s.get("dir_added") or {},
+    }
+
+
+# operations whose snapshot replaces the table's rows with one
+# rewritten frame (compaction, copy-on-write merge/delete)
+_REWRITES = ("replace", "overwrite")
+
+
+def _next_manifest(
+    parent: dict | None,
+    add: tuple[str, dict] | None = None,
+    frame_schema: dict | None = None,
+    delete_spec: dict | None = None,
+    **changes,
+) -> dict:
+    """The manifest of the snapshot after ``parent`` (None: the table's
+    first) — the one place a commit's metadata is decided.
+
+    The table state (``_table_state``) is carried forward from
+    ``parent``; a rewrite (``operation`` in ``_REWRITES``) keeps only
+    the partition spec, starts the rest empty and records the dirs it
+    replaces.  ``add`` is a freshly written ``(data_dir, dir_stats)``,
+    appended to the dirs with its bounds and add id; ``delete_spec`` is
+    a pending delete file, stamped with the new id.  Schema policy: a
+    rewrite takes ``frame_schema`` (the rewritten frame's); anything
+    else widens the parent's by it.  ``changes`` are set last: the
+    operation's own keys, or a rollback's restored state."""
+    sid = parent["id"] + 1 if parent else 0
+    m = {"id": sid, "parent": parent["id"] if parent else None, **_table_state(parent)}
+    if changes.get("operation") in _REWRITES:
+        m.update(
+            dirs=[], stats={}, delete_specs=[], dir_added={},
+            schema=frame_schema, replaced_dirs=parent["dirs"],
+        )
+    else:
+        m["schema"] = _merge_schema(m["schema"], frame_schema)
+    if add is not None:
+        data_dir, dir_stats = add
+        m["dirs"] = m["dirs"] + [data_dir]
+        m["stats"] = {**m["stats"], data_dir: dir_stats}
+        m["dir_added"] = {**m["dir_added"], data_dir: sid}
+    if delete_spec is not None:
+        m["delete_specs"] = m["delete_specs"] + [{**delete_spec, "id": sid}]
+    m.update(changes)
+    return m
 
 
 class CommitConflict(Exception):
@@ -218,104 +319,86 @@ class Catalog:
                 out[rel] = bounds
         return out
 
-    # ----------------------------------------------------------- append
-    def append(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> int:
-        data_dir = self._new_data_dir(table, "a")
+    def _write_dir(
+        self, table: str, df: DataFrame, partition_by: list[str] | None, hint: str
+    ) -> tuple[str, dict]:
+        """Write ``df`` to a fresh data dir and walk its footers once:
+        ``(data_dir, dir_stats)``, ready for a manifest."""
+        data_dir = self._new_data_dir(table, hint)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
-        dir_stats = self._collect_dir_stats(data_dir)
-        # optimistic-concurrency loop: data is written once; only the
-        # manifest commit races.  Appends commute, so losing the CAS
-        # just means rebasing onto the winner's snapshot and retrying.
-        while True:
-            snaps = self.snapshots(table)
-            sid = (snaps[-1]["id"] + 1) if snaps else 0
-            parent_dirs = snaps[-1]["dirs"] if snaps else []
-            manifest = {
-                "id": sid,
-                "parent": snaps[-1]["id"] if snaps else None,
-                "dirs": parent_dirs + [data_dir],
-                "partition_by": partition_by or [],
-                # schema travels in the manifest so empty tables (zero
-                # rows/files) still read back with the right columns
-                "schema": df.schema.jsonValue(),
-                # carry the parent's per-file bounds forward and add
-                # this append's — scan planning sees the whole snapshot
-                "stats": {
-                    **((snaps[-1].get("stats") or {}) if snaps else {}),
-                    data_dir: dir_stats,
-                },
-                # merge-on-read bookkeeping: pending equality-delete
-                # specs survive an append (they still mask the OLD
-                # dirs), and each dir remembers the snapshot that added
-                # it so a delete never masks data committed after it
-                "delete_specs": (snaps[-1].get("delete_specs") or []) if snaps else [],
-                "dir_added": {
-                    **((snaps[-1].get("dir_added") or {}) if snaps else {}),
-                    data_dir: sid,
-                },
-            }
-            try:
-                return self._commit_manifest(table, manifest)
-            except CommitConflict:
-                continue
+        return data_dir, self._collect_dir_stats(data_dir)
 
-    def append_once(
+    # ----------------------------------------------------------- append
+    def append(
         self,
         table: str,
         df: DataFrame,
-        txn_id: str,
         partition_by: list[str] | None = None,
+        txn_id: str | None = None,
     ) -> int:
-        """Idempotent append: a second call with the same ``txn_id`` is
-        a no-op returning the original snapshot id.
+        """Append ``df`` as a new snapshot and return its id.
 
+        With a ``txn_id`` the append is idempotent: a second call with
+        the same id is a no-op returning the original snapshot id.
         This is the sink contract Structured Streaming's foreachBatch
         needs for exactly-once output: after a failure the engine
         REPLAYS the last micro-batch with the same deterministic
         batchId, so the sink must deduplicate on it (the same pattern
         as Iceberg's commit-dedup on wap.id / Flink's checkpoint txn).
         """
-        existing = self._txn_snapshot(table, txn_id)
-        if existing is not None:
-            return existing
-        data_dir = self._new_data_dir(table, "a")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        dir_stats = self._collect_dir_stats(data_dir)
-        while True:
-            # re-check inside the CAS loop: a replayed twin may have
-            # committed this txn while we were writing
-            existing = self._txn_snapshot(table, txn_id)
+        if txn_id is not None:
+            # a replay is detected before any data is written
+            existing = self._key_snapshot(table, txn_id, self.snapshots(table))
             if existing is not None:
-                shutil.rmtree(data_dir, ignore_errors=True)
                 return existing
+        data_dir, dir_stats = self._write_dir(table, df, partition_by, "a")
+        tags = {} if txn_id is None else {"txn_id": txn_id}
+        sid, fresh = self._append_commit(
+            table, data_dir, dir_stats, df.schema.jsonValue(), partition_by, **tags
+        )
+        if not fresh:
+            # a replayed twin committed this txn while we were writing
+            shutil.rmtree(data_dir, ignore_errors=True)
+        return sid
+
+    def _append_commit(
+        self,
+        table: str,
+        data_dir: str,
+        dir_stats: dict,
+        schema: dict,
+        partition_by: list[str] | None,
+        **tags,
+    ) -> tuple[int, bool]:
+        """Commit an already-written data dir as an append snapshot:
+        the optimistic-concurrency loop shared by every append.  Data
+        is written once; only the manifest commit races.  Appends
+        commute, so losing the CAS just means rebasing onto the
+        winner's snapshot and retrying.
+
+        ``tags`` go into the manifest; a ``txn_id`` or ``wap_id`` among
+        them is the idempotence key, re-checked on every attempt.
+        Returns ``(snapshot id, fresh)``; ``fresh`` is False when the
+        key was already committed and that snapshot's id is returned."""
+        key = tags.get("txn_id") or tags.get("wap_id")
+        while True:
             snaps = self.snapshots(table)
-            sid = (snaps[-1]["id"] + 1) if snaps else 0
-            parent_dirs = snaps[-1]["dirs"] if snaps else []
-            manifest = {
-                "id": sid,
-                "parent": snaps[-1]["id"] if snaps else None,
-                "dirs": parent_dirs + [data_dir],
-                "partition_by": partition_by or [],
-                "schema": df.schema.jsonValue(),
-                "txn_id": txn_id,
-                "stats": {
-                    **((snaps[-1].get("stats") or {}) if snaps else {}),
-                    data_dir: dir_stats,
-                },
-                "delete_specs": (snaps[-1].get("delete_specs") or []) if snaps else [],
-                "dir_added": {
-                    **((snaps[-1].get("dir_added") or {}) if snaps else {}),
-                    data_dir: sid,
-                },
-            }
+            if key is not None:
+                existing = self._key_snapshot(table, key, snaps)
+                if existing is not None:
+                    return existing, False
+            manifest = _next_manifest(
+                snaps[-1] if snaps else None,
+                add=(data_dir, dir_stats),
+                frame_schema=schema,
+                partition_by=partition_by or [],
+                **tags,
+            )
             try:
-                return self._commit_manifest(table, manifest)
+                return self._commit_manifest(table, manifest), True
             except CommitConflict:
                 continue
 
@@ -339,17 +422,13 @@ class Catalog:
         is returned for ``read_staged`` / ``publish_staged`` /
         ``abort_staged``.  Readers of the table never see staged rows."""
         wap_id = uuid.uuid4().hex[:12]
-        data_dir = self._new_data_dir(table, "s")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        data_dir, dir_stats = self._write_dir(table, df, partition_by, "s")
         staged = {
             "wap_id": wap_id,
             "dir": data_dir,
             "partition_by": partition_by or [],
             "schema": df.schema.jsonValue(),
-            "dir_stats": self._collect_dir_stats(data_dir),
+            "dir_stats": dir_stats,
         }
         os.makedirs(self._staged_dir(table), exist_ok=True)
         tmp = os.path.join(self._staged_dir(table), f".{wap_id}.tmp")
@@ -388,22 +467,6 @@ class Catalog:
             return part
         return self.read(spark, table).unionByName(part, allowMissingColumns=True)
 
-    @staticmethod
-    def _merge_schema(base: dict | None, extra: dict | None) -> dict | None:
-        """Union of two schema JSONs by field name, base order first —
-        add-column evolution semantics for a publish that rebases over
-        appends which widened the schema since staging."""
-        if not base:
-            return extra
-        if not extra:
-            return base
-        names = {f["name"] for f in base["fields"]}
-        return {
-            **base,
-            "fields": base["fields"]
-            + [f for f in extra["fields"] if f["name"] not in names],
-        }
-
     def publish_staged(self, table: str, wap_id: str) -> int:
         """Commit a staged append into the table — pure metadata CAS
         over the already-written data dir (Iceberg's cherry-pick):
@@ -413,47 +476,15 @@ class Catalog:
         already-published snapshot instead of committing the dir twice
         (Iceberg dedups cherry-picks on wap.id for the same reason)."""
         staged = self._staged(table, wap_id)
-        while True:
-            snaps = self.snapshots(table)
-            for s in snaps:
-                if s.get("wap_id") == wap_id:
-                    try:
-                        os.remove(os.path.join(self._staged_dir(table), f"{wap_id}.json"))
-                    except FileNotFoundError:
-                        pass
-                    return s["id"]
-            sid = (snaps[-1]["id"] + 1) if snaps else 0
-            parent_dirs = snaps[-1]["dirs"] if snaps else []
-            manifest = {
-                "id": sid,
-                "parent": snaps[-1]["id"] if snaps else None,
-                "dirs": parent_dirs + [staged["dir"]],
-                "partition_by": staged["partition_by"],
-                "schema": self._merge_schema(
-                    snaps[-1].get("schema") if snaps else None, staged["schema"]
-                ),
-                "operation": "append",
-                "wap_id": wap_id,
-                "stats": {
-                    **((snaps[-1].get("stats") or {}) if snaps else {}),
-                    staged["dir"]: staged["dir_stats"],
-                },
-                "delete_specs": (snaps[-1].get("delete_specs") or []) if snaps else [],
-                "dir_added": {
-                    **((snaps[-1].get("dir_added") or {}) if snaps else {}),
-                    staged["dir"]: sid,
-                },
-            }
-            try:
-                out = self._commit_manifest(table, manifest)
-                break
-            except CommitConflict:
-                continue
+        sid, _fresh = self._append_commit(
+            table, staged["dir"], staged["dir_stats"], staged["schema"],
+            staged["partition_by"], operation="append", wap_id=wap_id,
+        )
         try:
             os.remove(os.path.join(self._staged_dir(table), f"{wap_id}.json"))
         except FileNotFoundError:
             pass
-        return out
+        return sid
 
     def abort_staged(self, table: str, wap_id: str) -> None:
         """Drop a staged commit: audit failed, nothing was ever
@@ -475,7 +506,7 @@ class Catalog:
     def _persist_txns(self, table: str, txns: set[str]) -> None:
         """Durably record txn ids whose carrier snapshots are being
         expired: ``expire_snapshots`` calls this BEFORE removing the
-        manifests, so ``append_once`` replays still dedupe.  Atomic
+        manifests, so replayed txn appends still dedupe.  Atomic
         write (tmp + rename) merged with existing content."""
         merged = sorted(self._persisted_txns(table) | set(txns))
         tmp = f"{self._txn_file(table)}.{uuid.uuid4().hex[:8]}.tmp"
@@ -483,14 +514,16 @@ class Catalog:
             json.dump(merged, f)
         os.replace(tmp, self._txn_file(table))
 
-    def _txn_snapshot(self, table: str, txn_id: str) -> int | None:
-        for s in self.snapshots(table):
-            if s.get("txn_id") == txn_id or txn_id in s.get("txn_ids", []):
+    def _key_snapshot(self, table: str, key: str, snaps: list[dict]) -> int | None:
+        """Id of the snapshot that committed idempotence ``key`` (a txn
+        id or a wap id), or None if it was never committed."""
+        for s in snaps:
+            if key in (s.get("txn_id"), s.get("wap_id")) or key in s.get("txn_ids", []):
                 return s["id"]
-        if txn_id in self._persisted_txns(table):
+        if key in self._persisted_txns(table):
             # carrier snapshot was expired; the ref file preserves the
             # exactly-once promise.  -1 = "committed, snapshot unknown"
-            # (append_once only needs a non-None sentinel to dedupe)
+            # (a txn append only needs a non-None sentinel to dedupe)
             return -1
         return None
 
@@ -499,7 +532,7 @@ class Catalog:
         """Txn ids a replace/overwrite snapshot must carry forward: if
         compaction expired the appends of the current chain, a replayed
         micro-batch must STILL see its txn as committed — otherwise the
-        exactly-once guarantee of ``append_once`` has a crash window
+        exactly-once guarantee of txn appends has a crash window
         between sink commit and checkpoint advance."""
         out: set[str] = set()
         for s in snaps:
@@ -528,6 +561,17 @@ class Catalog:
             os.unlink(tmp)
         return sid
 
+    def _commit_op(self, table: str, cur: dict, **changes) -> int:
+        """Commit a non-append operation computed against ``cur``.  The
+        new snapshot carries every txn id of the chain, so exactly-once
+        dedup outlives the appends it supersedes.  A lost CAS surfaces
+        as :class:`CommitConflict`: the operation's result was computed
+        against a snapshot that is no longer current."""
+        txn_ids = self._carried_txns(self.snapshots(table))
+        return self._commit_manifest(
+            table, _next_manifest(cur, txn_ids=txn_ids, **changes)
+        )
+
     # ------------------------------------------------------------- read
     def read(self, spark: SparkSession, table: str, snapshot: int | None = None) -> DataFrame:
         return self._assemble(spark, self._snapshot(table, snapshot), files_by_dir=None)
@@ -537,6 +581,7 @@ class Catalog:
         spark: SparkSession,
         snap: dict,
         files_by_dir: dict[str, list[str]] | None,
+        positions: bool = False,
     ) -> DataFrame:
         """Materialize a snapshot: per-dir reads + unionByName (keeps
         partition-column discovery working per dir regardless of
@@ -556,12 +601,16 @@ class Catalog:
         columns; they are scoped by construction (a later-added file
         has a different path) and are masked with ONE broadcast
         anti-join over the union of pending position-delete files.
+
+        ``positions`` is the producer side of position deletes: the raw
+        rows, no delete masks applied (re-deleting an already-masked
+        row is a no-op, and a row's address never changes while its
+        file exists), plus each row's address in ``_FILE_COL``/``_POS_COL``.
         """
-        from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(snap["schema"]) if snap.get("schema") else None
-        specs = snap.get("delete_specs") or []
+        specs = [] if positions else (snap.get("delete_specs") or [])
         # "kind" absent = equality (legacy manifests predate position
         # deletes)
         eq_idx = [
@@ -570,6 +619,13 @@ class Catalog:
         ]
         pos_specs = [sp for sp in specs if sp.get("kind") == "position"]
         dir_added = snap.get("dir_added") or {}
+        address = positions or bool(pos_specs)
+
+        def null_address(df):
+            return df.withColumns({
+                _FILE_COL: F.lit(None).cast("string"),
+                _POS_COL: F.lit(None).cast("long"),
+            })
 
         def align(df):
             if schema is None:
@@ -579,7 +635,7 @@ class Catalog:
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for f in schema.fields
             ]
-            if pos_specs and _FILE_COL in df.columns:
+            if address and _FILE_COL in df.columns:
                 cols += [F.col(_FILE_COL), F.col(_POS_COL)]
             return df.select(*cols)
 
@@ -623,13 +679,10 @@ class Catalog:
                     if not legit or schema is None:
                         raise
                     part = spark.createDataFrame([], schema)
-                    if pos_specs:
-                        part = part.withColumns({
-                            _FILE_COL: F.lit(None).cast("string"),
-                            _POS_COL: F.lit(None).cast("long"),
-                        })
+                    if address:
+                        part = null_address(part)
                 else:
-                    if pos_specs:
+                    if address:
                         # materialize the file/ordinal address per row
                         # BEFORE any union — _metadata is per-scan
                         part = part.withColumns({
@@ -651,7 +704,8 @@ class Catalog:
         if out is None:  # empty table or fully pruned scan
             if schema is None:
                 raise FileNotFoundError("snapshot has no schema to read")
-            return align(spark.createDataFrame([], schema))
+            empty = spark.createDataFrame([], schema)
+            return align(null_address(empty) if positions else empty)
         if pos_specs and _FILE_COL in out.columns:
             dels = None
             for sp in pos_specs:
@@ -687,12 +741,7 @@ class Catalog:
             dir_stats = all_stats.get(d)
             if dir_stats is None:
                 # legacy (pre-stats) manifest: enumerate, bounds unknown
-                dir_stats = {
-                    os.path.relpath(os.path.join(root, n), d): {}
-                    for root, _dirs, names in os.walk(d)
-                    for n in sorted(names)
-                    if n.endswith(".parquet")
-                }
+                dir_stats = {os.path.relpath(f, d): {} for f in _parquet_files(d)}
             for rel, bounds in dir_stats.items():
                 path = os.path.join(d, rel)
                 try:
@@ -734,12 +783,7 @@ class Catalog:
             dir_stats = all_stats.get(d)
             if dir_stats is None:
                 # legacy manifest (pre-stats) — enumerate, keep all
-                kept = [
-                    os.path.join(root, n)
-                    for root, _dirs, names in os.walk(d)
-                    for n in sorted(names)
-                    if n.endswith(".parquet")
-                ]
+                kept = _parquet_files(d)
                 n_total += len(kept)
             else:
                 n_total += len(dir_stats)
@@ -770,8 +814,6 @@ class Catalog:
         Equivalent to ``read(...).filter(...)`` row-for-row; on a
         sort/Z-order-compacted table it reads O(matching) files.
         """
-        from pyspark.sql import functions as F
-
         # one snapshot resolution for both planning and assembly: a
         # concurrent commit can't split this read across two states
         snap = self._snapshot(table, snapshot)
@@ -842,15 +884,8 @@ class Catalog:
 
     def table_data_files(self, table: str, snapshot: int | None = None) -> list[str]:
         """All parquet data files of a snapshot (default: current)."""
-        snaps = self.snapshots(table)
-        snap = snaps[-1] if snapshot is None else next(s for s in snaps if s["id"] == snapshot)
-        files: list[str] = []
-        for d in snap["dirs"]:
-            for root, _dirs, names in os.walk(d):
-                files.extend(
-                    os.path.join(root, n) for n in names if n.endswith(".parquet")
-                )
-        return files
+        snap = self._snapshot(table, snapshot)
+        return [f for d in snap["dirs"] for f in _parquet_files(d)]
 
     def compact(
         self,
@@ -880,14 +915,12 @@ class Catalog:
         """
         if sort_by and zorder_by:
             raise ValueError("sort_by and zorder_by are mutually exclusive")
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        cur = snaps[-1]
-        total = sum(os.path.getsize(f) for f in self.table_data_files(table))
+        cur = self._snapshot(table)
+        total = sum(
+            os.path.getsize(f) for d in cur["dirs"] for f in _parquet_files(d)
+        )
         n_files = max(1, -(-total // target_file_bytes))
-        df = self.read(spark, table)
-        data_dir = self._new_data_dir(table, "c")
+        df = self._assemble(spark, cur, files_by_dir=None)
         part_by = cur.get("partition_by") or []
         if zorder_by:
             zcol = f"__z_{uuid.uuid4().hex[:6]}"
@@ -911,27 +944,10 @@ class Catalog:
                 if part_by
                 else df.repartition(int(n_files))
             )
-        writer = out.write.mode("overwrite")
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(data_dir)
-        manifest = {
-            "id": cur["id"] + 1,
-            "parent": cur["id"],
-            "dirs": [data_dir],
-            "partition_by": part_by,
-            "schema": cur.get("schema") or df.schema.jsonValue(),
-            "operation": "replace",
-            "replaced_dirs": cur["dirs"],
-            "sort_by": sort_by or [],
-            "zorder_by": zorder_by or [],
-            "txn_ids": self._carried_txns(snaps),
-            "stats": {data_dir: self._collect_dir_stats(data_dir)},
-            # the rewrite materialized any pending equality deletes
-            "delete_specs": [],
-            "dir_added": {data_dir: cur["id"] + 1},
-        }
-        return self._commit_manifest(table, manifest)
+        return self._commit_rewrite(
+            table, cur, out, "c",
+            operation="replace", sort_by=sort_by or [], zorder_by=zorder_by or [],
+        )
 
     # --------------------------------------------------- row-level ops
     #
@@ -958,15 +974,12 @@ class Catalog:
         up front with one agg job over the small side) and must not
         carry columns absent from the target (they would otherwise be
         silently dropped by the target-schema projection)."""
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        cur = snaps[-1]
-        target = self.read(spark, table)
+        cur = self._snapshot(table)
+        target = self._assemble(spark, cur, files_by_dir=None)
         self._validate_merge_source(source, target.columns, on, table)
         merged = target.join(source.select(*on).distinct(), on=on, how="left_anti")
         merged = merged.unionByName(source.select(*target.columns))
-        return self._commit_rewrite(table, cur, merged, "overwrite")
+        return self._commit_rewrite(table, cur, merged, "w", operation="overwrite")
 
     @staticmethod
     def _validate_merge_source(
@@ -1019,111 +1032,44 @@ class Catalog:
         re-inserts of the same keys survive (sequence-number scoping).
         Null equality keys never match, per SQL join semantics.
         """
-        from pyspark.sql import functions as F
-
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        cur = snaps[-1]
+        cur = self._snapshot(table)
         if mode == "copy-on-write":
-            kept = self.read(spark, table).filter(~F.expr(predicate))
-            return self._commit_rewrite(table, cur, kept, "overwrite")
+            kept = self._assemble(spark, cur, files_by_dir=None).filter(~F.expr(predicate))
+            return self._commit_rewrite(table, cur, kept, "w", operation="overwrite")
         if mode == "merge-on-read-position":
             # Iceberg v2 position deletes: record the exact (file,
             # row-ordinal) pairs of the matching rows.  Unlike
             # equality deletes this can delete ONE of two identical
             # rows, and the mask is scoped by construction — files
             # added later have different paths.
-            pos = (
-                self._with_pos(spark, cur)
+            rows = (
+                self._assemble(spark, cur, files_by_dir=None, positions=True)
                 .filter(F.expr(predicate))
                 .select(
                     F.col(_FILE_COL).alias("file_path"),
                     F.col(_POS_COL).alias("pos"),
                 )
             )
-            ddir = self._new_data_dir(table, "posdel")
-            pos.write.mode("overwrite").parquet(ddir)
-            sid = cur["id"] + 1
-            manifest = {
-                "id": sid,
-                "parent": cur["id"],
-                "dirs": cur["dirs"],
-                "partition_by": cur.get("partition_by") or [],
-                "schema": cur.get("schema"),
-                "operation": "delete",
-                "txn_ids": self._carried_txns(snaps),
-                "stats": cur.get("stats") or {},
-                "delete_specs": (cur.get("delete_specs") or [])
-                + [{"dir": ddir, "kind": "position", "id": sid}],
-                "dir_added": cur.get("dir_added") or {},
-            }
-            return self._commit_manifest(table, manifest)
-        if mode != "merge-on-read":
+            spec, hint = {"kind": "position"}, "posdel"
+        elif mode == "merge-on-read":
+            if not equality_cols:
+                raise ValueError("merge-on-read delete requires equality_cols")
+            rows = (
+                self._assemble(spark, cur, files_by_dir=None)
+                .filter(F.expr(predicate))
+                .select(*equality_cols)
+                .distinct()
+            )
+            spec, hint = {"cols": list(equality_cols)}, "del"
+        else:
             raise ValueError(f"unknown delete mode {mode!r}")
-        if not equality_cols:
-            raise ValueError("merge-on-read delete requires equality_cols")
-        keys = (
-            self.read(spark, table)
-            .filter(F.expr(predicate))
-            .select(*equality_cols)
-            .distinct()
-        )
-        ddir = self._new_data_dir(table, "del")
-        keys.write.mode("overwrite").parquet(ddir)
-        sid = cur["id"] + 1
-        manifest = {
-            "id": sid,
-            "parent": cur["id"],
-            "dirs": cur["dirs"],
-            "partition_by": cur.get("partition_by") or [],
-            "schema": cur.get("schema"),
-            "operation": "delete",
-            "txn_ids": self._carried_txns(snaps),
-            "stats": cur.get("stats") or {},
-            "delete_specs": (cur.get("delete_specs") or [])
-            + [{"dir": ddir, "cols": list(equality_cols), "id": sid}],
-            "dir_added": cur.get("dir_added") or {},
-        }
+        ddir = self._new_data_dir(table, hint)
+        rows.write.mode("overwrite").parquet(ddir)
         # like compact: computed against `cur` — a concurrent commit
-        # invalidates the key set, so surface the conflict
-        return self._commit_manifest(table, manifest)
-
-    def _with_pos(self, spark: SparkSession, snap: dict) -> DataFrame:
-        """Raw snapshot rows plus their (file, row-ordinal) address in
-        ``_FILE_COL``/``_POS_COL`` — the producer side of position
-        deletes.  Pending delete masks are NOT applied: re-deleting an
-        already-masked row is a no-op, and the address of a row never
-        changes while its file exists."""
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(snap["schema"]) if snap.get("schema") else None
-        df = None
-        for d in snap["dirs"]:
-            try:
-                part = spark.read.parquet(d)
-            except AnalysisException:
-                continue  # legitimately-empty dir contributes no rows
-            part = part.withColumns({
-                _FILE_COL: F.col("_metadata.file_path"),
-                _POS_COL: F.col("_metadata.row_index"),
-            })
-            df = part if df is None else df.unionByName(part, allowMissingColumns=True)
-        if df is None:
-            if schema is None:
-                raise FileNotFoundError("snapshot has no schema to read")
-            return spark.createDataFrame([], schema).withColumns({
-                _FILE_COL: F.lit(None).cast("string"),
-                _POS_COL: F.lit(None).cast("long"),
-            })
-        if schema is not None:
-            cols = [
-                F.col(f.name) if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ] + [F.col(_FILE_COL), F.col(_POS_COL)]
-            df = df.select(*cols)
-        return df
+        # invalidates the delete set, so surface the conflict
+        return self._commit_op(
+            table, cur, delete_spec={"dir": ddir, **spec}, operation="delete"
+        )
 
     def merge_mor(
         self, spark: SparkSession, table: str, source: DataFrame, on: list[str]
@@ -1139,19 +1085,16 @@ class Catalog:
 
         Same source validation as :meth:`merge` (unique on ``on``, no
         schema drift)."""
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        cur = snaps[-1]
         from pyspark.sql.types import StructType
 
+        cur = self._snapshot(table)
         target_cols = (
             StructType.fromJson(cur["schema"]).fieldNames()
             if cur.get("schema")
-            else self.read(spark, table).columns
+            else self._assemble(spark, cur, files_by_dir=None).columns
         )
         self._validate_merge_source(source, target_cols, on, table)
-        tgt = self._with_pos(spark, cur)
+        tgt = self._assemble(spark, cur, files_by_dir=None, positions=True)
         matched = tgt.join(
             F.broadcast(source.select(*on).distinct()), on=on, how="left_semi"
         ).select(
@@ -1159,55 +1102,28 @@ class Catalog:
         )
         ddir = self._new_data_dir(table, "posdel")
         matched.write.mode("overwrite").parquet(ddir)
-        adir = self._new_data_dir(table, "m")
-        writer = source.select(*target_cols).write.mode("overwrite")
-        part_by = cur.get("partition_by") or []
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(adir)
-        sid = cur["id"] + 1
-        manifest = {
-            "id": sid,
-            "parent": cur["id"],
-            "dirs": cur["dirs"] + [adir],
-            "partition_by": part_by,
-            "schema": cur.get("schema"),
-            "operation": "merge",
-            "txn_ids": self._carried_txns(snaps),
-            "stats": {
-                **(cur.get("stats") or {}),
-                adir: self._collect_dir_stats(adir),
-            },
-            "delete_specs": (cur.get("delete_specs") or [])
-            + [{"dir": ddir, "kind": "position", "id": sid}],
-            "dir_added": {**(cur.get("dir_added") or {}), adir: sid},
-        }
+        added = self._write_dir(
+            table, source.select(*target_cols), cur.get("partition_by"), "m"
+        )
         # computed against `cur`: surface a concurrent commit
-        return self._commit_manifest(table, manifest)
+        return self._commit_op(
+            table, cur,
+            add=added,
+            delete_spec={"dir": ddir, "kind": "position"},
+            operation="merge",
+        )
 
     def _commit_rewrite(
-        self, table: str, cur: dict, df: DataFrame, operation: str
+        self, table: str, cur: dict, df: DataFrame, hint: str, **changes
     ) -> int:
-        data_dir = self._new_data_dir(table, "w")
-        part_by = cur.get("partition_by") or []
-        writer = df.write.mode("overwrite")
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(data_dir)
-        manifest = {
-            "id": cur["id"] + 1,
-            "parent": cur["id"],
-            "dirs": [data_dir],
-            "partition_by": part_by,
-            "schema": df.schema.jsonValue(),
-            "operation": operation,
-            "replaced_dirs": cur["dirs"],
-            "txn_ids": self._carried_txns(self.snapshots(table)),
-            "stats": {data_dir: self._collect_dir_stats(data_dir)},
-            "delete_specs": [],
-            "dir_added": {data_dir: cur["id"] + 1},
-        }
-        return self._commit_manifest(table, manifest)
+        """Replace ``cur``'s rows with ``df``, written under its partition
+        spec: any pending deletes are materialized by the rewrite."""
+        return self._commit_op(
+            table, cur,
+            add=self._write_dir(table, df, cur.get("partition_by"), hint),
+            frame_schema=df.schema.jsonValue(),
+            **changes,
+        )
 
     # -------------------------------------------------------------- tags
     #
@@ -1268,22 +1184,15 @@ class Catalog:
         re-references the old state's dirs/stats/deletes verbatim —
         pure metadata, no data movement, and the bad snapshots stay
         readable for forensics until expiry."""
-        snaps = self.snapshots(table)
-        target = next((s for s in snaps if s["id"] == snapshot), None)
-        if target is None:
-            raise ValueError(f"snapshot {snapshot} of {table!r} does not exist")
-        cur = snaps[-1]
-        manifest = {
-            **{k: target[k] for k in target if k not in ("id", "parent", "operation", "txn_id")},
-            "id": cur["id"] + 1,
-            "parent": cur["id"],
-            "operation": "rollback",
-            "rolled_back_to": snapshot,
-            # exactly-once txns committed since the target must STAY
-            # committed: a rollback is not permission to replay them
-            "txn_ids": self._carried_txns(snaps),
-        }
-        return self._commit_manifest(table, manifest)
+        cur = self._snapshot(table)
+        target = self._snapshot(table, snapshot)
+        # exactly-once txns committed since the target stay committed
+        # (``_commit_op`` carries them): a rollback is not permission
+        # to replay them
+        return self._commit_op(
+            table, cur, **_table_state(target),
+            operation="rollback", rolled_back_to=snapshot,
+        )
 
     def expire_snapshots(
         self, table: str, keep_last: int = 1, orphan_grace_s: float = 86400.0
@@ -1302,7 +1211,7 @@ class Catalog:
         The snapshot list is re-read after the keep-set is built, so a
         commit that landed concurrently with this call never has its
         dirs deleted.  Txn ids carried only by expired snapshots are
-        persisted to a ref file (consulted by ``append_once``) so
+        persisted to a ref file (consulted by txn appends) so
         exactly-once dedup survives expiry.
 
         Returns the deleted dirs.  Never touches a dir any retained
@@ -1393,21 +1302,16 @@ class Catalog:
         Raises if the chain has been expired, because then the appended
         set can no longer be reconstructed.
         """
-        from pyspark.sql.types import StructType
-
+        to = self._snapshot(table, to_snapshot)
         snaps = {s["id"]: s for s in self.snapshots(table)}
-        if not snaps:
-            raise FileNotFoundError(f"table {table!r} has no snapshots")
-        to = max(snaps) if to_snapshot is None else to_snapshot
         added: list[str] = []
-        schema_json = None
         if since_snapshot < 0:  # "everything since before the first append"
             prev_dirs: set[str] | None = set()
         elif since_snapshot in snaps:
             prev_dirs = set(snaps[since_snapshot]["dirs"])
         else:
             prev_dirs = None
-        for sid in range(since_snapshot + 1, to + 1):
+        for sid in range(since_snapshot + 1, to["id"] + 1):
             snap = snaps.get(sid)
             if snap is None:
                 raise ValueError(
@@ -1419,7 +1323,6 @@ class Catalog:
                     f"since_snapshot {since_snapshot} of {table!r} has been "
                     "expired; incremental read impossible — run a full read"
                 )
-            schema_json = snap.get("schema") or schema_json
             op = snap.get("operation", "append")
             if op in ("overwrite", "rollback", "merge"):
                 # merge/delete rewrote existing rows, rollback removed
@@ -1434,17 +1337,12 @@ class Catalog:
             if op == "append":
                 added.extend(d for d in snap["dirs"] if d not in prev_dirs)
             prev_dirs = set(snap["dirs"])
-        schema = StructType.fromJson(schema_json) if schema_json else None
-        if not added:
-            cur_schema = schema or StructType.fromJson(
-                self.current_snapshot(table)["schema"]
-            )
-            return spark.createDataFrame([], cur_schema)
-        df = None
-        for d in added:
-            part = spark.read.parquet(d)
-            df = part if df is None else df.unionByName(part)
-        return df
+        # the appended dirs read like a table of their own: aligned to
+        # the `to` snapshot's schema, no delete masks (an append scan
+        # never retracts)
+        return self._assemble(
+            spark, {"dirs": added, "schema": to.get("schema")}, files_by_dir=None
+        )
 
 
 def zorder_expr(spark, df: DataFrame, cols: list[str], bits: int = 12):
@@ -1458,8 +1356,6 @@ def zorder_expr(spark, df: DataFrame, cols: list[str], bits: int = 12):
     range-partitioning files by this value gives each file a small
     multi-dimensional bounding box — Delta/Iceberg OPTIMIZE ZORDER.
     """
-    from pyspark.sql import functions as F
-
     if not cols:
         raise ValueError("zorder needs at least one column")
     n = len(cols)
@@ -1490,10 +1386,7 @@ def zorder_expr(spark, df: DataFrame, cols: list[str], bits: int = 12):
 
 # ------------------------------------------------------- bucketed layout
 
-def write_bucketed(
-    df, table: str, bucket_cols: list[str], n_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-) -> None:
+def write_bucketed(df, table: str, bucket_cols: list[str], n_buckets: int) -> None:
     """Persist a DataFrame as a BUCKETED managed table (Spark/Hive
     bucketing): rows are hash-partitioned into ``n_buckets`` files per
     partition by ``bucket_cols`` at WRITE time, so joins and
@@ -1505,11 +1398,6 @@ def write_bucketed(
     plan: two tables bucketed on the same key join with ZERO Exchange
     nodes.  On a real deployment the same layout comes from Iceberg's
     bucket partition transform."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
-def read_table(spark, table: str):
-    return spark.table(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).format(
+        "parquet"
+    ).saveAsTable(table)

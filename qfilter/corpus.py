@@ -369,21 +369,6 @@ def cer_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------- near-dup ops
 
-def _doc_trigrams(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) — distinct word-3-gram shingles per doc."""
-    words = docs.select("doc_id", _words().alias("ws")).filter(F.size("ws") >= 3)
-    tri = words.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, greatest(size(ws) - 3, -1)),"
-                " i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))"
-            )
-        ).alias("shingle"),
-    )
-    return tri.distinct()
-
-
 def _doc_shingle_hashes(docs: DataFrame, p: int) -> DataFrame:
     """(doc_id, x) word-3-gram shingle hashes, x = xxhash64(shingle)
     mod p, WITHOUT per-doc dedup — for min-fold consumers (MinHash),
@@ -425,7 +410,7 @@ def trigram_jaccard_pairs(
     # smaller shuffle keys; per-doc shingles are DISTINCT strings, so
     # hashed counts match exactly absent an xxhash64 collision (~1e-8
     # at this cardinality; the oracle parity test would surface one).
-    # r6: hash BEFORE the per-doc distinct (not `_doc_trigrams` then
+    # r6: hash BEFORE the per-doc distinct (not distinct strings then
     # hash) — the distinct is the first shuffle of the job and now
     # moves 16-byte (doc_id, sh) rows instead of full shingle strings.
     # Same output under the same no-collision assumption the hashed
@@ -977,6 +962,27 @@ def minhash_lsh_dup_pairs(
     )
 
 
+def _checkpointer(edges: DataFrame, checkpoint: str):
+    """The lineage-truncation step ``ckpt(df, eager=True)`` of the
+    iterative connected-components loops.
+
+    ``"local"`` honors ``eager=False``: a lazy `localCheckpoint` is
+    materialized by the round's own convergence action, in the same
+    job.  ``"reliable"`` always checkpoints eagerly: a lazy
+    `.checkpoint()` is written by a separate job after the first action
+    (computing the lineage twice), and never if no action runs."""
+    if checkpoint == "local":
+        return lambda df, eager=True: df.localCheckpoint(eager=eager)
+    if checkpoint == "reliable":
+        if not edges.sparkSession.sparkContext.getCheckpointDir():
+            raise ValueError(
+                "checkpoint='reliable' needs sc.setCheckpointDir(...) "
+                "(an HDFS/object-store path on a real cluster)"
+            )
+        return lambda df, eager=True: df.checkpoint(eager=True)
+    raise ValueError(f"unknown checkpoint strategy {checkpoint!r}")
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -1021,21 +1027,7 @@ def connected_components(
     # are reclaimed by the ContextCleaner as the Python refs drop (we
     # del them promptly); worst-case residency is max_iter copies of
     # the 2-column vertex table, which spills rather than OOMs.
-    if checkpoint == "local":
-        def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-    elif checkpoint == "reliable":
-        if not edges.sparkSession.sparkContext.getCheckpointDir():
-            raise ValueError(
-                "checkpoint='reliable' needs sc.setCheckpointDir(...) "
-                "(an HDFS/object-store path on a real cluster)"
-            )
-
-        def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.checkpoint(eager=eager)
-    else:
-        raise ValueError(f"unknown checkpoint strategy {checkpoint!r}")
-
+    _ckpt = _checkpointer(edges, checkpoint)
     und = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     und = _ckpt(
         und.unionByName(
@@ -1082,7 +1074,8 @@ def connected_components(
             und.join(labels, und.d == labels.v)
             .groupBy("s").agg(F.min("comp").alias("nbr_comp"))
         )
-        # LAZY checkpoint (r6): the convergence check directly below is
+        # LAZY checkpoint (r6; localCheckpoint only — `_checkpointer`
+        # keeps reliable ones eager): the convergence check below is
         # the round's first action, so it materializes the checkpoint
         # blocks AND computes the checksum/diff in ONE Spark job — the
         # eager form paid a separate materialization job per round
@@ -1151,20 +1144,7 @@ def connected_components_star(
     xxhash64(u, v) over distinct edges — collision-safe here because
     equal sums only confirm an already-monotone process).
     """
-    if checkpoint == "local":
-        def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-    elif checkpoint == "reliable":
-        if not edges.sparkSession.sparkContext.getCheckpointDir():
-            raise ValueError(
-                "checkpoint='reliable' needs sc.setCheckpointDir(...)"
-            )
-
-        def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.checkpoint(eager=eager)
-    else:
-        raise ValueError(f"unknown checkpoint strategy {checkpoint!r}")
-
+    _ckpt = _checkpointer(edges, checkpoint)
     # checkpoint the raw edge list FIRST (r6): `verts` and `e` both
     # consume it, and without this the caller's entire upstream
     # pipeline (e.g. the MinHash candidate generation) re-executes
@@ -1206,7 +1186,8 @@ def connected_components_star(
             .join(mins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        # LAZY checkpoints (r6): the round-ending checksum action below
+        # LAZY checkpoints (r6; localCheckpoint only — `_checkpointer`
+        # keeps reliable ones eager): the round-ending checksum action below
         # materializes e2's blocks and, through e2's plan, e1's as
         # well — one Spark job per round where the eager form ran
         # three (e1 materialize, e2 materialize, checksum).

@@ -19,10 +19,10 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "ARROW_BATCH_ROWS"]
 
-# Overridable for experiments (BENCH/probe_832.py measures the 8->32
-# scaling efficiency across batch sizes); 64 is the measured sweet spot
-# for multi-KB bytes cells.
-ARROW_BATCH_ROWS = int(os.environ.get("QFILTER_ARROW_BATCH_ROWS", "64"))
+# 64 is the measured sweet spot for multi-KB bytes cells: in the
+# 16/64/256 sweep of BENCH/BASELINE.md it maximizes absolute throughput
+# at both 8 and 32 cores.
+ARROW_BATCH_ROWS = 64
 
 
 def get_spark(

@@ -119,10 +119,10 @@ def stream_quality_filter_to_catalog(
     """Stream the quality filter into a :class:`~qfilter.catalog.Catalog`
     table with exactly-once micro-batch commits.
 
-    Each micro-batch is appended via ``Catalog.append_once`` keyed on
-    the engine's deterministic batchId, so a replayed batch (crash
-    between sink write and checkpoint advance — the foreachBatch
-    at-least-once window) commits zero duplicate rows.  This is the
+    Each micro-batch is appended via ``Catalog.append`` with a
+    ``txn_id`` built from the engine's deterministic batchId, so a
+    replayed batch (crash between sink write and checkpoint advance —
+    the foreachBatch at-least-once window) commits zero duplicate rows.  This is the
     streaming-into-Iceberg sink shape: every micro-commit is a snapshot,
     time travel and incremental reads work mid-stream, and with
     ``maintain_every`` = N the sink bin-packs + expires every N commits
@@ -142,7 +142,7 @@ def stream_quality_filter_to_catalog(
     labeled = with_labels(with_all_features(stream)).select(*LABEL_OUT_COLS)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.append_once(table, batch_df, txn_id=f"{checkpoint_dir}#{batch_id}")
+        catalog.append(table, batch_df, txn_id=f"{checkpoint_dir}#{batch_id}")
         if maintain_every and len(catalog.snapshots(table)) % maintain_every == 0:
             try:
                 catalog.compact(spark, table)

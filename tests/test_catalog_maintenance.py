@@ -176,6 +176,69 @@ def test_add_column_schema_evolution(spark, cat):
     assert old.columns == ["id", "bucket", "caption"]
 
 
+def test_narrow_append_keeps_widened_schema(spark, cat):
+    """An append never narrows the table schema: a frame without a
+    column the table already has reads back null for it, and the rows
+    that do carry it keep their values."""
+    cat.append("nw", _mk(spark, 0, 10))
+    cat.append("nw", _mk(spark, 10, 20).withColumn("lang", F.lit("en")))
+    cat.append("nw", _mk(spark, 20, 30))
+
+    df = cat.read(spark, "nw")
+    assert df.columns == ["id", "bucket", "caption", "lang"]
+    assert df.filter(F.col("lang") == "en").count() == 10
+    assert df.filter(F.col("lang").isNull()).count() == 20
+
+
+def test_incremental_read_aligns_add_column(spark, cat):
+    """The incremental scan reads its dirs like a full read: aligned
+    to the schema, older dirs null for the added column."""
+    cat.append("ia", _mk(spark, 0, 10))
+    cat.append("ia", _mk(spark, 10, 20).withColumn("lang", F.lit("en")))
+
+    inc = cat.read_incremental(spark, "ia", since_snapshot=-1)
+    rows = inc.collect()
+    assert len(rows) == 20
+    assert {r["id"] for r in rows if r["lang"] is None} == set(range(10))
+
+
+def test_table_data_files_unknown_snapshot_raises(spark, cat):
+    cat.append("uk", _mk(spark, 0, 10))
+    with pytest.raises(ValueError, match="does not exist"):
+        cat.table_data_files("uk", snapshot=99)
+
+
+def test_manifest_key_sets(spark, cat):
+    """Pins the key set each operation commits, so a refactor of the
+    manifest builder cannot drift the on-disk format unseen."""
+    state = {"id", "parent", "dirs", "partition_by", "schema", "stats",
+             "delete_specs", "dir_added"}
+
+    def keys():
+        return set(cat.current_snapshot("mk"))
+
+    cat.append("mk", _mk(spark, 0, 10))
+    assert keys() == state
+    cat.append("mk", _mk(spark, 10, 20), txn_id="ck#0")
+    assert keys() == state | {"txn_id"}
+    cat.publish_staged("mk", cat.append_staged("mk", _mk(spark, 20, 30)))
+    assert keys() == state | {"operation", "wap_id"}
+    cat.compact(spark, "mk", target_file_bytes=1 << 30)
+    assert keys() == state | {"operation", "replaced_dirs", "sort_by", "zorder_by", "txn_ids"}
+    cat.delete_where(spark, "mk", "id = 1", mode="merge-on-read", equality_cols=["id"])
+    assert keys() == state | {"operation", "txn_ids"}
+    cat.delete_where(spark, "mk", "id = 2", mode="merge-on-read-position")
+    assert keys() == state | {"operation", "txn_ids"}
+    cat.merge_mor(spark, "mk", _mk(spark, 3, 5), on=["id"])
+    assert keys() == state | {"operation", "txn_ids"}
+    cat.merge(spark, "mk", _mk(spark, 5, 7), on=["id"])
+    assert keys() == state | {"operation", "replaced_dirs", "txn_ids"}
+    cat.delete_where(spark, "mk", "id = 8")
+    assert keys() == state | {"operation", "replaced_dirs", "txn_ids"}
+    cat.rollback("mk", 0)
+    assert keys() == state | {"operation", "rolled_back_to", "txn_ids"}
+
+
 def test_partition_evolution(spark, cat):
     """Iceberg partition evolution: the partition spec can change
     between appends; old dirs keep their layout, reads span both."""

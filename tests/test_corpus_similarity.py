@@ -264,29 +264,33 @@ def test_connected_components_string_ids(spark):
 def test_connected_components_reliable_checkpoint_matches_local(spark, tmp_path):
     """Cluster-faithful path: `.checkpoint()` to a checkpoint dir must
     produce exactly the components of the localCheckpoint path, and
-    the reliable path must refuse to run without a checkpoint dir."""
-    from qfilter.corpus import connected_components
+    the reliable path must refuse to run without a checkpoint dir —
+    for both the propagation and the large-star/small-star variant."""
+    from qfilter.corpus import connected_components, connected_components_star
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20), (11, 12), (3, 1)],
         "src long, dst long",
     )
-    local = {r.v: r.comp for r in connected_components(edges).collect()}
+    variants = (connected_components, connected_components_star)
+    local = [{r.v: r.comp for r in cc(edges).collect()} for cc in variants]
 
     sc = spark.sparkContext
     had = sc.getCheckpointDir()
     if not had:
         import pytest as _pytest
 
-        with _pytest.raises(ValueError, match="setCheckpointDir"):
-            connected_components(edges, checkpoint="reliable")
+        for cc in variants:
+            with _pytest.raises(ValueError, match="setCheckpointDir"):
+                cc(edges, checkpoint="reliable")
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    reliable = {
-        r.v: r.comp
-        for r in connected_components(edges, checkpoint="reliable").collect()
-    }
-    assert reliable == local
-    assert local[3] == 1 and local[12] == 10 and local[20] == 20
+    for cc, want in zip(variants, local):
+        reliable = {
+            r.v: r.comp
+            for r in cc(edges, checkpoint="reliable").collect()
+        }
+        assert reliable == want
+        assert want[3] == 1 and want[12] == 10 and want[20] == 20
 
 
 def test_connected_components_star_matches_propagation(spark):

@@ -20,7 +20,12 @@ TABLES = [
 
 
 def _duck():
-    con = duckdb.connect()
+    # One thread: DuckDB 1.0 keeps each min(STRUCT) aggregate state
+    # (the winnow_fingerprints twin's per-window arg-min) as a full
+    # vector outside its buffer manager, so `memory_limit` does not
+    # bound it and it costs ~4 GB per thread at sf0.01 (12 GB at 4
+    # threads, beside a Spark driver JVM in the same process tree).
+    con = duckdb.connect(config={"threads": 1})
     for t in TABLES:
         p = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(p):

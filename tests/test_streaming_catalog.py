@@ -2,8 +2,8 @@
 
 foreachBatch is at-least-once: after a crash between the sink write
 and the checkpoint advance, the engine replays the micro-batch with
-the SAME batchId.  ``Catalog.append_once`` turns that into
-exactly-once by deduplicating commits on the txn id — including after
+the SAME batchId.  ``Catalog.append`` with a ``txn_id`` turns that
+into exactly-once by deduplicating commits on the txn id — including after
 compaction expired the original append snapshot (replace snapshots
 carry the superseded txn ids forward).
 """
@@ -66,13 +66,13 @@ def test_append_once_dedups_replay(spark, tmp_path):
     cat = Catalog(str(tmp_path / "wh"))
     df = spark.range(10).select(F.col("id"), F.lit("x").alias("tag"))
 
-    sid = cat.append_once("t", df, txn_id="ck#0")
-    again = cat.append_once("t", df, txn_id="ck#0")  # replayed micro-batch
+    sid = cat.append("t", df, txn_id="ck#0")
+    again = cat.append("t", df, txn_id="ck#0")  # replayed micro-batch
     assert again == sid
     assert cat.read(spark, "t").count() == 10
     assert len(cat.snapshots("t")) == 1
 
-    cat.append_once("t", df, txn_id="ck#1")
+    cat.append("t", df, txn_id="ck#1")
     assert cat.read(spark, "t").count() == 20
 
 
@@ -82,15 +82,15 @@ def test_txn_survives_compaction_and_expiry(spark, tmp_path):
     cat = Catalog(str(tmp_path / "wh"))
     df = spark.range(10).select(F.col("id"), F.lit("x").alias("tag"))
 
-    cat.append_once("t", df, txn_id="ck#0")
-    cat.append_once("t", spark.range(10, 20).select(F.col("id"), F.lit("y").alias("tag")), txn_id="ck#1")
+    cat.append("t", df, txn_id="ck#0")
+    cat.append("t", spark.range(10, 20).select(F.col("id"), F.lit("y").alias("tag")), txn_id="ck#1")
     cat.compact(spark, "t", target_file_bytes=1 << 30)
     cat.expire_snapshots("t", keep_last=1)
     assert len(cat.snapshots("t")) == 1  # only the replace snapshot left
 
     # replay of an already-committed, now-expired micro-batch: no-op
-    cat.append_once("t", df, txn_id="ck#1")
-    cat.append_once("t", df, txn_id="ck#0")
+    cat.append("t", df, txn_id="ck#1")
+    cat.append("t", df, txn_id="ck#0")
     assert cat.read(spark, "t").count() == 20
     assert len(cat.snapshots("t")) == 1
 
@@ -103,8 +103,8 @@ def test_txn_survives_expiry_without_compaction(spark, tmp_path):
     cat = Catalog(str(tmp_path / "wh"))
     df = spark.range(10).select(F.col("id"), F.lit("x").alias("tag"))
 
-    cat.append_once("t", df, txn_id="ck#0")
-    cat.append_once(
+    cat.append("t", df, txn_id="ck#0")
+    cat.append(
         "t",
         spark.range(10, 20).select(F.col("id"), F.lit("y").alias("tag")),
         txn_id="ck#1",
@@ -113,7 +113,7 @@ def test_txn_survives_expiry_without_compaction(spark, tmp_path):
     assert len(cat.snapshots("t")) == 1
 
     # replay of both micro-batches after the crash window: no-ops
-    cat.append_once("t", df, txn_id="ck#0")
-    cat.append_once("t", df, txn_id="ck#1")
+    cat.append("t", df, txn_id="ck#0")
+    cat.append("t", df, txn_id="ck#1")
     assert cat.read(spark, "t").count() == 20
     assert len(cat.snapshots("t")) == 1
