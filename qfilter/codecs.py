@@ -262,10 +262,6 @@ def _rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
     return np.stack([y, cb, cr], axis=-1)
 
 
-def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
-    return _ycbcr_planes_to_rgb(ycc[..., 0], ycc[..., 1], ycc[..., 2])
-
-
 def _ycbcr_planes_to_rgb(y: np.ndarray, cbp: np.ndarray, crp: np.ndarray) -> np.ndarray:
     """Per-plane YCbCr -> RGB: the same float32 expressions as the
     historical stacked form (same per-element op order per channel, so

@@ -30,21 +30,31 @@ from pyspark.sql import functions as F
 __all__ = [
     "load",
     "text_quality_stats",
+    "doc_gopher_filter",
     "lang_rollup",
+    "dataset_split",
+    "stratified_sample",
+    "pack_shards",
     "exact_dedup",
     "fingerprints",
     "winnow_fingerprints",
     "cer_per_lang",
     "trigram_jaccard_pairs",
+    "substring_dup_spans",
+    "substring_dedup_apply",
     "decontaminate",
-    "minhash_signatures",
+    "temperature_resample",
+    "temperature_resample_upsampled",
     "minhash_lsh_dup_pairs",
     "connected_components",
+    "connected_components_star",
     "neardup_components",
+    "neardup_components_star",
     "simhash64",
     "event_gaps",
     "event_rollup",
     "event_sessions",
+    "weighted_median_value",
     "lineitem_rollup",
     "top_customers",
     "discount_grid_argmax",
@@ -243,20 +253,15 @@ def _docs_with_planted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by md5(text): winner = min(doc_id), dup_count.
-    Salted two-phase aggregation (same pattern as qfilter.dedup)."""
+    """Exact dedup by md5(text): (h, keep_id = min(doc_id), dup_count),
+    through the salted two-phase winner aggregate of
+    `dedup.phash_winners`."""
+    from .dedup import phash_winners
+
     dup = _docs_with_planted_dups(spark, sf_dir)
-    salted = dup.select(
-        F.md5("text").alias("h"),
-        "doc_id",
-        F.pmod(F.col("doc_id"), F.lit(16)).alias("_salt"),
-    )
-    partial = salted.groupBy("h", "_salt").agg(
-        F.min("doc_id").alias("_m"), F.count(F.lit(1)).alias("_c")
-    )
-    return partial.groupBy("h").agg(
-        F.min("_m").alias("keep_id"), F.sum("_c").alias("dup_count")
-    )
+    return phash_winners(
+        dup.select(F.md5("text").alias("h"), "doc_id"), key="h", id_col="doc_id"
+    ).withColumnRenamed("canonical_id", "keep_id")
 
 
 def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,20 +374,53 @@ def cer_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------- near-dup ops
 
-def _doc_shingle_hashes(docs: DataFrame, p: int) -> DataFrame:
-    """(doc_id, x) word-3-gram shingle hashes, x = xxhash64(shingle)
-    mod p, WITHOUT per-doc dedup — for min-fold consumers (MinHash),
-    where duplicates cannot affect the result."""
-    words = docs.select("doc_id", _words().alias("ws")).filter(F.size("ws") >= 3)
-    return words.select(
+def _shingles(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, h) for every k-word shingle of the (doc_id, ws)
+    docs: pos = first word index, h = xxhash64 of the space-joined
+    words, hashed inside one projection so the strings never leave the
+    task.  Docs under k words are filtered out (``sequence(0, size(ws)
+    - k)`` would count DOWN for them).  h stands in for the string on
+    every join; the DuckDB twins join strings, so a collision would
+    surface as an oracle mismatch."""
+    return docs.filter(F.size("ws") >= k).select(
         "doc_id",
-        F.explode(
+        F.posexplode(
             F.expr(
-                "transform(sequence(0, greatest(size(ws) - 3, -1)),"
-                f" i -> pmod(xxhash64(concat_ws(' ', ws[i], ws[i+1], ws[i+2])), {p}))"
+                f"transform(sequence(0, size(ws) - {k}), i -> "
+                f"xxhash64(concat_ws(' ', slice(ws, i + 1, {k}))))"
             )
-        ).alias("x"),
+        ).alias("pos", "h"),
+    ).select("doc_id", F.col("pos").cast("long").alias("pos"), "h")
+
+
+def _df_capped(grams: DataFrame, df_cap: int) -> DataFrame:
+    """The rows of `grams` (doc_id, h, ...) whose hash h occurs in at
+    most `df_cap` distinct docs — stop-shingle removal before a
+    self-join on h, where one corpus-common shingle ("one of the")
+    would produce O(df^2) rows.  df is a groupBy(h) with map-side
+    partial aggregation, joined back on h: a hot shingle reaches its
+    reducer as one partial count per map task (a count() window over h
+    has no partial step and funnels every row into one task)."""
+    keep = (
+        grams.groupBy("h")
+        .agg(F.countDistinct("doc_id").alias("df"))
+        .filter(F.col("df") <= df_cap)
+        .select("h")
     )
+    return grams.join(keep, "h")
+
+
+def _with_truncated_copies(docs: DataFrame) -> DataFrame:
+    """(doc_id, ws) word arrays of the (doc_id, text) docs UNION, per
+    doc, a copy truncated to its first 80% of words (at least one),
+    id + 1e6 — the deterministic near-dup plant (the driver corpus has
+    no natural near-dups), mirrored in the DuckDB oracles."""
+    n_keep = F.greatest(F.floor(F.size(_words()) * 0.8), F.lit(1)).cast("int")
+    trunc = docs.select(
+        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
+        F.concat_ws(" ", F.slice(_words(), 1, n_keep)).alias("text"),
+    )
+    return docs.unionByName(trunc).select("doc_id", _words().alias("ws"))
 
 
 TRIGRAM_DF_CAP = 64  # drop shingles present in more docs than this
@@ -394,70 +432,28 @@ def trigram_jaccard_pairs(
     threshold: float = 0.4,
     df_cap: int = TRIGRAM_DF_CAP,
 ) -> DataFrame:
-    """Word-3-gram Jaccard near-dup pairs.  Dup plant: each doc vs a
-    copy truncated to its first 80% of words (id + 1e6) => known
-    overlapping pairs.  Shingle equi-join, then filter on jaccard."""
+    """Word-3-gram Jaccard near-dup pairs over `_with_truncated_copies`
+    (each doc vs its 80% prefix => known overlapping pairs): distinct
+    shingle hashes per doc, the `_df_capped` stop-shingle cap, then a
+    shingle equi-join and a filter on jaccard.  Jaccard is computed
+    over the KEPT shingles on both sides (sizes included), mirrored
+    exactly in the DuckDB oracle."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    trunc = docs.select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.slice(_words(), 1, F.greatest(F.floor(F.size(_words()) * 0.8), F.lit(1)).cast("int")),
-        ).alias("text"),
-    )
-    all_docs = docs.unionByName(trunc)
-    # join/shuffle on the 64-bit shingle hash, not the string: ~4x
-    # smaller shuffle keys; per-doc shingles are DISTINCT strings, so
-    # hashed counts match exactly absent an xxhash64 collision (~1e-8
-    # at this cardinality; the oracle parity test would surface one).
-    # r6: hash BEFORE the per-doc distinct (not distinct strings then
-    # hash) — the distinct is the first shuffle of the job and now
-    # moves 16-byte (doc_id, sh) rows instead of full shingle strings.
-    # Same output under the same no-collision assumption the hashed
-    # join already makes: dedup over hashes == dedup over the distinct
-    # strings they came from unless two distinct shingles of one doc
-    # collide.
-    words = all_docs.select("doc_id", _words().alias("ws")).filter(
-        F.size("ws") >= 3
-    )
-    tri_all = words.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, greatest(size(ws) - 3, -1)),"
-                " i -> xxhash64(concat_ws(' ', ws[i], ws[i+1], ws[i+2])))"
-            )
-        ).alias("sh"),
-    ).distinct()
-    # document-frequency cap (stop-shingle removal): one corpus-common
-    # trigram ("one of the") would otherwise produce O(df^2) rows in
-    # the self-join below — the scale-killer at 100 TB.  Jaccard is
-    # computed over the KEPT shingles on both sides (sizes included),
-    # mirrored exactly in the DuckDB oracle.
-    # r6: the cap is a count() window over sh, not a df-aggregate
-    # joined back — the agg+join form re-executed the whole shingle
-    # generation for each of its two scans (one per join side) and
-    # paid two shuffles; the window computes identical df counts in
-    # ONE shuffle of the shingle table and one generation pass.
-    from pyspark.sql.window import Window
-
-    tri = (
-        tri_all.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        )
-        .filter(F.col("df") <= df_cap)
-        .drop("df")
-        # corpus-sized intermediate: DISK_ONLY, not memory cache — at
-        # 100 TB the kept-shingle set dwarfs executor memory and a
-        # MEMORY persist would evict/thrash; local parquet-speed disk
-        # re-reads are cheaper than recomputing the cap pass twice
-        .persist(StorageLevel.DISK_ONLY)
-    )
+    # per-doc distinct over the hashes, not the strings: the distinct
+    # is the first shuffle of the job and moves 16-byte (doc_id, h)
+    # rows.  Same sets unless two distinct shingles of one doc collide.
+    shingles = _shingles(_with_truncated_copies(docs), 3).select("doc_id", "h").distinct()
+    # persisted AFTER the cap: its three readers (sizes, both self-join
+    # sides) scan the kept rows instead of each re-running the cap join
+    # (measured faster than persisting `shingles`, sf0.01/sf0.1 on 4
+    # cores).  DISK_ONLY, not memory: at 100 TB the kept-shingle set
+    # dwarfs executor memory.
+    tri = _df_capped(shingles, df_cap).persist(StorageLevel.DISK_ONLY)
     sizes = tri.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = tri.alias("a")
     b = tri.alias("b")
     inter = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
+        a.join(b, F.col("a.h") == F.col("b.h"))
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
@@ -519,16 +515,14 @@ def substring_dup_spans(
     primitive substring-removal dedup needs.
 
     Algorithm (all DataFrame ops, no UDF):
-      1. k-word shingles at EVERY word position, hashed to int64
-         inside the projection (transform + xxhash64 in one Catalyst
-         expression, then posexplode of the hash array — the string
-         shingles never leave the task).
-      2. Document-frequency cap on the shingle hash (count DISTINCT
-         docs), exactly like `trigram_jaccard_pairs`: a boilerplate
-         k-gram shared by thousands of docs would otherwise explode
-         the self-join O(df^2) — the 100 TB scale-killer.  Capped
-         shingles can split a reported span; semantics are "maximal
-         runs of kept shingles", mirrored in the oracle.
+      1. `_shingles`: k-word shingle hashes at EVERY word position,
+         with their positions.
+      2. `_df_capped`: the document-frequency cap on the shingle hash
+         shared with `trigram_jaccard_pairs` — a boilerplate k-gram
+         shared by thousands of docs would otherwise explode the
+         self-join O(df^2).  Capped shingles can split a reported
+         span; semantics are "maximal runs of kept shingles",
+         mirrored in the oracle.
       3. Self-join on the hash (id1 < id2) -> anti-diagonal runs:
          matches of one contiguous duplicated span share
          diag = pos_a - pos_b, and their pos_a values are consecutive.
@@ -551,27 +545,10 @@ def substring_dup_spans(
     """
     from pyspark.sql import Window
 
-    all_docs = _substring_corpus(spark, sf_dir).filter(F.size("ws") >= k)
-    grams = (
-        all_docs.select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(ws) - {k}), i -> "
-                    f"xxhash64(concat_ws(' ', slice(ws, i + 1, {k}))))"
-                )
-            ).alias("pos", "h"),
-        )
-        .select("doc_id", F.col("pos").cast("long").alias("pos"), "h")
-        .persist(StorageLevel.DISK_ONLY)
+    grams = _shingles(_substring_corpus(spark, sf_dir), k).persist(
+        StorageLevel.DISK_ONLY
     )
-    keep = (
-        grams.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") <= df_cap)
-        .select("h")
-    )
-    g = grams.join(keep, "h")
+    g = _df_capped(grams, df_cap)
     a, b = g.alias("a"), g.alias("b")
     pairs = (
         a.join(b, F.col("a.h") == F.col("b.h"))
@@ -707,8 +684,8 @@ def decontaminate(
     span of it -> 40 - n + 1 known matching gram positions).
 
     Plan (the 100 TB shape is the point):
-      * both sides shingle map-side (hash inside one Catalyst
-        projection, strings never leave the task);
+      * both sides shingle map-side through `_shingles` (the
+        strings never leave the task);
       * the eval side is tiny and FIXED-SIZE at any corpus scale (a
         benchmark suite, not a corpus sample), so its distinct gram
         hashes BROADCAST to the training scan — the corpus-sized
@@ -738,21 +715,10 @@ def decontaminate(
             (F.col("doc_id") % bench_mod == 0).alias("is_bench"),
         )
     )
-
-    def _gram_hashes(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(ws) - {n}), i -> "
-                    f"xxhash64(concat_ws(' ', slice(ws, i + 1, {n}))))"
-                )
-            ).alias("h"),
-        )
-
-    bench = _gram_hashes(docs.filter("is_bench")).select("h").distinct()
+    bench = _shingles(docs.filter("is_bench"), n).select("h").distinct()
     hits = (
-        _gram_hashes(docs.filter(~F.col("is_bench")))
+        _shingles(docs.filter(~F.col("is_bench")), n)
+        .select("doc_id", "h")
         .join(F.broadcast(bench), "h")
         .groupBy("doc_id")
         .agg(
@@ -877,14 +843,17 @@ def _minhash_coeffs(n_perm: int):
     return a, b
 
 
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str, n_perm: int = 32
+def minhash_lsh_dup_pairs(
+    spark: SparkSession, sf_dir: str, n_perm: int = 32, bands: int = 8
 ) -> DataFrame:
-    """MinHash signatures over word-3-gram shingles.
+    """MinHash LSH candidate pairs: band the signature (bands x r),
+    bucket-join on (band, banded-signature hash), estimate jaccard as
+    matching-minhash fraction.  Dup plant: `_with_truncated_copies`,
+    as in trigram_jaccard_pairs.
 
-    h_i(s) = (a_i * xxhash64(s) + b_i) mod p  — all inside the JVM
-    (xxhash64 + arithmetic), no UDF.  Deterministic coefficient table.
-    """
+    h_i(s) = (a_i * x + b_i) mod p with x = xxhash64(s) mod p — all
+    inside the JVM (xxhash64 + arithmetic), no UDF; deterministic
+    coefficient table."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # p = 2^31-1 keeps a_i * x + b_i well inside int64 (ANSI mode errors
     # on overflow rather than wrapping)
@@ -896,35 +865,9 @@ def minhash_signatures(
     # full-width (doc_id, shingle-string) shuffle that dominated this
     # stage; what remains shuffles only map-side-combined partial
     # minima (one 32-column row per doc per map partition).
-    hashed = _doc_shingle_hashes(docs, p)
-    a, b = _minhash_coeffs(n_perm)
-    aggs = [
-        F.min(F.pmod(F.lit(a[i]) * F.col("x") + F.lit(b[i]), F.lit(p))).alias(f"mh{i}")
-        for i in range(n_perm)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_lsh_dup_pairs(
-    spark: SparkSession, sf_dir: str, n_perm: int = 32, bands: int = 8
-) -> DataFrame:
-    """MinHash LSH candidate pairs: band the signature (bands x r),
-    bucket-join on (band, banded-signature hash), estimate jaccard as
-    matching-minhash fraction.  Dup plant as in trigram_jaccard_pairs."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    trunc = docs.select(
-        (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.slice(_words(), 1, F.greatest(F.floor(F.size(_words()) * 0.8), F.lit(1)).cast("int")),
-        ).alias("text"),
+    hashed = _shingles(_with_truncated_copies(docs), 3).select(
+        "doc_id", F.pmod("h", F.lit(p)).alias("x")
     )
-    all_docs = docs.unionByName(trunc)
-
-    # no per-doc distinct: see minhash_signatures (min over a multiset
-    # == min over its support; removes the shingle-string shuffle)
-    p = 2147483647
-    hashed = _doc_shingle_hashes(all_docs, p)
     a, b = _minhash_coeffs(n_perm)
     aggs = [
         F.min(F.pmod(F.lit(a[i]) * F.col("x") + F.lit(b[i]), F.lit(p))).alias(f"mh{i}")

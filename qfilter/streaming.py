@@ -362,11 +362,12 @@ def stream_event_sessions_custom(
                 for a, b, n, s in zip(starts, ends, ns, sums)
             ]
 
-        if state.hasTimedOut:
-            # final flush: watermark passed the earliest pending end+gap
+        def settle(sessions):
+            # emit the sessions the watermark has closed; keep the rest
+            # in state with a timeout at their earliest end + gap
             wm = state.getCurrentWatermarkMs() * 1000
-            done = [s for s in stored if s[1] + gap_us <= wm]
-            keep = [s for s in stored if s[1] + gap_us > wm]
+            done = [s for s in sessions if s[1] + gap_us <= wm]
+            keep = [s for s in sessions if s[1] + gap_us > wm]
             if keep:
                 state.update(
                     (
@@ -384,6 +385,10 @@ def stream_event_sessions_custom(
                 state.remove()
             if done:
                 yield emit_df(done)
+
+        if state.hasTimedOut:
+            # final flush: watermark passed the earliest pending end+gap
+            yield from settle(stored)
             return
 
         # merge new rows (as 1-event atoms) with stored session atoms,
@@ -410,27 +415,7 @@ def stream_event_sessions_custom(
                 )
             else:
                 sessions.append(a)
-
-        wm = state.getCurrentWatermarkMs() * 1000
-        done = [s for s in sessions if s[1] + gap_us <= wm]
-        keep = [s for s in sessions if s[1] + gap_us > wm]
-        if keep:
-            state.update(
-                (
-                    [s[0] for s in keep], [s[1] for s in keep],
-                    [s[2] for s in keep], [str(s[3]) for s in keep],
-                )
-            )
-            # ceil to ms: a floored timeout can land <= the current
-            # watermark for sub-ms event times, and
-            # setTimeoutTimestamp rejects non-future stamps
-            state.setTimeoutTimestamp(
-                -((-(min(s[1] for s in keep) + gap_us)) // 1000)
-            )
-        else:
-            state.remove()
-        if done:
-            yield emit_df(done)
+        yield from settle(sessions)
 
     stream = spark.readStream.schema(schema).parquet(input_dir)
     sessions = (

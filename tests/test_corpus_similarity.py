@@ -194,6 +194,33 @@ def test_trigram_df_cap_keeps_pairs_linear(spark, tmp_path):
         assert r.id2 - r.id1 == 1_000_000, (r.id1, r.id2)
 
 
+@pytest.mark.parametrize("k", [3, 8, 13])
+def test_shingles_word_count_boundary(spark, k):
+    """`_shingles` at the k-word boundary: docs of k-1, k and k+1 words
+    give 0, 1 and 2 rows (``sequence(0, size - k)`` counts down below
+    k, so the short doc must be filtered, not shingled); pos runs
+    0..n-1 and h is xxhash64 of the space-joined k words."""
+    from qfilter.corpus import _shingles
+
+    sizes = (k - 1, k, k + 1)
+    words = {n: [f"w{n}x{i}" for i in range(n)] for n in sizes}
+    docs = spark.createDataFrame(
+        [(n, words[n]) for n in sizes], "doc_id long, ws array<string>"
+    )
+    got = {n: [] for n in sizes}
+    for r in _shingles(docs, k).collect():
+        got[r.doc_id].append((r.pos, r.h))
+    for n in sizes:
+        grams = [" ".join(words[n][i : i + k]) for i in range(n - k + 1)]
+        want = (
+            list(spark.range(1).select(*[F.xxhash64(F.lit(g)) for g in grams]).first())
+            if grams
+            else []
+        )
+        assert sorted(got[n]) == list(enumerate(want)), (n, got[n])
+    assert [len(got[n]) for n in sizes] == [0, 1, 2]
+
+
 def test_connected_components_exact(spark):
     """Chain, triangle, isolated pair, and a star: min-label propagation
     reaches the exact per-component minimum."""

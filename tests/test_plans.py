@@ -282,3 +282,24 @@ def test_substring_spans_window_agg_share_shuffle(spark):
     # h-agg + cap-join + self-join sides + the single pair exchange;
     # anything beyond that indicates a lost partitioning reuse
     assert n_ex <= 5, f"unexpected shuffle count {n_ex}:\n{plan}"
+
+
+def test_trigram_df_cap_partial_aggregates(spark):
+    """trigram_jaccard_pairs' document-frequency cap is a groupBy on the
+    shingle hash with a partial (map-side) step, not a count() window:
+    a window over h has no partial aggregation, so every row of a
+    corpus-common shingle would land in one task."""
+    import re
+
+    from qfilter.corpus import trigram_jaccard_pairs
+
+    plan = _fmt(trigram_jaccard_pairs(spark, SF))
+    assert not re.search(r"^\(\d+\) Window\b", plan, flags=re.M), plan
+    partial_on_h = [
+        node
+        for node in plan.split("\n\n")
+        if re.match(r"\(\d+\) HashAggregate\n", node)
+        and re.search(r"^Keys \[1\]: \[h#\d+L?\]$", node, flags=re.M)
+        and re.search(r"^Functions \[1\]: \[partial_", node, flags=re.M)
+    ]
+    assert partial_on_h, f"no partial aggregate keyed on the shingle hash:\n{plan}"
