@@ -249,18 +249,20 @@ def _dark_rules(m: dict) -> list[tuple[Column, Column]]:
     ]
 
 
+def _dark_flag(rules: list[tuple[Column, Column]]) -> Column:
+    return _chain([(cond, True) for cond, _ in rules], 1, False)
+
+
+def _dark_reason(rules: list[tuple[Column, Column]]) -> Column:
+    return _chain(rules, 1, "normal_brightness")
+
+
 def dark_flag(m: dict | None = None) -> Column:
-    expr = None
-    for cond, _ in _dark_rules(m or {}):
-        expr = F.when(cond, F.lit(True)) if expr is None else expr.when(cond, F.lit(True))
-    return expr.otherwise(F.lit(False))
+    return _dark_flag(_dark_rules(m or {}))
 
 
 def dark_reason(m: dict | None = None) -> Column:
-    expr = None
-    for cond, reason in _dark_rules(m or {}):
-        expr = F.when(cond, reason) if expr is None else expr.when(cond, reason)
-    return expr.otherwise(F.lit("normal_brightness"))
+    return _dark_reason(_dark_rules(m or {}))
 
 
 # --------------------------------------------------- tuning-variant rule
@@ -307,18 +309,17 @@ def with_labels(df, error_col: str = "error", p: CascadeParams = _EXT_DEFAULTS):
     string, mirroring the reference's zero-filled+error result path
     (`classificator_extended_paddleocr.py:485-512`).
     """
-    has_err = (
-        F.col(error_col).isNotNull() if error_col in df.columns else F.lit(False)
-    )
-    err_reason = (
-        F.col(error_col) if error_col in df.columns else F.lit(None).cast("string")
-    )
-    category = F.when(has_err, F.lit("trash")).otherwise(extended_category(p=p))
-    reason = F.when(has_err, err_reason).otherwise(extended_reason(p=p))
-    return (
-        df.withColumn("category", category)
-        .withColumn("reason", reason)
-        .withColumn("keep", keep_expr())
-        .withColumn("is_dark", dark_flag())
-        .withColumn("dark_reason", dark_reason())
-    )
+    with_err = error_col in df.columns
+    has_err = F.col(error_col).isNotNull() if with_err else F.lit(False)
+    err_reason = F.col(error_col) if with_err else F.lit(None).cast("string")
+    # each rule list is built once and feeds both of its columns
+    ext = _ext_rules({}, p)
+    dark = _dark_rules({})
+    category = F.when(has_err, F.lit("trash")).otherwise(_chain(ext, 1, "failed"))
+    return df.withColumns({
+        "category": category,
+        "reason": F.when(has_err, err_reason).otherwise(_chain(ext, 2, "text_weak")),
+        "keep": keep_expr(category),
+        "is_dark": _dark_flag(dark),
+        "dark_reason": _dark_reason(dark),
+    })

@@ -462,7 +462,9 @@ class Catalog:
         """The audit view: current table plus the staged rows — what
         the table WILL look like if the commit is published."""
         staged = self._staged(table, wap_id)
-        part = spark.read.parquet(staged["dir"])
+        part = self._assemble(
+            spark, {"dirs": [staged["dir"]], "schema": staged["schema"]}, files_by_dir=None
+        )
         if not self.exists(table):
             return part
         return self.read(spark, table).unionByName(part, allowMissingColumns=True)
@@ -651,6 +653,12 @@ class Catalog:
             key = tuple(i for i in eq_idx if added < specs[i]["id"])
             groups.setdefault(key, []).append(d)
 
+        def reader():
+            # the manifest schema spares every dir read its
+            # schema-inference job; only legacy (schema-less) manifests
+            # still infer.  A fresh reader per dir: options mutate it.
+            return spark.read if schema is None else spark.read.schema(schema)
+
         # one keys frame per spec, shared across dir groups
         spec_keys: dict[int, DataFrame] = {}
         out = None
@@ -659,24 +667,23 @@ class Catalog:
             for d in dirs:
                 try:
                     if files_by_dir is None:
-                        part = spark.read.parquet(d)
+                        part = reader().parquet(d)
                     else:
                         # basePath keeps hive-partition columns visible
                         # even though we hand Spark leaf files
-                        part = spark.read.option("basePath", d).parquet(*files_by_dir[d])
+                        part = reader().option("basePath", d).parquet(*files_by_dir[d])
                 except AnalysisException as e:
-                    # ONLY the documented legitimately-empty cases read
-                    # as empty: a dir holding zero parquet files (0-row
-                    # write → schema inference fails) or a missing path.
-                    # Corrupt files, permission errors, and wrongly-GC'd
-                    # dirs must surface, not read as silently empty.
+                    # ONLY a missing path reads as empty (a dir holding
+                    # zero parquet files already does: the schema is
+                    # given).  Corrupt files (they surface at scan
+                    # time), permission errors, and wrongly-GC'd dirs
+                    # must surface, not read as silently empty; so must
+                    # anything a schema-less legacy manifest hits.
                     cond = getattr(e, "getErrorClass", lambda: None)() or ""
-                    legit = cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or any(
-                        t in str(e)
-                        for t in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA",
-                                  "Path does not exist", "Unable to infer schema")
+                    missing = cond == "PATH_NOT_FOUND" or any(
+                        t in str(e) for t in ("PATH_NOT_FOUND", "Path does not exist")
                     )
-                    if not legit or schema is None:
+                    if not missing or schema is None:
                         raise
                     part = spark.createDataFrame([], schema)
                     if address:

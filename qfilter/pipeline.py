@@ -18,11 +18,17 @@ Design (100 TB shape):
 * Stage 1 *label*: waves of partitions; each wave runs
   decode -> features -> cascade -> scrub on just its partition dirs and
   appends to the ``labels`` table (Catalog append = atomic manifest),
-  then commits one lineage row PER PARTITION plus a per-wave metrics
-  row.  Crash between waves => committed waves are never recomputed
-  (resume anti-joins lineage), the in-flight wave restarts cleanly
-  (its data dir is garbage without a manifest; its lineage rows were
-  never written — lineage is appended only AFTER the data commit).
+  then commits one lineage row PER PARTITION (an empty part included,
+  with ``rows_out = 0``) plus per-category metrics rows.  Both come
+  from ONE aggregation over the wave's labels rows (grouping sets
+  ``(part_id)`` and ``(category)``), collected to the driver and
+  appended as small one-file frames.  Crash between waves => committed
+  waves are never recomputed (resume anti-joins lineage); a crash
+  inside the wave's labels write leaves a data dir without a manifest,
+  which no reader sees, and the wave reruns.  Lineage is appended only
+  AFTER the data commit, so a crash between the labels commit and the
+  lineage commit reruns the wave and appends its labels a second time
+  (a known defect, listed in ROADMAP).
 * Exactly-once per partition: lineage append is the commit point and
   happens after the data append; replays overwrite nothing (each wave
   appends a new snapshot dir) and re-emit only uncommitted partitions.
@@ -34,6 +40,7 @@ import json
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,6 +61,16 @@ LABEL_COLS = [
     "median_ocr_conf", "mean_ocr_conf", "pct80", "words_count", "conf_iqr",
     "bbox_area_text_frac", "line_height_var", "text_blocks_count",
 ]
+
+# the telemetry tables' schemas (nullability included), as DDL
+_LINEAGE = (
+    "part_id int, rows_out bigint not null, run_id string not null, "
+    "stage string not null, status string not null, wall_ms int not null"
+)
+_METRICS = (
+    "category string, rows bigint not null, kept bigint, pii_hits bigint, "
+    "tox_hits bigint, run_id string not null, wave_wall_ms int not null"
+)
 
 
 class PipelineKilled(RuntimeError):
@@ -92,7 +109,6 @@ class QualityFilterPipeline:
             .filter(F.col("stage") == "label")
             .filter(F.col("status") == "done")
             .select("part_id")
-            .distinct()
             .collect()
         )
         return {r.part_id for r in rows}
@@ -121,41 +137,48 @@ class QualityFilterPipeline:
             labeled = with_labels(with_all_features(subset)).select(*LABEL_COLS)
             self.catalog.append("labels", labeled, partition_by=["part_id"])
             wall_ms = int((time.time() - t0) * 1000)
-            self._commit_lineage(run_id, wave_parts, wall_ms)
-            self._commit_metrics(run_id, wave_parts, wall_ms)
+            self._commit_telemetry(run_id, wave_parts, wall_ms)
             if fail_after_wave is not None and wi >= fail_after_wave:
                 raise PipelineKilled(f"killed after wave {wi}")
         return self.catalog.read(self.spark, "labels")
 
     # ---------------------------------------------------- lineage/metrics
-    def _commit_lineage(self, run_id: str, parts: list[int], wall_ms: int) -> None:
-        per_part = (
+    def _commit_telemetry(self, run_id: str, parts: list[int], wall_ms: int) -> None:
+        """Lineage and metrics of one committed wave from ONE aggregation
+        over its labels rows: grouping sets ``(part_id)`` and
+        ``(category)``, collected (at most ``len(parts) + 4`` rows).
+        Every wave part gets a lineage row — ``rows_out = 0`` for an
+        empty part, which would otherwise stay pending forever.  Lineage
+        is appended first: it is the commit point."""
+        agg = (
             self.catalog.read(self.spark, "labels")
             .filter(F.col("part_id").isin(parts))
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("stage", F.lit("label"))
-            .withColumn("status", F.lit("done"))
-            .withColumn("wall_ms", F.lit(wall_ms))
-        )
-        self.catalog.append("lineage", per_part)
-
-    def _commit_metrics(self, run_id: str, parts: list[int], wall_ms: int) -> None:
-        m = (
-            self.catalog.read(self.spark, "labels")
-            .filter(F.col("part_id").isin(parts))
-            .groupBy("category")
+            .groupingSets([["part_id"], ["category"]], "part_id", "category")
             .agg(
+                F.grouping("part_id").alias("by_category"),
                 F.count(F.lit(1)).alias("rows"),
                 F.sum(F.col("keep").cast("int")).alias("kept"),
                 F.sum(F.col("pii_hits")).alias("pii_hits"),
                 F.sum(F.col("tox_hits")).alias("tox_hits"),
             )
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("wave_wall_ms", F.lit(wall_ms))
+            .collect()
         )
-        self.catalog.append("metrics", m)
+        rows_out = {r.part_id: r.rows for r in agg if not r.by_category}
+        self.catalog.append("lineage", self._local_frame(_LINEAGE, [
+            (p, rows_out.get(p, 0), run_id, "label", "done", wall_ms) for p in parts
+        ]))
+        self.catalog.append("metrics", self._local_frame(_METRICS, [
+            (r.category, r.rows, r.kept, r.pii_hits, r.tox_hits, run_id, wall_ms)
+            for r in agg if r.by_category
+        ]))
+
+    def _local_frame(self, ddl: str, rows: list[tuple]) -> DataFrame:
+        """Driver-side rows as a one-partition frame (one file per
+        append) on the Arrow path; a plain Python list would go through
+        Python workers."""
+        names = [c.split()[0] for c in ddl.split(",")]
+        cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
+        return self.spark.createDataFrame(pa.table(cols, names=names), ddl).coalesce(1)
 
     # ------------------------------------------------------- maintenance
     def maintain(

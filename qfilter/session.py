@@ -9,6 +9,20 @@ tests, bench, and spark-submit all run the same plan shape:
   row count (SURVEY.md §4.2 "Arrow batch memory").
 * ``spark.sql.shuffle.partitions`` defaults to 2x cores locally; on a
   real cluster set it to ~2-3x total executor cores via spark-submit.
+* glibc allocator thresholds for the Arrow/NumPy workers (r6): the
+  image kernels allocate/free many few-hundred-KB temporaries per
+  batch; at default thresholds glibc serves those via mmap/munmap, and
+  with one worker per core the resulting page-fault + TLB shootdown
+  churn costs ~10-13% of kernel throughput at 32 procs (interleaved A/B
+  in BENCH/kernel_profile.py FULL_PATH).  Raising the thresholds keeps
+  such blocks on the sbrk heap.  They reach the Python workers as
+  ``spark.executorEnv.*`` (a value already in the driver's environment
+  wins), so building a session never mutates ``os.environ``.
+* ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4
+  otherwise walks the Python stack on every ``F.*``/Column call (extra
+  py4j round-trips) to record the call site for error messages.  The
+  trade: an analysis error no longer names the Python line that built
+  the failing expression; its error class and message are unchanged.
 """
 
 from __future__ import annotations
@@ -24,6 +38,8 @@ __all__ = ["get_spark", "ARROW_BATCH_ROWS"]
 # at both 8 and 32 cores.
 ARROW_BATCH_ROWS = 64
 
+_MALLOC_VARS = ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_")
+
 
 def get_spark(
     app: str = "qfilter",
@@ -31,18 +47,6 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    # glibc allocator tuning for the Arrow/NumPy workers (r6): the
-    # image kernels allocate/free many few-hundred-KB temporaries per
-    # batch; at default thresholds glibc serves those via mmap/munmap,
-    # and with one worker per core the resulting page-fault + TLB
-    # shootdown churn costs ~10-13% of kernel throughput at 32 procs
-    # (interleaved A/B in BENCH/kernel_profile.py FULL_PATH).  Raising
-    # the thresholds keeps such blocks on the sbrk heap.  Per-process
-    # behavior — equally valid on any executor size; setdefault so a
-    # deployment can still override; inherited by the JVM and its
-    # Python workers when the session is created by this factory.
-    for var in ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_"):
-        os.environ.setdefault(var, "33554432")
     cores = os.cpu_count() or 8
     master = master or os.environ.get("QFILTER_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
@@ -70,7 +74,10 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("QFILTER_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    for var in _MALLOC_VARS:
+        b = b.config(f"spark.executorEnv.{var}", os.environ.get(var, "33554432"))
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

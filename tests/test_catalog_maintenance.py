@@ -202,6 +202,31 @@ def test_incremental_read_aligns_add_column(spark, cat):
     assert {r["id"] for r in rows if r["lang"] is None} == set(range(10))
 
 
+def test_read_launches_no_spark_job(spark, cat):
+    """Building a read is planning only: every dir is read with the
+    manifest schema, so no dir pays a schema-inference job — across an
+    unpartitioned dir, a ``partition_by`` dir and a dir written before
+    an add-column."""
+    cat.append("nj", _mk(spark, 0, 10))                                 # pre add-column
+    cat.append("nj", _mk(spark, 10, 20).withColumn("lang", F.lit("en")))
+    cat.append(
+        "nj", _mk(spark, 20, 30).withColumn("lang", F.lit("de")), partition_by=["bucket"]
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-read-no-job", "Catalog.read")
+    try:
+        df = cat.read(spark, "nj")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("catalog-read-no-job") == []
+    assert df.columns == ["id", "bucket", "caption", "lang"]
+    want = [
+        (i, i % 3, f"cap-{i}", None if i < 10 else "en" if i < 20 else "de")
+        for i in range(30)
+    ]
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+
 def test_table_data_files_unknown_snapshot_raises(spark, cat):
     cat.append("uk", _mk(spark, 0, 10))
     with pytest.raises(ValueError, match="does not exist"):

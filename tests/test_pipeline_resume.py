@@ -24,7 +24,8 @@ def _run_full(spark, images, out_dir):
     return pipe, pipe.run(images, run_id="full")
 
 
-def test_kill_and_resume_equivalence(spark, images, tmp_path_factory):
+def test_kill_and_resume_equivalence(spark, images, tmp_path_factory, monkeypatch):
+    from qfilter.catalog import Catalog
     from qfilter.pipeline import PipelineKilled, QualityFilterPipeline
 
     d_full = str(tmp_path_factory.mktemp("full"))
@@ -32,6 +33,14 @@ def test_kill_and_resume_equivalence(spark, images, tmp_path_factory):
 
     _, full = _run_full(spark, images, d_full)
 
+    reads: list[str] = []
+    read = Catalog.read
+
+    def counting_read(self, spark, table, *a, **k):
+        reads.append(table)
+        return read(self, spark, table, *a, **k)
+
+    monkeypatch.setattr(Catalog, "read", counting_read)
     pipe = QualityFilterPipeline(spark, d_kill, n_parts=8, wave_size=3)
     with pytest.raises(PipelineKilled):
         pipe.run(images, run_id="r1", fail_after_wave=0)
@@ -39,6 +48,9 @@ def test_kill_and_resume_equivalence(spark, images, tmp_path_factory):
     assert 0 < st["committed"] < 8  # partial progress committed
 
     resumed = pipe.run(run_id="r2")  # no input needed — resumes from tables
+    # telemetry costs one labels scan per wave (3 waves), plus run()'s return
+    assert reads.count("labels") == 3 + 1
+    monkeypatch.undo()
     a = full.select("image_id", "category", "reason", "keep").orderBy("image_id")
     b = resumed.select("image_id", "category", "reason", "keep").orderBy("image_id")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -48,6 +60,40 @@ def test_kill_and_resume_equivalence(spark, images, tmp_path_factory):
     lin = pipe.catalog.read(spark, "lineage")
     dupes = lin.groupBy("part_id").count().filter(F.col("count") > 1).count()
     assert dupes == 0
+    _assert_telemetry_reconciles(spark, pipe, resumed)
+
+
+def _assert_telemetry_reconciles(spark, pipe, labels):
+    """lineage and metrics describe the labels table exactly: one
+    lineage row per part, rows_out summing to the labels rows, and
+    per-category rows/kept equal to a groupBy of labels."""
+    lin = pipe.catalog.read(spark, "lineage")
+    metrics = pipe.catalog.read(spark, "metrics")
+    assert lin.schema.simpleString() == (
+        "struct<part_id:int,rows_out:bigint,run_id:string,stage:string,"
+        "status:string,wall_ms:int>"
+    )
+    assert metrics.schema.simpleString() == (
+        "struct<category:string,rows:bigint,kept:bigint,pii_hits:bigint,"
+        "tox_hits:bigint,run_id:string,wave_wall_ms:int>"
+    )
+    assert sorted(r.part_id for r in lin.select("part_id").collect()) == list(
+        range(pipe.n_parts)
+    )
+    assert lin.agg(F.sum("rows_out")).first()[0] == labels.count()
+    got = {
+        tuple(r)
+        for r in metrics.groupBy("category")
+        .agg(F.sum("rows"), F.sum("kept"))
+        .collect()
+    }
+    want = {
+        tuple(r)
+        for r in labels.groupBy("category")
+        .agg(F.count(F.lit(1)), F.sum(F.col("keep").cast("int")))
+        .collect()
+    }
+    assert got == want
 
 
 def test_metrics_written(spark, images, tmp_path_factory):
@@ -61,3 +107,19 @@ def test_metrics_written(spark, images, tmp_path_factory):
     assert total == labels.count() == images.count()
     cats = {r.category for r in metrics.select("category").distinct().collect()}
     assert cats <= {"good", "medium", "failed", "trash"}
+
+
+def test_empty_partitions_commit(spark, images, tmp_path_factory):
+    """A part that receives no rows still commits: 3 rows over 8 parts
+    leave nothing pending, and a second run recomputes no wave."""
+    from qfilter.pipeline import QualityFilterPipeline
+
+    d = str(tmp_path_factory.mktemp("sparse"))
+    pipe = QualityFilterPipeline(spark, d, n_parts=8, wave_size=3)
+    labels = pipe.run(images.orderBy("image_id").limit(3), run_id="s1")
+    assert labels.count() == 3
+    assert pipe.status()["pending"] == 0
+    _assert_telemetry_reconciles(spark, pipe, labels)
+    n_snaps = len(pipe.catalog.snapshots("labels"))
+    pipe.run(run_id="s2")
+    assert len(pipe.catalog.snapshots("labels")) == n_snaps
