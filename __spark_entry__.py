@@ -504,6 +504,33 @@ def _qf_derived_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _model_features(spark: SparkSession) -> DataFrame:
+    """The labelled, non-error derived-feature frame every model query
+    trains and scores on."""
+    from qfilter.cascade import with_labels
+    from qfilter.features import with_all_features
+    from qfilter.tune import with_derived_features
+
+    return with_derived_features(
+        with_labels(with_all_features(_fixture_images(spark)))
+    ).filter(F.col("error").isNull())
+
+
+def _cv_sample(feats: DataFrame) -> DataFrame:
+    """The CV training sample as rows with their ``fold``: the first
+    TRAIN_SAMPLE_MAX rows by image_id, fold = position % CV_K (the
+    positional folds of `qfilter.model.cv_models`)."""
+    from pyspark.sql import Window
+
+    from qfilter.model import CV_K, TRAIN_SAMPLE_MAX
+
+    return (
+        feats.withColumn("rn", F.row_number().over(Window.orderBy("image_id")))
+        .filter(F.col("rn") <= TRAIN_SAMPLE_MAX)
+        .withColumn("fold", ((F.col("rn") - F.lit(1)) % F.lit(CV_K)).cast("int"))
+    )
+
+
 def _qf_model_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train -> .npz-shaped artifact -> broadcast -> batch predict
     (reference entry point 3: tune_extended_classifier.py:171-191 LR
@@ -511,16 +538,16 @@ def _qf_model_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical weights from labels_ref and evaluates the identically
     nested affine score in SQL (see make_oracle_sidecars.
     model_weights_from_labels_ref)."""
-    from qfilter.cascade import with_labels
-    from qfilter.features import with_all_features
-    from qfilter.model import train_from_features, with_model_scores
-    from qfilter.tune import with_derived_features
+    from qfilter.model import (
+        affine_score,
+        fit_logreg,
+        training_sample,
+        with_model_scores,
+    )
 
-    feats = with_derived_features(
-        with_labels(with_all_features(_fixture_images(spark)))
-    ).filter(F.col("error").isNull())
-    w, b = train_from_features(feats)
-    scored = with_model_scores(feats, w, b)
+    feats = _model_features(spark)
+    model = fit_logreg(*training_sample(feats))
+    scored = with_model_scores(feats, affine_score, model)
     return scored.select(
         "image_id",
         "pred_keep",
@@ -556,28 +583,13 @@ def _qf_model_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: the row_number window only ranks the <=4096-row
     training sample definition; at 100 TB the sample would be a
     pre-materialized table and this stays a broadcast-predict map."""
-    from pyspark.sql import Window
+    from qfilter.model import affine_score, cv_models, fit_logreg, with_cv_scores
 
-    from qfilter.cascade import with_labels
-    from qfilter.features import with_all_features
-    from qfilter.model import (
-        CV_K,
-        TRAIN_SAMPLE_MAX,
-        cv_models_from_features,
-        with_cv_scores,
+    feats = _model_features(spark)
+    scored = with_cv_scores(
+        _cv_sample(feats), cv_models(feats, fit_logreg),
+        lambda X, m: affine_score(X, m) > 0.0,
     )
-    from qfilter.tune import with_derived_features
-
-    feats = with_derived_features(
-        with_labels(with_all_features(_fixture_images(spark)))
-    ).filter(F.col("error").isNull())
-    models = cv_models_from_features(feats)
-    sample = (
-        feats.withColumn("rn", F.row_number().over(Window.orderBy("image_id")))
-        .filter(F.col("rn") <= TRAIN_SAMPLE_MAX)
-        .withColumn("fold", ((F.col("rn") - F.lit(1)) % F.lit(CV_K)).cast("int"))
-    )
-    scored = with_cv_scores(sample, models)
     per_fold = scored.groupBy("fold").agg(
         F.count(F.lit(1)).alias("n_test"),
         F.sum((F.col("pred_keep") == F.col("keep")).cast("long")).alias("n_correct"),
@@ -612,25 +624,21 @@ def _zoo_models(spark: SparkSession) -> tuple:
     fdir = _fixture_dir()
     if fdir in _ZOO_MODELS_CACHE:
         return _ZOO_MODELS_CACHE[fdir]
-    from qfilter.cascade import with_labels
-    from qfilter.features import with_all_features
     from qfilter.model import (
-        cv_models_from_features,
-        gb_cv_models_from_features,
-        rf_cv_models_from_features,
-        svm_rff_cv_models_from_features,
+        cv_models,
+        fit_gb_stumps,
+        fit_logreg,
+        fit_rf_lite,
+        fit_svm_rff,
     )
-    from qfilter.tune import with_derived_features
 
-    feats = with_derived_features(
-        with_labels(with_all_features(_fixture_images(spark)))
-    ).filter(F.col("error").isNull())
+    feats = _model_features(spark)
     out = (
         feats,
-        cv_models_from_features(feats),
-        gb_cv_models_from_features(feats),
-        rf_cv_models_from_features(feats),
-        svm_rff_cv_models_from_features(feats),
+        *(
+            cv_models(feats, fit)
+            for fit in (fit_logreg, fit_gb_stumps, fit_rf_lite, fit_svm_rff)
+        ),
     )
     _ZOO_MODELS_CACHE[fdir] = out
     return out
@@ -641,44 +649,35 @@ def _zoo_scored(spark: SparkSession) -> DataFrame:
     family over the shared CV sample — the input of both the accuracy
     bake-off (qf_model_zoo) and the per-class report
     (qf_class_report)."""
-    from pyspark.sql import Window
+    from functools import reduce
 
     from qfilter.model import (
-        CV_K,
-        TRAIN_SAMPLE_MAX,
+        affine_score,
+        gb_score,
+        rf_proba,
+        svm_rff_margin,
         with_cv_scores,
-        with_gb_cv_scores,
-        with_rf_cv_scores,
-        with_svm_rff_cv_scores,
-        with_vote_cv_scores,
+        zoo_soft_vote_proba,
     )
 
-    feats, lr_models, gb_models, rf_models, svm_models = _zoo_models(spark)
-    sample = (
-        feats.withColumn("rn", F.row_number().over(Window.orderBy("image_id")))
-        .filter(F.col("rn") <= TRAIN_SAMPLE_MAX)
-        .withColumn("fold", ((F.col("rn") - F.lit(1)) % F.lit(CV_K)).cast("int"))
-    )
-
-    def tagged(scored_df, name):
-        return scored_df.withColumn("model", F.lit(name)).select(
-            "model", "fold", "keep", "pred_keep"
-        )
-
-    return (
-        tagged(with_cv_scores(sample, lr_models), "logreg")
-        .unionByName(tagged(with_gb_cv_scores(sample, gb_models), "gb_stumps"))
-        .unionByName(tagged(with_rf_cv_scores(sample, rf_models), "rf_lite"))
-        .unionByName(tagged(with_svm_rff_cv_scores(sample, svm_models), "svm_rbf"))
-        .unionByName(
-            tagged(
-                with_vote_cv_scores(
-                    sample, lr_models, gb_models, rf_models, svm_models
-                ),
-                "voting",
-            )
-        )
-    )
+    feats, lr, gb, rf, svm = _zoo_models(spark)
+    sample = _cv_sample(feats)
+    families = [  # (model name, per-fold models, held-out predict)
+        ("logreg", lr, lambda X, m: affine_score(X, m) > 0.0),
+        ("gb_stumps", gb, lambda X, m: gb_score(X, m) > 0.0),
+        ("rf_lite", rf, lambda X, m: rf_proba(X, m) > 0.5),
+        ("svm_rbf", svm, lambda X, m: svm_rff_margin(X, m) > 0.0),
+        (
+            "voting", list(zip(lr, gb, rf, svm)),
+            lambda X, m: zoo_soft_vote_proba(X, *m) > 0.5,
+        ),
+    ]
+    return reduce(DataFrame.unionByName, [
+        with_cv_scores(sample, models, predict)
+        .withColumn("model", F.lit(name))
+        .select("model", "fold", "keep", "pred_keep")
+        for name, models, predict in families
+    ])
 
 
 def _qf_model_zoo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -966,7 +965,7 @@ def oracle_sql() -> dict[str, str]:
     # qf_model_infer: retrain the identical (BLAS-free, deterministic)
     # logistic regression from labels_ref and embed the weights as
     # round-trip-exact literals; the affine score is nested in the SAME
-    # left-to-right order as qfilter.model.with_model_scores, so the
+    # left-to-right order as qfilter.model.affine_score, so the
     # doubles are bit-identical.
     from make_oracle_sidecars import model_weights_from_labels_ref
 
@@ -1001,7 +1000,7 @@ def oracle_sql() -> dict[str, str]:
 
     # qf_model_zoo second family: per-fold GB-stump ensembles, each a
     # left-to-right nested chain of CASE terms (identical accumulation
-    # order to qfilter.model.with_gb_cv_scores).
+    # order to qfilter.model.gb_score).
     _gb_cases = []
     for _f, _m in enumerate(_zoo["gb"]):
         _ze = f"CAST('{float(_m['f0'])!r}' AS DOUBLE)"

@@ -125,36 +125,21 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "train":
         spark = get_spark(app="qfilter-train", master=args.master)
-        feats = spark.read.parquet(args.input)
-        if args.family == "logreg":
-            from .model import save_model, train_from_features
+        from .model import (
+            fit_gb_stumps,
+            fit_logreg,
+            fit_svm_linear,
+            save_gb,
+            save_model,
+            training_sample,
+        )
 
-            w, b = train_from_features(feats)
-            save_model(args.model_out, w, b)
-        elif args.family == "svm":
-            import numpy as np
-
-            from .model import (
-                MODEL_FEATURES,
-                TRAIN_SAMPLE_MAX,
-                fit_svm_linear,
-                save_model,
-            )
-
-            rows = (
-                feats.select("image_id", "keep", *MODEL_FEATURES)
-                .orderBy("image_id")
-                .limit(TRAIN_SAMPLE_MAX)
-                .collect()
-            )
-            X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-            y = np.asarray([1.0 if r["keep"] else 0.0 for r in rows])
-            w, b = fit_svm_linear(X, y)
-            save_model(args.model_out, w, b)
-        else:
-            from .model import gb_train_from_features, save_gb
-
-            save_gb(args.model_out, gb_train_from_features(feats))
+        fit, save = {
+            "logreg": (fit_logreg, save_model),
+            "gb": (fit_gb_stumps, save_gb),
+            "svm": (fit_svm_linear, save_model),
+        }[args.family]
+        save(args.model_out, fit(*training_sample(spark.read.parquet(args.input))))
         print(json.dumps({"model": args.model_out, "family": args.family}))
         return 0
 

@@ -7,14 +7,20 @@ StandardScaler + LogisticRegression pipeline
 (`infer_quality.py:16-91`, joblib dict {'model','features'}), reshaped
 for Spark:
 
-1. fit on a driver-side SAMPLE of the features table (orderBy + limit,
-   same discipline as the IVF quantizer — never a full-table driver
-   read at 100 TB);
+1. fit on a driver-side SAMPLE of the features table
+   (`training_sample`: orderBy + limit, same discipline as the IVF
+   quantizer — never a full-table driver read at 100 TB);
 2. serialize weights to an ``.npz`` artifact (`save_model`), the
    analog of the reference's joblib dump
    (`tune_extended_classifier.py:277-281`);
 3. broadcast the weights to executors and batch-predict inside one
    vectorized pandas UDF (`with_model_scores`).
+
+The reference's model zoo (five families raced by 5-fold CV) runs on
+the same three pieces: every family is a ``fit_*(X, y)`` trainer plus
+a numpy ``score(X, model)`` function, `cv_models` trains any family's
+fold models on the one sample, and `with_cv_scores` scores each row
+with the fold model that did not train on it.
 
 Determinism contract (the DuckDB oracle recomputes the identical
 doubles):
@@ -28,8 +34,8 @@ doubles):
   arrays, so the same sample rows give bit-identical weights in any
   process;
 * inference accumulates ``z = b + w1*f1 + w2*f2 + ...`` strictly
-  left-to-right, elementwise — the oracle SQL nests the additions in
-  the same order, so scores match bit-for-bit.
+  left-to-right, elementwise (`affine_score`) — the oracle SQL nests
+  the additions in the same order, so scores match bit-for-bit.
 """
 
 from __future__ import annotations
@@ -46,13 +52,25 @@ __all__ = [
     "MODEL_FEATURES",
     "TRAIN_SAMPLE_MAX",
     "CV_K",
-    "fit_logreg",
-    "train_from_features",
-    "cv_models_from_features",
+    "training_sample",
+    "cv_models",
     "with_cv_scores",
+    "with_model_scores",
+    "affine_score",
+    "gb_score",
+    "rf_proba",
+    "svm_rff_margin",
+    "zoo_soft_vote_proba",
+    "fit_logreg",
+    "fit_gb_stumps",
+    "fit_rf_lite",
+    "fit_svm_linear",
+    "fit_svm_rff",
     "save_model",
     "load_model",
-    "with_model_scores",
+    "save_gb",
+    "load_gb",
+    "feature_importance_rows",
 ]
 
 # arithmetic-only engineered features (infer_quality.py:50-58 minus the
@@ -71,18 +89,117 @@ MODEL_FEATURES = [
 ]
 
 TRAIN_SAMPLE_MAX = 4096  # driver-side training sample cap
+CV_K = 5  # folds, as the reference's cross_val_score(cv=5) default
 LOGREG_LR = 0.5
 LOGREG_ITERS = 400
 LOGREG_L2 = 1e-3
 
 
-def fit_logreg(
-    X: np.ndarray,
-    y: np.ndarray,
-    lr: float = LOGREG_LR,
-    iters: int = LOGREG_ITERS,
-    l2: float = LOGREG_L2,
-) -> tuple[np.ndarray, float]:
+# ------------------------------------------------- the one shared path
+
+
+def training_sample(features: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """The deterministic driver-side training sample of a Spark
+    features table: ``(X, y)`` over `MODEL_FEATURES` and ``keep``,
+    sorted by ``image_id``.  Only <= TRAIN_SAMPLE_MAX rows ever reach
+    the driver (100 TB: the sort+limit is a TakeOrdered, not a full
+    collect)."""
+    rows = (
+        features.select("image_id", "keep", *MODEL_FEATURES)
+        .orderBy("image_id")
+        .limit(TRAIN_SAMPLE_MAX)
+        .collect()
+    )
+    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
+    y = np.asarray([1.0 if r["keep"] else 0.0 for r in rows])
+    return X, y
+
+
+def cv_models(features: DataFrame, fit) -> list:
+    """K-fold CV models (A7, reference `tune_extended_classifier.py`
+    cross_val_score) of one family: fold f = position % CV_K over the
+    sorted `training_sample`, model f = ``fit`` on every OTHER fold."""
+    X, y = training_sample(features)
+    folds = np.arange(len(X)) % CV_K
+    return [fit(X[folds != f], y[folds != f]) for f in range(CV_K)]
+
+
+def with_cv_scores(df: DataFrame, models: list, predict) -> DataFrame:
+    """Held-out prediction: each row (its ``fold`` column) is scored by
+    the model that did NOT train on its fold.  One broadcast of the k
+    models, one Arrow-batched UDF; ``predict(X, model)`` is the family's
+    numpy body and returns the boolean ``pred_keep`` of the rows of X,
+    so the oracle's per-fold SQL chains are bit-identical."""
+    bc = df.sparkSession.sparkContext.broadcast(models)
+
+    @F.pandas_udf(T.BooleanType())
+    def pred(fold: pd.Series, *cols: pd.Series) -> pd.Series:
+        fidx = fold.to_numpy(dtype=np.int64)
+        X = np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
+        out = np.empty(len(fidx), dtype=bool)
+        for f, m in enumerate(bc.value):
+            sel = fidx == f
+            if sel.any():
+                out[sel] = predict(X[sel], m)
+        return pd.Series(out)
+
+    return df.withColumn(
+        "pred_keep", pred(F.col("fold"), *[F.col(f) for f in MODEL_FEATURES])
+    )
+
+
+_SCORE_SCHEMA = T.StructType(
+    [
+        T.StructField("score", T.DoubleType()),
+        T.StructField("pred_keep", T.BooleanType()),
+    ]
+)
+
+
+def with_model_scores(df: DataFrame, score, model) -> DataFrame:
+    """Batch inference: broadcast the (tiny) model, score every row
+    inside one Arrow-batched pandas UDF with the family's
+    ``score(X, model)`` margin (`affine_score` or `gb_score`).
+    pred_keep = score > 0 (p > 0.5)."""
+    bc = df.sparkSession.sparkContext.broadcast(model)
+
+    @F.pandas_udf(_SCORE_SCHEMA)
+    def scored(*cols: pd.Series) -> pd.DataFrame:
+        X = np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
+        z = score(X, bc.value)
+        return pd.DataFrame({"score": z, "pred_keep": z > 0.0})
+
+    out = df.withColumn("_m", scored(*[F.col(f) for f in MODEL_FEATURES]))
+    return out.select(*df.columns, "_m.*")
+
+
+def affine_score(X: np.ndarray, model: tuple[np.ndarray, float]) -> np.ndarray:
+    """z = b + w[0]*X[:, 0] + w[1]*X[:, 1] + ..., accumulated strictly
+    left-to-right with elementwise numpy adds (no matmul), so the oracle
+    SQL's identically-nested expression produces bit-identical doubles."""
+    w, b = model
+    z = np.full(len(X), b, dtype=np.float64)
+    for i, wi in enumerate(w):
+        z = z + wi * X[:, i]
+    return z
+
+
+def _standardize(X: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The reference pipeline's StandardScaler: ``((X - mu) / sd, mu,
+    sd)``.  (Near-)constant features keep sd = 1: folding w/sd back
+    with sd ~ 1e-30 would explode the raw weight (catastrophic
+    cancellation in the score); their standardized values stay ~0, so
+    gradient descent leaves their weight at ~0."""
+    mu = X.mean(axis=0)
+    sd = X.std(axis=0)
+    sd = np.where(sd > 1e-9 * np.maximum(1.0, np.abs(mu)), sd, 1.0)
+    return (X - mu) / sd, mu, sd
+
+
+# ------------------------------------- model family 1: logistic regression
+
+
+def fit_logreg(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, float]:
     """Full-batch gradient-descent logistic regression with internal
     standardization (the reference pipeline's StandardScaler), folded
     back into RAW-feature weights so predict is a plain affine score.
@@ -97,108 +214,27 @@ def fit_logreg(
     y = np.asarray(y, dtype=np.float64)
     if X.ndim != 2 or len(X) != len(y) or len(X) == 0:
         raise ValueError(f"bad training shapes X={X.shape} y={y.shape}")
-    mu = X.mean(axis=0)
-    sd = X.std(axis=0)
-    # (near-)constant features: folding w/sd back with sd ~ 1e-30 would
-    # explode the raw weight (catastrophic cancellation in the score);
-    # treat them as unscaled — their standardized values stay ~0, so GD
-    # leaves their weight at ~0
-    sd = np.where(sd > 1e-9 * np.maximum(1.0, np.abs(mu)), sd, 1.0)
-    Xs = (X - mu) / sd
+    Xs, mu, sd = _standardize(X)
     n, d = Xs.shape
     w = np.zeros(d, dtype=np.float64)
     b = 0.0
-    for _ in range(iters):
+    for _ in range(LOGREG_ITERS):
         z = b + (Xs * w).sum(axis=1)
         p = 1.0 / (1.0 + np.exp(-z))
         err = p - y
-        gw = (Xs * err[:, None]).sum(axis=0) / n + l2 * w
+        gw = (Xs * err[:, None]).sum(axis=0) / n + LOGREG_L2 * w
         gb = float(err.sum()) / n
-        w = w - lr * gw
-        b = b - lr * gb
+        w = w - LOGREG_LR * gw
+        b = b - LOGREG_LR * gb
     w_raw = w / sd
     b_raw = b - float((w * mu / sd).sum())
     return w_raw, float(b_raw)
 
 
-def train_from_features(
-    features: DataFrame,
-    label_col: str = "keep",
-    order_col: str = "image_id",
-    sample_max: int = TRAIN_SAMPLE_MAX,
-) -> tuple[np.ndarray, float]:
-    """Fit from a Spark features table: deterministic orderBy + limit
-    sample -> driver -> `fit_logreg`.  Only <= sample_max rows ever
-    reach the driver (100 TB: the sort+limit is a TakeOrdered, not a
-    full collect)."""
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    return fit_logreg(X, y)
-
-
-CV_K = 5  # folds, as the reference's cross_val_score(cv=5) default
-
-
-def cv_models_from_features(
-    features: DataFrame,
-    k: int = CV_K,
-    label_col: str = "keep",
-    order_col: str = "image_id",
-    sample_max: int = TRAIN_SAMPLE_MAX,
-) -> list[tuple[np.ndarray, float]]:
-    """K-fold CV models (A7, reference `tune_extended_classifier.py`
-    cross_val_score): deterministic orderBy+limit sample, fold f =
-    position % k over the sorted sample, model f trained on every
-    OTHER fold.  Same driver discipline as `train_from_features` —
-    only <= sample_max rows leave the cluster."""
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
-    return [fit_logreg(X[folds != f], y[folds != f]) for f in range(k)]
-
-
-def with_cv_scores(
-    df: DataFrame, models: list[tuple[np.ndarray, float]], fold_col: str = "fold"
-) -> DataFrame:
-    """Held-out prediction: each row is scored by the model that did
-    NOT train on its fold.  One broadcast of the (k, d) weight matrix,
-    one Arrow-batched UDF; z accumulates left-to-right per feature like
-    `with_model_scores`, so the oracle's per-fold nested affine SQL is
-    bit-identical."""
-    spark = df.sparkSession
-    W = np.asarray([m[0] for m in models], dtype=np.float64)
-    B = np.asarray([m[1] for m in models], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((W, B))
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(fold: pd.Series, *cols: pd.Series) -> pd.Series:
-        Wm, Bm = bc.value
-        fidx = fold.to_numpy(dtype=np.int64)
-        z = Bm[fidx].copy()
-        for i, c in enumerate(cols):
-            z = z + Wm[fidx, i] * c.to_numpy(dtype=np.float64)
-        return pd.Series(z > 0.0)
-
-    return df.withColumn(
-        "pred_keep", pred(F.col(fold_col), *[F.col(f) for f in MODEL_FEATURES])
-    )
-
-
-def save_model(path: str, w: np.ndarray, b: float) -> None:
-    """.npz artifact — {'model','features'} like the reference's joblib
-    dump, numpy-only (no pickled code)."""
+def save_model(path: str, model: tuple[np.ndarray, float]) -> None:
+    """.npz artifact of an affine ``(w, b)`` model — {'model','features'}
+    like the reference's joblib dump, numpy-only (no pickled code)."""
+    w, b = model
     np.savez_compressed(
         path, w=np.asarray(w, dtype=np.float64), b=np.float64(b),
         features=np.array(MODEL_FEATURES),
@@ -211,36 +247,6 @@ def load_model(path: str) -> tuple[np.ndarray, float]:
     if feats != MODEL_FEATURES:
         raise ValueError(f"artifact feature order {feats} != {MODEL_FEATURES}")
     return z["w"].astype(np.float64), float(z["b"])
-
-
-_SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("score", T.DoubleType()),
-        T.StructField("pred_keep", T.BooleanType()),
-    ]
-)
-
-
-def with_model_scores(df: DataFrame, w: np.ndarray, b: float) -> DataFrame:
-    """Batch inference: broadcast the (tiny) weight vector, score every
-    row inside one Arrow-batched pandas UDF.
-
-    z accumulates left-to-right per feature (elementwise numpy adds, no
-    matmul) so the oracle SQL's identically-nested expression produces
-    bit-identical doubles.  pred_keep = z > 0 (p > 0.5)."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((np.asarray(w, dtype=np.float64), float(b)))
-
-    @F.pandas_udf(_SCORE_SCHEMA)
-    def score(*cols: pd.Series) -> pd.DataFrame:
-        ws, bb = bc.value
-        z = np.full(len(cols[0]), bb, dtype=np.float64)
-        for wi, c in zip(ws, cols):
-            z = z + wi * c.to_numpy(dtype=np.float64)
-        return pd.DataFrame({"score": z, "pred_keep": z > 0.0})
-
-    out = df.withColumn("_m", score(*[F.col(f) for f in MODEL_FEATURES]))
-    return out.select(*df.columns, "_m.*")
 
 
 # ------------------------------------------- model family 2: GB stumps
@@ -276,21 +282,15 @@ def _stump_candidates(col: np.ndarray) -> np.ndarray:
     return mids
 
 
-def fit_gb_stumps(
-    X: np.ndarray,
-    y: np.ndarray,
-    rounds: int = GB_ROUNDS,
-    lr: float = GB_LR,
-) -> dict:
+def fit_gb_stumps(X: np.ndarray, y: np.ndarray) -> dict:
     """Gradient-boosted decision stumps for binary logistic loss.
 
     Per round: residual r = y - p; split (j, t) maximizes the exact
     variance-reduction score sum_L(r)^2/n_L + sum_R(r)^2/n_R; leaf
     values are one Newton step sum(r)/sum(p(1-p)) clipped to +-4 (the
     standard Friedman/LogitBoost guard against vanishing Hessians).
-    Returns {"f0", "feat", "thr", "val_l", "val_r"} with the learning
-    rate folded into the leaf values:
-    score(x) = f0 + sum_k (x[feat_k] <= thr_k ? val_l_k : val_r_k).
+    Returns {"f0", "feat", "thr", "val_l", "val_r", "gain"} with the
+    learning rate folded into the leaf values; score via `gb_score`.
     """
     X = np.ascontiguousarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -298,13 +298,13 @@ def fit_gb_stumps(
     if n == 0:
         raise ValueError("empty training set")
     cands = [_stump_candidates(X[:, j]) for j in range(d)]
-    feat = np.zeros(rounds, dtype=np.int64)
-    thr = np.zeros(rounds, dtype=np.float64)
-    val_l = np.zeros(rounds, dtype=np.float64)
-    val_r = np.zeros(rounds, dtype=np.float64)
-    gain_arr = np.zeros(rounds, dtype=np.float64)
+    feat = np.zeros(GB_ROUNDS, dtype=np.int64)
+    thr = np.zeros(GB_ROUNDS, dtype=np.float64)
+    val_l = np.zeros(GB_ROUNDS, dtype=np.float64)
+    val_r = np.zeros(GB_ROUNDS, dtype=np.float64)
+    gain_arr = np.zeros(GB_ROUNDS, dtype=np.float64)
     Fv = np.zeros(n, dtype=np.float64)
-    for k in range(rounds):
+    for k in range(GB_ROUNDS):
         p = 1.0 / (1.0 + np.exp(-Fv))
         r = y - p
         h = p * (1.0 - p)
@@ -330,49 +330,23 @@ def fit_gb_stumps(
         gr = float(np.clip(float(r[~m].sum()) / max(hr, 1e-9), -4.0, 4.0))
         feat[k] = j
         thr[k] = t
-        val_l[k] = lr * gl
-        val_r[k] = lr * gr
+        val_l[k] = GB_LR * gl
+        val_r[k] = GB_LR * gr
         Fv = Fv + np.where(m, val_l[k], val_r[k])
     return {"f0": 0.0, "feat": feat, "thr": thr, "val_l": val_l,
             "val_r": val_r, "gain": gain_arr}
 
 
-def gb_train_from_features(
-    features: DataFrame,
-    label_col: str = "keep",
-    order_col: str = "image_id",
-    sample_max: int = TRAIN_SAMPLE_MAX,
-) -> dict:
-    """Same deterministic orderBy+limit driver sample as
-    `train_from_features`, GB-stumps fit."""
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    return fit_gb_stumps(X, y)
-
-
-def gb_cv_models_from_features(
-    features: DataFrame,
-    k: int = CV_K,
-    label_col: str = "keep",
-    order_col: str = "image_id",
-    sample_max: int = TRAIN_SAMPLE_MAX,
-) -> list[dict]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col)
-        .limit(sample_max)
-        .collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
-    return [fit_gb_stumps(X[folds != f], y[folds != f]) for f in range(k)]
+def gb_score(X: np.ndarray, model: dict) -> np.ndarray:
+    """score(x) = f0 + sum_k (x[feat_k] <= thr_k ? val_l_k : val_r_k),
+    accumulated round-by-round left-to-right; the oracle SQL nests the
+    same CASE terms in the same order -> bit-identical doubles."""
+    z = np.full(len(X), model["f0"], dtype=np.float64)
+    for j, t, vl, vr in zip(
+        model["feat"], model["thr"], model["val_l"], model["val_r"]
+    ):
+        z = z + np.where(X[:, j] <= t, vl, vr)
+    return z
 
 
 def save_gb(path: str, model: dict) -> None:
@@ -403,84 +377,14 @@ def load_gb(path: str) -> dict:
     }
 
 
-def with_gb_scores(df: DataFrame, model: dict) -> DataFrame:
-    """Broadcast the stump arrays, score in one Arrow-batched UDF.
-    z accumulates round-by-round left-to-right; the oracle SQL nests
-    the same CASE terms in the same order -> bit-identical doubles."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (
-            float(model["f0"]), model["feat"].astype(np.int64),
-            model["thr"].astype(np.float64),
-            model["val_l"].astype(np.float64),
-            model["val_r"].astype(np.float64),
-        )
-    )
-
-    @F.pandas_udf(_SCORE_SCHEMA)
-    def score(*cols: pd.Series) -> pd.DataFrame:
-        f0, feat, thr, vl, vr = bc.value
-        mats = [c.to_numpy(dtype=np.float64) for c in cols]
-        z = np.full(len(mats[0]), f0, dtype=np.float64)
-        for k in range(len(feat)):
-            z = z + np.where(mats[feat[k]] <= thr[k], vl[k], vr[k])
-        return pd.DataFrame({"score": z, "pred_keep": z > 0.0})
-
-    out = df.withColumn("_m", score(*[F.col(f) for f in MODEL_FEATURES]))
-    return out.select(*df.columns, "_m.*")
-
-
-def with_gb_cv_scores(
-    df: DataFrame, models: list[dict], fold_col: str = "fold"
-) -> DataFrame:
-    """Held-out stump-ensemble prediction (the GB analog of
-    `with_cv_scores`): each row scored by the model that did NOT train
-    on its fold, one broadcast of all k ensembles."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        [
-            (
-                float(m["f0"]), m["feat"].astype(np.int64),
-                m["thr"].astype(np.float64),
-                m["val_l"].astype(np.float64),
-                m["val_r"].astype(np.float64),
-            )
-            for m in models
-        ]
-    )
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(fold: pd.Series, *cols: pd.Series) -> pd.Series:
-        ms = bc.value
-        fidx = fold.to_numpy(dtype=np.int64)
-        mats = [c.to_numpy(dtype=np.float64) for c in cols]
-        z = np.empty(len(fidx), dtype=np.float64)
-        for f, (f0, feat, thr, vl, vr) in enumerate(ms):
-            sel = fidx == f
-            if not sel.any():
-                continue
-            zz = np.full(int(sel.sum()), f0, dtype=np.float64)
-            for k in range(len(feat)):
-                zz = zz + np.where(mats[feat[k]][sel] <= thr[k], vl[k], vr[k])
-            z[sel] = zz
-        return pd.Series(z > 0.0)
-
-    return df.withColumn(
-        "pred_keep", pred(F.col(fold_col), *[F.col(f) for f in MODEL_FEATURES])
-    )
-
-
 # ---------------------------------- model families 3-5: RF / SVM / vote
 #
 # Completing the reference zoo shape (tune_extended_classifier.py:
 # 134-225: RandomForest grid, GradientBoosting grid, LR grid, SVC,
 # soft VotingClassifier).  Same determinism discipline: fixed
 # iteration counts, integer-hash pseudo-randomness (no RNG state), no
-# BLAS, fixed accumulation orders.  The RBF-kernel SVC is replaced by
-# a from-scratch LINEAR SVM (documented deviation — kernel machines
-# need stateful solvers; the zoo's point is the bake-off shape), with
-# sigmoid(margin) as its soft probability (Platt-style with unit
-# scale, deterministic).
+# BLAS, fixed accumulation orders.  The SVC's soft probability is
+# sigmoid(margin) (Platt-style with unit scale, deterministic).
 
 RF_TREES = 8
 RF_DEPTH = 2  # root + one split per side = 4 leaves
@@ -560,7 +464,7 @@ def _tree_fit(X: np.ndarray, y: np.ndarray, feats: list[int]) -> dict:
             "gains": gains}
 
 
-def fit_rf_lite(X: np.ndarray, y: np.ndarray, trees: int = RF_TREES) -> list[dict]:
+def fit_rf_lite(X: np.ndarray, y: np.ndarray) -> list[dict]:
     """Bagged depth-2 trees: per-tree bootstrap rows and feature
     subsets from integer hashes (deterministic in any process).
     predict_proba(x) = mean over trees of the leaf keep-fraction,
@@ -569,7 +473,7 @@ def fit_rf_lite(X: np.ndarray, y: np.ndarray, trees: int = RF_TREES) -> list[dic
     y = np.asarray(y, dtype=np.float64)
     n, d = X.shape
     forest = []
-    for t in range(trees):
+    for t in range(RF_TREES):
         rows = ((np.arange(n, dtype=np.uint64) * _HASH_A + 40503 * (t + 1))
                 % (2**32)) % n
         feats = sorted(
@@ -599,32 +503,30 @@ SVM_ITERS = 300
 SVM_L2 = 1e-3
 
 
-def fit_svm_linear(
-    X: np.ndarray,
-    y: np.ndarray,
-    lr: float = SVM_LR,
-    iters: int = SVM_ITERS,
-    l2: float = SVM_L2,
-) -> tuple[np.ndarray, float]:
+def _hinge_gd(Z: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, float]:
+    """Full-batch subgradient descent on the L2-regularized hinge loss
+    over the columns of Z, labels y in {0, 1} mapped to -1/+1: fixed
+    iteration count, zero init, no BLAS.  Returns (w, b) in Z-space."""
+    yy = np.where(np.asarray(y, dtype=np.float64) > 0.5, 1.0, -1.0)
+    n, d = Z.shape
+    w = np.zeros(d, dtype=np.float64)
+    b = 0.0
+    for _ in range(SVM_ITERS):
+        z = b + (Z * w).sum(axis=1)
+        viol = (yy * z) < 1.0
+        gw = -(Z * (yy * viol)[:, None]).sum(axis=0) / n + SVM_L2 * w
+        gb = -float((yy * viol).sum()) / n
+        w = w - SVM_LR * gw
+        b = b - SVM_LR * gb
+    return w, b
+
+
+def fit_svm_linear(X: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, float]:
     """Linear SVM by full-batch subgradient descent on the hinge loss
     with internal standardization folded back into raw-feature weights
     (same shape discipline as `fit_logreg`).  Returns (w_raw, b_raw)."""
-    X = np.ascontiguousarray(X, dtype=np.float64)
-    yy = np.where(np.asarray(y, dtype=np.float64) > 0.5, 1.0, -1.0)
-    mu = X.mean(axis=0)
-    sd = X.std(axis=0)
-    sd = np.where(sd > 1e-9 * np.maximum(1.0, np.abs(mu)), sd, 1.0)
-    Xs = (X - mu) / sd
-    n, d = Xs.shape
-    w = np.zeros(d, dtype=np.float64)
-    b = 0.0
-    for _ in range(iters):
-        z = b + (Xs * w).sum(axis=1)
-        viol = (yy * z) < 1.0
-        gw = -(Xs * (yy * viol)[:, None]).sum(axis=0) / n + l2 * w
-        gb = -float((yy * viol).sum()) / n
-        w = w - lr * gw
-        b = b - lr * gb
+    Xs, mu, sd = _standardize(np.ascontiguousarray(X, dtype=np.float64))
+    w, b = _hinge_gd(Xs, y)
     return w / sd, float(b - float((w * mu / sd).sum()))
 
 
@@ -665,14 +567,7 @@ def _hash_unit(i: int) -> float:
     return (h + 0.5) / 2.0 ** 32
 
 
-def fit_svm_rff(
-    X: np.ndarray,
-    y: np.ndarray,
-    D: int = RFF_D,
-    lr: float = SVM_LR,
-    iters: int = SVM_ITERS,
-    l2: float = SVM_L2,
-) -> dict:
+def fit_svm_rff(X: np.ndarray, y: np.ndarray) -> dict:
     """RBF-approximating SVM: standardize, map through D random
     Fourier features z_k = sqrt(2/D) * cos(w_k . s + b_k) with
     w_k ~ N(0, 2*gamma*I) (gamma = 1/d, sklearn's 'scale' on
@@ -681,17 +576,13 @@ def fit_svm_rff(
     deterministic in any process.  Returns a dict model
     {mu, sd, W, B, scale, w, b}; score via `svm_rff_margin`."""
     X = np.ascontiguousarray(X, dtype=np.float64)
-    yy = np.where(np.asarray(y, dtype=np.float64) > 0.5, 1.0, -1.0)
-    n, d = X.shape
-    mu = X.mean(axis=0)
-    sd = X.std(axis=0)
-    sd = np.where(sd > 1e-9 * np.maximum(1.0, np.abs(mu)), sd, 1.0)
-    S = (X - mu) / sd
+    d = X.shape[1]
+    S, mu, sd = _standardize(X)
     gamma = 1.0 / d
     gstd = math.sqrt(2.0 * gamma)
-    W = np.empty((D, d), dtype=np.float64)
-    B = np.empty(D, dtype=np.float64)
-    for k in range(D):
+    W = np.empty((RFF_D, d), dtype=np.float64)
+    B = np.empty(RFF_D, dtype=np.float64)
+    for k in range(RFF_D):
         for j in range(d):
             u1 = _hash_unit(k * 131 + j * 2 + 1)
             u2 = _hash_unit(k * 131 + j * 2 + 2)
@@ -699,36 +590,23 @@ def fit_svm_rff(
                 2.0 * math.pi * u2
             )
         B[k] = 2.0 * math.pi * _hash_unit(100003 + k)
-    scale = math.sqrt(2.0 / D)
-    # feature map with the same left-to-right accumulation the oracle
-    # SQL nests; cos is scalar libm (see _sigmoid for why not np.cos)
-    Z = _rff_features(S, W, B, scale)
-    w = np.zeros(D, dtype=np.float64)
-    b = 0.0
-    for _ in range(iters):
-        z = b + (Z * w).sum(axis=1)
-        viol = (yy * z) < 1.0
-        gw = -(Z * (yy * viol)[:, None]).sum(axis=0) / n + l2 * w
-        gb = -float((yy * viol).sum()) / n
-        w = w - lr * gw
-        b = b - lr * gb
+    scale = math.sqrt(2.0 / RFF_D)
+    w, b = _hinge_gd(_rff_features(S, W, B, scale), y)
     return {"mu": mu, "sd": sd, "W": W, "B": B, "scale": scale,
             "w": w, "b": float(b)}
 
 
 def _rff_features(S: np.ndarray, W: np.ndarray, B: np.ndarray,
                   scale: float) -> np.ndarray:
-    """scale * cos(B_k + sum_j W_kj * s_j), per-feature left-to-right
-    elementwise adds (no matmul) and scalar libm cos — the oracle
-    SQL's identically-nested chain over DuckDB's libm cos produces
-    bit-identical doubles."""
+    """scale * cos(B_k + sum_j W_kj * s_j): the feature map with the
+    same left-to-right accumulation the oracle SQL nests
+    (`affine_score`) and scalar libm cos (see `_sigmoid` for why not
+    np.cos) — DuckDB's libm cos over the identically-nested chain
+    produces bit-identical doubles."""
     n = len(S)
-    D = len(B)
-    Z = np.empty((n, D), dtype=np.float64)
-    for k in range(D):
-        zk = np.full(n, B[k], dtype=np.float64)
-        for j in range(S.shape[1]):
-            zk = zk + W[k, j] * S[:, j]
+    Z = np.empty((n, len(B)), dtype=np.float64)
+    for k in range(len(B)):
+        zk = affine_score(S, (W[k], B[k]))
         for i in range(n):
             Z[i, k] = scale * math.cos(zk[i])
     return Z
@@ -741,49 +619,7 @@ def svm_rff_margin(X: np.ndarray, model: dict) -> np.ndarray:
     X = np.ascontiguousarray(X, dtype=np.float64)
     S = (X - model["mu"]) / model["sd"]
     Z = _rff_features(S, model["W"], model["B"], model["scale"])
-    m = np.full(len(X), model["b"], dtype=np.float64)
-    w = model["w"]
-    for k in range(len(w)):
-        m = m + w[k] * Z[:, k]
-    return m
-
-
-def svm_rff_cv_models_from_features(
-    features: DataFrame, k: int = CV_K, label_col: str = "keep",
-    order_col: str = "image_id", sample_max: int = TRAIN_SAMPLE_MAX,
-) -> list[dict]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col).limit(sample_max).collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
-    return [fit_svm_rff(X[folds != f], y[folds != f]) for f in range(k)]
-
-
-def with_svm_rff_cv_scores(
-    df: DataFrame, models: list[dict], fold_col: str = "fold"
-) -> DataFrame:
-    """Held-out RFF-SVC prediction: margin > 0."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(models)
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(fold: pd.Series, *cols: pd.Series) -> pd.Series:
-        ms = bc.value
-        fidx = fold.to_numpy(dtype=np.int64)
-        X = np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
-        out = np.empty(len(fidx), dtype=bool)
-        for f, m in enumerate(ms):
-            sel = fidx == f
-            if sel.any():
-                out[sel] = svm_rff_margin(X[sel], m) > 0.0
-        return pd.Series(out)
-
-    return df.withColumn(
-        "pred_keep", pred(F.col(fold_col), *[F.col(f) for f in MODEL_FEATURES])
-    )
+    return affine_score(Z, (model["w"], model["b"]))
 
 
 def feature_importance_rows(
@@ -829,105 +665,8 @@ def zoo_soft_vote_proba(
     bit-parity doesn't rest on a numpy-build coincidence (ADVICE r3);
     any residual divergence is still caught loudly by the hash gate."""
     X = np.ascontiguousarray(X, dtype=np.float64)
-
-    def affine(m):
-        w, b = m
-        z = np.full(len(X), b, dtype=np.float64)
-        for i in range(X.shape[1]):
-            z = z + w[i] * X[:, i]
-        return z
-
     p_rf = rf_proba(X, forest)
-    zg = np.full(len(X), gb_model["f0"], dtype=np.float64)
-    for k in range(len(gb_model["feat"])):
-        zg = zg + np.where(
-            X[:, gb_model["feat"][k]] <= gb_model["thr"][k],
-            gb_model["val_l"][k], gb_model["val_r"][k],
-        )
-    p_gb = _sigmoid(zg)
-    p_lr = _sigmoid(affine(lr_model))
+    p_gb = _sigmoid(gb_score(X, gb_model))
+    p_lr = _sigmoid(affine_score(X, lr_model))
     p_svm = _sigmoid(svm_rff_margin(X, svm_model))
     return (((p_rf + p_gb) + p_lr) + p_svm) / 4.0
-
-
-def rf_cv_models_from_features(
-    features: DataFrame, k: int = CV_K, label_col: str = "keep",
-    order_col: str = "image_id", sample_max: int = TRAIN_SAMPLE_MAX,
-) -> list[list[dict]]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col).limit(sample_max).collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
-    return [fit_rf_lite(X[folds != f], y[folds != f]) for f in range(k)]
-
-
-def svm_cv_models_from_features(
-    features: DataFrame, k: int = CV_K, label_col: str = "keep",
-    order_col: str = "image_id", sample_max: int = TRAIN_SAMPLE_MAX,
-) -> list[tuple[np.ndarray, float]]:
-    rows = (
-        features.select(order_col, label_col, *MODEL_FEATURES)
-        .orderBy(order_col).limit(sample_max).collect()
-    )
-    X = np.asarray([[float(r[f]) for f in MODEL_FEATURES] for r in rows])
-    y = np.asarray([1.0 if r[label_col] else 0.0 for r in rows])
-    folds = np.arange(len(rows)) % k
-    return [fit_svm_linear(X[folds != f], y[folds != f]) for f in range(k)]
-
-
-def with_rf_cv_scores(
-    df: DataFrame, forests: list[list[dict]], fold_col: str = "fold"
-) -> DataFrame:
-    """Held-out RF prediction: leaf-fraction mean > 0.5."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(forests)
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(fold: pd.Series, *cols: pd.Series) -> pd.Series:
-        fs = bc.value
-        fidx = fold.to_numpy(dtype=np.int64)
-        X = np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
-        out = np.empty(len(fidx), dtype=bool)
-        for f, forest in enumerate(fs):
-            sel = fidx == f
-            if sel.any():
-                out[sel] = rf_proba(X[sel], forest) > 0.5
-        return pd.Series(out)
-
-    return df.withColumn(
-        "pred_keep", pred(F.col(fold_col), *[F.col(f) for f in MODEL_FEATURES])
-    )
-
-
-def with_vote_cv_scores(
-    df: DataFrame,
-    lr_models: list,
-    gb_models: list,
-    forests: list,
-    svm_models: list,
-    fold_col: str = "fold",
-) -> DataFrame:
-    """Held-out soft-voting prediction: mean of the four per-family
-    probabilities > 0.5 (reference VotingClassifier(voting='soft'))."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((lr_models, gb_models, forests, svm_models))
-
-    @F.pandas_udf(T.BooleanType())
-    def pred(fold: pd.Series, *cols: pd.Series) -> pd.Series:
-        lrs, gbs, fs, svms = bc.value
-        fidx = fold.to_numpy(dtype=np.int64)
-        X = np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
-        out = np.empty(len(fidx), dtype=bool)
-        for f in range(len(lrs)):
-            sel = fidx == f
-            if sel.any():
-                p = zoo_soft_vote_proba(X[sel], lrs[f], gbs[f], fs[f], svms[f])
-                out[sel] = p > 0.5
-        return pd.Series(out)
-
-    return df.withColumn(
-        "pred_keep", pred(F.col(fold_col), *[F.col(f) for f in MODEL_FEATURES])
-    )

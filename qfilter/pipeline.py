@@ -27,8 +27,13 @@ Design (100 TB shape):
   inside the wave's labels write leaves a data dir without a manifest,
   which no reader sees, and the wave reruns.  Lineage is appended only
   AFTER the data commit, so a crash between the labels commit and the
-  lineage commit reruns the wave and appends its labels a second time
-  (a known defect, listed in ROADMAP).
+  lineage commit reruns the wave; its labels append carries a
+  ``txn_id`` derived from the wave's sorted part ids (not the run id,
+  which a resume may change), so the replay commits no rows and writes
+  no data, and the rerun's telemetry describes the first commit.  The
+  key matches only when ``n_parts`` and ``wave_size`` are unchanged
+  between the crashed run and the resume (other values regroup the
+  pending parts into other waves).
 * Exactly-once per partition: lineage append is the commit point and
   happens after the data append; replays overwrite nothing (each wave
   appends a new snapshot dir) and re-emit only uncommitted partitions.
@@ -135,7 +140,10 @@ class QualityFilterPipeline:
             # only those part dirs
             subset = parted.filter(F.col("part_id").isin(wave_parts))
             labeled = with_labels(with_all_features(subset)).select(*LABEL_COLS)
-            self.catalog.append("labels", labeled, partition_by=["part_id"])
+            self.catalog.append(
+                "labels", labeled, partition_by=["part_id"],
+                txn_id="label-parts-" + ",".join(map(str, sorted(wave_parts))),
+            )
             wall_ms = int((time.time() - t0) * 1000)
             self._commit_telemetry(run_id, wave_parts, wall_ms)
             if fail_after_wave is not None and wi >= fail_after_wave:

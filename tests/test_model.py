@@ -34,9 +34,9 @@ def test_spark_training_matches_labels_ref_training(spark):
     from make_fixtures import ensure_fixtures
     from make_oracle_sidecars import model_weights_from_labels_ref
 
-    from qfilter.model import train_from_features
+    from qfilter.model import fit_logreg, training_sample
 
-    w_s, b_s = train_from_features(_spark_features(spark))
+    w_s, b_s = fit_logreg(*training_sample(_spark_features(spark)))
     w_o, b_o = model_weights_from_labels_ref(ensure_fixtures("smoke"))
     assert np.array_equal(w_s, w_o) and b_s == b_o
 
@@ -49,7 +49,7 @@ def test_model_artifact_roundtrip(tmp_path):
     y = (X[:, 0] + 0.5 * X[:, 3] > 0).astype(float)
     w, b = fit_logreg(X, y)
     path = str(tmp_path / "logreg.npz")
-    save_model(path, w, b)
+    save_model(path, (w, b))
     w2, b2 = load_model(path)
     assert np.array_equal(w, w2) and b == b2
 
@@ -92,9 +92,9 @@ def test_cv_models_match_labels_ref_cv(spark):
     from make_fixtures import ensure_fixtures
     from make_oracle_sidecars import model_cv_weights_from_labels_ref
 
-    from qfilter.model import CV_K, cv_models_from_features
+    from qfilter.model import CV_K, cv_models, fit_logreg
 
-    spark_models = cv_models_from_features(_spark_features(spark))
+    spark_models = cv_models(_spark_features(spark), fit_logreg)
     oracle_models = model_cv_weights_from_labels_ref(ensure_fixtures("smoke"), k=CV_K)
     assert len(spark_models) == len(oracle_models) == CV_K
     for (ws, bs), (wo, bo) in zip(spark_models, oracle_models):
@@ -127,9 +127,9 @@ def test_gb_spark_training_matches_labels_ref_training(spark):
     from make_fixtures import ensure_fixtures
     from make_oracle_sidecars import gb_cv_weights_from_labels_ref
 
-    from qfilter.model import gb_cv_models_from_features
+    from qfilter.model import cv_models, fit_gb_stumps
 
-    ms = gb_cv_models_from_features(_spark_features(spark))
+    ms = cv_models(_spark_features(spark), fit_gb_stumps)
     mo = gb_cv_weights_from_labels_ref(ensure_fixtures("smoke"))
     assert len(ms) == len(mo)
     for a, b in zip(ms, mo):
@@ -144,9 +144,10 @@ def test_gb_artifact_roundtrip_and_scores(tmp_path, spark):
     from qfilter.model import (
         MODEL_FEATURES,
         fit_gb_stumps,
+        gb_score,
         load_gb,
         save_gb,
-        with_gb_scores,
+        with_model_scores,
     )
 
     rng = np.random.default_rng(11)
@@ -173,7 +174,7 @@ def test_gb_artifact_roundtrip_and_scores(tmp_path, spark):
     pdf = pd.DataFrame(X, columns=MODEL_FEATURES)
     df = spark.createDataFrame(pdf)
     got = (
-        with_gb_scores(df, m2)
+        with_model_scores(df, gb_score, m2)
         .select("score")
         .toPandas()["score"]
         .to_numpy()
@@ -202,30 +203,34 @@ def test_gb_beats_or_ties_logreg_on_nonlinear_signal():
 
 
 def test_rf_svm_spark_training_matches_labels_ref(spark):
-    """RF-lite and linear-SVM fold models: Spark-sample training ==
-    single-node labels_ref retraining, exactly (the qf_model_zoo
-    oracle embeds these as literals)."""
+    """RF-lite, linear-SVM and RFF kernel-SVC fold models: Spark-sample
+    training == single-node labels_ref retraining, exactly (the
+    qf_model_zoo oracle embeds these as literals)."""
     from make_fixtures import ensure_fixtures
     from make_oracle_sidecars import (
         rf_cv_weights_from_labels_ref,
         svm_cv_weights_from_labels_ref,
+        svm_rff_cv_weights_from_labels_ref,
     )
 
-    from qfilter.model import (
-        rf_cv_models_from_features,
-        svm_cv_models_from_features,
-    )
+    from qfilter.model import CV_K, cv_models, fit_rf_lite, fit_svm_linear, fit_svm_rff
 
     feats = _spark_features(spark)
     fdir = ensure_fixtures("smoke")
-    for a, b in zip(rf_cv_models_from_features(feats), rf_cv_weights_from_labels_ref(fdir)):
+    for a, b in zip(cv_models(feats, fit_rf_lite), rf_cv_weights_from_labels_ref(fdir)):
         assert len(a) == len(b)
         for ta, tb in zip(a, b):
             assert ta == tb
     for (wa, ba), (wb, bb) in zip(
-        svm_cv_models_from_features(feats), svm_cv_weights_from_labels_ref(fdir)
+        cv_models(feats, fit_svm_linear), svm_cv_weights_from_labels_ref(fdir)
     ):
         assert np.array_equal(wa, wb) and ba == bb
+    rff_s = cv_models(feats, fit_svm_rff)
+    rff_o = svm_rff_cv_weights_from_labels_ref(fdir)
+    assert len(rff_s) == len(rff_o) == CV_K
+    for a, b in zip(rff_s, rff_o):
+        for k in ("mu", "sd", "W", "B", "w", "b"):
+            assert np.array_equal(a[k], b[k]), k
 
 
 def test_rf_and_svm_learn_separable_signals():

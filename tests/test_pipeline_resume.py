@@ -63,6 +63,40 @@ def test_kill_and_resume_equivalence(spark, images, tmp_path_factory, monkeypatc
     _assert_telemetry_reconciles(spark, pipe, resumed)
 
 
+def test_crash_between_labels_and_lineage_commits(
+    spark, images, tmp_path_factory, monkeypatch
+):
+    """A process that dies after a wave's labels commit but before its
+    lineage commit: the resume (a new pipeline object, another run id)
+    replays the wave, and the labels append's idempotence key keeps it
+    from appending the wave's rows a second time."""
+    from qfilter.pipeline import QualityFilterPipeline
+
+    d = str(tmp_path_factory.mktemp("crash"))
+    commit = QualityFilterPipeline._commit_telemetry
+    calls = []
+
+    def crash_once(self, *a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("killed between the labels and lineage commits")
+        return commit(self, *a, **k)
+
+    monkeypatch.setattr(QualityFilterPipeline, "_commit_telemetry", crash_once)
+    first = QualityFilterPipeline(spark, d, n_parts=8, wave_size=3)
+    with pytest.raises(RuntimeError, match="killed between"):
+        first.run(images, run_id="c1")
+    assert first.status()["committed"] == 0
+
+    pipe = QualityFilterPipeline(spark, d, n_parts=8, wave_size=3)
+    labels = pipe.run(run_id="c2")
+    n = images.count()
+    assert labels.count() == n
+    assert labels.select("image_id").distinct().count() == n
+    assert pipe.status()["pending"] == 0
+    _assert_telemetry_reconciles(spark, pipe, labels)
+
+
 def _assert_telemetry_reconciles(spark, pipe, labels):
     """lineage and metrics describe the labels table exactly: one
     lineage row per part, rows_out summing to the labels rows, and
