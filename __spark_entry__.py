@@ -38,6 +38,14 @@ def _fixture_images(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(os.path.join(_fixture_dir(), "images.parquet"))
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """The fixture is one parquet file, i.e. one input split; the slow
+    per-image queries (deskew, polish, 1800 px OCR prep) spread its rows
+    over all cores before their UDF stage."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(cores * 2, "image_id")
+
+
 def _nlp_sidecar(sf_dir: str) -> str:
     from make_oracle_sidecars import ensure_sidecar
 
@@ -222,10 +230,7 @@ def _qf_enhance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotate_any_angle.py:43-119); oracle = single-node numpy run."""
     from qfilter.enhance import with_enhance_stats
 
-    # deskew is the most expensive per-image kernel: spread the single
-    # fixture file across all cores before the UDF stage
-    cores = spark.sparkContext.defaultParallelism
-    out = with_enhance_stats(_fixture_images(spark).repartition(cores * 2, "image_id"))
+    out = with_enhance_stats(_spread(_fixture_images(spark)))
     return out.select(
         "image_id", "deskew_deg", "lightened_mean", "lightened_bg_mean",
         "lightened_adv_mean", "delined_ink_frac"
@@ -414,47 +419,6 @@ def _mm_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-def _qf_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Base cascade (classificator_paddleocr.py:243-269) over the same
-    features — oracle is the cascade transcribed as SQL CASE."""
-    from qfilter.cascade import base_category, base_reason
-    from qfilter.features import with_all_features
-
-    feats = with_all_features(_fixture_images(spark))
-    return feats.filter(F.col("error").isNull()).select(
-        "image_id",
-        base_category().alias("category"),
-        base_reason().alias("reason"),
-    )
-
-
-def _qf_easyocr_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EasyOCR-recalibrated cascade (classificator_easyocr.py:256-297)."""
-    from qfilter.cascade import easyocr_category, easyocr_reason
-    from qfilter.features import with_all_features
-
-    feats = with_all_features(_fixture_images(spark))
-    return feats.filter(F.col("error").isNull()).select(
-        "image_id",
-        easyocr_category().alias("category"),
-        easyocr_reason().alias("reason"),
-    )
-
-
-def _qf_tuning_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Threshold-tuning 4-way rule (tune_extended_classifier.py:81-97)
-    at one fixed parameter point."""
-    from qfilter.cascade import tuning_category
-    from qfilter.features import with_all_features
-
-    feats = with_all_features(_fixture_images(spark))
-    return feats.filter(F.col("error").isNull()).select(
-        "image_id",
-        tuning_category(0.2, 0.5, 30.0, 75.0, 0.02, 0.1, 40.0, 120.0).alias("category"),
-    )
-
-
 def _qf_cascade_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base + EasyOCR + threshold-tuning cascade variants in ONE pass
     (one row per image, one column group per cascade).  Merged in
@@ -464,7 +428,7 @@ def _qf_cascade_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry slot while each cascade keeps independently hash-compared
     columns.  References: classificator_paddleocr.py:243-269,
     classificator_easyocr.py:256-297, tune_extended_classifier.py:
-    81-97.  The per-variant callables above stay importable for tests."""
+    81-97."""
     from qfilter.cascade import (
         base_category,
         base_reason,
@@ -839,7 +803,7 @@ def _qf_polish_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qfilter.polish import with_polish_stats
 
     img = _fixture_images(spark).filter(F.crc32(F.col("image_id")) % 5 == 0)
-    return with_polish_stats(img).select(
+    return with_polish_stats(_spread(img)).select(
         "image_id", "polished_mean", "polished_std", "edge_frac"
     )
 
@@ -853,14 +817,8 @@ def _qf_ocr_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     1800 px); oracle sidecar built from the independently-coded twin."""
     from qfilter.ocrprep import with_ocr_prep
 
-    # repartition: the fixture is one parquet file = one input split,
-    # and at ~1.5 s/image (1800 px planes) a serial task dominates
-    img = (
-        _fixture_images(spark)
-        .filter(F.crc32(F.col("image_id")) % 20 == 0)
-        .repartition(32, "image_id")
-    )
-    return with_ocr_prep(img).select("image_id", "prep_h", "prep_w", "white_frac")
+    img = _fixture_images(spark).filter(F.crc32(F.col("image_id")) % 20 == 0)
+    return with_ocr_prep(_spread(img)).select("image_id", "prep_h", "prep_w", "white_frac")
 
 
 def _qf_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:

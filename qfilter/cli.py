@@ -145,27 +145,20 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "enhance":
         spark = get_spark(app="qfilter-enhance", master=args.master)
-        img = spark.read.parquet(args.input)
-        if args.mode == "stats":
-            from .enhance import with_enhance_stats
+        from .enhance import with_enhance_stats, with_enhanced_bytes, with_line_features
+        from .ocrprep import with_ocr_prep
+        from .polish import with_polish_stats
 
-            out = with_enhance_stats(img).drop("bytes")
-        elif args.mode == "bytes":
-            from .enhance import with_enhanced_bytes
-
-            out = with_enhanced_bytes(img)
-        elif args.mode == "lines":
-            from .enhance import with_line_features
-
-            out = with_line_features(img).drop("bytes")
-        elif args.mode == "polish":
-            from .polish import with_polish_stats
-
-            out = with_polish_stats(img).drop("bytes")
-        else:
-            from .ocrprep import with_ocr_prep
-
-            out = with_ocr_prep(img).drop("bytes")
+        stage = {
+            "stats": with_enhance_stats,
+            "bytes": with_enhanced_bytes,
+            "lines": with_line_features,
+            "polish": with_polish_stats,
+            "ocr-prep": with_ocr_prep,
+        }[args.mode]
+        out = stage(spark.read.parquet(args.input))
+        if args.mode != "bytes":
+            out = out.drop("bytes")
         out.write.mode("overwrite").parquet(args.out)
         print(json.dumps({"out": args.out, "mode": args.mode}))
         return 0

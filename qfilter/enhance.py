@@ -28,6 +28,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from . import codecs
 from .imageops import (
     _window_view,
     adaptive_threshold_inv,
@@ -50,6 +51,7 @@ __all__ = [
     "deskew_angle_search",
     "orientation_vote",
     "orientation_one",
+    "with_image_stage",
     "with_orientation",
     "with_line_features",
     "with_enhance_stats",
@@ -394,47 +396,60 @@ def deskew_angle_search(
 
 # ------------------------------------------------------------ UDF stage
 
-def with_line_features(df, min_len_ratio: float = 0.5):
-    """(image_id, bytes, fmt, w, h, ...) -> + has_line, line_orientation,
-    line_score, n_line_boxes columns (P13 as a batched stage)."""
+def with_image_stage(df, schema: str, one):
+    """(image_id, bytes, fmt, w, h, ...) -> df's columns + the columns of
+    the DDL ``schema``: the one batched Arrow stage every per-image
+    operator runs through.  Each row is decoded once and handed to
+    ``one(px, image_id, fmt)``, which returns a dict keyed by the schema's
+    columns; a row whose decode or kernel raises gets all-NULL columns
+    (error channel, never a task failure)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from . import codecs
+    struct = T.StructType.fromDDL(schema)
 
-    schema = T.StructType(
-        [
-            T.StructField("has_line", T.BooleanType()),
-            T.StructField("line_orientation", T.StringType()),
-            T.StructField("line_score", T.DoubleType()),
-            T.StructField("n_line_boxes", T.IntegerType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def det(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf(struct)
+    def stage(
+        image_id: pd.Series, data: pd.Series, fmt: pd.Series,
+        w: pd.Series, h: pd.Series,
+    ) -> pd.DataFrame:
         rows = []
-        for b, f, ww, hh in zip(data, fmt, w, h):
+        for iid, b, f, ww, hh in zip(image_id, data, fmt, w, h):
             try:
-                px = codecs.decode(b, f, int(ww), int(hh))
-                d = detect_lines(grayscale(px), min_len_ratio=min_len_ratio)
-                rows.append(
-                    {
-                        "has_line": bool(d["has_line"]),
-                        "line_orientation": d["orientation"],
-                        "line_score": float(d["score"]),
-                        "n_line_boxes": len(d["bboxes"]),
-                    }
-                )
+                rows.append(one(codecs.decode(b, f, int(ww), int(hh)), str(iid), f))
             except Exception:  # noqa: BLE001
-                rows.append(
-                    {"has_line": False, "line_orientation": None,
-                     "line_score": 0.0, "n_line_boxes": 0}
-                )
-        return pd.DataFrame(rows)
+                rows.append(dict.fromkeys(struct.names))
+        return pd.DataFrame(rows, columns=struct.names)
 
-    out = df.withColumn("_lf", det(F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h")))
-    return out.select(*df.columns, "_lf.*")
+    out = df.withColumn("_stage", stage("image_id", "bytes", "fmt", "w", "h"))
+    return out.select(*df.columns, "_stage.*")
+
+
+def _line_row(px: np.ndarray, image_id: str, fmt: str) -> dict:
+    d = detect_lines(grayscale(px), min_len_ratio=0.5)
+    return {
+        "has_line": bool(d["has_line"]),
+        "line_orientation": d["orientation"],
+        "line_score": float(d["score"]),
+        "n_line_boxes": len(d["bboxes"]),
+    }
+
+
+def with_line_features(df):
+    """(image_id, bytes, fmt, w, h, ...) -> + has_line, line_orientation,
+    line_score, n_line_boxes columns (P13 as a batched stage); an error
+    row reads (False, NULL, 0.0, 0)."""
+    from pyspark.sql import functions as F
+
+    out = with_image_stage(
+        df,
+        "has_line boolean, line_orientation string, line_score double, n_line_boxes int",
+        _line_row,
+    )
+    return out.withColumns(
+        {c: F.coalesce(c, F.lit(v))
+         for c, v in (("has_line", False), ("line_score", 0.0), ("n_line_boxes", 0))}
+    )
 
 
 def enhance_stats_one(px: np.ndarray) -> dict:
@@ -469,37 +484,15 @@ def enhance_stats_one(px: np.ndarray) -> dict:
 
 def with_enhance_stats(df):
     """(image_id, bytes, fmt, w, h, ...) -> + deskew_deg,
-    lightened_mean, delined_ink_frac (P11/P14/P15 as one batched
-    stage; decode errors -> NULLs, no task failure)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from . import codecs
-
-    schema = T.StructType(
-        [
-            T.StructField("deskew_deg", T.DoubleType()),
-            T.StructField("lightened_mean", T.DoubleType()),
-            T.StructField("lightened_bg_mean", T.DoubleType()),
-            T.StructField("lightened_adv_mean", T.DoubleType()),
-            T.StructField("delined_ink_frac", T.DoubleType()),
-        ]
+    lightened_mean, lightened_bg_mean, lightened_adv_mean,
+    delined_ink_frac (P11/P12/P14/P15 as one batched stage; decode
+    errors -> NULLs, no task failure)."""
+    return with_image_stage(
+        df,
+        "deskew_deg double, lightened_mean double, lightened_bg_mean double, "
+        "lightened_adv_mean double, delined_ink_frac double",
+        lambda px, image_id, fmt: enhance_stats_one(px),
     )
-    _null_row = {f.name: None for f in schema.fields}
-
-    @F.pandas_udf(schema)
-    def enh(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b, f, ww, hh in zip(data, fmt, w, h):
-            try:
-                px = codecs.decode(b, f, int(ww), int(hh))
-                rows.append(enhance_stats_one(px))
-            except Exception:  # noqa: BLE001
-                rows.append(dict(_null_row))
-        return pd.DataFrame(rows)
-
-    out = df.withColumn("_es", enh(F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h")))
-    return out.select(*df.columns, "_es.*")
 
 
 # ------------------------------------- P17/P18: orientation heuristic
@@ -595,40 +588,11 @@ def orientation_one(px: np.ndarray, image_id: str) -> dict:
 def with_orientation(df):
     """(image_id, bytes, fmt, w, h, ...) -> + planted_deg, detected_deg,
     recovered (P17/P18 as a batched Arrow stage; errors -> NULLs)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from . import codecs
-
-    schema = T.StructType(
-        [
-            T.StructField("planted_deg", T.IntegerType()),
-            T.StructField("detected_deg", T.IntegerType()),
-            T.StructField("recovered", T.BooleanType()),
-        ]
+    return with_image_stage(
+        df,
+        "planted_deg int, detected_deg int, recovered boolean",
+        lambda px, image_id, fmt: orientation_one(px, image_id),
     )
-
-    @F.pandas_udf(schema)
-    def det(
-        image_id: pd.Series, data: pd.Series, fmt: pd.Series,
-        w: pd.Series, h: pd.Series,
-    ) -> pd.DataFrame:
-        rows = []
-        for iid, b, f, ww, hh in zip(image_id, data, fmt, w, h):
-            try:
-                px = codecs.decode(b, f, int(ww), int(hh))
-                rows.append(orientation_one(px, str(iid)))
-            except Exception:  # noqa: BLE001
-                rows.append(
-                    {"planted_deg": None, "detected_deg": None, "recovered": None}
-                )
-        return pd.DataFrame(rows)
-
-    out = df.withColumn(
-        "_or",
-        det(F.col("image_id"), F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h")),
-    )
-    return out.select(*df.columns, "_or.*")
 
 
 # ------------------------------------------------- K5 analog: writeback
@@ -637,10 +601,9 @@ def enhanced_bytes_one(data: bytes, fmt: str, w: int, h: int) -> bytes:
     """Decode -> P11 lighten -> re-encode in the SAME format.  The
     transformed-bytes writeback contract of the reference's enhancement
     scripts (`document_lightener.py:247-254`, `rotate_any_angle.py:
-    151-158` save the transformed pixels back to image files) —
-    shared verbatim by the Spark stage and the single-node oracle."""
-    from . import codecs
-
+    151-158` save the transformed pixels back to image files).  The
+    single-node oracle calls this; the Spark stage runs the same
+    lighten_basic -> codecs.encode after with_image_stage's decode."""
     px = codecs.decode(data, fmt, w, h)
     return codecs.encode(lighten_basic(px), fmt)
 
@@ -650,23 +613,11 @@ def with_enhanced_bytes(df):
     transformed bytes, same format).  Decode/encode errors -> NULL (the
     error-channel contract); bytes stay inside one Arrow stage — the
     downstream query hashes them (md5) before any shuffle."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.BinaryType())
-    def enh(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
-        out = []
-        for b, f, ww, hh in zip(data, fmt, w, h):
-            try:
-                out.append(enhanced_bytes_one(b, f, int(ww), int(hh)))
-            except Exception:  # noqa: BLE001
-                out.append(None)
-        return pd.Series(out)
-
-    out = df.withColumn(
-        "enhanced", enh(F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h"))
+    return with_image_stage(
+        df,
+        "enhanced binary",
+        lambda px, image_id, fmt: {"enhanced": codecs.encode(lighten_basic(px), fmt)},
     )
-    return out.select(*df.columns, "enhanced")
 
 
 def telea_inpaint(px: np.ndarray, mask: np.ndarray, radius: int = 3) -> np.ndarray:

@@ -24,8 +24,8 @@ two implementations (same policy as qf_polish_stats).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
+from .enhance import with_image_stage
 from .imageops import grayscale, median3, otsu_threshold
 from .polish import clahe
 
@@ -102,29 +102,8 @@ def ocr_prep_stats_one(px: np.ndarray) -> dict:
 def with_ocr_prep(df):
     """(image_id, bytes, fmt, w, h, ...) -> + prep_h, prep_w,
     white_frac; decode failures null the columns (error channel)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from . import codecs
-
-    schema = T.StructType(
-        [
-            T.StructField("prep_h", T.IntegerType()),
-            T.StructField("prep_w", T.IntegerType()),
-            T.StructField("white_frac", T.DoubleType()),
-        ]
+    return with_image_stage(
+        df,
+        "prep_h int, prep_w int, white_frac double",
+        lambda px, image_id, fmt: ocr_prep_stats_one(px),
     )
-
-    @F.pandas_udf(schema)
-    def prep(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b, f, ww, hh in zip(data, fmt, w, h):
-            try:
-                px = codecs.decode(b, f, int(ww), int(hh))
-                rows.append(ocr_prep_stats_one(px))
-            except Exception:  # noqa: BLE001
-                rows.append({"prep_h": None, "prep_w": None, "white_frac": None})
-        return pd.DataFrame(rows)
-
-    out = df.withColumn("_o", prep(F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h")))
-    return out.select(*df.columns, "_o.*")

@@ -41,7 +41,6 @@ Design (100 TB shape):
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -216,9 +215,3 @@ class QualityFilterPipeline:
             "committed": len(done),
             "pending": self.n_parts - len(done),
         }
-
-    def write_summary(self) -> str:
-        path = os.path.join(self.out_dir, "SUMMARY.json")
-        with open(path, "w") as f:
-            json.dump(self.status(), f)
-        return path

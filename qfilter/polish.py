@@ -46,8 +46,8 @@ for cv2's reflect-101; parameters are the reference's.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
+from .enhance import with_image_stage
 from .imageops import _pad_edge, box_filter, grayscale
 
 __all__ = [
@@ -337,31 +337,8 @@ def with_polish_stats(df):
     polished_std, edge_frac (the P11 full-polish summaries), Arrow
     batched; decode/kernel failures null the three columns (error
     channel, same contract as with_enhance_stats)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from . import codecs
-
-    schema = T.StructType(
-        [
-            T.StructField("polished_mean", T.DoubleType()),
-            T.StructField("polished_std", T.DoubleType()),
-            T.StructField("edge_frac", T.DoubleType()),
-        ]
+    return with_image_stage(
+        df,
+        "polished_mean double, polished_std double, edge_frac double",
+        lambda px, image_id, fmt: polish_stats_one(px),
     )
-
-    @F.pandas_udf(schema)
-    def pol(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b, f, ww, hh in zip(data, fmt, w, h):
-            try:
-                px = codecs.decode(b, f, int(ww), int(hh))
-                rows.append(polish_stats_one(px))
-            except Exception:  # noqa: BLE001
-                rows.append(
-                    {"polished_mean": None, "polished_std": None, "edge_frac": None}
-                )
-        return pd.DataFrame(rows)
-
-    out = df.withColumn("_p", pol(F.col("bytes"), F.col("fmt"), F.col("w"), F.col("h")))
-    return out.select(*df.columns, "_p.*")

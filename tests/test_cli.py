@@ -1,5 +1,6 @@
 """`qfilter train`: the CLI fits each family on the shared training
-sample and writes an artifact that loads back to the same model."""
+sample and writes an artifact that loads back to the same model.
+`qfilter enhance`: each mode writes its stage's output."""
 
 from __future__ import annotations
 
@@ -53,3 +54,47 @@ def test_train_writes_the_sample_fit(spark, features_parquet, tmp_path, family):
     else:
         w, b = load_model(out)
         assert np.array_equal(w, want[0]) and b == want[1]
+
+
+@pytest.fixture(scope="module")
+def images_slice(spark, smoke_dir, tmp_path_factory):
+    """Three decodable fixture rows plus one planted decode-error row."""
+    import pyarrow.parquet as pq
+
+    labels = pq.read_table(
+        os.path.join(smoke_dir, "labels_ref.parquet"), columns=["image_id", "error"]
+    ).to_pylist()
+    ids = sorted(r["image_id"] for r in labels if r["error"] is None)[:3]
+    ids += sorted(r["image_id"] for r in labels if r["error"] is not None)[:1]
+    path = str(tmp_path_factory.mktemp("cli") / "images.parquet")
+    spark.read.parquet(os.path.join(smoke_dir, "images.parquet")).filter(
+        F.col("image_id").isin(ids)
+    ).write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("mode", ["stats", "bytes", "lines", "polish", "ocr-prep"])
+def test_enhance_writes_the_stage_output(spark, images_slice, tmp_path, mode):
+    from qfilter.cli import main
+    from qfilter.enhance import with_enhance_stats, with_enhanced_bytes, with_line_features
+    from qfilter.ocrprep import with_ocr_prep
+    from qfilter.polish import with_polish_stats
+
+    out = str(tmp_path / mode)
+    argv = ["enhance", "--input", images_slice, "--out", out, "--mode", mode,
+            "--master", spark.sparkContext.master]
+    assert main(argv) == 0
+
+    want = {
+        "stats": with_enhance_stats,
+        "bytes": with_enhanced_bytes,
+        "lines": with_line_features,
+        "polish": with_polish_stats,
+        "ocr-prep": with_ocr_prep,
+    }[mode](spark.read.parquet(images_slice))
+    if mode != "bytes":
+        want = want.drop("bytes")
+    got = spark.read.parquet(out)
+    assert got.dtypes == want.dtypes
+    key = lambda r: r.image_id  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)

@@ -87,20 +87,6 @@ def test_deskew_recovers_angle(true_angle):
     assert abs(est + true_angle) <= 0.6, (true_angle, est)
 
 
-def test_line_feature_stage(spark, smoke_dir):
-    import os
-
-    from qfilter.enhance import with_line_features
-
-    img = spark.read.parquet(os.path.join(smoke_dir, "images.parquet")).limit(60)
-    out = with_line_features(img).select(
-        "image_id", "has_line", "line_orientation", "line_score", "n_line_boxes"
-    )
-    rows = out.collect()
-    assert len(rows) == 60
-    assert all(r.line_score >= 0.0 for r in rows)
-
-
 def _synth_doc(seed: int = 3) -> np.ndarray:
     """Dim, unevenly lit page with dark 'text' strokes."""
     rng = np.random.default_rng(seed)
@@ -211,25 +197,77 @@ def test_orientation_vote_recovers_quarter_turns(k):
     assert (k + detected) % 4 == 0, (k, v)
 
 
-def test_orientation_stage_matches_single_node(spark, smoke_dir):
+def _stage_cases():
+    """stage -> (production stage, single-node row dict from (fixture
+    row, decoded px), the error row)."""
+    from qfilter import enhance, ocrprep, polish
+
+    def lines(r, px):
+        d = enhance.detect_lines(grayscale(px), min_len_ratio=0.5)
+        return {"has_line": d["has_line"], "line_orientation": d["orientation"],
+                "line_score": d["score"], "n_line_boxes": len(d["bboxes"])}
+
+    def enhanced(r, px):
+        return {"enhanced": enhance.enhanced_bytes_one(bytes(r.bytes), r.fmt, r.w, r.h)}
+
+    return {
+        "lines": (enhance.with_line_features, lines, {
+            "has_line": False, "line_orientation": None,
+            "line_score": 0.0, "n_line_boxes": 0}),
+        "enhance_stats": (enhance.with_enhance_stats,
+                          lambda r, px: enhance.enhance_stats_one(px), None),
+        "orientation": (enhance.with_orientation,
+                        lambda r, px: enhance.orientation_one(px, r.image_id), None),
+        "enhanced_bytes": (enhance.with_enhanced_bytes, enhanced, None),
+        "polish": (polish.with_polish_stats,
+                   lambda r, px: polish.polish_stats_one(px), None),
+        "ocr_prep": (ocrprep.with_ocr_prep,
+                     lambda r, px: ocrprep.ocr_prep_stats_one(px), None),
+    }
+
+
+@pytest.mark.parametrize(
+    "stage",
+    ["lines", "enhance_stats", "orientation", "enhanced_bytes", "polish", "ocr_prep"],
+)
+def test_image_stage_matches_single_node(spark, smoke_dir, stage):
+    """Every per-image Arrow stage equals its kernel run without Spark,
+    row for row, on a slice holding the planted decode-error rows; an
+    error row is all-NULL (line features: its fixed error row)."""
     import os
 
-    from qfilter import codecs
-    from qfilter.enhance import orientation_one, with_orientation
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
-    img = spark.read.parquet(os.path.join(smoke_dir, "images.parquet")).limit(40)
-    got = {r.image_id: r for r in with_orientation(img).collect()}
-    rows = img.select("image_id", "bytes", "fmt", "w", "h").collect()
-    for r in rows:
+    from qfilter import codecs
+
+    with_stage, single_node, err_row = _stage_cases()[stage]
+    labels = pq.read_table(
+        os.path.join(smoke_dir, "labels_ref.parquet"), columns=["image_id", "error"]
+    ).to_pylist()
+    ids = [r["image_id"] for r in labels if r["error"] is not None]
+    ids += sorted(r["image_id"] for r in labels if r["error"] is None)[:6]
+    img = spark.read.parquet(os.path.join(smoke_dir, "images.parquet")).filter(
+        F.col("image_id").isin(ids)
+    )
+    out = with_stage(img)
+    cols = out.columns[len(img.columns):]
+    assert out.columns[: len(img.columns)] == img.columns
+    got = {r.image_id: r for r in out.collect()}
+    assert sorted(got) == sorted(ids)
+    n_err = 0
+    for r in img.select("image_id", "bytes", "fmt", "w", "h").collect():
         try:
             px = codecs.decode(bytes(r.bytes), r.fmt, r.w, r.h)
-            want = orientation_one(px, r.image_id)
         except Exception:
-            want = {"planted_deg": None, "detected_deg": None, "recovered": None}
-        g = got[r.image_id]
-        assert (g.planted_deg, g.detected_deg, g.recovered) == (
-            want["planted_deg"], want["detected_deg"], want["recovered"]
-        ), r.image_id
+            n_err += 1
+            want = err_row or dict.fromkeys(cols)
+        else:
+            want = single_node(r, px)
+        assert sorted(want) == sorted(cols), stage
+        for c in cols:
+            assert got[r.image_id][c] == want[c], (r.image_id, c)
+    assert n_err >= 1
 
 
 def test_orientation_axis_accuracy_on_clean_pages(spark, smoke_dir):
