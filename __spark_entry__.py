@@ -47,45 +47,18 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 def _nlp_sidecar(sf_dir: str) -> str:
-    from make_oracle_sidecars import ensure_sidecar
+    from make_oracle_sidecars import ensure
 
-    return ensure_sidecar(sf_dir)
+    return ensure("docs_nlp", sf_dir)
 
 
 def _xxh_sidecars(sf_dir: str) -> dict[str, str]:
     """Pure-Python XXH64-based oracle tables (see oracle/xxh64.py) for
-    the xxhash64-dependent queries plus the single-node media oracles."""
-    from make_oracle_sidecars import (
-        ensure_sidecar_audio,
-        ensure_sidecar_enhance,
-        ensure_sidecar_enhanced_bytes,
-        ensure_sidecar_ivf_ann,
-        ensure_sidecar_lines,
-        ensure_sidecar_lsh_ann,
-        ensure_sidecar_minhash_pairs,
-        ensure_sidecar_ocr_prep,
-        ensure_sidecar_orientation,
-        ensure_sidecar_polish,
-        ensure_sidecar_simhash,
-        ensure_sidecar_thumbs,
-        ensure_sidecar_video,
-    )
+    the xxhash64-dependent queries plus the single-node media oracles:
+    every registered sidecar, keyed by its registry name."""
+    from make_oracle_sidecars import ensure_all
 
-    return {
-        "simhash": ensure_sidecar_simhash(sf_dir),
-        "minhash_pairs": ensure_sidecar_minhash_pairs(sf_dir),
-        "lsh_ann": ensure_sidecar_lsh_ann(sf_dir),
-        "ivf_ann": ensure_sidecar_ivf_ann(sf_dir),
-        "thumbs": ensure_sidecar_thumbs(_fixture_dir()),
-        "audio": ensure_sidecar_audio(),
-        "video": ensure_sidecar_video(),
-        "lines": ensure_sidecar_lines(_fixture_dir()),
-        "enhance": ensure_sidecar_enhance(_fixture_dir()),
-        "enhanced_bytes": ensure_sidecar_enhanced_bytes(_fixture_dir()),
-        "orientation": ensure_sidecar_orientation(_fixture_dir()),
-        "polish": ensure_sidecar_polish(_fixture_dir()),
-        "ocr_prep": ensure_sidecar_ocr_prep(_fixture_dir()),
-    }
+    return ensure_all(sf_dir, _fixture_dir())
 
 
 # ---------------------------------------------------------------- entry
@@ -947,7 +920,7 @@ def oracle_sql() -> dict[str, str]:
     from qfilter.model import CV_K as _cvk
     from qfilter.model import TRAIN_SAMPLE_MAX as _tsm
 
-    _zoo = zoo_cv_cache(fdir, k=_cvk)
+    _zoo = zoo_cv_cache(fdir)
     _cv_cases = []
     for _f, (_fw, _fb) in enumerate(_zoo["lr"]):
         _ze = f"CAST('{_fb!r}' AS DOUBLE)"
@@ -1888,15 +1861,15 @@ def oracle_sql() -> dict[str, str]:
             """
         ),
         # mm_audio / mm_video: single-node numpy oracle over the same
-        # deterministic synthetic bytes (make_oracle_sidecars.build_*),
+        # deterministic synthetic bytes (make_oracle_sidecars.*_table),
         # doubles bit-identical by construction (same op order).
         "mm_audio_features": (
             f"SELECT audio_id, duration_s, rms, zero_crossings, peak "
-            f"FROM read_parquet('{xxh['audio']}')"
+            f"FROM read_parquet('{xxh['audio_features']}')"
         ),
         "mm_video_frames": (
             f"SELECT video_id, frame_idx, mean_brightness, contrast "
-            f"FROM read_parquet('{xxh['video']}')"
+            f"FROM read_parquet('{xxh['video_frames']}')"
         ),
         # W2 weighted median: cumulative-weight window, ANSI on both
         # engines (integer weights -> exact float64 running sums)
@@ -1915,7 +1888,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # qf_line_features / qf_enhance_stats: single-node numpy oracle
         # over the identical fixture bytes (make_oracle_sidecars.
-        # build_lines / build_enhance) — same kernels run without Spark,
+        # lines_table / enhance_table) — same kernels run without Spark,
         # doubles bit-identical by construction.
         "qf_line_features": (
             f"SELECT image_id, has_line, line_orientation, line_score, "

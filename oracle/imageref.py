@@ -181,12 +181,13 @@ def _otsu_inv_ref(gray: np.ndarray) -> np.ndarray:
 
 # --------------------------------------------------------- line twin
 
-def detect_lines_ref(
-    gray: np.ndarray,
-    min_len_ratio: float = 0.9,
-    max_thickness_px: int = 8,
-    table_many_lines_threshold: int = 3,
-) -> dict:
+MAX_THICKNESS = 8  # px, thickest box still read as a line
+TABLE_LINES = 3  # boxes from which a spread-out set is a table
+DELINE_RATIO = 0.5  # line-removal opening length / page side
+DELINE_DILATE = 3  # line-removal mask dilation, px
+
+
+def detect_lines_ref(gray: np.ndarray, min_len_ratio: float) -> dict:
     h, w = gray.shape
     binv = _otsu_inv_ref(gray)
     hor = morph_open_ref(binv, 1, max(10, int(min_len_ratio * w)))
@@ -197,9 +198,9 @@ def detect_lines_ref(
         for c in cc_ref(dilate_ref(mask, 3, 3)):
             x, y, x2, y2 = c["bbox"]
             ww, hh = x2 - x, y2 - y
-            if orient == "h" and ww >= int(min_len_ratio * w) and hh <= max_thickness_px:
+            if orient == "h" and ww >= int(min_len_ratio * w) and hh <= MAX_THICKNESS:
                 boxes.append((x, y, ww, hh))
-            if orient == "v" and hh >= int(min_len_ratio * h) and ww <= max_thickness_px:
+            if orient == "v" and hh >= int(min_len_ratio * h) and ww <= MAX_THICKNESS:
                 boxes.append((x, y, ww, hh))
         return boxes
 
@@ -218,7 +219,7 @@ def detect_lines_ref(
         v_boxes.append((w - band, 0, band, h))
 
     def is_table(boxes, orient):
-        if len(boxes) < table_many_lines_threshold:
+        if len(boxes) < TABLE_LINES:
             return False
         coords = [b[1] for b in boxes] if orient == "h" else [b[0] for b in boxes]
         return (max(coords) - min(coords)) / (h if orient == "h" else w) > 0.6
@@ -234,7 +235,7 @@ def detect_lines_ref(
         lengths = [(b[2] / w) if orient == "h" else (b[3] / h) for b in boxes]
         thicks = [b[3] if orient == "h" else b[2] for b in boxes]
         return 0.8 * max(lengths) + 0.2 * max(
-            0.0, 1.0 - min(thicks) / max(1.0, float(max_thickness_px))
+            0.0, 1.0 - min(thicks) / max(1.0, float(MAX_THICKNESS))
         )
 
     hs, vs = score(h_boxes, "h"), score(v_boxes, "v")
@@ -307,12 +308,12 @@ def lighten_stretch_ref(px):
     return out.astype(np.uint8)
 
 
-def remove_lines_ref(px, min_len_ratio: float = 0.5, line_thickness: int = 3):
+def remove_lines_ref(px):
     gray = grayscale_ref(px)
     h, w = gray.shape
     binv = _otsu_inv_ref(gray)
-    hor = morph_open_ref(binv, 1, max(10, int(min_len_ratio * w)))
-    ver = morph_open_ref(binv, max(10, int(min_len_ratio * h)), 1)
+    hor = morph_open_ref(binv, 1, max(10, int(DELINE_RATIO * w)))
+    ver = morph_open_ref(binv, max(10, int(DELINE_RATIO * h)), 1)
     mask = np.maximum(hor, ver)
     band = max(4, int(0.01 * min(w, h)))
     thr = 0.12
@@ -324,7 +325,7 @@ def remove_lines_ref(px, min_len_ratio: float = 0.5, line_thickness: int = 3):
         mask[:, :band] = 255
     if np.count_nonzero(binv[:, w - band :]) / binv[:, w - band :].size > thr:
         mask[:, w - band :] = 255
-    mask = dilate_ref(mask, line_thickness, line_thickness) != 0
+    mask = dilate_ref(mask, DELINE_DILATE, DELINE_DILATE) != 0
 
     out = px.copy()
     keep = (~mask).astype(np.float64)

@@ -61,17 +61,19 @@ __all__ = [
 ]
 
 
+# P13/P14 line predicates, as `line_cleaner.py` hard-codes them
+LINE_MAX_THICKNESS_PX = 8  # a detected line box is at most this thick
+TABLE_MANY_LINES = 3  # this many spread-out boxes read as a table, not a stray rule
+REMOVE_MIN_LEN_RATIO = 0.5  # P14 opening kernel length, as a fraction of the page side
+REMOVE_LINE_THICKNESS = 3  # P14 mask dilation, px
+
+
 def _otsu_inv(gray: np.ndarray) -> np.ndarray:
     t = otsu_threshold(gray)
     return ((gray <= t) * 255).astype(np.uint8)
 
 
-def detect_lines(
-    gray: np.ndarray,
-    min_len_ratio: float = 0.9,
-    max_thickness_px: int = 8,
-    table_many_lines_threshold: int = 3,
-) -> dict:
+def detect_lines(gray: np.ndarray, min_len_ratio: float) -> dict:
     """P13: stray ruled-line detector (see module doc for the recipe)."""
     h, w = gray.shape
     binv = _otsu_inv(gray)
@@ -86,9 +88,9 @@ def detect_lines(
         for c in comps:
             x, y, x2, y2 = c["bbox"]
             ww, hh = x2 - x, y2 - y
-            if orient == "h" and ww >= int(min_len_ratio * w) and hh <= max_thickness_px:
+            if orient == "h" and ww >= int(min_len_ratio * w) and hh <= LINE_MAX_THICKNESS_PX:
                 boxes.append((x, y, ww, hh))
-            if orient == "v" and hh >= int(min_len_ratio * h) and ww <= max_thickness_px:
+            if orient == "v" and hh >= int(min_len_ratio * h) and ww <= LINE_MAX_THICKNESS_PX:
                 boxes.append((x, y, ww, hh))
         return boxes
 
@@ -107,7 +109,7 @@ def detect_lines(
         v_boxes.append((w - band, 0, band, h))
 
     def is_table(boxes, orient):
-        if len(boxes) < table_many_lines_threshold:
+        if len(boxes) < TABLE_MANY_LINES:
             return False
         coords = [b[1] for b in boxes] if orient == "h" else [b[0] for b in boxes]
         spread = (max(coords) - min(coords)) / (h if orient == "h" else w)
@@ -124,7 +126,7 @@ def detect_lines(
         lengths = [(b[2] / w) if orient == "h" else (b[3] / h) for b in boxes]
         thicks = [b[3] if orient == "h" else b[2] for b in boxes]
         s_len = max(lengths)
-        s_th = max(0.0, 1.0 - min(thicks) / max(1.0, float(max_thickness_px)))
+        s_th = max(0.0, 1.0 - min(thicks) / max(1.0, float(LINE_MAX_THICKNESS_PX)))
         return 0.8 * s_len + 0.2 * s_th
 
     hs, vs = score(h_boxes, "h"), score(v_boxes, "v")
@@ -135,12 +137,7 @@ def detect_lines(
     return {"has_line": True, "orientation": "v", "score": float(vs), "bboxes": v_boxes}
 
 
-def remove_lines(
-    px: np.ndarray,
-    min_len_ratio: float = 0.5,
-    line_thickness: int = 3,
-    fill: str = "paper",
-) -> np.ndarray:
+def remove_lines(px: np.ndarray, fill: str = "paper") -> np.ndarray:
     """P14: erase detected line pixels.
 
     ``fill`` picks the reconstruction:
@@ -156,8 +153,8 @@ def remove_lines(
     gray = grayscale(px)
     h, w = gray.shape
     binv = _otsu_inv(gray)
-    hor = morph_open(binv, 1, max(10, int(min_len_ratio * w)))
-    ver = morph_open(binv, max(10, int(min_len_ratio * h)), 1)
+    hor = morph_open(binv, 1, max(10, int(REMOVE_MIN_LEN_RATIO * w)))
+    ver = morph_open(binv, max(10, int(REMOVE_MIN_LEN_RATIO * h)), 1)
     mask = np.maximum(hor, ver)
     band = max(4, int(0.01 * min(w, h)))
     thr = 0.12
@@ -169,7 +166,7 @@ def remove_lines(
         mask[:, :band] = 255
     if np.count_nonzero(binv[:, w - band :]) / binv[:, w - band :].size > thr:
         mask[:, w - band :] = 255
-    mask = dilate(mask, line_thickness, line_thickness) != 0
+    mask = dilate(mask, REMOVE_LINE_THICKNESS, REMOVE_LINE_THICKNESS) != 0
 
     if fill == "telea":
         return telea_inpaint(px, mask.astype(np.uint8) * 255, radius=3)
@@ -602,8 +599,8 @@ def enhanced_bytes_one(data: bytes, fmt: str, w: int, h: int) -> bytes:
     transformed-bytes writeback contract of the reference's enhancement
     scripts (`document_lightener.py:247-254`, `rotate_any_angle.py:
     151-158` save the transformed pixels back to image files).  The
-    single-node oracle calls this; the Spark stage runs the same
-    lighten_basic -> codecs.encode after with_image_stage's decode."""
+    Spark stage and the single-node oracle sidecar run the same
+    lighten_basic -> codecs.encode after their one decode per row."""
     px = codecs.decode(data, fmt, w, h)
     return codecs.encode(lighten_basic(px), fmt)
 

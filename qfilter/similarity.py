@@ -132,11 +132,17 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOT = (
-    "aggregate(zip_with(a.v, b.v, (x, y) -> x * y), cast(0.0 as double),"
-    " (acc, x) -> acc + x)"
-)
 _NORM = "sqrt(aggregate(transform({c}, x -> x * x), cast(0.0 as double), (acc, x) -> acc + x))"
+_DOT = "aggregate(zip_with(av, bv, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
+
+
+def _cosine(pairs: DataFrame, left: str, right: str) -> DataFrame:
+    """Candidate pairs carrying vectors ``av``/``bv`` and norms
+    ``na``/``nb`` -> (left, right, cos): the dot is the same
+    left-to-right fold as the DuckDB oracle, so cos is bit-identical."""
+    return pairs.withColumn(
+        "cos", F.expr(_DOT) / (F.col("na") * F.col("nb"))
+    ).select(left, right, "cos")
 
 
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,16 +184,12 @@ def cosine_topk(
     e = _emb(spark, sf_dir).select(
         "vec_id", "v", F.expr(_NORM.format(c="v")).alias("norm")
     )
-    a = e.select(F.col("vec_id").alias("q"), "v", F.col("norm").alias("na")).alias("a")
-    b = e.select(F.col("vec_id").alias("n"), "v", F.col("norm").alias("nb")).alias("b")
-    pairs = (
-        a.crossJoin(b)
-        .filter(F.col("q") != F.col("n"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("cos", F.col("dot") / (F.col("na") * F.col("nb")))
-        .select("q", "n", "cos")
-    )
-    return _rank_topk(pairs, k)
+    a = e.select(F.col("vec_id").alias("q"), F.col("v").alias("av"),
+                 F.col("norm").alias("na"))
+    b = e.select(F.col("vec_id").alias("n"), F.col("v").alias("bv"),
+                 F.col("norm").alias("nb"))
+    pairs = a.crossJoin(b).filter(F.col("q") != F.col("n"))
+    return _rank_topk(_cosine(pairs, "q", "n"), k)
 
 
 def cosine_topk_bucketed(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -207,21 +209,15 @@ def cosine_topk_bucketed(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFr
         "vec_id", "label", "v", F.expr(_NORM.format(c="v")).alias("norm")
     ).withColumn("sub", F.expr(_sub_code_expr(m)))
     a = e.select(
-        F.col("vec_id").alias("q"), F.col("label").alias("lb"), "sub", "v",
-        F.col("norm").alias("na"),
-    ).alias("a")
-    b = e.select(
-        F.col("vec_id").alias("n"), F.col("label").alias("lb"), "sub", "v",
-        F.col("norm").alias("nb"),
-    ).alias("b")
-    pairs = (
-        a.join(b, ["lb", "sub"])
-        .filter(F.col("q") != F.col("n"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("cos", F.col("dot") / (F.col("na") * F.col("nb")))
-        .select("q", "n", "cos")
+        F.col("vec_id").alias("q"), F.col("label").alias("lb"), "sub",
+        F.col("v").alias("av"), F.col("norm").alias("na"),
     )
-    return _rank_topk(pairs, k)
+    b = e.select(
+        F.col("vec_id").alias("n"), F.col("label").alias("lb"), "sub",
+        F.col("v").alias("bv"), F.col("norm").alias("nb"),
+    )
+    pairs = a.join(b, ["lb", "sub"]).filter(F.col("q") != F.col("n"))
+    return _rank_topk(_cosine(pairs, "q", "n"), k)
 
 
 def cosine_neardup_pairs(
@@ -256,29 +252,23 @@ def cosine_neardup_pairs(
         .withColumn("sub", F.expr(_sub_code_expr(m)))
     )
     a = allv.select(
-        F.col("vec_id").alias("id1"), F.col("label").alias("lb"), "sub", "v",
-        F.col("norm").alias("na"),
-    ).alias("a")
-    b = allv.select(
-        F.col("vec_id").alias("id2"), F.col("label").alias("lb"), "sub", "v",
-        F.col("norm").alias("nb"),
-    ).alias("b")
-    return (
-        a.join(b, ["lb", "sub"])
-        .filter(F.col("id1") < F.col("id2"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("cos", F.col("dot") / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id1", "id2", "cos")
+        F.col("vec_id").alias("id1"), F.col("label").alias("lb"), "sub",
+        F.col("v").alias("av"), F.col("norm").alias("na"),
     )
+    b = allv.select(
+        F.col("vec_id").alias("id2"), F.col("label").alias("lb"), "sub",
+        F.col("v").alias("bv"), F.col("norm").alias("nb"),
+    )
+    pairs = a.join(b, ["lb", "sub"]).filter(F.col("id1") < F.col("id2"))
+    return _cosine(pairs, "id1", "id2").filter(F.col("cos") >= threshold)
 
 
-def _planes(dim: int, m: int = LSH_PLANES) -> np.ndarray:
+def _planes(dim: int, m: int) -> np.ndarray:
     rng = np.random.default_rng(np.random.PCG64(LSH_SEED))
     return rng.standard_normal((LSH_TABLES * m, dim))
 
 
-def lsh_bucket_ids(mat: np.ndarray, m: int = LSH_PLANES) -> np.ndarray:
+def lsh_bucket_ids(mat: np.ndarray, m: int) -> np.ndarray:
     """(n, dim) float64 -> (n, L) int32 bucket ids, m planes/table.
 
     Projections use a strictly sequential per-row fold (cumsum), NOT
@@ -343,19 +333,7 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
                   F.col("norm").alias("na"))
     nb = e.select(F.col("vec_id").alias("n"), F.col("v").alias("bv"),
                   F.col("norm").alias("nb"))
-    pairs = (
-        cand.join(qa, "q").join(nb, "n")
-        .withColumn(
-            "dot",
-            F.expr(
-                "aggregate(zip_with(av, bv, (x, y) -> x * y), cast(0.0 as double),"
-                " (acc, x) -> acc + x)"
-            ),
-        )
-        .withColumn("cos", F.col("dot") / (F.col("na") * F.col("nb")))
-        .select("q", "n", "cos")
-    )
-    return _rank_topk(pairs, k)
+    return _rank_topk(_cosine(cand.join(qa, "q").join(nb, "n"), "q", "n"), k)
 
 
 # ------------------------------------------------------------- IVF ANN
@@ -477,20 +455,8 @@ def ivf_ann_topk(
         F.col("vec_id").alias("q"), F.col("v").alias("av"),
         F.col("norm").alias("na"), F.explode("probes").alias("list_id"),
     )
-    pairs = (
-        qry.join(idx, "list_id")
-        .filter(F.col("q") != F.col("n"))
-        .withColumn(
-            "dot",
-            F.expr(
-                "aggregate(zip_with(av, bv, (x, y) -> x * y), cast(0.0 as double),"
-                " (acc, x) -> acc + x)"
-            ),
-        )
-        .withColumn("cos", F.col("dot") / (F.col("na") * F.col("nb")))
-        .select("q", "n", "cos")
-    )
-    return _rank_topk(pairs, k)
+    pairs = qry.join(idx, "list_id").filter(F.col("q") != F.col("n"))
+    return _rank_topk(_cosine(pairs, "q", "n"), k)
 
 
 def ann_recall_at_5(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:

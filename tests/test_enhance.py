@@ -55,7 +55,7 @@ def test_no_line_on_clean_page():
 
 def test_remove_lines_erases_rule_keeps_text():
     px = _page_with_line(horizontal=True)
-    out = remove_lines(px, min_len_ratio=0.5, line_thickness=3)
+    out = remove_lines(px)
     mid = grayscale(out)[58:62, 20:-20]
     assert mid.mean() > 200  # rule replaced by paper
     d = detect_lines(grayscale(out), min_len_ratio=0.8)

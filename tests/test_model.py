@@ -90,12 +90,12 @@ def test_cv_models_match_labels_ref_cv(spark):
     sample) must be bit-identical to the labels_ref oracle twin — the
     basis of the qf_model_cv oracle."""
     from make_fixtures import ensure_fixtures
-    from make_oracle_sidecars import model_cv_weights_from_labels_ref
+    from make_oracle_sidecars import cv_weights_from_labels_ref
 
     from qfilter.model import CV_K, cv_models, fit_logreg
 
     spark_models = cv_models(_spark_features(spark), fit_logreg)
-    oracle_models = model_cv_weights_from_labels_ref(ensure_fixtures("smoke"), k=CV_K)
+    oracle_models = cv_weights_from_labels_ref(ensure_fixtures("smoke"), fit_logreg)
     assert len(spark_models) == len(oracle_models) == CV_K
     for (ws, bs), (wo, bo) in zip(spark_models, oracle_models):
         assert np.array_equal(ws, wo) and bs == bo
@@ -125,12 +125,12 @@ def test_gb_spark_training_matches_labels_ref_training(spark):
     the single-node labels_ref retrain must produce bit-identical stump
     arrays — the basis of the qf_model_zoo oracle."""
     from make_fixtures import ensure_fixtures
-    from make_oracle_sidecars import gb_cv_weights_from_labels_ref
+    from make_oracle_sidecars import cv_weights_from_labels_ref
 
     from qfilter.model import cv_models, fit_gb_stumps
 
     ms = cv_models(_spark_features(spark), fit_gb_stumps)
-    mo = gb_cv_weights_from_labels_ref(ensure_fixtures("smoke"))
+    mo = cv_weights_from_labels_ref(ensure_fixtures("smoke"), fit_gb_stumps)
     assert len(ms) == len(mo)
     for a, b in zip(ms, mo):
         assert a["f0"] == b["f0"]
@@ -207,26 +207,22 @@ def test_rf_svm_spark_training_matches_labels_ref(spark):
     training == single-node labels_ref retraining, exactly (the
     qf_model_zoo oracle embeds these as literals)."""
     from make_fixtures import ensure_fixtures
-    from make_oracle_sidecars import (
-        rf_cv_weights_from_labels_ref,
-        svm_cv_weights_from_labels_ref,
-        svm_rff_cv_weights_from_labels_ref,
-    )
+    from make_oracle_sidecars import cv_weights_from_labels_ref
 
     from qfilter.model import CV_K, cv_models, fit_rf_lite, fit_svm_linear, fit_svm_rff
 
     feats = _spark_features(spark)
     fdir = ensure_fixtures("smoke")
-    for a, b in zip(cv_models(feats, fit_rf_lite), rf_cv_weights_from_labels_ref(fdir)):
+    for a, b in zip(cv_models(feats, fit_rf_lite), cv_weights_from_labels_ref(fdir, fit_rf_lite)):
         assert len(a) == len(b)
         for ta, tb in zip(a, b):
             assert ta == tb
     for (wa, ba), (wb, bb) in zip(
-        cv_models(feats, fit_svm_linear), svm_cv_weights_from_labels_ref(fdir)
+        cv_models(feats, fit_svm_linear), cv_weights_from_labels_ref(fdir, fit_svm_linear)
     ):
         assert np.array_equal(wa, wb) and ba == bb
     rff_s = cv_models(feats, fit_svm_rff)
-    rff_o = svm_rff_cv_weights_from_labels_ref(fdir)
+    rff_o = cv_weights_from_labels_ref(fdir, fit_svm_rff)
     assert len(rff_s) == len(rff_o) == CV_K
     for a, b in zip(rff_s, rff_o):
         for k in ("mu", "sd", "W", "B", "w", "b"):

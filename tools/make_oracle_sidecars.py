@@ -1,17 +1,26 @@
-"""Precompute pure-Python (no Spark) NLP outputs over the driver's
-`documents` tables -> parquet sidecars used as oracle inputs.
+"""Single-node oracle sidecars for the driver's correctness gate.
 
-The driver's correctness gate compares each Spark query against an
-ANSI-SQL oracle.  For ops whose semantics live in our own models
-(langid, BPE-ish token count, n-gram perplexity) the oracle is this
-module's single-node run, persisted to parquet; the SQL just SELECTs
-it.  Deterministic: same artifacts (`textops.default_bundle`) as the
+The gate compares each Spark query against an ANSI-SQL oracle.  For
+ops whose semantics live in our own code (the NLP models, JVM-side
+xxhash64, the ANN indexes, the image kernels, the model zoo) the
+oracle is this module's single-node run, persisted to parquet; the SQL
+just SELECTs it.  Deterministic: same artifacts and kernels as the
 executors load, same doubles bit-for-bit.
+
+Every parquet sidecar is one `SIDECARS` entry: which directory it
+reads, the function that returns its table, and the source files it
+depends on.  `ensure(name, in_dir)` rebuilds it only when the recorded
+hash of those files changed.
+
+Run:  python tools/make_oracle_sidecars.py SF_DIR [SF_DIR ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
 
 import numpy as np
@@ -21,18 +30,27 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from qfilter.textops import default_bundle, text_heuristics  # noqa: E402
+from oracle.xxh64 import (  # noqa: E402
+    spark_xxhash64_longs,
+    spark_xxhash64_str,
+)
 
-OUT_DIR = os.path.join(REPO, "oracle_out")
+OUT_DIR = os.path.join(REPO, "oracle_out")  # read at call time: perfbench re-points it
+_SELF_DEP = "tools/make_oracle_sidecars.py"
+_U64 = (1 << 64) - 1
 
 
-def build_for(sf_dir: str) -> str:
+# --------------------------------------------------------- documents
+
+def docs_nlp_table(sf_dir: str) -> pa.Table:
+    """langid, BPE-ish token count and n-gram perplexity per document,
+    from the same `textops.default_bundle` the executors load."""
+    from qfilter.textops import default_bundle, text_heuristics
+
     bundle = default_bundle()
-    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
-                         columns=["doc_id", "text"]).to_pylist()
     rows = {"doc_id": [], "lang_pred": [], "token_count": [], "words_count": [],
             "perplexity": []}
-    for d in docs:
+    for d in _read_docs(sf_dir):
         text = d["text"] or ""
         lang, _ = bundle.langid.predict(text)
         heur = text_heuristics(text)
@@ -42,17 +60,7 @@ def build_for(sf_dir: str) -> str:
         rows["token_count"].append(heur["token_count"])
         rows["words_count"].append(heur["words_count"])
         rows["perplexity"].append(float(ppl) if np.isfinite(ppl) else None)
-    os.makedirs(OUT_DIR, exist_ok=True)
-    name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(OUT_DIR, f"docs_nlp_{name}.parquet")
-    pq.write_table(pa.table(rows), path)
-    return path
-
-
-def ensure_sidecar(sf_dir: str) -> str:
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return _ensure(os.path.join(OUT_DIR, f"docs_nlp_{name}.parquet"),
-                   build_for, sf_dir, deps=("qfilter/textops.py",))
+    return pa.table(rows)
 
 
 # ------------------------------------------------- xxhash64-based oracles
@@ -61,17 +69,6 @@ def ensure_sidecar(sf_dir: str) -> str:
 # hashing runs JVM-side via F.xxhash64 — with the pure-Python XXH64 in
 # oracle/xxh64.py (empirically proven identical to Spark's in
 # tests/test_oracle_parity.py::test_xxh64_matches_spark).
-
-import re  # noqa: E402
-
-from oracle.xxh64 import (  # noqa: E402
-    spark_xxhash64_long,
-    spark_xxhash64_longs,
-    spark_xxhash64_str,
-)
-
-_U64 = (1 << 64) - 1
-
 
 def _spark_words(text: str) -> list[str]:
     """= F.split(F.trim(text), r'\\s+') — [''] for blank text."""
@@ -84,7 +81,7 @@ def _read_docs(sf_dir: str):
     ).to_pylist()
 
 
-def build_simhash(sf_dir: str) -> str:
+def simhash_table(sf_dir: str) -> pa.Table:
     rows = {"doc_id": [], "simhash": []}
     for d in _read_docs(sf_dir):
         votes = [0] * 64
@@ -99,11 +96,7 @@ def build_simhash(sf_dir: str) -> str:
         rows["doc_id"].append(d["doc_id"])
         # Spark sums shiftleft(1L, bit): bit 63 contributes Long.MIN
         rows["simhash"].append(sh - (1 << 64) if sh >> 63 else sh)
-    name = os.path.basename(os.path.normpath(sf_dir))
-    os.makedirs(OUT_DIR, exist_ok=True)
-    path = os.path.join(OUT_DIR, f"simhash_{name}.parquet")
-    pq.write_table(pa.table(rows), path)
-    return path
+    return pa.table(rows)
 
 
 def _doc_shingle_hashes(docs: list[dict], p: int) -> dict[int, set]:
@@ -124,10 +117,12 @@ def _doc_shingle_hashes(docs: list[dict], p: int) -> dict[int, set]:
     return out
 
 
-def build_minhash_pairs(sf_dir: str, n_perm: int = 32, bands: int = 8) -> str:
+def minhash_pairs_table(sf_dir: str) -> pa.Table:
+    """corpus.minhash_lsh_dup_pairs at the query's 32 permutations in
+    8 bands."""
     from qfilter.corpus import _minhash_coeffs
 
-    p = 2147483647
+    n_perm, bands, p = 32, 8, 2147483647
     a, b = _minhash_coeffs(n_perm)
     sigs = {}
     for doc_id, xs in _doc_shingle_hashes(_read_docs(sf_dir), p).items():
@@ -152,104 +147,246 @@ def build_minhash_pairs(sf_dir: str, n_perm: int = 32, bands: int = 8) -> str:
         rows["id1"].append(id1)
         rows["id2"].append(id2)
         rows["est_jaccard"].append(m / float(n_perm))
-    name = os.path.basename(os.path.normpath(sf_dir))
-    os.makedirs(OUT_DIR, exist_ok=True)
-    path = os.path.join(OUT_DIR, f"minhash_pairs_{name}.parquet")
-    pq.write_table(pa.table(rows), path)
-    return path
+    return pa.table(rows)
 
 
-def build_lsh_ann(sf_dir: str, k: int = 5) -> str:
-    """Replicates similarity.lsh_ann_topk: shared deterministic bucket
-    fn, candidate union over tables, exact left-to-right-fold rerank."""
-    from qfilter.similarity import LSH_TABLES, lsh_bucket_ids, lsh_planes_for_rows
+# ---------------------------------------------------------- ANN top-k
 
+def _read_embeddings(sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
     tbl = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
     )
-    ids = tbl.column("vec_id").to_pylist()
+    ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
     mat = np.asarray(
         [np.asarray(v, dtype=np.float64) for v in tbl.column("embedding").to_pylist()]
     )
-    # adaptive plane count from the same corpus row count the Spark
-    # side derives it from (len(mat) == the table count here)
-    buckets = lsh_bucket_ids(mat, lsh_planes_for_rows(len(mat)))  # (n, L)
-    byb: dict[tuple, list] = {}
-    for row, vid in enumerate(ids):
-        for t in range(LSH_TABLES):
-            byb.setdefault((t, int(buckets[row, t])), []).append(row)
-    cand = set()
-    for rows_ in byb.values():
-        for i in rows_:
-            for j in rows_:
-                if i != j:
-                    cand.add((i, j))
-    cand = sorted(cand)
+    return ids, mat
+
+
+def _rerank_top5(ids: np.ndarray, mat: np.ndarray, cand: list) -> pa.Table:
+    """Exact cosine rerank of (query row, neighbour row) candidates, in
+    the fold order of the Spark HOF aggregate (cumsum = strict
+    left-to-right sum); top 5 per query by (-cos, neighbour id), queries
+    in row order."""
     qi = np.array([c[0] for c in cand])
     ni = np.array([c[1] for c in cand])
-    # exact same fold order as the Spark HOF aggregate: cumsum = strict
-    # left-to-right sequential sum
     av, bv = mat[qi], mat[ni]
     dots = np.cumsum(av * bv, axis=1)[:, -1]
     na = np.sqrt(np.cumsum(av * av, axis=1)[:, -1])
     nb = np.sqrt(np.cumsum(bv * bv, axis=1)[:, -1])
-    cos = dots / (na * nb)
-    out = {"q": [], "rank": [], "n": []}
-    order: dict[int, list] = {}
-    for (i, j), c in zip(cand, cos):
-        order.setdefault(i, []).append((c, ids[j]))
-    for i, lst in order.items():
-        lst.sort(key=lambda t: (-t[0], t[1]))
-        for rank, (_, nid) in enumerate(lst[:k], start=1):
-            out["q"].append(ids[i])
-            out["rank"].append(rank)
-            out["n"].append(nid)
-    name = os.path.basename(os.path.normpath(sf_dir))
-    os.makedirs(OUT_DIR, exist_ok=True)
-    path = os.path.join(OUT_DIR, f"lsh_ann_{name}.parquet")
-    pq.write_table(
-        pa.table(out, schema=pa.schema([("q", pa.int64()), ("rank", pa.int32()),
-                                        ("n", pa.int64())])),
-        path,
+    order = np.lexsort((ids[ni], -(dots / (na * nb)), qi))
+    qs = qi[order]
+    pos = np.arange(len(qs))
+    # 1-based position inside each query's run of the sorted candidates
+    rank = pos - np.maximum.accumulate(np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0)) + 1
+    top = rank <= 5
+    return pa.table(
+        {"q": ids[qs[top]], "rank": rank[top].astype(np.int32), "n": ids[ni[order][top]]},
+        schema=pa.schema([("q", pa.int64()), ("rank", pa.int32()), ("n", pa.int64())]),
     )
-    return path
 
 
-def build_thumbs(fixture_dir: str, tw: int = 8, th: int = 8) -> str:
-    """Replicates multimodal.image_thumbnail + md5 over the fixture
-    images table (single-node run of the same codec path)."""
-    import hashlib
+def lsh_ann_table(sf_dir: str) -> pa.Table:
+    """Replicates similarity.lsh_ann_topk: shared deterministic bucket
+    fn, candidate union over tables, exact rerank."""
+    from qfilter.similarity import LSH_TABLES, lsh_bucket_ids, lsh_planes_for_rows
 
+    ids, mat = _read_embeddings(sf_dir)
+    # adaptive plane count from the same corpus row count the Spark
+    # side derives it from (len(mat) == the table count here)
+    buckets = lsh_bucket_ids(mat, lsh_planes_for_rows(len(mat)))  # (n, L)
+    byb: dict[tuple, list] = {}
+    for row in range(len(ids)):
+        for t in range(LSH_TABLES):
+            byb.setdefault((t, int(buckets[row, t])), []).append(row)
+    cand = {(i, j) for rows in byb.values() for i in rows for j in rows if i != j}
+    return _rerank_top5(ids, mat, sorted(cand))
+
+
+def ivf_ann_table(sf_dir: str) -> pa.Table:
+    """Replicates similarity.ivf_ann_topk single-node: same sorted
+    sample matrix -> same deterministic k-means centroids -> same
+    fold-based assignment and exact rerank."""
+    from qfilter.similarity import (
+        IVF_NPROBE, _ivf_assign, ivf_fit_centroids, ivf_k_for_rows,
+    )
+
+    ids, mat = _read_embeddings(sf_dir)
+    order = np.argsort(ids)
+    ids, mat = ids[order], mat[order]
+    # same adaptive K as the Spark side (len(mat) == the table count);
+    # ivf_fit_centroids itself caps the training slice at IVF_SAMPLE_MAX
+    cents = ivf_fit_centroids(mat, k=ivf_k_for_rows(len(mat)))
+    probes = _ivf_assign(mat, cents, IVF_NPROBE)  # (n, nprobe)
+    by_list: dict[int, list] = {}
+    for row, lid in enumerate(probes[:, 0]):
+        by_list.setdefault(int(lid), []).append(row)
+    cand = [(i, j) for i in range(len(ids)) for lid in probes[i]
+            for j in by_list.get(int(lid), ()) if j != i]
+    return _rerank_top5(ids, mat, cand)
+
+
+# ------------------------------------------------------- fixture images
+
+def _image_rows(fixture_dir: str, schema: pa.Schema, one, error: dict,
+                every: int) -> pa.Table:
+    """The oracle side of `enhance.with_image_stage`: decode each
+    fixture image once and hand it to ``one(px, row)``, which returns a
+    dict keyed by schema columns; a row whose decode or kernel raises
+    gets ``error`` (NULL in every column it leaves out), never a
+    failure.  ``every`` > 1 keeps only the crc32(image_id) % every == 0
+    subset, for the deliberately slow twins.  Schema columns the input
+    row has (image_id, fmt) are copied from it."""
+    import zlib
+
+    from qfilter import codecs
+
+    rows = []
+    images = pq.read_table(os.path.join(fixture_dir, "images.parquet"),
+                           columns=["image_id", "bytes", "fmt", "w", "h"])
+    for r in images.to_pylist():
+        if zlib.crc32(r["image_id"].encode("utf-8")) % every:
+            continue
+        try:
+            out = one(codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"])), r)
+        except Exception:  # noqa: BLE001 — error channel, as in the Spark stage
+            out = error
+        rows.append({c: r[c] if c in r else out.get(c) for c in schema.names})
+    return pa.Table.from_pylist(rows, schema=schema)
+
+
+def _md5(data: bytes) -> str:
+    """Hex lowercase, as Spark's F.md5."""
+    return hashlib.md5(data).hexdigest()
+
+
+def thumbs_table(fixture_dir: str) -> pa.Table:
+    """Replicates multimodal.image_thumbnail at 8x8 + md5 (single-node
+    run of the same codec path); an error row keeps tw/th."""
     from qfilter import codecs
     from qfilter.multimodal import _block_mean_resize
 
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    rows = {"image_id": [], "thumb_md5": [], "tw": [], "th": []}
-    for r in tbl:
-        try:
-            px = codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            thumb = codecs.encode(_block_mean_resize(px, tw, th), "png")
-            md5 = hashlib.md5(thumb).hexdigest()
-        except Exception:  # noqa: BLE001 — error rows: NULL md5 (Spark md5(NULL))
-            md5 = None
-        rows["image_id"].append(r["image_id"])
-        rows["thumb_md5"].append(md5)
-        rows["tw"].append(tw)
-        rows["th"].append(th)
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"thumbs_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([("image_id", pa.string()),
-                                         ("thumb_md5", pa.string()),
-                                         ("tw", pa.int32()), ("th", pa.int32())])),
-        path,
-    )
-    return path
+    def one(px, r):
+        return {"thumb_md5": _md5(codecs.encode(_block_mean_resize(px, 8, 8), "png")),
+                "tw": 8, "th": 8}
 
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), ("thumb_md5", pa.string()),
+                   ("tw", pa.int32()), ("th", pa.int32())]),
+        one,
+        {"tw": 8, "th": 8},
+        1,
+    )
+
+
+def lines_table(fixture_dir: str) -> pa.Table:
+    """`qf_line_features`: the P13 detector (enhance.detect_lines,
+    reference line_cleaner.py:151-225) at the query's 0.5 length ratio;
+    an error row reads (False, NULL, 0.0, 0), as the UDF's coalesce."""
+    from qfilter.enhance import detect_lines
+    from qfilter.imageops import grayscale
+
+    def one(px, r):
+        d = detect_lines(grayscale(px), 0.5)
+        return {"has_line": bool(d["has_line"]), "line_orientation": d["orientation"],
+                "line_score": float(d["score"]), "n_line_boxes": len(d["bboxes"])}
+
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), ("has_line", pa.bool_()),
+                   ("line_orientation", pa.string()), ("line_score", pa.float64()),
+                   ("n_line_boxes", pa.int32())]),
+        one,
+        {"has_line": False, "line_score": 0.0, "n_line_boxes": 0},
+        1,
+    )
+
+
+def enhance_table(fixture_dir: str) -> pa.Table:
+    """`qf_enhance_stats`: P11/P14/P15 scalar summaries
+    (enhance.enhance_stats_one, the identical numpy code path run
+    without Spark)."""
+    from qfilter.enhance import enhance_stats_one
+
+    cols = ["deskew_deg", "lightened_mean", "lightened_bg_mean",
+            "lightened_adv_mean", "delined_ink_frac"]
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), *[(c, pa.float64()) for c in cols]]),
+        lambda px, r: enhance_stats_one(px),
+        {},
+        1,
+    )
+
+
+def enhanced_bytes_table(fixture_dir: str) -> pa.Table:
+    """`qf_enhanced_bytes` (the K5-analog transformed-bytes writeback):
+    lighten -> re-encode in the row's format, as with_enhanced_bytes;
+    stores the md5 of the re-encoded stream (the query hashes it)."""
+    from qfilter import codecs
+    from qfilter.enhance import lighten_basic
+
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), ("fmt", pa.string()),
+                   ("enhanced_md5", pa.string())]),
+        lambda px, r: {"enhanced_md5": _md5(codecs.encode(lighten_basic(px), r["fmt"]))},
+        {},
+        1,
+    )
+
+
+def orientation_table(fixture_dir: str) -> pa.Table:
+    """`qf_orientation` (P17/P18 heuristic): enhance.orientation_one
+    run without Spark over the same bytes and planted rotations."""
+    from qfilter.enhance import orientation_one
+
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), ("planted_deg", pa.int32()),
+                   ("detected_deg", pa.int32()), ("recovered", pa.bool_())]),
+        lambda px, r: orientation_one(px, str(r["image_id"])),
+        {},
+        1,
+    )
+
+
+def polish_table(fixture_dir: str) -> pa.Table:
+    """`qf_polish_stats`, built from the INDEPENDENTLY-CODED twin
+    (`oracle.imageref.polish_stats_ref`, not the production
+    `qfilter.polish` kernels), so the driver parity compares two
+    implementations end to end.  Subset crc32 % 5 == 0: the twin is
+    deliberately slow machinery (~0.8 s/image)."""
+    from oracle.imageref import polish_stats_ref
+
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), ("polished_mean", pa.float64()),
+                   ("polished_std", pa.float64()), ("edge_frac", pa.float64())]),
+        lambda px, r: polish_stats_ref(px),
+        {},
+        5,
+    )
+
+
+def ocr_prep_table(fixture_dir: str) -> pa.Table:
+    """`qf_ocr_prep` (P8), built from the independently-coded twin
+    (`oracle.imageref.ocr_prep_ref`).  Subset crc32 % 20 == 0: the op
+    upscales every page to 1800 px."""
+    from oracle.imageref import ocr_prep_ref
+
+    return _image_rows(
+        fixture_dir,
+        pa.schema([("image_id", pa.string()), ("prep_h", pa.int32()),
+                   ("prep_w", pa.int32()), ("white_frac", pa.float64())]),
+        lambda px, r: ocr_prep_ref(px),
+        {},
+        20,
+    )
+
+
+# ------------------------------------------------------ synthetic media
 
 def _ulaw_decode_table() -> np.ndarray:
     """256-entry G.711 mu-law decode table, built scalar-by-scalar from
@@ -306,7 +443,7 @@ def _adpcm_decode_scalar(data: bytes) -> np.ndarray:
     return out
 
 
-def build_audio_features() -> str:
+def audio_features_table(_synth: None) -> pa.Table:
     """Single-node oracle for `mm_audio_features`: same bytes
     (make_fixtures.synth_audio_rows), arithmetic transcribed from
     qfilter/multimodal.py:audio_features in the same operation order
@@ -333,30 +470,25 @@ def build_audio_features() -> str:
         rows["rms"].append(float(np.sqrt(np.mean(x * x))) if len(x) else 0.0)
         rows["zero_crossings"].append(int(np.count_nonzero(np.diff(np.signbit(x)))))
         rows["peak"].append(float(np.abs(x).max()) if len(x) else 0.0)
-    os.makedirs(OUT_DIR, exist_ok=True)
-    path = os.path.join(OUT_DIR, "audio_features_synth.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("audio_id", pa.string()), ("duration_s", pa.float64()),
-            ("rms", pa.float64()), ("zero_crossings", pa.int64()),
-            ("peak", pa.float64()),
-        ])),
-        path,
-    )
-    return path
+    return pa.table(rows, schema=pa.schema([
+        ("audio_id", pa.string()), ("duration_s", pa.float64()),
+        ("rms", pa.float64()), ("zero_crossings", pa.int64()),
+        ("peak", pa.float64()),
+    ]))
 
 
-def build_video_frames(every_n: int = 5) -> str:
+def video_frames_table(_synth: None) -> pa.Table:
     """Single-node oracle for `mm_video_frames`: same frame bytes
-    (make_fixtures.synth_video_rows), per-sampled-frame gray mean/std
-    transcribed from qfilter/multimodal.py:video_frame_features."""
+    (make_fixtures.synth_video_rows), gray mean/std of every 5th frame
+    (the query's sampling step) transcribed from
+    qfilter/multimodal.py:video_frame_features."""
     from make_fixtures import synth_video_rows
 
     rows = {"video_id": [], "frame_idx": [], "mean_brightness": [],
             "contrast": []}
     for video_id, frames, n, w, h in synth_video_rows():
         frame_sz = w * h * 3
-        for fi in range(0, n, every_n):
+        for fi in range(0, n, 5):
             chunk = frames[fi * frame_sz : (fi + 1) * frame_sz]
             px = np.frombuffer(chunk, dtype=np.uint8).reshape(h, w, 3)
             f = px[..., 0] * 0.299 + px[..., 1] * 0.587 + px[..., 2] * 0.114
@@ -365,282 +497,110 @@ def build_video_frames(every_n: int = 5) -> str:
             rows["frame_idx"].append(fi)
             rows["mean_brightness"].append(float(g.mean()))
             rows["contrast"].append(float(g.std()))
+    return pa.table(rows, schema=pa.schema([
+        ("video_id", pa.string()), ("frame_idx", pa.int32()),
+        ("mean_brightness", pa.float64()), ("contrast", pa.float64()),
+    ]))
+
+
+# ------------------------------------------------------------ registry
+
+_IMG_DEPS = ("qfilter/enhance.py", "qfilter/imageops.py", "qfilter/codecs.py",
+             "tools/make_fixtures.py")
+_MEDIA_DEPS = ("qfilter/multimodal.py", "tools/make_fixtures.py")
+
+# name -> (what it reads: a "driver" sf dir, the "fixture" dir or nothing
+# ("synth"); its table builder; the source files besides this tool it
+# depends on)
+SIDECARS = {
+    "docs_nlp": ("driver", docs_nlp_table, ("qfilter/textops.py",)),
+    "simhash": ("driver", simhash_table, ("oracle/xxh64.py",)),
+    "minhash_pairs": ("driver", minhash_pairs_table, ("oracle/xxh64.py",)),
+    "lsh_ann": ("driver", lsh_ann_table, ("qfilter/similarity.py",)),
+    "ivf_ann": ("driver", ivf_ann_table, ("qfilter/similarity.py",)),
+    "thumbs": ("fixture", thumbs_table, ("qfilter/multimodal.py", "qfilter/codecs.py",
+                                         "tools/make_fixtures.py")),
+    "lines": ("fixture", lines_table, _IMG_DEPS),
+    "enhance": ("fixture", enhance_table, _IMG_DEPS),
+    "enhanced_bytes": ("fixture", enhanced_bytes_table, _IMG_DEPS),
+    "orientation": ("fixture", orientation_table, _IMG_DEPS),
+    "polish": ("fixture", polish_table,
+               ("qfilter/polish.py", "oracle/imageref.py", *_IMG_DEPS)),
+    "ocr_prep": ("fixture", ocr_prep_table,
+                 ("qfilter/ocrprep.py", "qfilter/polish.py", "oracle/imageref.py",
+                  *_IMG_DEPS)),
+    "audio_features": ("synth", audio_features_table, _MEDIA_DEPS),
+    "video_frames": ("synth", video_frames_table, _MEDIA_DEPS),
+}
+
+
+def _path(name: str, in_dir: str | None, ext: str) -> str:
+    """<name>_<basename(in_dir)><ext>, or <name>_synth<ext> for the
+    sidecars that read no directory."""
+    tag = os.path.basename(os.path.normpath(in_dir)) if in_dir else "synth"
+    return os.path.join(OUT_DIR, f"{name}_{tag}{ext}")
+
+
+def build(name: str, in_dir: str | None) -> str:
+    """Build sidecar ``name`` over ``in_dir`` unconditionally."""
+    path = _path(name, in_dir, ".parquet")
     os.makedirs(OUT_DIR, exist_ok=True)
-    path = os.path.join(OUT_DIR, "video_frames_synth.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("video_id", pa.string()), ("frame_idx", pa.int32()),
-            ("mean_brightness", pa.float64()), ("contrast", pa.float64()),
-        ])),
-        path,
-    )
+    pq.write_table(SIDECARS[name][1](in_dir), path)
     return path
 
 
-def build_lines(fixture_dir: str, min_len_ratio: float = 0.5) -> str:
-    """Single-node oracle for `qf_line_features`: P13 detector
-    (qfilter/enhance.py:detect_lines, reference line_cleaner.py:151-225)
-    over the fixture images table."""
-    from qfilter import codecs
-    from qfilter.enhance import detect_lines
-    from qfilter.imageops import grayscale
+def build_minhash_pairs(sf_dir: str) -> str:
+    """The pure-Python MinHash twin alone, under the current OUT_DIR
+    (perfbench/inputs.py rebuilds it over its seeded corpus)."""
+    return build("minhash_pairs", sf_dir)
 
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    rows = {"image_id": [], "has_line": [], "line_orientation": [],
-            "line_score": [], "n_line_boxes": []}
-    for r in tbl:
+
+def _dep_hash(dep_files: tuple[str, ...]) -> str:
+    h = hashlib.sha256()
+    for rel in dep_files:
+        h.update(rel.encode())
+        h.update(b"\0")
+        with open(os.path.join(REPO, rel), "rb") as f:
+            h.update(f.read())
+        h.update(b"\0")
+    return h.hexdigest()
+
+
+def _ensure(path: str, build_fn, deps: tuple[str, ...]) -> str:
+    """Run ``build_fn()`` (which writes ``path``) unless ``path`` exists
+    AND its recorded dependency hash (kernel sources + this tool)
+    matches — a kernel change regenerates the single-node oracle
+    automatically instead of failing loudly at parity-compare time
+    with a stale committed sidecar."""
+    dep_files = (_SELF_DEP, *deps)
+    want = _dep_hash(dep_files)
+    meta = path + ".deps.json"
+    if os.path.exists(path):
         try:
-            px = codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            d = detect_lines(grayscale(px), min_len_ratio=min_len_ratio)
-            vals = (bool(d["has_line"]), d["orientation"],
-                    float(d["score"]), len(d["bboxes"]))
-        except Exception:  # noqa: BLE001 — error channel: same defaults as the UDF
-            vals = (False, None, 0.0, 0)
-        rows["image_id"].append(r["image_id"])
-        rows["has_line"].append(vals[0])
-        rows["line_orientation"].append(vals[1])
-        rows["line_score"].append(vals[2])
-        rows["n_line_boxes"].append(vals[3])
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"lines_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("image_id", pa.string()), ("has_line", pa.bool_()),
-            ("line_orientation", pa.string()), ("line_score", pa.float64()),
-            ("n_line_boxes", pa.int32()),
-        ])),
-        path,
-    )
+            with open(meta) as f:
+                if json.load(f)["sha256"] == want:
+                    return path
+        except (OSError, ValueError, KeyError, TypeError):  # missing/corrupt meta -> rebuild
+            pass
+    build_fn()
+    with open(meta, "w") as f:
+        json.dump({"sha256": want, "deps": list(dep_files)}, f, indent=1)
     return path
 
 
-def build_enhance(fixture_dir: str) -> str:
-    """Single-node oracle for `qf_enhance_stats`: P11/P14/P15 scalar
-    summaries (qfilter/enhance.py:enhance_stats_one — the identical
-    numpy code path, run without Spark) over the fixture images."""
-    from qfilter import codecs
-    from qfilter.enhance import enhance_stats_one
-
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    cols = ["deskew_deg", "lightened_mean", "lightened_bg_mean",
-            "lightened_adv_mean", "delined_ink_frac"]
-    rows = {"image_id": [], **{c: [] for c in cols}}
-    for r in tbl:
-        try:
-            px = codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            s = enhance_stats_one(px)
-        except Exception:  # noqa: BLE001
-            s = {c: None for c in cols}
-        rows["image_id"].append(r["image_id"])
-        for c in cols:
-            rows[c].append(s[c])
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"enhance_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("image_id", pa.string()),
-            *[(c, pa.float64()) for c in cols],
-        ])),
-        path,
-    )
-    return path
+def ensure(name: str, in_dir: str | None) -> str:
+    """Path of sidecar ``name`` over ``in_dir``, rebuilt if stale."""
+    return _ensure(_path(name, in_dir, ".parquet"), lambda: build(name, in_dir),
+                   SIDECARS[name][2])
 
 
-def build_enhanced_bytes(fixture_dir: str) -> str:
-    """Single-node oracle for `qf_enhanced_bytes` (the K5-analog
-    transformed-bytes writeback): decode -> lighten -> re-encode via
-    qfilter.enhance.enhanced_bytes_one, store the md5 of the re-encoded
-    stream (the Spark query hashes with F.md5 — hex lowercase both)."""
-    import hashlib
-
-    from qfilter.enhance import enhanced_bytes_one
-
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    rows = {"image_id": [], "fmt": [], "enhanced_md5": []}
-    for r in tbl:
-        try:
-            enc = enhanced_bytes_one(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            md5 = hashlib.md5(enc).hexdigest()
-        except Exception:  # noqa: BLE001
-            md5 = None
-        rows["image_id"].append(r["image_id"])
-        rows["fmt"].append(r["fmt"])
-        rows["enhanced_md5"].append(md5)
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"enhanced_bytes_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("image_id", pa.string()), ("fmt", pa.string()),
-            ("enhanced_md5", pa.string()),
-        ])),
-        path,
-    )
-    return path
+def ensure_all(sf_dir: str, fixture_dir: str) -> dict[str, str]:
+    """Every registered sidecar, each over the directory it reads."""
+    dirs = {"driver": sf_dir, "fixture": fixture_dir, "synth": None}
+    return {name: ensure(name, dirs[reads]) for name, (reads, _, _) in SIDECARS.items()}
 
 
-def build_polish(fixture_dir: str) -> str:
-    """Single-node oracle for `qf_polish_stats` — built from the
-    INDEPENDENTLY-CODED twin (`oracle.imageref.polish_stats_ref`, not
-    the production `qfilter.polish` kernels), so the driver parity
-    compares two implementations end to end.  Subset crc32 % 5 == 0:
-    the twin is deliberately slow machinery (~0.8 s/image)."""
-    import zlib
-
-    from oracle.imageref import polish_stats_ref
-    from qfilter import codecs
-
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    cols = ["polished_mean", "polished_std", "edge_frac"]
-    rows = {"image_id": [], **{c: [] for c in cols}}
-    for r in tbl:
-        if zlib.crc32(r["image_id"].encode("utf-8")) % 5 != 0:
-            continue
-        try:
-            px = codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            s = polish_stats_ref(px)
-        except Exception:  # noqa: BLE001
-            s = {c: None for c in cols}
-        rows["image_id"].append(r["image_id"])
-        for c in cols:
-            rows[c].append(s[c])
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"polish_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("image_id", pa.string()),
-            *[(c, pa.float64()) for c in cols],
-        ])),
-        path,
-    )
-    return path
-
-
-def build_ocr_prep(fixture_dir: str) -> str:
-    """Single-node oracle for `qf_ocr_prep` (P8) — built from the
-    independently-coded twin (`oracle.imageref.ocr_prep_ref`).
-    Subset crc32 % 20 == 0: the op upscales every page to 1800 px."""
-    import zlib
-
-    from oracle.imageref import ocr_prep_ref
-    from qfilter import codecs
-
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    rows = {"image_id": [], "prep_h": [], "prep_w": [], "white_frac": []}
-    for r in tbl:
-        if zlib.crc32(r["image_id"].encode("utf-8")) % 20 != 0:
-            continue
-        try:
-            px = codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            s = ocr_prep_ref(px)
-        except Exception:  # noqa: BLE001
-            s = {"prep_h": None, "prep_w": None, "white_frac": None}
-        rows["image_id"].append(r["image_id"])
-        for c in ("prep_h", "prep_w", "white_frac"):
-            rows[c].append(s[c])
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"ocr_prep_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("image_id", pa.string()), ("prep_h", pa.int32()),
-            ("prep_w", pa.int32()), ("white_frac", pa.float64()),
-        ])),
-        path,
-    )
-    return path
-
-
-def build_ivf_ann(sf_dir: str, k: int = 5) -> str:
-    """Replicates similarity.ivf_ann_topk single-node: same sorted
-    sample matrix -> same deterministic k-means centroids -> same
-    fold-based assignment and exact left-to-right-fold rerank."""
-    from qfilter.similarity import (
-        IVF_NPROBE, _ivf_assign, ivf_fit_centroids, ivf_k_for_rows,
-    )
-
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"]
-    )
-    ids_raw = tbl.column("vec_id").to_pylist()
-    order = np.argsort(np.asarray(ids_raw))
-    ids = [ids_raw[i] for i in order]
-    mat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in tbl.column("embedding").to_pylist()]
-    )[order]
-    # same adaptive K as the Spark side (len(mat) == the table count);
-    # ivf_fit_centroids itself caps the training slice at IVF_SAMPLE_MAX
-    cents = ivf_fit_centroids(mat, k=ivf_k_for_rows(len(mat)))
-    probes = _ivf_assign(mat, cents, IVF_NPROBE)  # (n, nprobe)
-    home = probes[:, 0]
-    by_list: dict[int, list] = {}
-    for row, lid in enumerate(home):
-        by_list.setdefault(int(lid), []).append(row)
-    cand = []
-    for i in range(len(ids)):
-        for lid in probes[i]:
-            for j in by_list.get(int(lid), ()):
-                if j != i:
-                    cand.append((i, j))
-    qi = np.array([c[0] for c in cand])
-    ni = np.array([c[1] for c in cand])
-    av, bv = mat[qi], mat[ni]
-    dots = np.cumsum(av * bv, axis=1)[:, -1]
-    na = np.sqrt(np.cumsum(av * av, axis=1)[:, -1])
-    nb = np.sqrt(np.cumsum(bv * bv, axis=1)[:, -1])
-    cos = dots / (na * nb)
-    out = {"q": [], "rank": [], "n": []}
-    per_q: dict[int, list] = {}
-    for (i, j), c in zip(cand, cos):
-        per_q.setdefault(i, []).append((c, ids[j]))
-    for i, lst in per_q.items():
-        lst.sort(key=lambda t: (-t[0], t[1]))
-        for rank, (_, nid) in enumerate(lst[:k], start=1):
-            out["q"].append(ids[i])
-            out["rank"].append(rank)
-            out["n"].append(nid)
-    name = os.path.basename(os.path.normpath(sf_dir))
-    os.makedirs(OUT_DIR, exist_ok=True)
-    path = os.path.join(OUT_DIR, f"ivf_ann_{name}.parquet")
-    pq.write_table(
-        pa.table(out, schema=pa.schema([
-            ("q", pa.int64()), ("rank", pa.int32()), ("n", pa.int64()),
-        ])),
-        path,
-    )
-    return path
-
-
-def model_weights_from_labels_ref(fixture_dir: str) -> tuple:
-    """Train the qf_model_infer logistic regression single-node from the
-    committed labels_ref table — the oracle twin of
-    qfilter.model.train_from_features.  labels_ref's feature columns
-    are bit-identical to the Spark-computed ones (hash-proven via
-    qf_derived_features), the sort order matches orderBy(image_id),
-    and fit_logreg is BLAS-free — so the weights are bit-identical."""
-    from qfilter.model import fit_logreg
-
-    X, y = _labels_ref_Xy(fixture_dir)
-    return fit_logreg(X, y)
-
+# ------------------------------------------------------------ model zoo
 
 def _labels_ref_Xy(fixture_dir: str):
     """Shared sorted <=4096-row non-error sample with the derived
@@ -667,127 +627,88 @@ def _labels_ref_Xy(fixture_dir: str):
     return X, y
 
 
-def model_cv_weights_from_labels_ref(fixture_dir: str, k: int = 5) -> list:
-    """Oracle twin of qfilter.model.cv_models_from_features: same
-    sorted <=4096-row non-error sample, fold = position % k, model f
-    trained on every other fold — bit-identical weights (same rows,
-    same order, BLAS-free fit)."""
+def model_weights_from_labels_ref(fixture_dir: str) -> tuple:
+    """Train the qf_model_infer logistic regression single-node from the
+    committed labels_ref table — the oracle twin of
+    ``fit_logreg(*qfilter.model.training_sample(features))``.
+    labels_ref's feature columns are bit-identical to the
+    Spark-computed ones (hash-proven via qf_derived_features), the sort
+    order matches orderBy(image_id), and fit_logreg is BLAS-free — so
+    the weights are bit-identical."""
     from qfilter.model import fit_logreg
 
-    X, y = _labels_ref_Xy(fixture_dir)
-    folds = np.arange(len(X)) % k
-    return [fit_logreg(X[folds != f], y[folds != f]) for f in range(k)]
+    return fit_logreg(*_labels_ref_Xy(fixture_dir))
 
 
-def gb_cv_weights_from_labels_ref(fixture_dir: str, k: int = 5) -> list:
-    """Oracle twin of qfilter.model.gb_cv_models_from_features (the
-    second model family, GB stumps) — same sample, same folds, same
-    deterministic trainer, so stump (feature, threshold, leaf-value)
-    arrays are bit-identical."""
-    from qfilter.model import fit_gb_stumps
+def cv_weights_from_labels_ref(fixture_dir: str, fit) -> list:
+    """Oracle twin of ``qfilter.model.cv_models(features, fit)``: same
+    sorted <=4096-row non-error sample, fold = position % CV_K, model f
+    trained on every other fold — bit-identical models (same rows,
+    same order, deterministic BLAS-free fits)."""
+    from qfilter.model import CV_K
 
     X, y = _labels_ref_Xy(fixture_dir)
-    folds = np.arange(len(X)) % k
-    return [fit_gb_stumps(X[folds != f], y[folds != f]) for f in range(k)]
+    folds = np.arange(len(X)) % CV_K
+    return [fit(X[folds != f], y[folds != f]) for f in range(CV_K)]
 
 
-def rf_cv_weights_from_labels_ref(fixture_dir: str, k: int = 5) -> list:
-    """Oracle twin of qfilter.model.rf_cv_models_from_features."""
-    from qfilter.model import fit_rf_lite
+def zoo_cv_cache(fixture_dir: str) -> dict:
+    """Four zoo families' per-fold models (lr, gb, rf, svm_rff),
+    retrained from labels_ref once and cached as a dep-hashed JSON
+    sidecar (floats via repr — exact round-trip; no pickled code); a
+    qfilter/model.py edit auto-invalidates it."""
+    from qfilter.model import fit_gb_stumps, fit_logreg, fit_rf_lite, fit_svm_rff
 
-    X, y = _labels_ref_Xy(fixture_dir)
-    folds = np.arange(len(X)) % k
-    return [fit_rf_lite(X[folds != f], y[folds != f]) for f in range(k)]
+    path = _path("zoo_cv", fixture_dir, ".json")
 
-
-def svm_cv_weights_from_labels_ref(fixture_dir: str, k: int = 5) -> list:
-    """Oracle twin of qfilter.model.svm_cv_models_from_features."""
-    from qfilter.model import fit_svm_linear
-
-    X, y = _labels_ref_Xy(fixture_dir)
-    folds = np.arange(len(X)) % k
-    return [fit_svm_linear(X[folds != f], y[folds != f]) for f in range(k)]
-
-
-def svm_rff_cv_weights_from_labels_ref(fixture_dir: str, k: int = 5) -> list:
-    """Oracle twin of qfilter.model.svm_rff_cv_models_from_features
-    (the RBF-kernel SVC via random Fourier features)."""
-    from qfilter.model import fit_svm_rff
-
-    X, y = _labels_ref_Xy(fixture_dir)
-    folds = np.arange(len(X)) % k
-    return [fit_svm_rff(X[folds != f], y[folds != f]) for f in range(k)]
-
-
-def zoo_cv_cache(fixture_dir: str, k: int = 5) -> dict:
-    """All five zoo families' per-fold models, retrained from
-    labels_ref once and cached as a dep-hashed JSON sidecar (floats
-    via repr — exact round-trip; no pickled code).  Saves ~3 minutes
-    per oracle_sql() build; a qfilter/model.py edit auto-invalidates."""
-    import json
-
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"zoo_cv_{tier}.json")
-    meta = path + ".deps.json"
-    deps = (_SELF_DEP, "qfilter/model.py", "tools/make_fixtures.py")
-    want = _dep_hash(deps)
-    if os.path.exists(path) and os.path.exists(meta):
-        try:
-            with open(meta) as f:
-                if json.load(f)["sha256"] == want:
-                    with open(path) as f:
-                        raw = json.load(f)
-                    return _zoo_cache_decode(raw)
-        except Exception:  # noqa: BLE001 — corrupt cache -> rebuild
-            pass
-    lr = model_cv_weights_from_labels_ref(fixture_dir, k=k)
-    gb = gb_cv_weights_from_labels_ref(fixture_dir, k=k)
-    rf = rf_cv_weights_from_labels_ref(fixture_dir, k=k)
-    svm = svm_rff_cv_weights_from_labels_ref(fixture_dir, k=k)
-    raw = {
-        "lr": [[list(map(float, w)), float(b)] for w, b in lr],
-        "gb": [
-            {
-                "f0": float(m["f0"]),
-                "feat": [int(x) for x in m["feat"]],
-                "thr": [float(x) for x in m["thr"]],
-                "val_l": [float(x) for x in m["val_l"]],
-                "val_r": [float(x) for x in m["val_r"]],
-                "gain": [float(x) for x in m["gain"]],
-            }
-            for m in gb
-        ],
-        "rf": [
-            [
+    def train():
+        lr, gb, rf, svm = (cv_weights_from_labels_ref(fixture_dir, fit) for fit in
+                           (fit_logreg, fit_gb_stumps, fit_rf_lite, fit_svm_rff))
+        raw = {
+            "lr": [[list(map(float, w)), float(b)] for w, b in lr],
+            "gb": [
                 {
-                    "feat": int(t["feat"]), "thr": float(t["thr"]),
-                    "l": [float(x) for x in t["l"]],
-                    "r": [float(x) for x in t["r"]],
-                    "gains": [[int(j), float(g)] for j, g in t["gains"]],
+                    "f0": float(m["f0"]),
+                    "feat": [int(x) for x in m["feat"]],
+                    "thr": [float(x) for x in m["thr"]],
+                    "val_l": [float(x) for x in m["val_l"]],
+                    "val_r": [float(x) for x in m["val_r"]],
+                    "gain": [float(x) for x in m["gain"]],
                 }
-                for t in forest
-            ]
-            for forest in rf
-        ],
-        "svm_rff": [
-            {
-                "mu": [float(x) for x in m["mu"]],
-                "sd": [float(x) for x in m["sd"]],
-                "W": [[float(x) for x in row] for row in m["W"]],
-                "B": [float(x) for x in m["B"]],
-                "scale": float(m["scale"]),
-                "w": [float(x) for x in m["w"]],
-                "b": float(m["b"]),
-            }
-            for m in svm
-        ],
-    }
-    os.makedirs(OUT_DIR, exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(raw, f)
-    with open(meta, "w") as f:
-        json.dump({"sha256": want, "deps": list(deps)}, f, indent=1)
-    return _zoo_cache_decode(raw)
+                for m in gb
+            ],
+            "rf": [
+                [
+                    {
+                        "feat": int(t["feat"]), "thr": float(t["thr"]),
+                        "l": [float(x) for x in t["l"]],
+                        "r": [float(x) for x in t["r"]],
+                        "gains": [[int(j), float(g)] for j, g in t["gains"]],
+                    }
+                    for t in forest
+                ]
+                for forest in rf
+            ],
+            "svm_rff": [
+                {
+                    "mu": [float(x) for x in m["mu"]],
+                    "sd": [float(x) for x in m["sd"]],
+                    "W": [[float(x) for x in row] for row in m["W"]],
+                    "B": [float(x) for x in m["B"]],
+                    "scale": float(m["scale"]),
+                    "w": [float(x) for x in m["w"]],
+                    "b": float(m["b"]),
+                }
+                for m in svm
+            ],
+        }
+        os.makedirs(OUT_DIR, exist_ok=True)
+        with open(path, "w") as f:
+            json.dump(raw, f)
+
+    _ensure(path, train, ("qfilter/model.py", "tools/make_fixtures.py"))
+    with open(path) as f:
+        return _zoo_cache_decode(json.load(f))
 
 
 def _zoo_cache_decode(raw: dict) -> dict:
@@ -830,185 +751,10 @@ def _zoo_cache_decode(raw: dict) -> dict:
     }
 
 
-_SELF_DEP = "tools/make_oracle_sidecars.py"
-
-
-def _dep_hash(dep_files: tuple[str, ...]) -> str:
-    import hashlib
-
-    h = hashlib.sha256()
-    for rel in dep_files:
-        h.update(rel.encode())
-        h.update(b"\0")
-        with open(os.path.join(REPO, rel), "rb") as f:
-            h.update(f.read())
-        h.update(b"\0")
-    return h.hexdigest()
-
-
-def _ensure(path: str, builder, *args, deps: tuple[str, ...] = ()) -> str:
-    """Build the sidecar unless it exists AND its recorded dependency
-    hash (kernel sources + this tool) matches — a kernel change
-    regenerates the single-node oracle automatically instead of failing
-    loudly at parity-compare time with a stale committed sidecar."""
-    import json
-
-    dep_files = (_SELF_DEP, *deps)
-    want = _dep_hash(dep_files)
-    meta = path + ".deps.json"
-    if os.path.exists(path) and os.path.exists(meta):
-        try:
-            with open(meta) as f:
-                if json.load(f)["sha256"] == want:
-                    return path
-        except Exception:  # noqa: BLE001 — corrupt meta -> rebuild
-            pass
-    builder(*args)
-    with open(meta, "w") as f:
-        json.dump({"sha256": want, "deps": list(dep_files)}, f, indent=1)
-    return path
-
-
-_IMG_DEPS = ("qfilter/enhance.py", "qfilter/imageops.py", "qfilter/codecs.py",
-             "tools/make_fixtures.py")
-
-
-def ensure_sidecar_lines(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(os.path.join(OUT_DIR, f"lines_{tier}.parquet"),
-                   build_lines, fixture_dir, deps=_IMG_DEPS)
-
-
-def ensure_sidecar_polish(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(
-        os.path.join(OUT_DIR, f"polish_{tier}.parquet"),
-        build_polish, fixture_dir,
-        deps=("qfilter/polish.py", "oracle/imageref.py", *_IMG_DEPS),
-    )
-
-
-def ensure_sidecar_ocr_prep(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(
-        os.path.join(OUT_DIR, f"ocr_prep_{tier}.parquet"),
-        build_ocr_prep, fixture_dir,
-        deps=("qfilter/ocrprep.py", "qfilter/polish.py", "oracle/imageref.py",
-              *_IMG_DEPS),
-    )
-
-
-def ensure_sidecar_enhance(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(os.path.join(OUT_DIR, f"enhance_{tier}.parquet"),
-                   build_enhance, fixture_dir, deps=_IMG_DEPS)
-
-
-def build_orientation(fixture_dir: str) -> str:
-    """Single-node oracle for `qf_orientation` (P17/P18 heuristic):
-    qfilter.enhance.orientation_one run without Spark over the same
-    fixture bytes and planted rotations."""
-    from qfilter import codecs
-    from qfilter.enhance import orientation_one
-
-    tbl = pq.read_table(
-        os.path.join(fixture_dir, "images.parquet"),
-        columns=["image_id", "bytes", "fmt", "w", "h"],
-    ).to_pylist()
-    rows = {"image_id": [], "planted_deg": [], "detected_deg": [], "recovered": []}
-    for r in tbl:
-        try:
-            px = codecs.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-            s = orientation_one(px, str(r["image_id"]))
-        except Exception:  # noqa: BLE001
-            s = {"planted_deg": None, "detected_deg": None, "recovered": None}
-        rows["image_id"].append(r["image_id"])
-        rows["planted_deg"].append(s["planted_deg"])
-        rows["detected_deg"].append(s["detected_deg"])
-        rows["recovered"].append(s["recovered"])
-    os.makedirs(OUT_DIR, exist_ok=True)
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    path = os.path.join(OUT_DIR, f"orientation_{tier}.parquet")
-    pq.write_table(
-        pa.table(rows, schema=pa.schema([
-            ("image_id", pa.string()), ("planted_deg", pa.int32()),
-            ("detected_deg", pa.int32()), ("recovered", pa.bool_()),
-        ])),
-        path,
-    )
-    return path
-
-
-def ensure_sidecar_orientation(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(os.path.join(OUT_DIR, f"orientation_{tier}.parquet"),
-                   build_orientation, fixture_dir, deps=_IMG_DEPS)
-
-
-def ensure_sidecar_enhanced_bytes(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(os.path.join(OUT_DIR, f"enhanced_bytes_{tier}.parquet"),
-                   build_enhanced_bytes, fixture_dir, deps=_IMG_DEPS)
-
-
-def ensure_sidecar_simhash(sf_dir: str) -> str:
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return _ensure(os.path.join(OUT_DIR, f"simhash_{name}.parquet"),
-                   build_simhash, sf_dir, deps=("oracle/xxh64.py",))
-
-
-def ensure_sidecar_minhash_pairs(sf_dir: str) -> str:
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return _ensure(os.path.join(OUT_DIR, f"minhash_pairs_{name}.parquet"),
-                   build_minhash_pairs, sf_dir, deps=("oracle/xxh64.py",))
-
-
-def ensure_sidecar_lsh_ann(sf_dir: str) -> str:
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return _ensure(os.path.join(OUT_DIR, f"lsh_ann_{name}.parquet"),
-                   build_lsh_ann, sf_dir, deps=("qfilter/similarity.py",))
-
-
-def ensure_sidecar_ivf_ann(sf_dir: str) -> str:
-    name = os.path.basename(os.path.normpath(sf_dir))
-    return _ensure(os.path.join(OUT_DIR, f"ivf_ann_{name}.parquet"),
-                   build_ivf_ann, sf_dir, deps=("qfilter/similarity.py",))
-
-
-def ensure_sidecar_thumbs(fixture_dir: str) -> str:
-    tier = os.path.basename(os.path.normpath(fixture_dir))
-    return _ensure(os.path.join(OUT_DIR, f"thumbs_{tier}.parquet"),
-                   build_thumbs, fixture_dir,
-                   deps=("qfilter/multimodal.py", "qfilter/codecs.py",
-                         "tools/make_fixtures.py"))
-
-
-def ensure_sidecar_audio() -> str:
-    return _ensure(os.path.join(OUT_DIR, "audio_features_synth.parquet"),
-                   build_audio_features,
-                   deps=("qfilter/multimodal.py", "tools/make_fixtures.py"))
-
-
-def ensure_sidecar_video() -> str:
-    return _ensure(os.path.join(OUT_DIR, "video_frames_synth.parquet"),
-                   build_video_frames,
-                   deps=("qfilter/multimodal.py", "tools/make_fixtures.py"))
-
-
 if __name__ == "__main__":
-    for sf in sys.argv[1:] or ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
-                               "/root/testdata/sf0.1"]:
-        print(build_for(sf))
-        print(build_simhash(sf))
-        print(build_minhash_pairs(sf))
-        print(build_lsh_ann(sf))
-        print(build_ivf_ann(sf))
-    # fixture-table sidecars (smoke tier is the driver gate's)
     from make_fixtures import ensure_fixtures
 
-    fdir = ensure_fixtures("smoke")
-    print(build_thumbs(fdir))
-    print(build_lines(fdir))
-    print(build_enhance(fdir))
-    print(build_audio_features())
-    print(build_video_frames())
+    fixture = ensure_fixtures("smoke")  # the smoke tier is the driver gate's
+    for sf in sys.argv[1:] or sys.exit("usage: make_oracle_sidecars.py SF_DIR [SF_DIR ...]"):
+        for path in ensure_all(sf, fixture).values():
+            print(path)
