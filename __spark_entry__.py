@@ -845,7 +845,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trigram_jaccard_pairs": corpus.trigram_jaccard_pairs,
         "minhash_lsh_dup_pairs": corpus.minhash_lsh_dup_pairs,
         "neardup_components": corpus.neardup_components,
-        "neardup_components_star": corpus.neardup_components_star,
+        "neardup_components_star": corpus.neardup_components,
         "simhash64": corpus.simhash64,
         "doc_nlp": _doc_nlp,
         # --- events (window/sequential ops) ---
@@ -916,14 +916,19 @@ def oracle_sql() -> dict[str, str]:
 
     # qf_model_cv: five per-fold weight sets, same round-trip-exact
     # literal embedding; the CASE picks each row's held-out model.
-    from make_oracle_sidecars import zoo_cv_cache
+    from make_oracle_sidecars import cv_weights_from_labels_ref
     from qfilter.model import CV_K as _cvk
     from qfilter.model import TRAIN_SAMPLE_MAX as _tsm
+    from qfilter.model import fit_gb_stumps, fit_logreg, fit_rf_lite, fit_svm_rff
 
-    _zoo = zoo_cv_cache(fdir)
+    _zoo = {
+        _name: cv_weights_from_labels_ref(fdir, _fit)
+        for _name, _fit in (("lr", fit_logreg), ("gb", fit_gb_stumps),
+                            ("rf", fit_rf_lite), ("svm_rff", fit_svm_rff))
+    }
     _cv_cases = []
     for _f, (_fw, _fb) in enumerate(_zoo["lr"]):
-        _ze = f"CAST('{_fb!r}' AS DOUBLE)"
+        _ze = f"CAST('{float(_fb)!r}' AS DOUBLE)"
         for _wi, _t in zip(_fw, _terms):
             _ze = f"({_ze} + CAST('{float(_wi)!r}' AS DOUBLE) * {_t})"
         _cv_cases.append(f"WHEN {_f} THEN {_ze}")
@@ -1777,9 +1782,10 @@ def oracle_sql() -> dict[str, str]:
         ),
         # connected components over the thresholded near-dup pairs:
         # component = min reachable doc_id, computed by a recursive CTE
-        # (UNION dedup = the same fixpoint the Spark min-label
-        # propagation iterates to); pairs come from the XXH64 sidecar
-        # that the minhash_lsh_dup_pairs oracle already validates
+        # (UNION dedup walks every vertex to the fixpoint of min-label
+        # flooding, independently of the Spark side's union-find);
+        # pairs come from the XXH64 sidecar that the
+        # minhash_lsh_dup_pairs oracle already validates
         "neardup_components": (
             f"""
             WITH RECURSIVE

@@ -19,6 +19,11 @@ equi-join = J1 (`cer_utils.py:36-40`), page->doc rollup = A1
 (`:300-308`), grid argmax = A6 (`tune_extended_classifier.py:103-123`),
 top-k = A8 (`tune:244-251`).  Dedup/fingerprint/minhash/simhash are the
 north-rule extensions (no counterpart in the reference).
+
+`connected_components` is the one graph connected-components operator:
+both registered near-dup names and `dedup.neardup_cluster_winners` call
+it, and below its edge bound it labels on the driver with
+`imageops.min_label_roots`, the union-find the pixel labeler uses.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "load",
@@ -47,9 +53,7 @@ __all__ = [
     "temperature_resample_upsampled",
     "minhash_lsh_dup_pairs",
     "connected_components",
-    "connected_components_star",
     "neardup_components",
-    "neardup_components_star",
     "simhash64",
     "event_gaps",
     "event_rollup",
@@ -905,203 +909,95 @@ def minhash_lsh_dup_pairs(
     )
 
 
-def _checkpointer(edges: DataFrame, checkpoint: str):
-    """The lineage-truncation step ``ckpt(df, eager=True)`` of the
-    iterative connected-components loops.
+# Edge sets up to this many rows are labelled on the driver: collected
+# once as Arrow and run through the NumPy union-find
+# (`imageops.min_label_roots`).  At the bound that is 64 MiB of int64
+# id pairs, well under Spark's default 1 GiB `spark.driver.
+# maxResultSize`, and the kernel labels a randomly numbered 10^6-vertex
+# path in ~1 s on one core; near-dup graphs are far smaller (591 edges
+# at sf0.01, 5,869 at sf0.1).  Above it the labelling stays on the
+# executors.
+CC_DRIVER_EDGES = 1 << 22
+# Large-star/small-star needs O(log n) rounds (Kiveris et al.; the
+# 400-vertex chain test converges within 14), and no id space here
+# exceeds 2^64 vertices: hitting this guard means a fault, not a big
+# graph.
+CC_MAX_ROUNDS = 64
 
-    ``"local"`` honors ``eager=False``: a lazy `localCheckpoint` is
-    materialized by the round's own convergence action, in the same
-    job.  ``"reliable"`` always checkpoints eagerly: a lazy
-    `.checkpoint()` is written by a separate job after the first action
-    (computing the lineage twice), and never if no action runs."""
-    if checkpoint == "local":
-        return lambda df, eager=True: df.localCheckpoint(eager=eager)
-    if checkpoint == "reliable":
-        if not edges.sparkSession.sparkContext.getCheckpointDir():
-            raise ValueError(
-                "checkpoint='reliable' needs sc.setCheckpointDir(...) "
-                "(an HDFS/object-store path on a real cluster)"
-            )
-        return lambda df, eager=True: df.checkpoint(eager=True)
-    raise ValueError(f"unknown checkpoint strategy {checkpoint!r}")
+
+def _label_on_driver(spark: SparkSession, edges, id_type: T.DataType) -> DataFrame:
+    """Min-id labels for the vertices of a pyarrow ``(u, v)`` edge table:
+    ids are factorized in sorted order, so the kernel's min index per
+    component is the min id."""
+    import numpy as np
+    import pyarrow as pa
+
+    from .imageops import min_label_roots
+
+    ends = [edges.column(c).to_numpy() for c in ("u", "v")]
+    ids, inv = np.unique(np.concatenate(ends), return_inverse=True)
+    n = edges.num_rows
+    roots = min_label_roots(len(ids), inv[:n], inv[n:])
+    arrow_type = edges.schema.field("u").type
+    labels = pa.table({
+        "v": pa.array(ids, arrow_type),
+        "comp": pa.array(ids[roots], arrow_type),
+    })
+    return spark.createDataFrame(labels, T.StructType(
+        [T.StructField("v", id_type), T.StructField("comp", id_type)]
+    ))
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks behind a `localCheckpoint` frame once no live
+    frame reads them."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    checkpoint: str = "local",
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation:
-    ``(v, component)`` where component = min vertex id reachable.
+    """Connected components: ``(v, comp)`` for every vertex of the
+    undirected graph ``edges``, with comp = the min vertex id of v's
+    component.  Ids may be any orderable type; both endpoint columns are
+    read as the type their union takes.  A vertex seen only in a
+    self-loop is its own component.
 
-    Each round joins the (undirected) edge list with the current
-    labels, takes the per-vertex neighborhood minimum, and stops at
-    the fixpoint; raises if the fixpoint is not reached within
-    ``max_iter`` label-changing rounds (never returns silently
-    unconverged labels).  Ids may be any orderable type — integral
-    ids use a cheap checksum convergence test, others a diff join.
-    Rounds needed = max component eccentricity from its min-id vertex
-    (<= diameter); one shuffle per round (edge-label
-    join + groupBy vertex), labels are (id, id) pairs only, so state
-    never exceeds one row per vertex.  Near-dup graphs are star-like
-    (dups cluster around an original ⇒ diameter ~2), so this
-    terminates in 2-3 rounds; for adversarial long-chain graphs swap
-    in large-star/small-star (O(log n) rounds, same DataFrame ops).
-    Skewed hub vertices in the groupBy are AQE's to split.
+    Small graphs (at most `CC_DRIVER_EDGES` edges — every near-dup graph
+    here) are collected once as Arrow and labelled on the driver by
+    `imageops.min_label_roots`, the union-find the pixel labeler uses;
+    the result is a local frame, nothing stays persisted, and the step
+    costs one collect of the edge plan instead of Spark jobs per round.
+    The bound keeps a hub-heavy graph from reaching the driver whole
+    (DS2, ICDE 2021).
 
-    ``checkpoint`` picks the lineage-truncation strategy:
-    * ``"local"`` (default) — `localCheckpoint`: executor-local blocks,
-      fastest, right for local mode / durable executors;
-    * ``"reliable"`` — `.checkpoint()` to the sc checkpoint dir
-      (`sc.setCheckpointDir` must have been called): survives executor
-      loss, the right choice on a real multi-executor cluster.
-    Both produce identical components (tested)."""
-    # localCheckpoint (not cache) on every iteration frontier: caching
-    # truncates physical RE-EXECUTION but the LOGICAL plan still grows
-    # a full copy of the upstream lineage (here: the whole MinHash
-    # pipeline) per round, and Catalyst re-analyzes it each time —
-    # measured 6s -> 17s -> 42s per round at sf0.1 before this fix,
-    # constant ~1s/round after.  On a multi-executor cluster prefer
-    # `sc.setCheckpointDir` + `.checkpoint()` (survives executor loss);
-    # the iteration structure is identical.
-    # Checkpoint storage is MEMORY_AND_DISK: superseded rounds' blocks
-    # are reclaimed by the ContextCleaner as the Python refs drop (we
-    # del them promptly); worst-case residency is max_iter copies of
-    # the 2-column vertex table, which spills rather than OOMs.
-    _ckpt = _checkpointer(edges, checkpoint)
-    und = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    und = _ckpt(
-        und.unionByName(
-            und.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        ).distinct()
+    Larger graphs run large-star / small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) on the
+    executors.  large-star(u): every neighbour larger than u re-points
+    to m = min(N(u) ∪ {u}), which halves long chains; small-star(u): u
+    and its smaller neighbours all point to the min of those, which
+    flattens local stars.  Rounds are O(log n) whatever the diameter;
+    no round adds edges, so state never exceeds the input edge list.
+    Each round ends in a checksum (edge count, sum of
+    xxhash64(u, v)); a round that changes nothing is the fixpoint, a
+    union of stars child -> min id, and the labels are read off it.  As
+    soon as the edge set fits `CC_DRIVER_EDGES` the rest is finished
+    on the driver instead.  Each round's frame is a `localCheckpoint`
+    (the plan stays one round deep), released as soon as the next round
+    is materialized; the returned frame keeps the vertex list's
+    checkpoint, plus the final stars' if it ended at the fixpoint.
+    Raises after `CC_MAX_ROUNDS` rounds rather than return unconverged
+    labels."""
+    spark = edges.sparkSession
+    und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    id_type = (
+        und.select("u").unionByName(und.select(F.col("v").alias("u"))).schema["u"].dataType
     )
-    labels = _ckpt(
-        und.select(F.col("s").alias("v")).distinct().withColumn(
-            "comp", F.col("v")
-        )
-    )
-
-    # Convergence check, one scan of the checkpointed frame per round:
-    # for integral ids, a monotone checksum (labels only ever decrease
-    # under min-propagation, so the exact decimal sum strictly
-    # decreases until the fixpoint, and equal sums <=> no change); for
-    # any other id type, a type-agnostic diff-join count.
-    from pyspark.sql import types as T
-
-    def _exact_summable(dt) -> bool:
-        # scale>0 decimals would round under cast("decimal(38,0)"),
-        # so a sub-granularity label change could leave the checksum
-        # unchanged and falsely declare convergence
-        if isinstance(dt, T.DecimalType):
-            return dt.scale == 0
-        return isinstance(dt, T.IntegralType)
-
-    # check BOTH endpoint columns: after the unionByName the label
-    # domain is src ∪ dst, and a non-integral dst (or a coercion to a
-    # wider type) must route through the diff-join path
-    integral = _exact_summable(edges.schema[src].dataType) and _exact_summable(
-        edges.schema[dst].dataType
-    )
-
-    def _checksum(df: DataFrame):
-        return df.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-
-    prev_sum = _checksum(labels) if integral else None
-    # max_iter label-changing rounds + 1 confirming round: detecting
-    # the fixpoint costs one extra (unchanged) round, which must not
-    # eat into the propagation budget the docstring promises
-    for _ in range(max_iter + 1):
-        nbr = (
-            und.join(labels, und.d == labels.v)
-            .groupBy("s").agg(F.min("comp").alias("nbr_comp"))
-        )
-        # LAZY checkpoint (r6; localCheckpoint only — `_checkpointer`
-        # keeps reliable ones eager): the convergence check below is
-        # the round's first action, so it materializes the checkpoint
-        # blocks AND computes the checksum/diff in ONE Spark job — the
-        # eager form paid a separate materialization job per round
-        # (2 jobs/round -> 1; same blocks, same lineage truncation).
-        new_labels = _ckpt(
-            labels.alias("o")
-            .join(nbr, F.col("o.v") == nbr.s, "left")
-            .select(
-                F.col("o.v").alias("v"),
-                F.least(
-                    F.col("o.comp"), F.coalesce("nbr_comp", F.col("o.comp"))
-                ).alias("comp"),
-            ),
-            eager=False,
-        )
-        if integral:
-            cur_sum = _checksum(new_labels)
-            converged = cur_sum == prev_sum
-            prev_sum = cur_sum
-        else:
-            converged = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "v")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .count()
-                == 0
-            )
-        del labels
-        labels = new_labels
-        if converged:
-            return labels
-    raise RuntimeError(
-        f"connected_components: no fixpoint within max_iter={max_iter} "
-        "rounds (a component's eccentricity exceeds the budget); raise "
-        "max_iter or use connected_components_star (large-star/"
-        "small-star, O(log n) rounds) for long-chain graphs — "
-        "returning partial labels would silently mislabel clusters"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-    checkpoint: str = "local",
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    ``(v, component)`` with component = min vertex id, same contract
-    as `connected_components`.
-
-    Converges in O(log n) label-changing rounds regardless of graph
-    DIAMETER — the variant to use when components can be long chains
-    (min-label propagation needs eccentricity-many rounds there).
-    Per round: two aggregate+join passes over the current edge set;
-    edge count never grows (every edge maps to exactly one edge), so
-    peak state = the input edge list.  Skewed hubs: the groupBy min
-    is a partial-aggregatable min — map-side combine absorbs them.
-
-    large-star(u): m = min(N(u) ∪ {u}); every LARGER neighbor v > u
-    re-points to m — halves long chains.  small-star(u): m = min of
-    the SMALLER-or-equal neighbors ∪ {u}; they and u all point to m —
-    flattens local stars.  Fixpoint: the edge multiset is stable;
-    checked with an order-independent exact checksum (sum of
-    xxhash64(u, v) over distinct edges — collision-safe here because
-    equal sums only confirm an already-monotone process).
-    """
-    _ckpt = _checkpointer(edges, checkpoint)
-    # checkpoint the raw edge list FIRST (r6): `verts` and `e` both
-    # consume it, and without this the caller's entire upstream
-    # pipeline (e.g. the MinHash candidate generation) re-executes
-    # once per consumer — measured ~2 s per extra pass at sf0.1, and
-    # a full corpus-scale re-read at 100 TB
-    und = _ckpt(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    verts = _ckpt(
-        und.select("u").unionByName(und.select(F.col("v").alias("u"))).distinct()
-    )
-    e = _ckpt(
-        und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = und.select(F.col("u").cast(id_type), F.col("v").cast(id_type))
+    head = und.limit(CC_DRIVER_EDGES + 1).toArrow()
+    if head.num_rows <= CC_DRIVER_EDGES:
+        return _label_on_driver(spark, head, id_type)
+    del head
 
     def _sym(df: DataFrame) -> DataFrame:
         return (
@@ -1119,8 +1015,24 @@ def connected_components_star(
         ).collect()[0]
         return (row.n, row.s)
 
-    prev = _checksum(e)
-    for _ in range(max_iter + 1):
+    # checkpoint the raw edge list first: `verts` and `e` both read it,
+    # and without it the caller's upstream plan (the MinHash pairs)
+    # runs once per reader
+    und = und.localCheckpoint()
+    verts = (
+        und.select("u").unionByName(und.select(F.col("v").alias("u"))).distinct()
+        .localCheckpoint()
+    )
+    e = _sym(und).localCheckpoint(eager=False)
+    cur = _checksum(e)
+    _release(und)
+    for _ in range(CC_MAX_ROUNDS):
+        # e holds each undirected edge twice
+        if cur[0] // 2 <= CC_DRIVER_EDGES:
+            once = e.filter(F.col("u") < F.col("v")).toArrow()
+            labels = _label_on_driver(spark, once, id_type)
+            _release(e)
+            break
         # large star: (u,v) with v > u  ->  (v, m_u)
         mins = e.groupBy("u").agg(F.min("v").alias("mn"))
         mins = mins.select("u", F.least("u", "mn").alias("m"))
@@ -1129,12 +1041,9 @@ def connected_components_star(
             .join(mins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        # LAZY checkpoints (r6; localCheckpoint only — `_checkpointer`
-        # keeps reliable ones eager): the round-ending checksum action below
-        # materializes e2's blocks and, through e2's plan, e1's as
-        # well — one Spark job per round where the eager form ran
-        # three (e1 materialize, e2 materialize, checksum).
-        e1 = _ckpt(_sym(ls), eager=False)
+        # lazy checkpoints: the round's checksum materializes e2 and,
+        # through e2's plan, e1 — no separate materialization jobs
+        e1 = _sym(ls).localCheckpoint(eager=False)
         # small star over edges oriented large -> small: (u,v), v <= u
         small = e1.filter(F.col("v") < F.col("u"))
         mins2 = small.groupBy("u").agg(F.min("v").alias("m"))
@@ -1144,53 +1053,43 @@ def connected_components_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(mins2.select(F.col("u"), F.col("m").alias("v")))
         )
-        e2 = _ckpt(_sym(ss), eager=False)
-        del e
+        e2 = _sym(ss).localCheckpoint(eager=False)
+        prev, cur = cur, _checksum(e2)
+        _release(e1)
+        _release(e)
         e = e2
-        cur = _checksum(e)
         if cur == prev:
+            # the stable edge set is a union of stars child -> root
+            labels = e.filter(F.col("v") < F.col("u")).select(
+                F.col("u").alias("v"), F.col("v").alias("comp")
+            )
             break
-        prev = cur
     else:
+        _release(e)
+        _release(verts)
         raise RuntimeError(
-            f"connected_components_star: no fixpoint within {max_iter} rounds"
+            f"connected_components: no fixpoint within {CC_MAX_ROUNDS} rounds"
         )
-    # stable edge set is a union of stars child -> root (root = min id)
-    child = e.filter(F.col("v") < F.col("u")).select(
-        F.col("u").alias("v"), F.col("v").alias("comp")
+    return verts.select(F.col("u").alias("v")).join(labels, "v", "left").select(
+        "v", F.coalesce("comp", F.col("v")).alias("comp")
     )
-    return verts.select(F.col("u").alias("v")).join(
-        child, "v", "left"
-    ).select("v", F.coalesce("comp", F.col("v")).alias("comp"))
 
 
-def neardup_components(
-    spark: SparkSession, sf_dir: str, min_jaccard: float = 0.5,
-    algo: str = "prop",
-) -> DataFrame:
+NEARDUP_MIN_JACCARD = 0.5  # the oracle's pair threshold
+
+
+def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster ids: MinHash-LSH candidate pairs thresholded at
-    ``min_jaccard``, then connected components — the step between pair
-    generation and "keep one doc per cluster" in a dedup pipeline.
-    Component id = min doc_id in the cluster (the canonical keeper).
-
-    ``algo``: "prop" (min-label propagation — rounds = component
-    eccentricity, right for the star-like dup graphs this produces) or
-    "star" (large-star/small-star — O(log n) rounds regardless of
-    diameter, the adversarial-chain-safe variant).  Identical labels
-    either way (same oracle)."""
+    `NEARDUP_MIN_JACCARD`, then `connected_components` — the step
+    between pair generation and "keep one doc per cluster" in a dedup
+    pipeline.  Component id = min doc_id in the cluster (the canonical
+    keeper).  Registered twice, as ``neardup_components`` and
+    ``neardup_components_star``, with one DuckDB oracle."""
     pairs = minhash_lsh_dup_pairs(spark, sf_dir).filter(
-        F.col("est_jaccard") >= min_jaccard
+        F.col("est_jaccard") >= NEARDUP_MIN_JACCARD
     )
-    cc = connected_components if algo == "prop" else connected_components_star
-    comp = cc(pairs, src="id1", dst="id2")
+    comp = connected_components(pairs, src="id1", dst="id2")
     return comp.select(F.col("v").alias("doc_id"), F.col("comp").alias("component"))
-
-
-def neardup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`neardup_components` via the large-star/small-star CC — same
-    result set (shared DuckDB recursive-CTE oracle), exercising the
-    O(log n)-round variant end to end."""
-    return neardup_components(spark, sf_dir, algo="star")
 
 
 def simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -124,7 +124,9 @@ def neardup_cluster_winners(
     """Near-dup clusters with a canonical winner per cluster — the full
     image-dedup step: banding-LSH pairs over DISTINCT hash values,
     connected components over the hash graph (exact at hamming<=3 by
-    the pigeonhole bound), then one aggregate over the original rows.
+    the pigeonhole bound; `corpus.connected_components`, which collects
+    a pair set within its edge bound once and labels it on the driver),
+    then one aggregate over the original rows.
 
     Returns (cluster, winner_id, n_images, n_hashes) where cluster =
     min phash in the component (isolated hashes are their own cluster)

@@ -57,7 +57,6 @@ __all__ = [
     "with_enhance_stats",
     "with_enhanced_bytes",
     "enhance_stats_one",
-    "enhanced_bytes_one",
 ]
 
 
@@ -594,22 +593,15 @@ def with_orientation(df):
 
 # ------------------------------------------------- K5 analog: writeback
 
-def enhanced_bytes_one(data: bytes, fmt: str, w: int, h: int) -> bytes:
-    """Decode -> P11 lighten -> re-encode in the SAME format.  The
-    transformed-bytes writeback contract of the reference's enhancement
-    scripts (`document_lightener.py:247-254`, `rotate_any_angle.py:
-    151-158` save the transformed pixels back to image files).  The
-    Spark stage and the single-node oracle sidecar run the same
-    lighten_basic -> codecs.encode after their one decode per row."""
-    px = codecs.decode(data, fmt, w, h)
-    return codecs.encode(lighten_basic(px), fmt)
-
-
 def with_enhanced_bytes(df):
     """(image_id, bytes, fmt, w, h, ...) -> + ``enhanced`` (re-encoded
-    transformed bytes, same format).  Decode/encode errors -> NULL (the
-    error-channel contract); bytes stay inside one Arrow stage — the
-    downstream query hashes them (md5) before any shuffle."""
+    transformed bytes, same format).  Decode -> P11 lighten -> re-encode
+    in the SAME format: the transformed-bytes writeback contract of the
+    reference's enhancement scripts (`document_lightener.py:247-254`,
+    `rotate_any_angle.py:151-158` save the transformed pixels back to
+    image files).  Decode/encode errors -> NULL (the error-channel
+    contract); bytes stay inside one Arrow stage — the downstream query
+    hashes them (md5) before any shuffle."""
     return with_image_stage(
         df,
         "enhanced binary",

@@ -41,6 +41,7 @@ __all__ = [
     "dilate",
     "morph_open",
     "morph_close",
+    "min_label_roots",
     "connected_components",
     "connected_component_stats",
 ]
@@ -231,6 +232,37 @@ def morph_close(binary: np.ndarray, kh: int, kw: int) -> np.ndarray:
 
 # ------------------------------------------- connected components
 
+def min_label_roots(n: int, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """Vectorized union-find over vertices ``0..n-1`` joined by the
+    edges ``(i[k], j[k])``: returns ``roots`` with ``roots[v]`` = the
+    minimum vertex index of v's component (the root convention of a
+    parent[max]=min DSU).
+
+    Each round hooks every edge's larger ROOT under the smaller one,
+    then pointer-jumps until every vertex points at a root.  Hooking
+    roots (not the edge endpoints themselves) merges whole trees per
+    round, so a randomly numbered path finishes in O(log n) rounds; the
+    fixpoint (every edge inside one tree, rooted at its minimum) is
+    unique, so the result does not depend on the edge order."""
+    roots = np.arange(n, dtype=np.int64)
+    if len(i) == 0:
+        return roots
+    while True:
+        before = roots
+        ri, rj = roots[i], roots[j]
+        m = np.minimum(ri, rj)
+        roots = roots.copy()
+        np.minimum.at(roots, ri, m)
+        np.minimum.at(roots, rj, m)
+        while True:
+            hop = roots[roots]
+            if np.array_equal(hop, roots):
+                break
+            roots = hop
+        if np.array_equal(roots, before):
+            return roots
+
+
 def connected_components(binary: np.ndarray):
     """8-connected components of a 0/255 mask via row runs + union-find.
 
@@ -337,27 +369,10 @@ def connected_component_stats(
         counts[sy % band_h == 0] = 0
     total = int(counts.sum())
 
-    # Min-label propagation with pointer jumping (vectorized union-find:
-    # labels converge to the minimum run index of each component, the
-    # same root convention as a parent[max]=min DSU).
-    roots = np.arange(n_runs, dtype=np.int64)
-    if total:
-        pairs_i = np.repeat(np.arange(n_runs), counts)
-        offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pairs_j = jlo.repeat(counts) + (np.arange(total) - offsets.repeat(counts))
-        while True:
-            before = roots
-            m = np.minimum(roots[pairs_i], roots[pairs_j])
-            roots = roots.copy()
-            np.minimum.at(roots, pairs_i, m)
-            np.minimum.at(roots, pairs_j, m)
-            while True:
-                hop = roots[roots]
-                if np.array_equal(hop, roots):
-                    break
-                roots = hop
-            if np.array_equal(roots, before):
-                break
+    pairs_i = np.repeat(np.arange(n_runs), counts)
+    offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    pairs_j = jlo.repeat(counts) + (np.arange(total) - offsets.repeat(counts))
+    roots = min_label_roots(n_runs, pairs_i, pairs_j)
     uniq, inv = np.unique(roots, return_inverse=True)
     k = len(uniq)
 

@@ -221,11 +221,46 @@ def test_shingles_word_count_boundary(spark, k):
     assert [len(got[n]) for n in sizes] == [0, 1, 2]
 
 
-def test_connected_components_exact(spark):
-    """Chain, triangle, isolated pair, and a star: min-label propagation
-    reaches the exact per-component minimum."""
-    from qfilter.corpus import connected_components
+def _cc(edges, driver_edges=None, **cols):
+    """``{v: comp}`` from `corpus.connected_components`; ``driver_edges``
+    overrides `CC_DRIVER_EDGES` (0 forces the executor path,
+    large-star/small-star to its fixpoint)."""
+    from qfilter import corpus
 
+    with pytest.MonkeyPatch.context() as m:
+        if driver_edges is not None:
+            m.setattr(corpus, "CC_DRIVER_EDGES", driver_edges)
+        return {r.v: r.comp for r in corpus.connected_components(edges, **cols).collect()}
+
+
+def _bfs_labels(edges) -> dict:
+    """Plain-Python reference: min vertex id per component, by graph
+    search from each unvisited vertex in id order."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for s in sorted(adj):
+        if s in out:
+            continue
+        out[s] = s
+        todo = [s]
+        while todo:
+            for y in adj[todo.pop()]:
+                if y not in out:
+                    out[y] = s
+                    todo.append(y)
+    return out
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_connected_components_exact(spark):
+    """Chain, triangle, isolated pair, and a star: both paths reach the
+    exact per-component minimum."""
     edges = spark.createDataFrame(
         [
             (1, 2), (2, 3), (3, 4), (4, 5),     # chain 1-5
@@ -235,12 +270,12 @@ def test_connected_components_exact(spark):
         ],
         ["src", "dst"],
     )
-    got = {r.v: r.comp for r in connected_components(edges).collect()}
     want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
             10: 10, 11: 10, 12: 10,
             20: 20, 21: 20,
             30: 30, 31: 30, 32: 30, 33: 30}
-    assert got == want
+    assert _cc(edges) == want
+    assert _cc(edges, driver_edges=0) == want
 
 
 def test_neardup_components_cover_pairs(spark):
@@ -261,92 +296,138 @@ def test_neardup_components_cover_pairs(spark):
     assert all(c in members for c in comp.values())
 
 
+def test_neardup_components_job_count(spark):
+    """MinHash pairs -> components -> rows on the driver in at most 8
+    Spark jobs: the components step adds one job (its Arrow collect),
+    not one per propagation round."""
+    from qfilter.corpus import neardup_components
+
+    sc = spark.sparkContext
+    sc.setJobGroup("neardup-jobs", "neardup_components")
+    try:
+        rows = neardup_components(spark, SF).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup("neardup-jobs")) <= 8
+
+
 def test_connected_components_raises_on_iteration_budget(spark):
-    """A long chain that cannot converge within max_iter must raise —
-    silently returning partial labels would mislabel clusters."""
+    """A long chain that cannot converge within the round guard must
+    raise — silently returning partial labels would mislabel clusters —
+    and must not leave its checkpoints behind."""
+    from qfilter import corpus
+
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["src", "dst"]
     )
-    from qfilter.corpus import connected_components
-
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(chain, max_iter=3)
-    # and with budget it converges to one component
-    got = {r.v: r.comp for r in connected_components(chain, max_iter=40).collect()}
-    assert set(got.values()) == {0}
+    before = _persisted(spark)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(corpus, "CC_MAX_ROUNDS", 1)
+        with pytest.raises(RuntimeError, match="no fixpoint"):
+            _cc(chain, driver_edges=0)
+    assert not _persisted(spark) - before
+    # and with the default guard it converges to one component
+    assert set(_cc(chain, driver_edges=0).values()) == {0}
 
 
 def test_connected_components_string_ids(spark):
-    """Non-integral vertex ids use the diff-join convergence path and
-    still reach the exact per-component lexicographic minimum."""
+    """Non-integral vertex ids reach the exact per-component
+    lexicographic minimum on both paths, keep their type, and a vertex
+    seen only in a self-loop is its own component."""
     from qfilter.corpus import connected_components
 
     edges = spark.createDataFrame(
-        [("b", "c"), ("c", "d"), ("x", "y")], ["src", "dst"]
+        [("b", "c"), ("c", "d"), ("x", "y"), ("z", "z")], ["src", "dst"]
     )
-    got = {r.v: r.comp for r in connected_components(edges).collect()}
-    assert got == {"b": "b", "c": "b", "d": "b", "x": "x", "y": "x"}
+    want = {"b": "b", "c": "b", "d": "b", "x": "x", "y": "x", "z": "z"}
+    assert _cc(edges) == want
+    assert _cc(edges, driver_edges=0) == want
+    assert connected_components(edges).schema.simpleString() == "struct<v:string,comp:string>"
 
 
-def test_connected_components_reliable_checkpoint_matches_local(spark, tmp_path):
-    """Cluster-faithful path: `.checkpoint()` to a checkpoint dir must
-    produce exactly the components of the localCheckpoint path, and
-    the reliable path must refuse to run without a checkpoint dir —
-    for both the propagation and the large-star/small-star variant."""
-    from qfilter.corpus import connected_components, connected_components_star
+def test_connected_components_large_path_matches_small_path(spark):
+    """The executor path gives the driver path's labels, self-loop
+    vertex included.  Persisted RDDs: the driver path leaves none; the
+    executor path releases each superseded round and leaves one
+    checkpoint (the vertex list) behind the returned frame when it
+    finishes on the driver, two (the vertex list and the final stars)
+    at its own fixpoint."""
+    from qfilter import corpus
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20), (11, 12), (3, 1)],
         "src long, dst long",
     )
-    variants = (connected_components, connected_components_star)
-    local = [{r.v: r.comp for r in cc(edges).collect()} for cc in variants]
-
-    sc = spark.sparkContext
-    had = sc.getCheckpointDir()
-    if not had:
-        import pytest as _pytest
-
-        for cc in variants:
-            with _pytest.raises(ValueError, match="setCheckpointDir"):
-                cc(edges, checkpoint="reliable")
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    for cc, want in zip(variants, local):
-        reliable = {
-            r.v: r.comp
-            for r in cc(edges, checkpoint="reliable").collect()
-        }
-        assert reliable == want
-        assert want[3] == 1 and want[12] == 10 and want[20] == 20
+    before = _persisted(spark)
+    want = _cc(edges)
+    assert not _persisted(spark) - before
+    assert want[3] == 1 and want[12] == 10 and want[20] == 20
+    # 6 input edges > 5 forces the executor path; its 5 distinct
+    # non-loop edges then fit, so it finishes on the driver at once
+    for driver_edges, left_behind in ((0, 2), (5, 1)):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(corpus, "CC_DRIVER_EDGES", driver_edges)
+            before = _persisted(spark)
+            out = corpus.connected_components(edges)
+            assert {r.v: r.comp for r in out.collect()} == want
+            assert len(_persisted(spark) - before) == left_behind
+            del out
 
 
-def test_connected_components_star_matches_propagation(spark):
-    """large-star/small-star must produce exactly min-propagation's
-    labels on random graphs, self-loops and isolated pairs."""
+def test_connected_components_random_graph_matches_bfs(spark):
+    """Random graphs with self-loops and isolated pairs: both paths give
+    a plain-Python BFS's labels."""
     import random
-
-    from qfilter.corpus import connected_components, connected_components_star
 
     random.seed(11)
     edges = [(random.randint(0, 150), random.randint(0, 150)) for _ in range(200)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = {r.v: r.comp for r in connected_components(df, max_iter=60).collect()}
-    b = {r.v: r.comp for r in connected_components_star(df).collect()}
-    assert a == b
+    want = _bfs_labels(edges)
+    assert _cc(df) == want
+    assert _cc(df, driver_edges=0) == want
 
 
 def test_connected_components_star_long_chain_log_rounds(spark):
     """A 400-node path has diameter 400 — min-propagation would need
-    ~400 rounds; the star variant must converge within ~log2(n)+slack
+    ~400 rounds; large-star/small-star must converge within ~log2(n)+slack
     rounds and label every vertex with the chain minimum."""
-    from qfilter.corpus import connected_components_star
+    from qfilter import corpus
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "src long, dst long"
-    )
-    got = {r.v: r.comp for r in connected_components_star(chain, max_iter=14).collect()}
+    pairs = [(i, i + 1) for i in range(400)]
+    chain = spark.createDataFrame(pairs, "src long, dst long")
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(corpus, "CC_MAX_ROUNDS", 14)
+        got = _cc(chain, driver_edges=0)
     assert len(got) == 401
-    assert set(got.values()) == {0}
+    assert got == _bfs_labels(pairs)
+
+
+def test_connected_components_permuted_path_and_star(spark):
+    """A randomly numbered 10^5-vertex path (diameter 10^5) and a
+    10^4-leaf star whose hub has the largest id get min-id labels in one
+    Spark job; min-label propagation needed one round per unit of
+    diameter."""
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    path = rng.permutation(100_000)
+    leaves = np.arange(100_000, 110_000)
+    hub = 110_000
+    df = spark.createDataFrame(pd.DataFrame({
+        "src": np.concatenate([path[:-1], np.full(len(leaves), hub)]),
+        "dst": np.concatenate([path[1:], leaves]),
+    }))
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-path-star", "connected_components")
+    try:
+        got = _cc(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-path-star")) == 1
+    assert len(got) == 110_001
+    assert all(got[v] == 0 for v in range(100_000))
+    assert all(got[v] == 100_000 for v in range(100_000, 110_001))
 
 
 def test_adaptive_lsh_candidates_bounded_as_corpus_doubles():

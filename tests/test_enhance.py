@@ -143,7 +143,7 @@ def test_enhanced_bytes_writeback_psnr(smoke_dir):
     import pyarrow.parquet as pq
 
     from qfilter import codecs
-    from qfilter.enhance import enhanced_bytes_one, lighten_basic
+    from qfilter.enhance import lighten_basic
 
     tbl = pq.read_table(
         os.path.join(smoke_dir, "images.parquet"),
@@ -159,7 +159,7 @@ def test_enhanced_bytes_writeback_psnr(smoke_dir):
             continue
         seen[r["fmt"]] = seen.get(r["fmt"], 0) + 1
         want = lighten_basic(px)
-        enc = enhanced_bytes_one(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
+        enc = codecs.encode(want, r["fmt"])
         got = codecs.decode(enc, r["fmt"], want.shape[1], want.shape[0])
         if r["fmt"] == "qjpg":
             p = codecs.psnr(want, got)
@@ -200,7 +200,7 @@ def test_orientation_vote_recovers_quarter_turns(k):
 def _stage_cases():
     """stage -> (production stage, single-node row dict from (fixture
     row, decoded px), the error row)."""
-    from qfilter import enhance, ocrprep, polish
+    from qfilter import codecs, enhance, ocrprep, polish
 
     def lines(r, px):
         d = enhance.detect_lines(grayscale(px), min_len_ratio=0.5)
@@ -208,7 +208,7 @@ def _stage_cases():
                 "line_score": d["score"], "n_line_boxes": len(d["bboxes"])}
 
     def enhanced(r, px):
-        return {"enhanced": enhance.enhanced_bytes_one(bytes(r.bytes), r.fmt, r.w, r.h)}
+        return {"enhanced": codecs.encode(enhance.lighten_basic(px), r.fmt)}
 
     return {
         "lines": (enhance.with_line_features, lines, {

@@ -9,7 +9,7 @@ arbitrary shapes, morphology algebra, and hash bit ranges.
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
@@ -51,11 +51,35 @@ def test_scrub_series_equals_scalar_on_any_text(text):
     assert int(n_tox.iloc[0]) == tox_ref
 
 
+def _square_spiral(n: int) -> np.ndarray:
+    """One 1-px-wide square spiral filling an n x n mask: a single
+    component whose runs form a chain about n^2 / 4 pixels long, the
+    shape that needs the most union-find rounds."""
+    m = np.zeros((n, n), dtype=np.uint8)
+    y = x = d = 0
+    steps = ((0, 1), (1, 0), (0, -1), (-1, 0))
+    m[0, 0] = 255
+    turned = False
+    while True:
+        dy, dx = steps[d]
+        ny, nx, ay, ax = y + dy, x + dx, y + 2 * dy, x + 2 * dx
+        # step on unless that leaves no 1-px gap to the arm two cells ahead
+        if (0 <= ny < n and 0 <= nx < n and not m[ny, nx]
+                and not (0 <= ay < n and 0 <= ax < n and m[ay, ax])):
+            y, x, turned = ny, nx, False
+            m[y, x] = 255
+        elif turned:
+            return m
+        else:
+            d, turned = (d + 1) % 4, True
+
+
 @settings(max_examples=20, deadline=None)
 @given(
     arrays(np.uint8, st.tuples(st.integers(1, 25), st.integers(1, 25)),
            elements=st.sampled_from([0, 255]))
 )
+@example(_square_spiral(64))
 def test_component_stats_match_bfs_flood_fill(mask):
     """Run-based union-find == per-pixel BFS on arbitrary masks."""
     from oracle.imageref import cc_ref

@@ -2,10 +2,12 @@
 
 The gate compares each Spark query against an ANSI-SQL oracle.  For
 ops whose semantics live in our own code (the NLP models, JVM-side
-xxhash64, the ANN indexes, the image kernels, the model zoo) the
-oracle is this module's single-node run, persisted to parquet; the SQL
-just SELECTs it.  Deterministic: same artifacts and kernels as the
-executors load, same doubles bit-for-bit.
+xxhash64, the ANN indexes, the image kernels) the oracle is this
+module's single-node run, persisted to parquet; the SQL just SELECTs
+it.  The model-zoo oracles retrain here from labels_ref on every
+build (about 1 s) and embed the weights in the SQL as literals.
+Deterministic: same artifacts and kernels as the executors load, same
+doubles bit-for-bit.
 
 Every parquet sidecar is one `SIDECARS` entry: which directory it
 reads, the function that returns its table, and the source files it
@@ -534,16 +536,16 @@ SIDECARS = {
 }
 
 
-def _path(name: str, in_dir: str | None, ext: str) -> str:
-    """<name>_<basename(in_dir)><ext>, or <name>_synth<ext> for the
-    sidecars that read no directory."""
+def _path(name: str, in_dir: str | None) -> str:
+    """<name>_<basename(in_dir)>.parquet, or <name>_synth.parquet for
+    the sidecars that read no directory."""
     tag = os.path.basename(os.path.normpath(in_dir)) if in_dir else "synth"
-    return os.path.join(OUT_DIR, f"{name}_{tag}{ext}")
+    return os.path.join(OUT_DIR, f"{name}_{tag}.parquet")
 
 
 def build(name: str, in_dir: str | None) -> str:
     """Build sidecar ``name`` over ``in_dir`` unconditionally."""
-    path = _path(name, in_dir, ".parquet")
+    path = _path(name, in_dir)
     os.makedirs(OUT_DIR, exist_ok=True)
     pq.write_table(SIDECARS[name][1](in_dir), path)
     return path
@@ -566,13 +568,14 @@ def _dep_hash(dep_files: tuple[str, ...]) -> str:
     return h.hexdigest()
 
 
-def _ensure(path: str, build_fn, deps: tuple[str, ...]) -> str:
-    """Run ``build_fn()`` (which writes ``path``) unless ``path`` exists
+def ensure(name: str, in_dir: str | None) -> str:
+    """Path of sidecar ``name`` over ``in_dir``, built unless it exists
     AND its recorded dependency hash (kernel sources + this tool)
     matches — a kernel change regenerates the single-node oracle
     automatically instead of failing loudly at parity-compare time
     with a stale committed sidecar."""
-    dep_files = (_SELF_DEP, *deps)
+    path = _path(name, in_dir)
+    dep_files = (_SELF_DEP, *SIDECARS[name][2])
     want = _dep_hash(dep_files)
     meta = path + ".deps.json"
     if os.path.exists(path):
@@ -582,16 +585,10 @@ def _ensure(path: str, build_fn, deps: tuple[str, ...]) -> str:
                     return path
         except (OSError, ValueError, KeyError, TypeError):  # missing/corrupt meta -> rebuild
             pass
-    build_fn()
+    build(name, in_dir)
     with open(meta, "w") as f:
         json.dump({"sha256": want, "deps": list(dep_files)}, f, indent=1)
     return path
-
-
-def ensure(name: str, in_dir: str | None) -> str:
-    """Path of sidecar ``name`` over ``in_dir``, rebuilt if stale."""
-    return _ensure(_path(name, in_dir, ".parquet"), lambda: build(name, in_dir),
-                   SIDECARS[name][2])
 
 
 def ensure_all(sf_dir: str, fixture_dir: str) -> dict[str, str]:
@@ -650,105 +647,6 @@ def cv_weights_from_labels_ref(fixture_dir: str, fit) -> list:
     X, y = _labels_ref_Xy(fixture_dir)
     folds = np.arange(len(X)) % CV_K
     return [fit(X[folds != f], y[folds != f]) for f in range(CV_K)]
-
-
-def zoo_cv_cache(fixture_dir: str) -> dict:
-    """Four zoo families' per-fold models (lr, gb, rf, svm_rff),
-    retrained from labels_ref once and cached as a dep-hashed JSON
-    sidecar (floats via repr — exact round-trip; no pickled code); a
-    qfilter/model.py edit auto-invalidates it."""
-    from qfilter.model import fit_gb_stumps, fit_logreg, fit_rf_lite, fit_svm_rff
-
-    path = _path("zoo_cv", fixture_dir, ".json")
-
-    def train():
-        lr, gb, rf, svm = (cv_weights_from_labels_ref(fixture_dir, fit) for fit in
-                           (fit_logreg, fit_gb_stumps, fit_rf_lite, fit_svm_rff))
-        raw = {
-            "lr": [[list(map(float, w)), float(b)] for w, b in lr],
-            "gb": [
-                {
-                    "f0": float(m["f0"]),
-                    "feat": [int(x) for x in m["feat"]],
-                    "thr": [float(x) for x in m["thr"]],
-                    "val_l": [float(x) for x in m["val_l"]],
-                    "val_r": [float(x) for x in m["val_r"]],
-                    "gain": [float(x) for x in m["gain"]],
-                }
-                for m in gb
-            ],
-            "rf": [
-                [
-                    {
-                        "feat": int(t["feat"]), "thr": float(t["thr"]),
-                        "l": [float(x) for x in t["l"]],
-                        "r": [float(x) for x in t["r"]],
-                        "gains": [[int(j), float(g)] for j, g in t["gains"]],
-                    }
-                    for t in forest
-                ]
-                for forest in rf
-            ],
-            "svm_rff": [
-                {
-                    "mu": [float(x) for x in m["mu"]],
-                    "sd": [float(x) for x in m["sd"]],
-                    "W": [[float(x) for x in row] for row in m["W"]],
-                    "B": [float(x) for x in m["B"]],
-                    "scale": float(m["scale"]),
-                    "w": [float(x) for x in m["w"]],
-                    "b": float(m["b"]),
-                }
-                for m in svm
-            ],
-        }
-        os.makedirs(OUT_DIR, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(raw, f)
-
-    _ensure(path, train, ("qfilter/model.py", "tools/make_fixtures.py"))
-    with open(path) as f:
-        return _zoo_cache_decode(json.load(f))
-
-
-def _zoo_cache_decode(raw: dict) -> dict:
-    return {
-        "lr": [(np.asarray(w, dtype=np.float64), float(b)) for w, b in raw["lr"]],
-        "gb": [
-            {
-                "f0": float(m["f0"]),
-                "feat": np.asarray(m["feat"], dtype=np.int64),
-                "thr": np.asarray(m["thr"], dtype=np.float64),
-                "val_l": np.asarray(m["val_l"], dtype=np.float64),
-                "val_r": np.asarray(m["val_r"], dtype=np.float64),
-                "gain": np.asarray(m["gain"], dtype=np.float64),
-            }
-            for m in raw["gb"]
-        ],
-        "rf": [
-            [
-                {
-                    "feat": int(t["feat"]), "thr": float(t["thr"]),
-                    "l": tuple(t["l"]), "r": tuple(t["r"]),
-                    "gains": [(int(j), float(g)) for j, g in t["gains"]],
-                }
-                for t in forest
-            ]
-            for forest in raw["rf"]
-        ],
-        "svm_rff": [
-            {
-                "mu": np.asarray(m["mu"], dtype=np.float64),
-                "sd": np.asarray(m["sd"], dtype=np.float64),
-                "W": np.asarray(m["W"], dtype=np.float64),
-                "B": np.asarray(m["B"], dtype=np.float64),
-                "scale": float(m["scale"]),
-                "w": np.asarray(m["w"], dtype=np.float64),
-                "b": float(m["b"]),
-            }
-            for m in raw["svm_rff"]
-        ],
-    }
 
 
 if __name__ == "__main__":
