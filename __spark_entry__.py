@@ -127,13 +127,14 @@ def _qf_neardup_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qf_dark_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qfilter.cascade import dark_flag, dark_reason
+    from qfilter.cascade import dark_rules, decide
     from qfilter.features import with_image_features
 
+    is_dark, dark_reason = decide(dark_rules())
     feats = with_image_features(_fixture_images(spark))
     return (
-        feats.withColumn("is_dark", dark_flag())
-        .withColumn("dark_reason", dark_reason())
+        feats.withColumn("is_dark", is_dark)
+        .withColumn("dark_reason", dark_reason)
         .groupBy("is_dark", F.regexp_extract("dark_reason", r"^([a-z_]+)", 1).alias("dark_rule"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -402,22 +403,18 @@ def _qf_cascade_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns.  References: classificator_paddleocr.py:243-269,
     classificator_easyocr.py:256-297, tune_extended_classifier.py:
     81-97."""
-    from qfilter.cascade import (
-        base_category,
-        base_reason,
-        easyocr_category,
-        easyocr_reason,
-        tuning_category,
-    )
+    from qfilter.cascade import base_rules, decide, easyocr_rules, tuning_category
     from qfilter.features import with_all_features
 
+    base_category, base_reason = decide(base_rules())
+    easyocr_category, easyocr_reason = decide(easyocr_rules())
     feats = with_all_features(_fixture_images(spark))
     return feats.filter(F.col("error").isNull()).select(
         "image_id",
-        base_category().alias("base_category"),
-        base_reason().alias("base_reason"),
-        easyocr_category().alias("easyocr_category"),
-        easyocr_reason().alias("easyocr_reason"),
+        base_category.alias("base_category"),
+        base_reason.alias("base_reason"),
+        easyocr_category.alias("easyocr_category"),
+        easyocr_reason.alias("easyocr_reason"),
         tuning_category(0.2, 0.5, 30.0, 75.0, 0.02, 0.1, 40.0, 120.0)
         .alias("tuning_category"),
     )

@@ -63,8 +63,8 @@ _SCAN_TYPES = (bool, int, float, str)
 
 def _keep_file(stats: dict | None, col: str, op: str, val) -> bool:
     """Can a file with these bounds contain a row matching the
-    predicate?  Missing stats (unknown column, all-null file, legacy
-    manifest, non-orderable type) => True: pruning is only ever an
+    predicate?  Missing stats (unknown column, all-null file,
+    non-orderable type) => True: pruning is only ever an
     optimization, never a correctness lever."""
     if not stats or col not in stats:
         return True
@@ -121,9 +121,8 @@ def _merge_schema(base: dict | None, extra: dict | None) -> dict | None:
 
 
 def _table_state(snap: dict | None) -> dict:
-    """The table-state fields of a snapshot, normalized (legacy
-    manifests predate stats and merge-on-read bookkeeping; absent reads
-    as empty, which every reader already treats as "unknown")."""
+    """The table-state fields of a snapshot; a table's first snapshot
+    (no parent, ``snap`` None) starts from empty ones."""
     s = snap or {}
     return {
         "dirs": s.get("dirs", []),
@@ -414,19 +413,17 @@ class Catalog:
     def _staged_dir(self, table: str) -> str:
         return os.path.join(self._tdir(table), "staged")
 
-    def append_staged(
-        self, table: str, df: DataFrame, partition_by: list[str] | None = None
-    ) -> str:
-        """Write an append WITHOUT committing it: data + per-file stats
-        land on disk, a staged manifest records them, and a ``wap_id``
-        is returned for ``read_staged`` / ``publish_staged`` /
-        ``abort_staged``.  Readers of the table never see staged rows."""
+    def append_staged(self, table: str, df: DataFrame) -> str:
+        """Write an unpartitioned append WITHOUT committing it: data +
+        per-file stats land on disk, a staged manifest records them, and
+        a ``wap_id`` is returned for ``read_staged`` / ``publish_staged``
+        / ``abort_staged``.  Readers of the table never see staged rows."""
         wap_id = uuid.uuid4().hex[:12]
-        data_dir, dir_stats = self._write_dir(table, df, partition_by, "s")
+        data_dir, dir_stats = self._write_dir(table, df, None, "s")
         staged = {
             "wap_id": wap_id,
             "dir": data_dir,
-            "partition_by": partition_by or [],
+            "partition_by": [],
             "schema": df.schema.jsonValue(),
             "dir_stats": dir_stats,
         }
@@ -611,10 +608,9 @@ class Catalog:
         """
         from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(snap["schema"]) if snap.get("schema") else None
+        schema = StructType.fromJson(snap["schema"])
         specs = [] if positions else (snap.get("delete_specs") or [])
-        # "kind" absent = equality (legacy manifests predate position
-        # deletes)
+        # "kind" absent = equality (equality specs are written without it)
         eq_idx = [
             i for i, sp in enumerate(specs)
             if sp.get("kind", "equality") == "equality"
@@ -630,8 +626,6 @@ class Catalog:
             })
 
         def align(df):
-            if schema is None:
-                return df
             cols = [
                 F.col(f.name) if f.name in df.columns
                 else F.lit(None).cast(f.dataType).alias(f.name)
@@ -646,18 +640,16 @@ class Catalog:
         for d in snap["dirs"]:
             if files_by_dir is not None and not files_by_dir.get(d):
                 continue  # every file of this dir was pruned
-            # unknown add id (legacy manifest) => 0: deletes apply —
-            # legacy manifests predate MOR deletes, so specs only ever
-            # exist alongside complete dir_added bookkeeping
-            added = dir_added.get(d, 0)
-            key = tuple(i for i in eq_idx if added < specs[i]["id"])
+            # every committed dir has an add id; the partial snapshots
+            # of staged and change reads carry no specs to compare it to
+            key = tuple(i for i in eq_idx if dir_added[d] < specs[i]["id"])
             groups.setdefault(key, []).append(d)
 
         def reader():
             # the manifest schema spares every dir read its
-            # schema-inference job; only legacy (schema-less) manifests
-            # still infer.  A fresh reader per dir: options mutate it.
-            return spark.read if schema is None else spark.read.schema(schema)
+            # schema-inference job.  A fresh reader per dir: options
+            # mutate it.
+            return spark.read.schema(schema)
 
         # one keys frame per spec, shared across dir groups
         spec_keys: dict[int, DataFrame] = {}
@@ -677,13 +669,12 @@ class Catalog:
                     # zero parquet files already does: the schema is
                     # given).  Corrupt files (they surface at scan
                     # time), permission errors, and wrongly-GC'd dirs
-                    # must surface, not read as silently empty; so must
-                    # anything a schema-less legacy manifest hits.
+                    # must surface, not read as silently empty.
                     cond = getattr(e, "getErrorClass", lambda: None)() or ""
                     missing = cond == "PATH_NOT_FOUND" or any(
                         t in str(e) for t in ("PATH_NOT_FOUND", "Path does not exist")
                     )
-                    if not missing or schema is None:
+                    if not missing:
                         raise
                     part = spark.createDataFrame([], schema)
                     if address:
@@ -709,8 +700,6 @@ class Catalog:
                 df = df.join(spec_keys[i], on=sp["cols"], how="left_anti")
             out = df if out is None else out.unionByName(df)
         if out is None:  # empty table or fully pruned scan
-            if schema is None:
-                raise FileNotFoundError("snapshot has no schema to read")
             empty = spark.createDataFrame([], schema)
             return align(null_address(empty) if positions else empty)
         if pos_specs and _FILE_COL in out.columns:
@@ -735,21 +724,16 @@ class Catalog:
     def exists(self, table: str) -> bool:
         return bool(self.snapshots(table))
 
-    def files(self, spark: SparkSession, table: str, snapshot: int | None = None) -> DataFrame:
+    def files(self, spark: SparkSession, table: str) -> DataFrame:
         """File-inventory metadata table (Iceberg's ``table.files``):
-        one row per data file of a snapshot — path, dir, size, and the
-        manifest-recorded column bounds as JSON — so layout health
-        (small-file count, clustering quality, skew) is auditable with
-        plain SQL instead of a filesystem walk."""
-        snap = self._snapshot(table, snapshot)
-        all_stats = snap.get("stats") or {}
+        one row per data file of the current snapshot — path, dir, size,
+        and the manifest-recorded column bounds as JSON — so layout
+        health (small-file count, clustering quality, skew) is auditable
+        with plain SQL instead of a filesystem walk."""
+        snap = self._snapshot(table)
         rows = []
         for d in snap["dirs"]:
-            dir_stats = all_stats.get(d)
-            if dir_stats is None:
-                # legacy (pre-stats) manifest: enumerate, bounds unknown
-                dir_stats = {os.path.relpath(f, d): {} for f in _parquet_files(d)}
-            for rel, bounds in dir_stats.items():
+            for rel, bounds in snap["stats"][d].items():
                 path = os.path.join(d, rel)
                 try:
                     size = os.path.getsize(path)
@@ -763,13 +747,11 @@ class Catalog:
 
     # ---------------------------------------------------- scan planning
     def plan_scan(
-        self,
-        table: str,
-        where: list[tuple[str, str, object]] | None = None,
-        snapshot: int | None = None,
+        self, table: str, where: list[tuple[str, str, object]] | None = None
     ) -> tuple[dict[str, list[str]], int, int]:
-        """Iceberg scan planning: decide from manifest metadata alone
-        which data files a conjunctive predicate can touch.
+        """Iceberg scan planning: decide from the current snapshot's
+        manifest alone which data files a conjunctive predicate can
+        touch.
 
         ``where`` is a list of ``(column, op, literal)`` with op one of
         ``== != < <= > >=`` — null-rejecting comparisons, the class of
@@ -778,30 +760,24 @@ class Catalog:
         whose every file is pruned are absent.  No data file or footer
         is opened — this runs entirely on the committed manifest.
         """
-        return self._plan_scan_snap(self._snapshot(table, snapshot), where)
+        return self._plan_scan_snap(self._snapshot(table), where)
 
     def _plan_scan_snap(
         self, snap: dict, where: list[tuple[str, str, object]] | None
     ) -> tuple[dict[str, list[str]], int, int]:
-        all_stats = snap.get("stats") or {}
         plan: dict[str, list[str]] = {}
         n_kept = n_total = 0
         for d in snap["dirs"]:
-            dir_stats = all_stats.get(d)
-            if dir_stats is None:
-                # legacy manifest (pre-stats) — enumerate, keep all
-                kept = _parquet_files(d)
-                n_total += len(kept)
-            else:
-                n_total += len(dir_stats)
-                kept = [
-                    os.path.join(d, rel)
-                    for rel, bounds in dir_stats.items()
-                    if all(
-                        _keep_file(bounds, col, op, val)
-                        for col, op, val in (where or [])
-                    )
-                ]
+            dir_stats = snap["stats"][d]
+            n_total += len(dir_stats)
+            kept = [
+                os.path.join(d, rel)
+                for rel, bounds in dir_stats.items()
+                if all(
+                    _keep_file(bounds, col, op, val)
+                    for col, op, val in (where or [])
+                )
+            ]
             if kept:
                 plan[d] = kept
                 n_kept += len(kept)
@@ -812,7 +788,6 @@ class Catalog:
         spark: SparkSession,
         table: str,
         where: list[tuple[str, str, object]] | None = None,
-        snapshot: int | None = None,
     ) -> DataFrame:
         """Predicate-pruned read: like ``read`` but only the files
         ``plan_scan`` keeps are ever handed to Spark, and the full
@@ -823,7 +798,7 @@ class Catalog:
         """
         # one snapshot resolution for both planning and assembly: a
         # concurrent commit can't split this read across two states
-        snap = self._snapshot(table, snapshot)
+        snap = self._snapshot(table)
         plan, _kept, _total = self._plan_scan_snap(snap, where)
         df = self._assemble(spark, snap, files_by_dir=plan)
         for col, op, val in where or []:
@@ -1095,11 +1070,7 @@ class Catalog:
         from pyspark.sql.types import StructType
 
         cur = self._snapshot(table)
-        target_cols = (
-            StructType.fromJson(cur["schema"]).fieldNames()
-            if cur.get("schema")
-            else self._assemble(spark, cur, files_by_dir=None).columns
-        )
+        target_cols = StructType.fromJson(cur["schema"]).fieldNames()
         self._validate_merge_source(source, target_cols, on, table)
         tgt = self._assemble(spark, cur, files_by_dir=None, positions=True)
         matched = tgt.join(
@@ -1348,7 +1319,7 @@ class Catalog:
         # the `to` snapshot's schema, no delete masks (an append scan
         # never retracts)
         return self._assemble(
-            spark, {"dirs": added, "schema": to.get("schema")}, files_by_dir=None
+            spark, {"dirs": added, "schema": to["schema"]}, files_by_dir=None
         )
 
 

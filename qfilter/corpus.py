@@ -167,12 +167,13 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stratified_sample(
-    spark: SparkSession, sf_dir: str, num: int = 1, den: int = 5
-) -> DataFrame:
-    """Exact per-language ``num/den`` sample: rank docs inside each
-    stratum by the deterministic hash and keep the first
-    ceil(n * num / den).  Unlike fraction-threshold sampling this is
+SAMPLE_NUM, SAMPLE_DEN = 1, 5  # stratified_sample keeps num/den per stratum
+
+
+def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact per-language num/den (`SAMPLE_NUM`/`SAMPLE_DEN`) sample:
+    rank docs inside each stratum by the deterministic hash and keep the
+    first ceil(n * num / den).  Unlike fraction-threshold sampling this is
     EXACT per stratum (ceil, never ±binomial noise), at the cost of
     one shuffle by stratum + a window; the keep condition
     ``(rank-1) * den < n * num`` is pure integer math, identical in
@@ -190,7 +191,7 @@ def stratified_sample(
         F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("_n"),
     )
     return ranked.filter(
-        (F.col("sample_rank") - 1) * den < F.col("_n") * num
+        (F.col("sample_rank") - 1) * SAMPLE_DEN < F.col("_n") * SAMPLE_NUM
     ).select("doc_id", "lang", "sample_rank")
 
 
@@ -284,9 +285,7 @@ WINNOW_MOD = 1_000_000_007
 WINNOW_BASE = 257
 
 
-def winnow_fingerprints(
-    spark: SparkSession, sf_dir: str, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS-style winnowing fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03): polynomial rolling hash over character k-grams of the
     normalized text, then per sliding window of w gram hashes select
@@ -316,6 +315,7 @@ def winnow_fingerprints(
     O(|t|*w) hs[...] accesses in the selection lambda — turning a
     linear pass quadratic (measured: minutes instead of seconds at
     sf0.001)."""
+    k, w = WINNOW_K, WINNOW_W
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     n_parts = spark.sparkContext.defaultParallelism * 2
     norm = (
@@ -504,13 +504,7 @@ def _substring_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(copy)
 
 
-def substring_dup_spans(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = SUBSTR_K,
-    min_words: int = SUBSTR_MIN_WORDS,
-    df_cap: int = SUBSTR_DF_CAP,
-) -> DataFrame:
+def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cross-document duplicated-SPAN detection — the
     suffix-array-style substring dedup of Lee et al., "Deduplicating
     Training Data Makes Language Models Better" (ACL '22), at word
@@ -519,8 +513,8 @@ def substring_dup_spans(
     primitive substring-removal dedup needs.
 
     Algorithm (all DataFrame ops, no UDF):
-      1. `_shingles`: k-word shingle hashes at EVERY word position,
-         with their positions.
+      1. `_shingles`: k-word (k = SUBSTR_K) shingle hashes at EVERY
+         word position, with their positions.
       2. `_df_capped`: the document-frequency cap on the shingle hash
          shared with `trigram_jaccard_pairs` — a boilerplate k-gram
          shared by thousands of docs would otherwise explode the
@@ -534,7 +528,7 @@ def substring_dup_spans(
          merges each run into one maximal span: any common substring
          of >= k words is found, with exact start offsets on both
          sides and length max-min+k.
-      4. Keep spans >= min_words.
+      4. Keep spans >= SUBSTR_MIN_WORDS.
 
     Dup plant: every doc with >= 51 words gets a partner
     (doc_id + 2e6) embedding its words 12..51 between unrelated
@@ -549,10 +543,10 @@ def substring_dup_spans(
     """
     from pyspark.sql import Window
 
-    grams = _shingles(_substring_corpus(spark, sf_dir), k).persist(
+    grams = _shingles(_substring_corpus(spark, sf_dir), SUBSTR_K).persist(
         StorageLevel.DISK_ONLY
     )
-    g = _df_capped(grams, df_cap)
+    g = _df_capped(grams, SUBSTR_DF_CAP)
     a, b = g.alias("a"), g.alias("b")
     pairs = (
         a.join(b, F.col("a.h") == F.col("b.h"))
@@ -575,8 +569,8 @@ def substring_dup_spans(
             F.max("pa").alias("e1"),
             F.count(F.lit(1)).alias("n_grams"),
         )
-        .withColumn("span_words", F.col("e1") - F.col("s1") + F.lit(k))
-        .filter(F.col("span_words") >= min_words)
+        .withColumn("span_words", F.col("e1") - F.col("s1") + F.lit(SUBSTR_K))
+        .filter(F.col("span_words") >= SUBSTR_MIN_WORDS)
         .select(
             "id1",
             "id2",
@@ -588,13 +582,7 @@ def substring_dup_spans(
     )
 
 
-def substring_dedup_apply(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = SUBSTR_K,
-    min_words: int = SUBSTR_MIN_WORDS,
-    df_cap: int = SUBSTR_DF_CAP,
-) -> DataFrame:
+def substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVAL half of exact substring dedup (Lee et al. keep one
     occurrence and cut the rest): for every detected duplicated span,
     the lower-id document keeps its copy and the higher-id document's
@@ -611,7 +599,7 @@ def substring_dedup_apply(
     nondeterministic ordering cannot change the output."""
     from pyspark.sql import Window
 
-    spans = substring_dup_spans(spark, sf_dir, k, min_words, df_cap)
+    spans = substring_dup_spans(spark, sf_dir)
     # DISTINCT cut ranges (r6 flake fix): several id1 partners (e.g.
     # exact-duplicate sources) can report the IDENTICAL (doc_id, s, e)
     # cut.  Identical ranges always union-merge, so distinct is
@@ -671,18 +659,13 @@ DECON_N = 13          # n-gram width: the GPT-3 / Llama-2 decontamination recipe
 DECON_BENCH_MOD = 41  # doc_id % 41 == 0 -> held-out eval ("benchmark") doc
 
 
-def decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = DECON_N,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> DataFrame:
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag every TRAINING document that
     shares any n-word gram with the held-out eval set — the n-gram
     overlap rule used to scrub eval benchmarks out of LLM pretraining
     corpora (GPT-3 appendix C / Llama-2 style, 13-grams).
 
-    Eval set: docs with doc_id % bench_mod == 0, over the same
+    Eval set: docs with doc_id % DECON_BENCH_MOD == 0, over the same
     planted-span corpus as `substring_dup_spans` (so every qualifying
     benchmark doc has a training partner carrying a verbatim 40-word
     span of it -> 40 - n + 1 known matching gram positions).
@@ -709,6 +692,7 @@ def decontaminate(
     n_total = gram positions in the doc, contam_frac).  xxhash64 join
     keys vs the oracle's string join: same two-implementation strategy
     as `substring_dup_spans`."""
+    n = DECON_N
     docs = (
         _substring_corpus(spark, sf_dir)
         .filter(F.size("ws") >= n)
@@ -716,7 +700,7 @@ def decontaminate(
             "doc_id",
             "ws",
             (F.size("ws") - F.lit(n) + F.lit(1)).cast("long").alias("n_total"),
-            (F.col("doc_id") % bench_mod == 0).alias("is_bench"),
+            (F.col("doc_id") % DECON_BENCH_MOD == 0).alias("is_bench"),
         )
     )
     bench = _shingles(docs.filter("is_bench"), n).select("h").distinct()
@@ -847,9 +831,11 @@ def _minhash_coeffs(n_perm: int):
     return a, b
 
 
-def minhash_lsh_dup_pairs(
-    spark: SparkSession, sf_dir: str, n_perm: int = 32, bands: int = 8
-) -> DataFrame:
+MINHASH_PERMS = 32  # signature length
+MINHASH_BANDS = 8   # LSH bands of MINHASH_PERMS // MINHASH_BANDS rows each
+
+
+def minhash_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs: band the signature (bands x r),
     bucket-join on (band, banded-signature hash), estimate jaccard as
     matching-minhash fraction.  Dup plant: `_with_truncated_copies`,
@@ -858,6 +844,7 @@ def minhash_lsh_dup_pairs(
     h_i(s) = (a_i * x + b_i) mod p with x = xxhash64(s) mod p — all
     inside the JVM (xxhash64 + arithmetic), no UDF; deterministic
     coefficient table."""
+    n_perm, bands = MINHASH_PERMS, MINHASH_BANDS
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # p = 2^31-1 keeps a_i * x + b_i well inside int64 (ANSI mode errors
     # on overflow rather than wrapping)
@@ -1159,8 +1146,13 @@ def event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Inter-event gap that splits a session.  The batch op and both
+# streaming sessionizers read it, so their outputs agree by design.
+SESSION_GAP_MINUTES = 30
+
+
 def event_sessions(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
+    spark: SparkSession, sf_dir: str, gap_minutes: int = SESSION_GAP_MINUTES
 ) -> DataFrame:
     """Gap-based sessionization (W-class): per-user sessions split where
     the inter-event gap reaches `gap_minutes`.
@@ -1259,8 +1251,8 @@ def lineitem_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top_customers(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
-    """Join + top-k (J2/A8 analog): customers by decimal order total."""
+def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join + top-10 (J2/A8 analog): customers by decimal order total."""
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     joined = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -1271,7 +1263,7 @@ def top_customers(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
             F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("total_spent"),
         )
         .orderBy(F.desc("total_spent"), F.asc("c_custkey"))
-        .limit(k)
+        .limit(10)
     )
 
 

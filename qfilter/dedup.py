@@ -56,26 +56,23 @@ def phash_winners(
     )
 
 
-def dedup_by_phash(
-    df: DataFrame,
-    key: str = "phash",
-    id_col: str = "image_id",
-    salt_buckets: int = 32,
-) -> DataFrame:
+def dedup_by_phash(df: DataFrame) -> DataFrame:
     """Keep one canonical row per phash (min image_id), plus dup_count.
 
-    The winners side is one row per distinct key — usually small enough
-    to broadcast; Catalyst/AQE picks broadcast automatically when it
-    fits, and the join key (key, id) is exact so no residual dupes.
+    The winners side is one row per distinct phash — usually small
+    enough to broadcast; Catalyst/AQE picks broadcast automatically when
+    it fits, and the join key (phash, image_id) is exact so no residual
+    dupes.
     """
-    winners = phash_winners(df, key, id_col, salt_buckets)
+    winners = phash_winners(df)
     return (
         df.join(
             winners,
-            (df[key] == winners[key]) & (df[id_col] == winners["canonical_id"]),
+            (df["phash"] == winners["phash"])
+            & (df["image_id"] == winners["canonical_id"]),
             "inner",
         )
-        .drop(winners[key])
+        .drop(winners["phash"])
         .drop("canonical_id")
     )
 
@@ -115,12 +112,7 @@ def neardup_phash_pairs(
     return pairs.withColumn("hamming", dist).filter(F.col("hamming") <= max_hamming)
 
 
-def neardup_cluster_winners(
-    df: DataFrame,
-    key: str = "phash",
-    id_col: str = "image_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def neardup_cluster_winners(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup clusters with a canonical winner per cluster — the full
     image-dedup step: banding-LSH pairs over DISTINCT hash values,
     connected components over the hash graph (exact at hamming<=3 by
@@ -140,18 +132,18 @@ def neardup_cluster_winners(
     it."""
     from .corpus import connected_components
 
-    hashes = df.select(F.col(key).cast("long").alias("h")).distinct()
+    hashes = df.select(F.col("phash").cast("long").alias("h")).distinct()
     pairs = neardup_phash_pairs(hashes, key="h", max_hamming=max_hamming)
     comp = connected_components(pairs, src="h1", dst="h2")
     labeled = hashes.alias("hh").join(
         comp, F.col("hh.h") == comp.v, "left"
     ).select(F.col("hh.h").alias("h"), F.coalesce("comp", F.col("hh.h")).alias("cluster"))
     return (
-        df.select(F.col(id_col), F.col(key).cast("long").alias("h"))
+        df.select("image_id", F.col("phash").cast("long").alias("h"))
         .join(labeled, "h")
         .groupBy("cluster")
         .agg(
-            F.min(id_col).alias("winner_id"),
+            F.min("image_id").alias("winner_id"),
             F.count(F.lit(1)).alias("n_images"),
             F.count_distinct(F.col("h")).alias("n_hashes"),
         )

@@ -184,12 +184,13 @@ def remove_lines(px: np.ndarray, fill: str = "paper") -> np.ndarray:
     return out
 
 
-def lighten_basic(px: np.ndarray, target_paper: int = 235) -> np.ndarray:
-    """P11: background-flattening lightener (blur-divide-normalize)."""
+def lighten_basic(px: np.ndarray) -> np.ndarray:
+    """P11: background-flattening lightener (blur-divide-normalize):
+    the blurred background maps to paper level 235."""
     gray = grayscale(px).astype(np.float64)
     k = max(15, (min(gray.shape) // 8) | 1)
     bg = box_filter(gray.astype(np.uint8), k).astype(np.float64)
-    ratio = np.clip(target_paper * gray / np.maximum(bg, 1.0), 0, 255)
+    ratio = np.clip(235 * gray / np.maximum(bg, 1.0), 0, 255)
     gain = np.where(gray > 0, ratio / np.maximum(gray, 1.0), 1.0)
     out = np.clip(px.astype(np.float64) * gain[..., None], 0, 255)
     return np.round(out).astype(np.uint8)
@@ -365,12 +366,11 @@ def _rotate_gray_white(gray: np.ndarray, angle_deg: float) -> np.ndarray:
     return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
 
-def deskew_angle_search(
-    gray: np.ndarray,
-    coarse: tuple[float, float] = (0.5, 8.0),
-    mid: tuple[float, float] = (0.2, 3.0),
-    fine: tuple[float, float] = (0.05, 1.0),
-) -> float:
+# (step, span) in degrees of the coarse, mid and fine deskew passes
+DESKEW_PASSES = ((0.5, 8.0), (0.2, 3.0), (0.05, 1.0))
+
+
+def deskew_angle_search(gray: np.ndarray) -> float:
     """P15 (+W3): coarse-to-fine search for the angle maximizing the
     row-projection gradient of the ink mask.  Returns degrees to rotate
     BY to deskew (positive = counterclockwise content skew)."""
@@ -383,7 +383,7 @@ def deskew_angle_search(
         return _projection_score(rb)
 
     best = 0.0
-    for step, span in (coarse, mid, fine):
+    for step, span in DESKEW_PASSES:
         angles = np.arange(best - span, best + span + step / 2, step)
         scores = [score_at(float(a)) for a in angles]
         best = float(angles[int(np.argmax(scores))])

@@ -48,9 +48,6 @@ def with_external_call(
     df: DataFrame,
     transport: Transport,
     *,
-    payload_cols: Sequence[str] = ("bytes",),
-    result_col: str = "result",
-    result_type: T.DataType = T.StringType(),
     max_retries: int = 3,
     retry_backoff_s: float = 1.0,
     sleep: Callable[[float], None] = time.sleep,
@@ -60,18 +57,18 @@ def with_external_call(
     backoff ``retry_backoff_s * attempt`` between rounds
     (`surya_ocr_client.py:64-67`), then the error channel.
 
-    Returns ``df`` minus ``payload_cols`` (request bytes never travel
-    past the call stage, same rule as the decode stage dropping image
-    bytes) plus ``result_col``, ``attempts``, ``status`` ('ok' |
-    'error') and ``error`` columns.
+    Returns ``df`` minus ``bytes`` (request bytes never travel past the
+    call stage, same rule as the decode stage dropping image bytes) plus
+    string ``result``, ``attempts``, ``status`` ('ok' | 'error') and
+    ``error`` columns.
     """
     if max_retries < 1:
         raise ValueError("max_retries must be >= 1")
-    keep_cols = [c for c in df.columns if c not in set(payload_cols)]
+    keep_cols = [c for c in df.columns if c != "bytes"]
     out_schema = T.StructType(
         [df.schema[c] for c in keep_cols]
         + [
-            T.StructField(result_col, result_type),
+            T.StructField("result", T.StringType()),
             T.StructField("attempts", T.IntegerType()),
             T.StructField("status", T.StringType()),
             T.StructField("error", T.StringType()),
@@ -119,7 +116,7 @@ def with_external_call(
                         still.append(int(i))
                 pending = np.asarray(still, dtype=np.int64)
             out = pdf[keep_cols].copy()
-            out[result_col] = results
+            out["result"] = results
             out["attempts"] = attempts
             out["status"] = np.where(
                 np.equal(errors, None), "ok", "error"  # type: ignore[arg-type]

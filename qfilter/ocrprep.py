@@ -74,13 +74,14 @@ def lanczos_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return np.clip(np.round(out), 0, 255).astype(np.uint8)
 
 
-def prep_for_ocr(px: np.ndarray, long_side: int = OCR_LONG_SIDE) -> np.ndarray:
-    """P8: the reference's OCR-prep chain; returns the 0/255 binary
-    page (BINARY polarity: 255 = brighter than Otsu, i.e. paper)."""
+def prep_for_ocr(px: np.ndarray) -> np.ndarray:
+    """P8: the reference's OCR-prep chain (upscale to `OCR_LONG_SIDE`);
+    returns the 0/255 binary page (BINARY polarity: 255 = brighter than
+    Otsu, i.e. paper)."""
     h, w = px.shape[:2]
     ls = max(h, w)
-    if ls < long_side:
-        scale = long_side / float(ls)
+    if ls < OCR_LONG_SIDE:
+        scale = OCR_LONG_SIDE / float(ls)
         px = lanczos_resize(px, int(h * scale), int(w * scale))
     g = grayscale(px)
     g = clahe(g, clip=2.0, tiles=(8, 8))

@@ -188,17 +188,16 @@ class QualityFilterPipeline:
         return self.spark.createDataFrame(pa.table(cols, names=names), ddl).coalesce(1)
 
     # ------------------------------------------------------- maintenance
-    def maintain(
-        self, target_file_bytes: int = 128 << 20, keep_last: int = 1
-    ) -> dict:
+    def maintain(self, target_file_bytes: int = 128 << 20) -> dict:
         """Post-run table maintenance: bin-pack the labels table (every
-        wave appended a snapshot of small files) and expire superseded
-        snapshots.  Resume state lives in the lineage table, not in the
-        labels file layout, so a maintained table resumes identically —
+        wave appended a snapshot of small files) and expire every
+        snapshot but the compacted one.  Resume state lives in the
+        lineage table, not in the labels file layout, so a maintained
+        table resumes identically —
         ``tests/test_catalog_maintenance.py`` proves it."""
         before = len(self.catalog.table_data_files("labels"))
         sid = self.catalog.compact(self.spark, "labels", target_file_bytes)
-        deleted = self.catalog.expire_snapshots("labels", keep_last=keep_last)
+        deleted = self.catalog.expire_snapshots("labels", keep_last=1)
         after = len(self.catalog.table_data_files("labels"))
         return {
             "snapshot": sid,

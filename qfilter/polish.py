@@ -281,14 +281,17 @@ def nl_means(
 
 # ----------------------------------------------------------- full chain
 
-def lighten_full(px: np.ndarray, search: int = 11) -> np.ndarray:
-    """The reference's full polish chain (`document_lightener.py:77-95`)
-    over the luma plane with this repo's documented stand-ins.
+# NL-means search window: 11, not the reference's 21.  The classic
+# NL-means cost is quadratic in the search radius and 21 makes the
+# fixture-tier oracle minutes-slow; the recipe and weights are
+# otherwise identical.
+NLM_SEARCH = 11
 
-    ``search`` defaults to 11 (not the reference's 21): the classic
-    NL-means cost is quadratic in the search radius and 21 makes the
-    fixture-tier oracle minutes-slow; the recipe and weights are
-    otherwise identical, and the parameter is explicit.
+
+def lighten_full(px: np.ndarray) -> np.ndarray:
+    """The reference's full polish chain (`document_lightener.py:77-95`)
+    over the luma plane with this repo's documented stand-ins (NL-means
+    search window `NLM_SEARCH`).
     Returns a 3-channel image (gray replicated — keep_color=False is
     the reference default for this path)."""
     lum = grayscale(px)
@@ -298,7 +301,7 @@ def lighten_full(px: np.ndarray, search: int = 11) -> np.ndarray:
         np.round(255.0 * lum.astype(np.float64) / np.maximum(bg, 1.0)), 0, 255
     ).astype(np.uint8)
     eq = clahe(flat, clip=2.0, tiles=(8, 8))
-    den = nl_means(eq, h_param=6.0, template=7, search=search)
+    den = nl_means(eq, h_param=6.0, template=7, search=NLM_SEARCH)
     usm = unsharp(den, sigma=1.0, amount=1.4)
     edges = canny(den, 50, 150)
     # dilate 3x3 via window-or
@@ -315,7 +318,7 @@ def lighten_full(px: np.ndarray, search: int = 11) -> np.ndarray:
         out = np.clip(
             np.round((out.astype(np.float64) - lo) * (255.0 / (hi - lo))), 0, 255
         ).astype(np.uint8)
-    out = nl_means(out, h_param=4.0, template=7, search=search)
+    out = nl_means(out, h_param=4.0, template=7, search=NLM_SEARCH)
     return np.repeat(out[..., None], 3, axis=2)
 
 

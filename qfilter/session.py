@@ -38,6 +38,15 @@ __all__ = ["get_spark", "ARROW_BATCH_ROWS"]
 # at both 8 and 32 cores.
 ARROW_BATCH_ROWS = 64
 
+# Vectorized parquet reader batch.  Multi-KB `bytes` cells make the
+# default 4096-row batch a heap hazard: 32 concurrent scan tasks each
+# buffering ~24 MB column chunks intermittently OOMed an 8 GB heap in
+# the streaming read (observed r6; BENCH/run_volume.py hit the same
+# wall at 4x volume and caps its batch lower through ``extra``).  512
+# rows bounds reader memory by bytes, not row count, with no
+# measurable cost on narrow-row scans.
+READER_BATCH_ROWS = 512
+
 _MALLOC_VARS = ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_")
 
 
@@ -61,17 +70,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # multi-KB `bytes` cells make the default 4096-row vectorized
-        # reader batch a heap hazard: 32 concurrent scan tasks each
-        # buffering ~24 MB column chunks intermittently OOMed an 8 GB
-        # heap in the streaming read (observed r6; BENCH/run_volume.py
-        # hit the same wall at 4x volume and already caps its batch).
-        # 512 rows bounds reader memory by bytes, not row count, with
-        # no measurable cost on narrow-row scans.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("QFILTER_READER_BATCH", "512"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", str(READER_BATCH_ROWS))
         .config("spark.driver.memory", os.environ.get("QFILTER_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")

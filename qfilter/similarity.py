@@ -161,10 +161,12 @@ def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
 
 
 COSINE_BRUTE_MAX = 50_000  # refuse the O(N^2) baseline beyond this
+TOP_K = 5  # neighbors per query; `ann_recall_at_5` audits every family at it
+NEARDUP_COSINE = 0.99  # cosine at or above which two vectors are near-dups
 
 
 def cosine_topk(
-    spark: SparkSession, sf_dir: str, k: int = 5, max_rows: int = COSINE_BRUTE_MAX
+    spark: SparkSession, sf_dir: str, k: int = TOP_K, max_rows: int = COSINE_BRUTE_MAX
 ) -> DataFrame:
     """Brute-force cosine top-k neighbors per vector (self excluded).
 
@@ -192,8 +194,8 @@ def cosine_topk(
     return _rank_topk(_cosine(pairs, "q", "n"), k)
 
 
-def cosine_topk_bucketed(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """IVF-style: neighbors only within the same coarse bucket —
+def cosine_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style: `TOP_K` neighbors only within the same coarse bucket —
     (label, m-bit axis-sign sub-code), m scale-adaptive.
 
     At scale the bucket is the join/shuffle key: candidates per query
@@ -217,13 +219,12 @@ def cosine_topk_bucketed(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFr
         F.col("v").alias("bv"), F.col("norm").alias("nb"),
     )
     pairs = a.join(b, ["lb", "sub"]).filter(F.col("q") != F.col("n"))
-    return _rank_topk(_cosine(pairs, "q", "n"), k)
+    return _rank_topk(_cosine(pairs, "q", "n"), TOP_K)
 
 
-def cosine_neardup_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.99
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (dedup shape, not top-k).
+def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (dedup shape, not top-k):
+    cosine >= `NEARDUP_COSINE`.
 
     Dup plant: each vector also appears as a copy (vec_id + 1e6) with
     its first component shifted by +0.05 — the vectors are
@@ -260,7 +261,7 @@ def cosine_neardup_pairs(
         F.col("v").alias("bv"), F.col("norm").alias("nb"),
     )
     pairs = a.join(b, ["lb", "sub"]).filter(F.col("id1") < F.col("id2"))
-    return _cosine(pairs, "id1", "id2").filter(F.col("cos") >= threshold)
+    return _cosine(pairs, "id1", "id2").filter(F.col("cos") >= NEARDUP_COSINE)
 
 
 def _planes(dim: int, m: int) -> np.ndarray:
@@ -299,7 +300,7 @@ def _lsh_buckets_udf(m: int):
     return buckets
 
 
-def lsh_ann_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def lsh_ann_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH (L tables
     of m planes; candidates = union over tables), exact cosine rerank.
 
@@ -371,14 +372,13 @@ def _fold_dots(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return acc
 
 
-def ivf_fit_centroids(
-    mat: np.ndarray, k: int = IVF_K, iters: int = IVF_ITERS
-) -> np.ndarray:
+def ivf_fit_centroids(mat: np.ndarray, k: int = IVF_K) -> np.ndarray:
     """Deterministic Lloyd's k-means for the IVF coarse quantizer.
 
     Seeded init (PCG64(IVF_SEED) choice of k rows), a FIXED number of
-    iterations, fold-based distances, and lowest-index tie-breaks via
-    argmin — same centroids on every run over the same sample.  At
+    iterations (IVF_ITERS), fold-based distances, and lowest-index
+    tie-breaks via argmin — same centroids on every run over the same
+    sample.  At
     100 TB this runs on a driver-side sample; the centroid matrix is
     then broadcast to executors (model-artifact pattern, SURVEY §4.2).
     """
@@ -389,7 +389,7 @@ def ivf_fit_centroids(
     k = min(k, n)  # tiny fixtures: never ask choice() for more rows than exist
     rng = np.random.default_rng(np.random.PCG64(IVF_SEED))
     cents = mat[np.sort(rng.choice(n, size=k, replace=False))].copy()
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         # ||x-c||^2 ranking == (|c|^2 - 2 x.c) ranking per row
         cn = np.cumsum(cents * cents, axis=1)[:, -1]  # (k,) |c|^2, row-wise fold
         assign = np.argmin(cn[None, :] - 2.0 * _fold_dots(mat, cents), axis=1)
@@ -407,12 +407,10 @@ def _ivf_assign(mat: np.ndarray, cents: np.ndarray, nprobe: int) -> np.ndarray:
     return np.argsort(d2, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
 
 
-def ivf_ann_topk(
-    spark: SparkSession, sf_dir: str, k: int = 5, nprobe: int = IVF_NPROBE
-) -> DataFrame:
+def ivf_ann_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """IVF ANN: sample -> k-means coarse quantizer (driver) -> broadcast
     centroids -> executor-side assignment UDF -> search restricted to
-    the query's nprobe nearest lists -> exact cosine rerank.
+    the query's nprobe = IVF_NPROBE nearest lists -> exact cosine rerank.
 
     This is the real 100 TB IVF shape (vs `cosine_topk_bucketed`, which
     reuses a precomputed label as the list id): the centroid artifact
@@ -438,7 +436,7 @@ def ivf_ann_topk(
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probes(emb: pd.Series) -> pd.Series:
         m = np.asarray([np.asarray(v, dtype=np.float64) for v in emb])
-        return pd.Series(list(_ivf_assign(m, bc.value, nprobe)))
+        return pd.Series(list(_ivf_assign(m, bc.value, IVF_NPROBE)))
 
     e = (
         _emb(spark, sf_dir)
@@ -459,11 +457,11 @@ def ivf_ann_topk(
     return _rank_topk(_cosine(pairs, "q", "n"), k)
 
 
-def ann_recall_at_5(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Recall@k of every approximate-NN family vs the brute-force
-    exact baseline, as a first-class metric query (one row per
-    family).  recall = |ANN top-k pairs ∩ exact top-k pairs| /
-    |exact top-k pairs|, over all queries.
+def ann_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 (`TOP_K`) of every approximate-NN family vs the
+    brute-force exact baseline, as a first-class metric query (one row
+    per family).  recall = |ANN top-5 pairs ∩ exact top-5 pairs| /
+    |exact top-5 pairs|, over all queries.
 
     This is the quality gate an ANN index must publish before a 100 TB
     deployment trusts it: the bucketed/LSH/IVF variants trade recall
@@ -474,7 +472,7 @@ def ann_recall_at_5(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scale — which is exactly where a recall audit belongs (sampled
     slice), never on the full corpus.
     """
-    truth = cosine_topk(spark, sf_dir, k).select("q", "n")
+    truth = cosine_topk(spark, sf_dir).select("q", "n")
     fams = {
         "bucketed": cosine_topk_bucketed,
         "lsh": lsh_ann_topk,
@@ -482,7 +480,7 @@ def ann_recall_at_5(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     }
     all_ann = None
     for fam, fn in fams.items():
-        part = fn(spark, sf_dir, k).select(
+        part = fn(spark, sf_dir).select(
             F.lit(fam).alias("family"), "q", "n"
         )
         all_ann = part if all_ann is None else all_ann.unionByName(part)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cascade import with_labels
+from .corpus import SESSION_GAP_MINUTES
 from .features import with_all_features
 
 __all__ = [
@@ -72,37 +73,49 @@ LABEL_OUT_COLS = [
     "caption_scrubbed", "pii_hits", "tox_hits", "phash64",
 ]
 
+# Event-time bound on late data for the windowed and session streams.
+EVENTS_WATERMARK = "2 hours"
+
+
+def _file_source(
+    spark: SparkSession, input_dir: str, schema: T.StructType, **options
+) -> DataFrame:
+    """File-source stream of the parquet files landing in ``input_dir``."""
+    return spark.readStream.schema(schema).options(**options).parquet(input_dir)
+
+
+def _parquet_sink(df: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Append ``df`` to parquet files under ``out_dir``, draining the
+    backlog once (availableNow); restartable from ``checkpoint_dir``."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
 
 def stream_quality_filter(
     spark: SparkSession,
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    schema: T.StructType = IMAGES_SCHEMA,
     max_files_per_trigger: int = 8,
 ):
-    """Incremental quality filter over a landing directory of parquet
-    files.  Returns the StreamingQuery (await/stop is the caller's).
+    """Incremental quality filter over a landing directory of image
+    parquet files (`IMAGES_SCHEMA`).  Returns the StreamingQuery
+    (await/stop is the caller's).
 
     ``max_files_per_trigger`` bounds micro-batch size; a file-source
     micro-batch parallelizes at one task per file, so keep it >= the
     executor core count when draining a backlog with availableNow."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = _file_source(
+        spark, input_dir, IMAGES_SCHEMA, maxFilesPerTrigger=max_files_per_trigger
     )
     labeled = with_labels(with_all_features(stream)).select(*LABEL_OUT_COLS)
-    writer = (
-        labeled.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(labeled, out_dir, checkpoint_dir)
 
 
 def stream_quality_filter_to_catalog(
@@ -110,14 +123,12 @@ def stream_quality_filter_to_catalog(
     input_dir: str,
     warehouse: str,
     checkpoint_dir: str,
-    table: str = "labels",
-    available_now: bool = True,
-    schema: T.StructType = IMAGES_SCHEMA,
     max_files_per_trigger: int = 8,
     maintain_every: int = 0,
 ):
-    """Stream the quality filter into a :class:`~qfilter.catalog.Catalog`
-    table with exactly-once micro-batch commits.
+    """Stream the quality filter into the ``labels`` table of a
+    :class:`~qfilter.catalog.Catalog` with exactly-once micro-batch
+    commits, draining the backlog once (availableNow).
 
     Each micro-batch is appended via ``Catalog.append`` with a
     ``txn_id`` built from the engine's deterministic batchId, so a
@@ -134,49 +145,38 @@ def stream_quality_filter_to_catalog(
     from .catalog import Catalog, CommitConflict
 
     catalog = Catalog(warehouse)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = _file_source(
+        spark, input_dir, IMAGES_SCHEMA, maxFilesPerTrigger=max_files_per_trigger
     )
     labeled = with_labels(with_all_features(stream)).select(*LABEL_OUT_COLS)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.append(table, batch_df, txn_id=f"{checkpoint_dir}#{batch_id}")
-        if maintain_every and len(catalog.snapshots(table)) % maintain_every == 0:
+        catalog.append("labels", batch_df, txn_id=f"{checkpoint_dir}#{batch_id}")
+        if maintain_every and len(catalog.snapshots("labels")) % maintain_every == 0:
             try:
-                catalog.compact(spark, table)
-                catalog.expire_snapshots(table, keep_last=1)
+                catalog.compact(spark, "labels")
+                catalog.expire_snapshots("labels", keep_last=1)
             except CommitConflict:
                 pass  # another writer landed mid-compaction; next cycle
 
-    writer = (
+    return (
         labeled.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_event_window_counts(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    schema: T.StructType | None = None,
+    spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str
 ):
-    """Event-time tumbling-window counts per event_type with a
-    watermark bounding state for late data."""
-    if schema is None:
-        schema = EVENTS_SCHEMA
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    """Event-time 1-hour tumbling-window counts per event_type with
+    the `EVENTS_WATERMARK` bounding state for late data."""
+    stream = _file_source(spark, input_dir, EVENTS_SCHEMA)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
+        stream.withWatermark("ts", EVENTS_WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
@@ -187,23 +187,11 @@ def stream_event_window_counts(
             "event_type", "n", "sum_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(agg, out_dir, checkpoint_dir)
 
 
 def stream_event_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "30 minutes",
-    schema: T.StructType | None = None,
+    spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Exactly-once ingest dedup: `dropDuplicatesWithinWatermark` on
     event_id — the streaming half of the training-pipeline dedup
@@ -215,46 +203,34 @@ def stream_event_dedup(
     expires state once the event-time bound passes — state is bounded
     by (arrival rate x watermark), independent of corpus size.  Parity
     with batch `SELECT DISTINCT` is exact whenever re-deliveries land
-    within the watermark (tests plant a full duplicate delivery)."""
-    if schema is None:
-        schema = EVENTS_SCHEMA
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    within the watermark (tests plant a full duplicate delivery).  The
+    watermark here is 30 minutes."""
+    stream = _file_source(spark, input_dir, EVENTS_SCHEMA)
     deduped = (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(deduped, out_dir, checkpoint_dir)
 
 
 def stream_event_sessions(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    schema: T.StructType | None = None,
+    spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Stateful session windows: per-user sessions via the built-in
-    `session_window` (merging state bounded by the watermark).  Append
-    mode emits a session once the watermark passes its end (last event
-    ts + gap).  Session semantics — merge iff inter-event gap < `gap`
-    — match the batch `corpus.event_sessions` cumsum form exactly
-    (parity asserted in tests/test_streaming.py), and the emitted
-    window is [min ts, max ts + gap)."""
-    if schema is None:
-        schema = EVENTS_SCHEMA
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    `session_window` (merging state bounded by `EVENTS_WATERMARK`).
+    Append mode emits a session once the watermark passes its end (last
+    event ts + gap, gap = `corpus.SESSION_GAP_MINUTES`).  Session
+    semantics — merge iff inter-event gap < gap — match the batch
+    `corpus.event_sessions` cumsum form exactly (parity asserted in
+    tests/test_streaming.py), and the emitted window is
+    [min ts, max ts + gap)."""
+    stream = _file_source(spark, input_dir, EVENTS_SCHEMA)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        stream.withWatermark("ts", EVENTS_WATERMARK)
+        .groupBy(
+            F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes").alias("win"),
+            "user_id",
+        )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("session_start"),
@@ -266,24 +242,11 @@ def stream_event_sessions(
             F.col("win.end").alias("win_end"),
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(agg, out_dir, checkpoint_dir)
 
 
 def stream_event_sessions_custom(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-    schema: T.StructType | None = None,
+    spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Custom stateful sessionization via ``applyInPandasWithState`` —
     the hand-rolled analogue of `stream_event_sessions`' built-in
@@ -294,7 +257,8 @@ def stream_event_sessions_custom(
     (start_us, end_us, n, decimal-sum as string).  Each invoke merges
     the micro-batch's rows (sorted by ts, event_id — the batch op's
     order) with the stored sessions in time order and re-splits on
-    ``gap >= gap_minutes`` (the exact `corpus.event_sessions` rule);
+    ``gap >= corpus.SESSION_GAP_MINUTES`` (the exact
+    `corpus.event_sessions` rule);
     sessions whose ``end + gap <= watermark`` are emitted, the rest
     stay in state with an event-time timeout at ``min(end) + gap`` so
     the engine's final watermark pass flushes them.  Emission contract
@@ -311,9 +275,7 @@ def stream_event_sessions_custom(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    if schema is None:
-        schema = EVENTS_SCHEMA
-    gap_us = 60_000_000 * gap_minutes
+    gap_us = 60_000_000 * SESSION_GAP_MINUTES
 
     out_schema = T.StructType(
         [
@@ -417,20 +379,13 @@ def stream_event_sessions_custom(
                 sessions.append(a)
         yield from settle(sessions)
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = _file_source(spark, input_dir, EVENTS_SCHEMA)
     sessions = (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", EVENTS_WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             fn, out_schema, state_schema, "append",
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(sessions, out_dir, checkpoint_dir)

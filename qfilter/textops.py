@@ -178,19 +178,21 @@ CORPUS_LANGS = ("en", "ru", "de", "fr", "es", "zxx")
 
 _ZXX_CHARS = "#@$%&*+=~^<>|/\\{}[]()0123456789-_"
 
+CORPUS_SEED = 42
+CORPUS_SENTENCES = 400  # per language
+CORPUS_MIN_LEN, CORPUS_MAX_LEN = 4, 14  # words per sentence, inclusive
 
-def build_corpus(
-    seed: int = 42, sentences_per_lang: int = 400, min_len: int = 4, max_len: int = 14
-) -> dict[str, list[str]]:
+
+def build_corpus() -> dict[str, list[str]]:
     """Deterministic synthetic sentences per language (langid/LM training)."""
-    rng = np.random.default_rng(np.random.PCG64(seed))
+    rng = np.random.default_rng(np.random.PCG64(CORPUS_SEED))
     corpus: dict[str, list[str]] = {}
     for lang in CORPUS_LANGS:
         sents = []
         if lang == "zxx":
             chars = np.array(list(_ZXX_CHARS))
-            for _ in range(sentences_per_lang):
-                n = int(rng.integers(min_len, max_len + 1))
+            for _ in range(CORPUS_SENTENCES):
+                n = int(rng.integers(CORPUS_MIN_LEN, CORPUS_MAX_LEN + 1))
                 toks = [
                     "".join(rng.choice(chars, size=int(rng.integers(2, 8))))
                     for _ in range(n)
@@ -205,8 +207,8 @@ def build_corpus(
             # captions exploit to reach mid-band confidences.
             weights = 1.0 / (np.arange(len(vocab)) + 2.0)
             weights /= weights.sum()
-            for _ in range(sentences_per_lang):
-                n = int(rng.integers(min_len, max_len + 1))
+            for _ in range(CORPUS_SENTENCES):
+                n = int(rng.integers(CORPUS_MIN_LEN, CORPUS_MAX_LEN + 1))
                 idx = rng.choice(len(vocab), size=n, p=weights)
                 sents.append(" ".join(vocab[i] for i in idx))
         corpus[lang] = sents
@@ -460,8 +462,8 @@ class TextBundle:
     scrub: ScrubBundle
 
 
-def build_default_bundle(seed: int = 42) -> TextBundle:
-    corpus = build_corpus(seed=seed)
+def build_default_bundle() -> TextBundle:
+    corpus = build_corpus()
     langid = LangIdModel.train(corpus)
     # LM trains on the natural-language corpus only (zxx is anti-language)
     lm_sents = [s for lang in CORPUS_LANGS if lang != "zxx" for s in corpus[lang]]

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cascade import extended_category
+from .cascade import decide, extended_rules
 
 __all__ = ["DERIVED_NAMES", "with_derived_features", "threshold_grid_search"]
 
@@ -63,11 +63,10 @@ FIXED = {"pct80_good": 0.5, "conf_good": 75.0, "bbox_good": 0.1, "line_var_max":
 def threshold_grid_search(spark: SparkSession, features: DataFrame) -> DataFrame:
     """Best grid cell by 3-way-collapsed accuracy vs the extended
     cascade's category (good/medium/failed-or-trash)."""
+    category, _reason = decide(extended_rules())
     truth = features.withColumn(
         "true_cat",
-        F.when(extended_category() == "trash", F.lit("failed")).otherwise(
-            extended_category()
-        ),
+        F.when(category == "trash", F.lit("failed")).otherwise(category),
     )
     grid = spark.createDataFrame(
         GRID, ["pct80_failed", "conf_failed", "bbox_failed", "conf_iqr_max"]

@@ -13,7 +13,6 @@ O(matching) files.
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -123,22 +122,6 @@ def test_scan_after_schema_evolution_is_conservative(spark, cat):
     got = cat.scan(spark, "e", [("score", ">=", 300)])
     assert got.count() == 50  # ids 150..199
     assert got.agg(F.min("score")).collect()[0][0] == 300
-
-
-def test_legacy_manifest_without_stats_scans_full(spark, cat):
-    cat.append("l", _mk(spark, 0, 100))
-    # simulate a pre-stats manifest
-    sdir = os.path.join(cat.warehouse, "l", "snapshots")
-    name = os.path.join(sdir, "0.json")
-    with open(name) as f:
-        m = json.load(f)
-    assert m.pop("stats", None) is not None
-    os.remove(name)
-    with open(name, "w") as f:
-        json.dump(m, f)
-    plan, kept, total = cat.plan_scan("l", [("id", ">=", 90)])
-    assert kept == total > 0  # nothing pruned, nothing lost
-    assert cat.scan(spark, "l", [("id", ">=", 90)]).count() == 10
 
 
 def test_files_metadata_table(spark, cat):
