@@ -39,9 +39,12 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 __all__ = ["Catalog", "CommitConflict", "zorder_expr"]
 
@@ -121,21 +124,27 @@ def _merge_schema(base: dict | None, extra: dict | None) -> dict | None:
 
 
 def _table_state(snap: dict | None) -> dict:
-    """The table-state fields of a snapshot; a table's first snapshot
-    (no parent, ``snap`` None) starts from empty ones."""
-    s = snap or {}
+    """The table-state fields of a snapshot.  Every manifest carries
+    all of them (``_next_manifest`` starts each one from its parent's);
+    only a table's first snapshot (no parent, ``snap`` None) starts
+    from empty ones."""
+    if snap is None:
+        return {
+            "dirs": [], "partition_by": [], "schema": None,
+            "stats": {}, "delete_specs": [], "dir_added": {},
+        }
     return {
-        "dirs": s.get("dirs", []),
-        "partition_by": s.get("partition_by") or [],
+        "dirs": snap["dirs"],
+        "partition_by": snap["partition_by"],
         # schema travels in the manifest so empty tables (zero
         # rows/files) still read back with the right columns
-        "schema": s.get("schema"),
+        "schema": snap["schema"],
         # per-file column bounds of every dir, for scan planning
-        "stats": s.get("stats") or {},
+        "stats": snap["stats"],
         # merge-on-read: pending delete specs, and the snapshot that
         # added each dir so a delete never masks data committed after it
-        "delete_specs": s.get("delete_specs") or [],
-        "dir_added": s.get("dir_added") or {},
+        "delete_specs": snap["delete_specs"],
+        "dir_added": snap["dir_added"],
     }
 
 
@@ -262,8 +271,6 @@ class Catalog:
         """
         from urllib.parse import unquote
 
-        import pyarrow.parquet as pq
-
         out: dict[str, dict[str, list]] = {}
         for root, _dirs, names in os.walk(data_dir):
             for name in sorted(names):
@@ -319,26 +326,43 @@ class Catalog:
         return out
 
     def _write_dir(
-        self, table: str, df: DataFrame, partition_by: list[str] | None, hint: str
+        self,
+        table: str,
+        df: DataFrame | pa.Table,
+        partition_by: list[str] | None,
+        hint: str,
     ) -> tuple[str, dict]:
         """Write ``df`` to a fresh data dir and walk its footers once:
-        ``(data_dir, dir_stats)``, ready for a manifest."""
+        ``(data_dir, dir_stats)``, ready for a manifest.  A
+        ``pyarrow.Table`` (rows the driver already holds) is written
+        without Spark, as one unpartitioned file."""
         data_dir = self._new_data_dir(table, hint)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        if isinstance(df, pa.Table):
+            os.makedirs(data_dir)
+            pq.write_table(
+                df, os.path.join(data_dir, "part-00000.zstd.parquet"), compression="zstd"
+            )
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(data_dir)
         return data_dir, self._collect_dir_stats(data_dir)
 
     # ----------------------------------------------------------- append
     def append(
         self,
         table: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         partition_by: list[str] | None = None,
         txn_id: str | None = None,
     ) -> int:
         """Append ``df`` as a new snapshot and return its id.
+
+        ``df`` may be a ``pyarrow.Table``: a few rows held by the driver
+        are then written without a Spark job, and the manifest schema
+        (nullability included) comes from the Arrow schema.  Such an
+        append takes no ``partition_by``.
 
         With a ``txn_id`` the append is idempotent: a second call with
         the same id is a no-op returning the original snapshot id.
@@ -348,6 +372,12 @@ class Catalog:
         batchId, so the sink must deduplicate on it (the same pattern
         as Iceberg's commit-dedup on wap.id / Flink's checkpoint txn).
         """
+        if isinstance(df, pa.Table):
+            if partition_by:
+                raise ValueError("a pyarrow.Table append takes no partition_by")
+            schema = from_arrow_schema(df.schema).jsonValue()
+        else:
+            schema = df.schema.jsonValue()
         if txn_id is not None:
             # a replay is detected before any data is written
             existing = self._key_snapshot(table, txn_id, self.snapshots(table))
@@ -356,7 +386,7 @@ class Catalog:
         data_dir, dir_stats = self._write_dir(table, df, partition_by, "a")
         tags = {} if txn_id is None else {"txn_id": txn_id}
         sid, fresh = self._append_commit(
-            table, data_dir, dir_stats, df.schema.jsonValue(), partition_by, **tags
+            table, data_dir, dir_stats, schema, partition_by, **tags
         )
         if not fresh:
             # a replayed twin committed this txn while we were writing
@@ -512,6 +542,12 @@ class Catalog:
         with open(tmp, "w") as f:
             json.dump(merged, f)
         os.replace(tmp, self._txn_file(table))
+
+    def committed(self, table: str, txn_id: str) -> bool:
+        """Whether an append keyed ``txn_id`` is committed, i.e. whether
+        ``append(..., txn_id=txn_id)`` would be a no-op that writes
+        nothing."""
+        return self._key_snapshot(table, txn_id, self.snapshots(table)) is not None
 
     def _key_snapshot(self, table: str, key: str, snaps: list[dict]) -> int | None:
         """Id of the snapshot that committed idempotence ``key`` (a txn
@@ -824,11 +860,11 @@ class Catalog:
         rows = [
             (
                 s["id"],
-                s.get("parent"),
+                s["parent"],
                 s.get("operation", "append"),
                 s.get("txn_id"),
                 len(s["dirs"]),
-                ",".join(s.get("partition_by") or []),
+                ",".join(s["partition_by"]),
             )
             for s in self.snapshots(table)
         ]
@@ -903,7 +939,7 @@ class Catalog:
         )
         n_files = max(1, -(-total // target_file_bytes))
         df = self._assemble(spark, cur, files_by_dir=None)
-        part_by = cur.get("partition_by") or []
+        part_by = cur["partition_by"]
         if zorder_by:
             zcol = f"__z_{uuid.uuid4().hex[:6]}"
             df = df.withColumn(zcol, zorder_expr(spark, df, zorder_by))
@@ -1081,7 +1117,7 @@ class Catalog:
         ddir = self._new_data_dir(table, "posdel")
         matched.write.mode("overwrite").parquet(ddir)
         added = self._write_dir(
-            table, source.select(*target_cols), cur.get("partition_by"), "m"
+            table, source.select(*target_cols), cur["partition_by"], "m"
         )
         # computed against `cur`: surface a concurrent commit
         return self._commit_op(
@@ -1098,7 +1134,7 @@ class Catalog:
         spec: any pending deletes are materialized by the rewrite."""
         return self._commit_op(
             table, cur,
-            add=self._write_dir(table, df, cur.get("partition_by"), hint),
+            add=self._write_dir(table, df, cur["partition_by"], hint),
             frame_schema=df.schema.jsonValue(),
             **changes,
         )
@@ -1221,7 +1257,7 @@ class Catalog:
             return {os.path.normpath(d) for s in ss for d in s["dirs"]} | {
                 os.path.normpath(sp["dir"])
                 for s in ss
-                for sp in s.get("delete_specs", [])
+                for sp in s["delete_specs"]
             }
 
         keep_dirs = _snap_dirs(retained) | {

@@ -19,13 +19,18 @@ Design (100 TB shape):
   decode -> features -> cascade -> scrub on just its partition dirs and
   appends to the ``labels`` table (Catalog append = atomic manifest),
   then commits one lineage row PER PARTITION (an empty part included,
-  with ``rows_out = 0``) plus per-category metrics rows.  Both come
-  from ONE aggregation over the wave's labels rows (grouping sets
-  ``(part_id)`` and ``(category)``), collected to the driver and
-  appended as small one-file frames.  Crash between waves => committed
-  waves are never recomputed (resume anti-joins lineage); a crash
-  inside the wave's labels write leaves a data dir without a manifest,
-  which no reader sees, and the wave reruns.  Lineage is appended only
+  with ``rows_out = 0``) plus per-category metrics rows.
+* Telemetry costs a fresh wave no Spark job.  The labels write
+  observes its own metrics (``DataFrame.observe``: the rows of each
+  part; per category the rows, kept rows and PII/toxicity hits), and
+  the lineage and metrics rows it yields are appended from the driver
+  as Arrow tables, without Spark.  A replayed wave writes no labels and
+  so observes nothing; it reads its labels rows once instead and
+  aggregates them by the same expressions.
+* Resume: after a crash between waves, committed waves are never
+  recomputed (resume anti-joins lineage); a crash inside the wave's
+  labels write leaves a data dir without a manifest, which no reader
+  sees, and the wave reruns.  Lineage is appended only
   AFTER the data commit, so a crash between the labels commit and the
   lineage commit reruns the wave; its labels append carries a
   ``txn_id`` derived from the wave's sorted part ids (not the run id,
@@ -41,14 +46,15 @@ Design (100 TB shape):
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .cascade import with_labels
+from .cascade import extended_rules, with_labels
 from .catalog import Catalog
 from .features import with_all_features
 
@@ -66,15 +72,53 @@ LABEL_COLS = [
     "bbox_area_text_frac", "line_height_var", "text_blocks_count",
 ]
 
-# the telemetry tables' schemas (nullability included), as DDL
-_LINEAGE = (
-    "part_id int, rows_out bigint not null, run_id string not null, "
-    "stage string not null, status string not null, wall_ms int not null"
-)
-_METRICS = (
-    "category string, rows bigint not null, kept bigint, pii_hits bigint, "
-    "tox_hits bigint, run_id string not null, wave_wall_ms int not null"
-)
+# the telemetry tables' schemas, nullability included
+_LINEAGE = pa.schema([
+    pa.field("part_id", pa.int32()),
+    pa.field("rows_out", pa.int64(), nullable=False),
+    pa.field("run_id", pa.string(), nullable=False),
+    pa.field("stage", pa.string(), nullable=False),
+    pa.field("status", pa.string(), nullable=False),
+    pa.field("wall_ms", pa.int32(), nullable=False),
+])
+_METRICS = pa.schema([
+    pa.field("category", pa.string()),
+    pa.field("rows", pa.int64(), nullable=False),
+    pa.field("kept", pa.int64()),
+    pa.field("pii_hits", pa.int64()),
+    pa.field("tox_hits", pa.int64()),
+    pa.field("run_id", pa.string(), nullable=False),
+    pa.field("wave_wall_ms", pa.int32(), nullable=False),
+])
+# the per-category sums of the metrics table: metric -> labels column
+_SUMS = {"kept": "keep", "pii_hits": "pii_hits", "tox_hits": "tox_hits"}
+
+
+@functools.cache
+def _categories() -> list[str]:
+    """Every category a labels row can carry: the extended cascade's,
+    plus the error rows' trash.  (Building the rules needs a session,
+    so this is not a module constant.)"""
+    return sorted({rule[1] for rule in extended_rules()} | {"trash"})
+
+
+def _observed_exprs(parts: list[int]) -> list:
+    """The metrics a wave's labels write observes: its row count, the
+    rows of each wave part, and per category its rows and the
+    ``_SUMS``.  A per-category sum is ``sum(when(category = c, ...))``,
+    null when no row of ``c`` has a value, as a groupBy's sum is.  The
+    write is one result stage, whose tasks' metrics Spark merges once
+    per partition."""
+    cat = F.col("category")
+    exprs = [F.count(F.lit(1)).alias("rows")]
+    exprs += [F.count_if(F.col("part_id") == p).alias(f"part:{p}") for p in parts]
+    for c in _categories():
+        exprs.append(F.count_if(cat == c).alias(f"rows:{c}"))
+        exprs += [
+            F.sum(F.when(cat == c, F.col(src).cast("long"))).alias(f"{k}:{c}")
+            for k, src in _SUMS.items()
+        ]
+    return exprs
 
 
 class PipelineKilled(RuntimeError):
@@ -139,53 +183,65 @@ class QualityFilterPipeline:
             # only those part dirs
             subset = parted.filter(F.col("part_id").isin(wave_parts))
             labeled = with_labels(with_all_features(subset)).select(*LABEL_COLS)
+            txn_id = "label-parts-" + ",".join(map(str, sorted(wave_parts)))
+            # a replay writes nothing, so it must observe nothing:
+            # Observation.get waits for the write it observes
+            obs = None if self.catalog.committed("labels", txn_id) else Observation()
+            if obs is not None:
+                labeled = labeled.observe(obs, *_observed_exprs(wave_parts))
             self.catalog.append(
-                "labels", labeled, partition_by=["part_id"],
-                txn_id="label-parts-" + ",".join(map(str, sorted(wave_parts))),
+                "labels", labeled, partition_by=["part_id"], txn_id=txn_id
             )
             wall_ms = int((time.time() - t0) * 1000)
-            self._commit_telemetry(run_id, wave_parts, wall_ms)
+            self._commit_telemetry(
+                run_id, wave_parts, wall_ms, None if obs is None else obs.get
+            )
             if fail_after_wave is not None and wi >= fail_after_wave:
                 raise PipelineKilled(f"killed after wave {wi}")
         return self.catalog.read(self.spark, "labels")
 
     # ---------------------------------------------------- lineage/metrics
-    def _commit_telemetry(self, run_id: str, parts: list[int], wall_ms: int) -> None:
-        """Lineage and metrics of one committed wave from ONE aggregation
-        over its labels rows: grouping sets ``(part_id)`` and
-        ``(category)``, collected (at most ``len(parts) + 4`` rows).
-        Every wave part gets a lineage row — ``rows_out = 0`` for an
-        empty part, which would otherwise stay pending forever.  Lineage
-        is appended first: it is the commit point."""
-        agg = (
-            self.catalog.read(self.spark, "labels")
-            .filter(F.col("part_id").isin(parts))
-            .groupingSets([["part_id"], ["category"]], "part_id", "category")
-            .agg(
-                F.grouping("part_id").alias("by_category"),
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("keep").cast("int")).alias("kept"),
-                F.sum(F.col("pii_hits")).alias("pii_hits"),
-                F.sum(F.col("tox_hits")).alias("tox_hits"),
-            )
-            .collect()
-        )
-        rows_out = {r.part_id: r.rows for r in agg if not r.by_category}
-        self.catalog.append("lineage", self._local_frame(_LINEAGE, [
-            (p, rows_out.get(p, 0), run_id, "label", "done", wall_ms) for p in parts
-        ]))
-        self.catalog.append("metrics", self._local_frame(_METRICS, [
-            (r.category, r.rows, r.kept, r.pii_hits, r.tox_hits, run_id, wall_ms)
-            for r in agg if r.by_category
-        ]))
+    def _commit_telemetry(
+        self, run_id: str, parts: list[int], wall_ms: int, observed: dict | None
+    ) -> None:
+        """Append one committed wave's lineage and metrics rows.
 
-    def _local_frame(self, ddl: str, rows: list[tuple]) -> DataFrame:
-        """Driver-side rows as a one-partition frame (one file per
-        append) on the Arrow path; a plain Python list would go through
-        Python workers."""
-        names = [c.split()[0] for c in ddl.split(",")]
-        cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
-        return self.spark.createDataFrame(pa.table(cols, names=names), ddl).coalesce(1)
+        ``observed`` holds what the wave's labels write observed
+        (``_observed_exprs``).  It is None for a replayed wave, which
+        wrote nothing; its labels rows are then read back once and
+        aggregated by the same expressions.  Every wave part gets a
+        lineage row — ``rows_out = 0`` for an empty part, which would
+        otherwise stay pending forever.  Both tables are appended from
+        the driver, without Spark; lineage first: it is the commit
+        point."""
+        if observed is None:
+            observed = (
+                self.catalog.read(self.spark, "labels")
+                .filter(F.col("part_id").isin(parts))
+                .agg(*_observed_exprs(parts))
+                .first()
+                .asDict()
+            )
+        # a category with no row gets no metrics row, as from a groupBy
+        by_category = [
+            {"category": c, "rows": observed[f"rows:{c}"],
+             **{k: observed[f"{k}:{c}"] for k in _SUMS}}
+            for c in _categories() if observed[f"rows:{c}"]
+        ]
+        n = sum(m["rows"] for m in by_category)
+        if n != observed["rows"]:
+            raise RuntimeError(
+                f"wave {parts}: {observed['rows']} labels rows, "
+                f"{n} of them in the categories {_categories()}"
+            )
+        self.catalog.append("lineage", pa.Table.from_pylist([
+            {"part_id": p, "rows_out": observed[f"part:{p}"], "run_id": run_id,
+             "stage": "label", "status": "done", "wall_ms": wall_ms}
+            for p in parts
+        ], schema=_LINEAGE))
+        self.catalog.append("metrics", pa.Table.from_pylist([
+            {**m, "run_id": run_id, "wave_wall_ms": wall_ms} for m in by_category
+        ], schema=_METRICS))
 
     # ------------------------------------------------------- maintenance
     def maintain(self, target_file_bytes: int = 128 << 20) -> dict:

@@ -13,6 +13,7 @@ O(matching) files.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,3 +149,45 @@ def test_rewrite_ops_refresh_stats(spark, cat):
     assert kept == 0  # post-delete bounds prove the range is gone
     assert cat.scan(spark, "m", [("id", "<", 25)]).count() == 0
     assert cat.scan(spark, "m", [("id", ">=", 50)]).count() == 50
+
+
+def test_arrow_table_append(spark, cat):
+    """A ``pyarrow.Table`` append writes one file without Spark.  Its
+    manifest schema is what a Spark append of the same DDL frame
+    records, nullability included; its rows and footer bounds read
+    back; a replayed txn id writes nothing."""
+    import pyarrow as pa
+
+    ddl = "k int, n bigint not null, s string not null"
+    schema = pa.schema([
+        pa.field("k", pa.int32()),
+        pa.field("n", pa.int64(), nullable=False),
+        pa.field("s", pa.string(), nullable=False),
+    ])
+    rows = [(1, 10, "a"), (None, 30, "c"), (5, 20, "b")]
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+    sid = cat.append("a", table, txn_id="t0")
+    snap = cat.current_snapshot("a")
+    cat.append("b", spark.createDataFrame([(7, 40, "d")], ddl))
+    assert snap["schema"] == cat.current_snapshot("b")["schema"]
+    assert [f["nullable"] for f in snap["schema"]["fields"]] == [True, False, False]
+
+    [data_dir] = snap["dirs"]
+    assert list(snap["stats"][data_dir].values()) == [
+        {"k": [1, 5], "n": [10, 30], "s": ["a", "c"]}
+    ]
+    assert cat.plan_scan("a", [("n", ">", 30)])[1] == 0
+    got = cat.read(spark, "a").collect()
+    assert sorted(map(tuple, got), key=lambda r: r[1]) == sorted(rows, key=lambda r: r[1])
+
+    assert cat.append("a", table, txn_id="t0") == sid
+    assert len(cat.snapshots("a")) == 1
+    assert len(os.listdir(os.path.dirname(data_dir))) == 1
+    with pytest.raises(ValueError, match="partition_by"):
+        cat.append("a", table, partition_by=["k"])
+
+    # Arrow- and Spark-written dirs read back as one table
+    cat.append("a", spark.createDataFrame([(7, 40, "d")], ddl))
+    assert cat.read(spark, "a").count() == 4

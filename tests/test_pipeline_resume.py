@@ -48,8 +48,9 @@ def test_kill_and_resume_equivalence(spark, images, tmp_path_factory, monkeypatc
     assert 0 < st["committed"] < 8  # partial progress committed
 
     resumed = pipe.run(run_id="r2")  # no input needed — resumes from tables
-    # telemetry costs one labels scan per wave (3 waves), plus run()'s return
-    assert reads.count("labels") == 3 + 1
+    # fresh waves observe their telemetry while writing: the only labels
+    # read is the one run() returns
+    assert reads.count("labels") == 1
     monkeypatch.undo()
     a = full.select("image_id", "category", "reason", "keep").orderBy("image_id")
     b = resumed.select("image_id", "category", "reason", "keep").orderBy("image_id")
@@ -97,10 +98,26 @@ def test_crash_between_labels_and_lineage_commits(
     _assert_telemetry_reconciles(spark, pipe, labels)
 
 
+_LINEAGE_DDL = (
+    "part_id int, rows_out bigint not null, run_id string not null, "
+    "stage string not null, status string not null, wall_ms int not null"
+)
+_METRICS_DDL = (
+    "category string, rows bigint not null, kept bigint, pii_hits bigint, "
+    "tox_hits bigint, run_id string not null, wave_wall_ms int not null"
+)
+
+
 def _assert_telemetry_reconciles(spark, pipe, labels):
     """lineage and metrics describe the labels table exactly: one
     lineage row per part, rows_out summing to the labels rows, and
-    per-category rows/kept equal to a groupBy of labels."""
+    per-category rows/kept equal to a groupBy of labels.  Their
+    manifest schemas, nullability included, are what Spark records
+    for a frame of the tables' DDL."""
+    for table, ddl in (("lineage", _LINEAGE_DDL), ("metrics", _METRICS_DDL)):
+        assert pipe.catalog.current_snapshot(table)["schema"] == (
+            spark.createDataFrame([], ddl).schema.jsonValue()
+        )
     lin = pipe.catalog.read(spark, "lineage")
     metrics = pipe.catalog.read(spark, "metrics")
     assert lin.schema.simpleString() == (
@@ -157,3 +174,62 @@ def test_empty_partitions_commit(spark, images, tmp_path_factory):
     n_snaps = len(pipe.catalog.snapshots("labels"))
     pipe.run(run_id="s2")
     assert len(pipe.catalog.snapshots("labels")) == n_snaps
+
+
+def test_fresh_wave_runs_one_spark_job(spark, images, tmp_path_factory):
+    """A fresh wave's telemetry costs no Spark job: the labels write is
+    the wave's only job."""
+    from qfilter.pipeline import QualityFilterPipeline
+
+    d = str(tmp_path_factory.mktemp("jobs"))
+    pipe = QualityFilterPipeline(spark, d, n_parts=4, wave_size=4)
+    pipe.ingest(images)
+    sc = spark.sparkContext
+    sc.setJobGroup("qfilter-one-wave", "one fresh wave")
+    try:
+        pipe.run(run_id="j")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("qfilter-one-wave")) == 1
+    assert pipe.status()["pending"] == 0
+
+
+def test_observed_telemetry_equals_labels_aggregate(spark, images, tmp_path_factory):
+    """Each wave's observed lineage and metrics rows equal the
+    grouping-sets aggregate of that wave's labels rows, sums of
+    PII/toxicity hits included."""
+    from qfilter.pipeline import QualityFilterPipeline
+
+    d = str(tmp_path_factory.mktemp("observed"))
+    pipe = QualityFilterPipeline(spark, d, n_parts=8, wave_size=4)
+    labels = pipe.run(images, run_id="o")
+    want_lineage, want_metrics = [], []
+    for wave in ([0, 1, 2, 3], [4, 5, 6, 7]):
+        agg = (
+            labels.filter(F.col("part_id").isin(wave))
+            .groupingSets([["part_id"], ["category"]], "part_id", "category")
+            .agg(
+                F.grouping("part_id").alias("by_category"),
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.col("keep").cast("int")).alias("kept"),
+                F.sum("pii_hits").alias("pii_hits"),
+                F.sum("tox_hits").alias("tox_hits"),
+            )
+            .collect()
+        )
+        rows_out = {r.part_id: r.rows for r in agg if not r.by_category}
+        want_lineage += [(p, rows_out.get(p, 0)) for p in wave]
+        want_metrics += [
+            (r.category, r.rows, r.kept, r.pii_hits, r.tox_hits)
+            for r in agg if r.by_category
+        ]
+    got_lineage = [
+        tuple(r) for r in pipe.catalog.read(spark, "lineage")
+        .select("part_id", "rows_out").collect()
+    ]
+    got_metrics = [
+        tuple(r) for r in pipe.catalog.read(spark, "metrics")
+        .select("category", "rows", "kept", "pii_hits", "tox_hits").collect()
+    ]
+    assert sorted(got_lineage) == sorted(want_lineage)
+    assert sorted(got_metrics, key=repr) == sorted(want_metrics, key=repr)
